@@ -18,7 +18,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from sparsity_spark.session import get_spark
+from sparsity_spark.session import codegen_compiles, get_spark
 
 BENCH_QUERIES = [
     "a1_onehot_groupby_sum",
@@ -454,18 +454,22 @@ def main():
     # per-query numbers measure the C2 compiler lottery (±0.5-1.5 s each)
     # instead of the plan; round-over-round comparisons were drifting by
     # whether a prior suite happened to warm a query's code path
+    warm_compiles0 = codegen_compiles(spark)
     if steady_state:
         for name in BENCH_QUERIES:
             if name in QUERIES:
                 run_one(QUERIES[name](spark, sf_dir))
                 spark.catalog.clearCache()
         spark.sparkContext._jvm.System.gc()
+    warm_compiles = codegen_compiles(spark) - warm_compiles0
 
     timings: dict[str, float] = {}
+    compiles: dict[str, int] = {}
     missing = [n for n in BENCH_QUERIES if n not in QUERIES]
     for name in BENCH_QUERIES:
         if name not in QUERIES:
             continue  # recorded in "missing" — a silent skip would read as a speedup
+        c0 = codegen_compiles(spark)
         t0 = time.perf_counter()
         run_one(QUERIES[name](spark, sf_dir))
         el = time.perf_counter() - t0
@@ -490,6 +494,7 @@ def main():
             run_one(QUERIES[name](spark, sf_dir))
             el = min(el, time.perf_counter() - t0)
         timings[name] = round(el, 3)
+        compiles[name] = codegen_compiles(spark) - c0
         # inter-query hygiene (untimed): queries are independent — drop any
         # MEMORY_AND_DISK blocks a query persisted (zip_with_position,
         # tfidf's tokenize pass, ...) so accumulated cache doesn't shrink
@@ -534,6 +539,11 @@ def main():
     file_out["memo_build_detail"] = {
         k: round(v, 3) for k, v in MEMO_BUILD_SECONDS.items()
     }
+    # codegen class-cache misses: per row across its timed run(s), and in
+    # total over the untimed warm pass (a warm row whose classes stayed
+    # cached compiles only its per-run literal sources)
+    file_out["codegen_compiles"] = compiles
+    file_out["warm_pass_codegen_compiles"] = warm_compiles
     # human summary + comparison go to STDERR: stdout carries EXACTLY one
     # line — the machine JSON — printed last, nothing after it
     print(

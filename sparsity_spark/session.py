@@ -13,6 +13,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Spark's codegen class cache (spark.sql.codegen.cache.maxEntries), sized to
+# the engine's working set: see get_spark
+CODEGEN_CACHE_ENTRIES = 4096
+
 
 def _scratch_root() -> str:
     """Fast scratch for shuffle files, localCheckpoint blocks, and the
@@ -51,7 +55,7 @@ def _scratch_root() -> str:
 
 def get_spark(app_name: str = "sparsity_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     scratch = _scratch_root()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -61,24 +65,8 @@ def get_spark(app_name: str = "sparsity_spark", cpus: int | None = None) -> Spar
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # r12 A/B knobs (guide §2.2): measured on this suite,
-        # parallelismFirst=false + a 4 MB advisory target SERIALIZED the
-        # compute-dense mid-size exchanges (PPJoin gram tables carry
-        # seconds of verify work in a few MB — dedup_lsh_recall 4.9→6.8 s)
-        # while the node-sized exchanges were ALREADY coalescing to one
-        # task under the default (parallelismFirst's own 1 MB floor). The
-        # 32-task overhead stages turned out to be bucketed-store scans
-        # and persisted caches, fixed by size-derived bucket counts in
-        # queries._memo_edges instead. Defaults therefore stay Spark's;
-        # the env knobs remain for scaling studies.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"),
-        )
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_AQE_ADVISORY_BYTES", str(64 * 1024 * 1024)),
-        )
+        # parallelismFirst and the 64 MB advisory size stay at Spark's
+        # defaults: r12 measured the alternatives slower on this suite.
         # ... but LOWER the coalescing floor from Spark's 1 MB default: the
         # suite's compute-dense mid-size exchanges (PPJoin candidate
         # verify, phash pair enumeration) shuffle a few MB that carry
@@ -116,9 +104,19 @@ def get_spark(app_name: str = "sparsity_spark", cpus: int | None = None) -> Spar
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # Spark keeps 100 compiled codegen classes by default, but this
+        # engine runs many small plans: a warm pass needs ~105 classes on the
+        # perfbench frame_algebra workload, ~260 on incremental_stores and
+        # ~2450 in bench.py's warm pass at sf0.01. At 100 each warm pass
+        # recompiled what the pass before had evicted, in Janino and then
+        # again in the JIT: 68 compiles a frame_algebra pass, 298 an
+        # incremental_stores pass. At 4096 they are 0 and 19; the 19 are
+        # sources with per-batch literals, new on every pass. A static conf:
+        # only a new session picks it up.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # bucketed-table support without polluting the repo: warehouse +
-        # shuffle/checkpoint scratch + derby metastore live on the fast
-        # scratch root (see _scratch_root)
+        # shuffle/checkpoint scratch live on the fast scratch root (see
+        # _scratch_root)
         .config("spark.sql.warehouse.dir", f"{scratch}/sparsity_spark_warehouse")
         .config("spark.local.dir", f"{scratch}/sparsity_spark_local")
         # ReservedCodeCacheSize: the default 240 MB JIT code cache cannot
@@ -130,18 +128,7 @@ def get_spark(app_name: str = "sparsity_spark", cpus: int | None = None) -> Spar
         # SCALE.md). 1 GiB reserves address space only (committed lazily)
         # and makes both stable AND faster (~5-7 s). Real codegen-heavy
         # Spark deployments ship exactly this flag.
-        .config(
-            "spark.driver.extraJavaOptions",
-            # derby metastore on the fast scratch root too (r12): every
-            # saveAsTable/DROP is a Derby transaction whose fsync stalls on
-            # the virtio /tmp disk — the store-lifecycle rows' wall was
-            # driver-side, not task-side (probe: skew_bloom_store_semijoin
-            # 2.5 s task time inside a 3.5 s wall). Same production posture
-            # as the warehouse move: a real deployment's metastore is a
-            # service on fast storage, not an embedded DB on a slow disk.
-            f"-Dderby.system.home={scratch}/sparsity_spark_derby "
-            "-XX:ReservedCodeCacheSize=1g",
-        )
+        .config("spark.driver.extraJavaOptions", "-XX:ReservedCodeCacheSize=1g")
         # the driver's testdata parquet carries TIMESTAMP(NANOS) columns,
         # which Spark only reads as long via this legacy flag; data.py
         # converts them back to proper timestamps
@@ -162,3 +149,9 @@ def get_spark(app_name: str = "sparsity_spark", cpus: int | None = None) -> Spar
             .config("spark.eventLog.rolling.enabled", "false")
         )
     return builder.getOrCreate()
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Janino compiles so far in this JVM: one per codegen class-cache miss."""
+    jvm = spark.sparkContext._jvm
+    return jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
