@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from sparsity_spark.operators.skew import bucket_partitioned
+from sparsity_spark import stores
 
 
 def words_expr(text_col: str):
@@ -1457,21 +1457,13 @@ def write_band_store(
 
     ``precomputed_bands`` skips the band computation when the caller
     already has :func:`band_keys` output (e.g. `append_band_store`)."""
-    from sparsity_spark.operators.skew import _drop_table_and_location, write_bucketed
-
-    # fresh build = fresh lifecycle: stale tombstones from a dead
-    # incarnation would wrongly hide the new corpus's rows (r11)
-    _drop_table_and_location(docs.sparkSession, f"{table}__tombstones")
     b = (
         precomputed_bands
         if precomputed_bands is not None
         else band_keys(docs, id_col, text_col, k, num_hashes, bands)
     )
-    write_bucketed(
-        b.select(id_col, "band", "band_key"),
-        table,
-        ["band", "band_key"],
-        num_buckets,
+    stores.create(
+        b.select(id_col, "band", "band_key"), table, ["band", "band_key"], num_buckets
     )
 
 
@@ -1479,56 +1471,26 @@ def band_store(spark, table: str) -> DataFrame:
     """Open a band store written by :func:`write_band_store` — a plain
     catalog read; the bucketing metadata rides along, so joins keyed
     (band, band_key) skip the corpus-side Exchange automatically.
-    Tombstoned docs (r11, :func:`remove_from_band_store`) are anti-joined
-    out here (broadcast, deletion-sized), so every screen path forgets
-    them immediately; the bucketed scan + broadcast anti-join still
-    plans with no corpus-side Exchange."""
-    df = spark.table(table)
-    tt = f"{table}__tombstones"
-    if spark.catalog.tableExists(tt):
-        idc = spark.table(tt).columns[0]
-        df = df.join(F.broadcast(spark.table(tt).distinct()), idc, "left_anti")
-    return df
+    Tombstoned docs (:func:`remove_from_band_store`) are anti-joined out
+    (:func:`sparsity_spark.stores.live`), so every screen path forgets
+    them immediately and the corpus side still plans with no Exchange."""
+    return stores.live(spark, table)
 
 
 def remove_from_band_store(ids: DataFrame, table: str, id_col: str = "doc_id") -> None:
-    """Right-to-be-forgotten for the LSH band lake (r11 — the near-twin
-    sibling of :func:`remove_from_containment_store`): tombstone the doc
-    ids; :func:`band_store` anti-joins them out of every screen read, so
+    """Right-to-be-forgotten for the LSH band lake (the near-twin sibling
+    of :func:`remove_from_containment_store`): tombstone the doc ids;
+    :func:`band_store` anti-joins them out of every screen read, so
     forgotten docs stop suppressing new arrivals immediately with zero
-    store rewrite. Idempotent (tombstone appends are harmless
-    duplicates under the anti-join). Physical removal is
+    store rewrite. Idempotent. Physical removal is
     :func:`compact_band_store`."""
-    spark = ids.sparkSession
-    tt = f"{table}__tombstones"
-    if not spark.catalog.tableExists(tt):
-        from sparsity_spark.operators.skew import _drop_table_and_location
-
-        _drop_table_and_location(spark, tt)
-    ids.select(F.col(id_col)).distinct().localCheckpoint(eager=True).write.mode(
-        "append"
-    ).format("parquet").saveAsTable(tt)
+    stores.forget(ids.select(F.col(id_col)), table)
 
 
 def compact_band_store(spark, table: str) -> None:
-    """Physically remove tombstoned band rows (r11): rewrite the live
-    rows through the store's own (band, band_key) bucket spec, THEN drop
-    the tombstone table — the rewrite-then-clear ordering of
-    compact_ivfpq_index (a crash between leaves harmless tombstones;
-    the reverse would resurrect forgotten docs)."""
-    from sparsity_spark.operators.skew import _drop_table_and_location
-
-    tt = f"{table}__tombstones"
-    if not spark.catalog.tableExists(tt):
-        return
-    live = band_store(spark, table).localCheckpoint(eager=True)
-    nb = _table_bucket_count(spark, table)
-    bucket_partitioned(live, nb, ["band", "band_key"]).write.mode(
-        "overwrite"
-    ).bucketBy(nb, "band", "band_key").format(
-        "parquet"
-    ).saveAsTable(table)
-    _drop_table_and_location(spark, tt)
+    """Physically remove tombstoned band rows through the store's own
+    (band, band_key) bucket spec (:func:`sparsity_spark.stores.compact`)."""
+    stores.compact(spark, table, ["band", "band_key"])
 
 
 def append_band_store(
@@ -1590,25 +1552,9 @@ def append_band_store(
     keep_bands = nb.join(
         decisions.filter(F.col("keep")).select(id_col), on=id_col
     ).select(id_col, "band", "band_key")
-    num_buckets = _table_bucket_count(spark, table)
-    (
-        bucket_partitioned(keep_bands, num_buckets, ["band", "band_key"])
-        .write.mode("append")
-        .bucketBy(num_buckets, "band", "band_key")
-        .format("parquet")
-        .saveAsTable(table)
-    )
+    stores.append(keep_bands, table, ["band", "band_key"])
     nb.unpersist()
     return decisions
-
-
-def _table_bucket_count(spark, table: str) -> int:
-    """Bucket count of an existing bucketed table (appends must restate
-    the exact spec — Spark validates it)."""
-    for r in spark.sql(f"DESCRIBE EXTENDED {table}").collect():
-        if r["col_name"] == "Num Buckets":
-            return int(r["data_type"])
-    raise ValueError(f"{table} is not a bucketed table")
 
 
 def write_hash_store(
@@ -1624,13 +1570,6 @@ def write_hash_store(
     exact-dedup screen joins it with NO corpus-side shuffle — the
     content-hash ledger is the first store every production ingest keeps,
     before any near-dup machinery."""
-    from sparsity_spark.operators.skew import _drop_table_and_location, write_bucketed
-
-    # fresh build = fresh lifecycle: stale tombstones from a dead
-    # incarnation would wrongly hide the new ledger's rows (the band
-    # store's r11 rule, applied here when the hash store grew its own
-    # forget path)
-    _drop_table_and_location(docs.sparkSession, f"{table}__tombstones")
     # ledger uniqueness invariant holds from the FIRST write, not only on
     # appends: a corpus with natural exact twins would otherwise put
     # duplicate content_hash rows in the ledger and every later screen's
@@ -1642,22 +1581,15 @@ def write_hash_store(
     ledger = docs.select(
         F.md5(F.col(text_col)).alias("content_hash"), F.col(id_col)
     ).groupBy("content_hash").agg(F.min(id_col).alias(id_col))
-    write_bucketed(ledger, table, ["content_hash"], num_buckets)
+    stores.create(ledger, table, ["content_hash"], num_buckets)
 
 
 def hash_store(spark, table: str) -> DataFrame:
     """Open a content-hash ledger written by :func:`write_hash_store` —
     a plain catalog read with the bucketing metadata riding along, minus
-    any tombstoned keeper rows (broadcast anti-join, deletion-sized).
-    The exact-dedup twin of :func:`band_store`'s read path: every screen
-    sees forgets immediately, and the bucketed scan + broadcast
-    anti-join still plans with no ledger-side Exchange."""
-    df = spark.table(table)
-    tt = f"{table}__tombstones"
-    if spark.catalog.tableExists(tt):
-        idc = spark.table(tt).columns[0]
-        df = df.join(F.broadcast(spark.table(tt).distinct()), idc, "left_anti")
-    return df
+    any tombstoned keeper rows (:func:`sparsity_spark.stores.live`). The
+    exact-dedup twin of :func:`band_store`'s read path."""
+    return stores.live(spark, table)
 
 
 def remove_from_hash_store(
@@ -1674,38 +1606,15 @@ def remove_from_hash_store(
     contract: the deleted document no longer suppresses anything.
     Forgetting an id that never kept a ledger row (a doc that was itself
     rejected as a duplicate) is a no-op, as it should be — that doc owns
-    no ledger state. Idempotent (duplicate tombstones are harmless under
-    the anti-join); physical removal is :func:`compact_hash_store`."""
-    spark = ids.sparkSession
-    tt = f"{table}__tombstones"
-    if not spark.catalog.tableExists(tt):
-        from sparsity_spark.operators.skew import _drop_table_and_location
-
-        _drop_table_and_location(spark, tt)
-    ids.select(F.col(id_col)).distinct().localCheckpoint(eager=True).write.mode(
-        "append"
-    ).format("parquet").saveAsTable(tt)
+    no ledger state. Idempotent; physical removal is
+    :func:`compact_hash_store`."""
+    stores.forget(ids.select(F.col(id_col)), table)
 
 
 def compact_hash_store(spark, table: str) -> None:
-    """Physically remove tombstoned ledger rows: rewrite the live rows
-    through the store's own content_hash bucket spec, THEN drop the
-    tombstone table — the rewrite-then-clear ordering the whole forget
-    family uses (a crash between leaves harmless tombstones; the reverse
-    would resurrect forgotten docs)."""
-    from sparsity_spark.operators.skew import _drop_table_and_location
-
-    tt = f"{table}__tombstones"
-    if not spark.catalog.tableExists(tt):
-        return
-    live = hash_store(spark, table).localCheckpoint(eager=True)
-    nb = _table_bucket_count(spark, table)
-    bucket_partitioned(live, nb, ["content_hash"]).write.mode(
-        "overwrite"
-    ).bucketBy(nb, "content_hash").format(
-        "parquet"
-    ).saveAsTable(table)
-    _drop_table_and_location(spark, tt)
+    """Physically remove tombstoned ledger rows through the store's own
+    content_hash bucket spec (:func:`sparsity_spark.stores.compact`)."""
+    stores.compact(spark, table, ["content_hash"])
 
 
 def append_hash_store(
@@ -1760,14 +1669,7 @@ def append_hash_store(
         .groupBy("content_hash")
         .agg(F.min(id_col).alias(id_col))
     )
-    num_buckets = _table_bucket_count(spark, table)
-    (
-        bucket_partitioned(keep_rows, num_buckets, ["content_hash"])
-        .write.mode("append")
-        .bucketBy(num_buckets, "content_hash")
-        .format("parquet")
-        .saveAsTable(table)
-    )
+    stores.append(keep_rows, table, ["content_hash"])
     return decisions
 
 
@@ -1789,13 +1691,8 @@ def write_member_store(
     each increment re-shuffles all of it just to screen a batch. Pick
     ``num_buckets`` for the deployed store size (buckets ≈ rows · (d·8 B +
     ~16 B) / 128 MB); fixed at write time, as bucketing requires."""
-    from sparsity_spark.operators.skew import _drop_table_and_location, write_bucketed
-
-    # fresh build = fresh lifecycle (the band store's r11 rule): stale
-    # tombstones from a dead incarnation would hide the new corpus's rows
-    _drop_table_and_location(embeddings.sparkSession, f"{table}__tombstones")
     rows = semantic_member_store(embeddings, centroids, id_col, vec_col)
-    write_bucketed(rows, table, ["cid"], num_buckets)
+    stores.create(rows, table, ["cid"], num_buckets)
 
 
 def member_store(spark, table: str) -> DataFrame:
@@ -1803,15 +1700,9 @@ def member_store(spark, table: str) -> DataFrame:
     catalog read; the cid bucketing metadata rides along, so the semantic
     screen's cid-keyed join skips the corpus-side Exchange automatically.
     Tombstoned vectors (:func:`remove_from_member_store`) are anti-joined
-    out here (broadcast, deletion-sized), so every screen forgets them
-    immediately; the bucketed scan + broadcast anti-join still plans
-    with no corpus-side Exchange."""
-    df = spark.table(table)
-    tt = f"{table}__tombstones"
-    if spark.catalog.tableExists(tt):
-        idc = spark.table(tt).columns[0]
-        df = df.join(F.broadcast(spark.table(tt).distinct()), idc, "left_anti")
-    return df
+    out (:func:`sparsity_spark.stores.live`), so every screen forgets
+    them immediately."""
+    return stores.live(spark, table)
 
 
 def remove_from_member_store(
@@ -1823,38 +1714,14 @@ def remove_from_member_store(
     tombstone the vector ids; :func:`member_store` anti-joins them out
     of every screen read, so a forgotten vector stops semantically
     suppressing new arrivals immediately with zero store rewrite.
-    Idempotent (duplicate tombstones are harmless under the anti-join);
-    physical removal is :func:`compact_member_store`."""
-    spark = ids.sparkSession
-    tt = f"{table}__tombstones"
-    if not spark.catalog.tableExists(tt):
-        from sparsity_spark.operators.skew import _drop_table_and_location
-
-        _drop_table_and_location(spark, tt)
-    ids.select(F.col(id_col)).distinct().localCheckpoint(eager=True).write.mode(
-        "append"
-    ).format("parquet").saveAsTable(tt)
+    Idempotent; physical removal is :func:`compact_member_store`."""
+    stores.forget(ids.select(F.col(id_col)), table)
 
 
 def compact_member_store(spark, table: str) -> None:
-    """Physically remove tombstoned member rows: rewrite the live rows
-    through the store's own cid bucket spec, THEN drop the tombstone
-    table — the rewrite-then-clear ordering of the whole forget family
-    (a crash between leaves harmless tombstones; the reverse would
-    resurrect forgotten vectors)."""
-    from sparsity_spark.operators.skew import _drop_table_and_location
-
-    tt = f"{table}__tombstones"
-    if not spark.catalog.tableExists(tt):
-        return
-    live = member_store(spark, table).localCheckpoint(eager=True)
-    nb = _table_bucket_count(spark, table)
-    bucket_partitioned(live, nb, ["cid"]).write.mode("overwrite").bucketBy(
-        nb, "cid"
-    ).format("parquet").saveAsTable(
-        table
-    )
-    _drop_table_and_location(spark, tt)
+    """Physically remove tombstoned member rows through the store's own
+    cid bucket spec (:func:`sparsity_spark.stores.compact`)."""
+    stores.compact(spark, table, ["cid"])
 
 
 def append_member_store(
@@ -1953,14 +1820,7 @@ def append_member_store(
         s.join(decisions.filter(F.col("keep")).select(id_col), on=id_col)
         .select("cid", F.col(id_col), "vec_d", F.col("__nrm__").alias("norm"))
     )
-    num_buckets = _table_bucket_count(spark, table)
-    (
-        bucket_partitioned(keep_rows, num_buckets, ["cid"])
-        .write.mode("append")
-        .bucketBy(num_buckets, "cid")
-        .format("parquet")
-        .saveAsTable(table)
-    )
+    stores.append(keep_rows, table, ["cid"])
     s.unpersist()
     return decisions
 
@@ -2102,15 +1962,10 @@ def write_cluster_store(
     persisted store always carries the canonical (doc_id, cluster_id)
     schema, which resolve_cluster_store and fold_cluster_store read
     back — input naming never produces an unreadable store."""
-    from sparsity_spark.operators.skew import write_bucketed
-
-    from sparsity_spark.operators.skew import _drop_table_and_location
-    from sparsity_spark.util import local_df, overlap_jobs
-
-    spark = labels.sparkSession
+    from sparsity_spark.util import overlap_jobs
 
     def _write_store():
-        write_bucketed(
+        stores.create(
             labels.select(
                 F.col(id_col).cast("long").alias("doc_id"),
                 F.col(cluster_col).cast("long").alias("cluster_id"),
@@ -2120,18 +1975,19 @@ def write_cluster_store(
             num_buckets,
         )
 
-    def _reset_sides():
-        _drop_table_and_location(spark, f"{table}__remap")
-        # fresh build = fresh lifecycle (the band store's r11 rule): stale
-        # tombstones from a dead incarnation would hide the new store's rows
-        _drop_table_and_location(spark, f"{table}__tombstones")
-        local_df(spark, [], "old_id long, new_id long").write.mode(
-            "overwrite"
-        ).format("parquet").saveAsTable(f"{table}__remap")
+    # independent tables — the metadata-sized remap reset rides inside the
+    # corpus-sized store write's wall (guide §2.6)
+    overlap_jobs(_write_store, lambda: _empty_remap(labels.sparkSession, table))
 
-    # independent tables — the metadata-sized side reset rides inside the
-    # corpus-sized store write's wall (r12, guide §2.6)
-    overlap_jobs(_write_store, _reset_sides)
+
+def _empty_remap(spark, table: str) -> None:
+    """(Re)create the cluster store's merge table empty."""
+    from sparsity_spark.util import local_df
+
+    stores._drop_table_and_location(spark, f"{table}__remap")
+    local_df(spark, [], "old_id long, new_id long").write.mode(
+        "overwrite"
+    ).format("parquet").saveAsTable(f"{table}__remap")
 
 
 def resolve_cluster_store(spark, table: str) -> DataFrame:
@@ -2147,11 +2003,7 @@ def resolve_cluster_store(spark, table: str) -> DataFrame:
     minimum until :func:`compact_cluster_store` re-elects — labels are
     opaque component ids, so reads stay internally consistent either
     way."""
-    store = spark.table(table)
-    tt = f"{table}__tombstones"
-    if spark.catalog.tableExists(tt):
-        idc = spark.table(tt).columns[0]
-        store = store.join(F.broadcast(spark.table(tt).distinct()), idc, "left_anti")
+    store = stores.live(spark, table)
     remap = spark.table(f"{table}__remap").select(
         F.col("old_id").alias("cluster_id"), F.col("new_id")
     )
@@ -2242,7 +2094,6 @@ def fold_cluster_store(
         .select(F.col(id_col).alias("doc_id"), "cluster_id")
         .localCheckpoint(eager=True)
     )
-    num_buckets = _table_bucket_count(spark, table)
     # 2) merges — pseudo-nodes whose component minimum moved
     merges = (
         comp.join(pseudo.select(F.col("node").alias(id_col)), id_col, "leftsemi")
@@ -2264,25 +2115,15 @@ def fold_cluster_store(
     all_remap = composed.unionByName(
         merges.join(old_remap.select("old_id"), "old_id", "left_anti")
     ).localCheckpoint(eager=True)
-    from sparsity_spark.operators.skew import _drop_table_and_location
     from sparsity_spark.util import overlap_jobs
 
-    def _append_assignments():
-        (
-            bucket_partitioned(new_assign, num_buckets, ["doc_id"])
-            .write.mode("append")
-            .bucketBy(num_buckets, "doc_id")
-            .format("parquet")
-            .saveAsTable(table)
-        )
-
     def _rewrite_remap():
-        _drop_table_and_location(spark, f"{table}__remap")
+        stores._drop_table_and_location(spark, f"{table}__remap")
         all_remap.write.mode("overwrite").format("parquet").saveAsTable(
             f"{table}__remap"
         )
 
-    overlap_jobs(_append_assignments, _rewrite_remap)
+    overlap_jobs(lambda: stores.append(new_assign, table, ["doc_id"]), _rewrite_remap)
     return resolve_cluster_store(spark, table)
 
 
@@ -2297,21 +2138,12 @@ def remove_from_cluster_store(
     members of a forgotten bridge doc's cluster stay together (the
     standard assignment-ledger semantics; re-deriving connectivity would
     need the pair history this store deliberately does not keep).
-    Idempotent (duplicate tombstones are harmless under the anti-join);
-    physical removal and label re-election are
+    Idempotent; physical removal and label re-election are
     :func:`compact_cluster_store`. Folds between a forget and its
     compaction keep working: a tombstoned former minimum still serves as
     an opaque pseudo-node label, smaller than every live member, so
     fold's component-minimum argument is unaffected."""
-    spark = ids.sparkSession
-    tt = f"{table}__tombstones"
-    if not spark.catalog.tableExists(tt):
-        from sparsity_spark.operators.skew import _drop_table_and_location
-
-        _drop_table_and_location(spark, tt)
-    ids.select(F.col(id_col).cast("long").alias("doc_id")).distinct().localCheckpoint(
-        eager=True
-    ).write.mode("append").format("parquet").saveAsTable(tt)
+    stores.forget(ids.select(F.col(id_col).cast("long").alias("doc_id")), table)
 
 
 def compact_cluster_store(spark, table: str) -> None:
@@ -2340,8 +2172,6 @@ def compact_cluster_store(spark, table: str) -> None:
     4. drop the tombstones LAST (rewrite-then-clear, like every
        compactor here: leftovers anti-join rows that are already gone).
     """
-    from sparsity_spark.operators.skew import _drop_table_and_location
-
     live = resolve_cluster_store(spark, table).localCheckpoint(eager=True)
     relabel = live.groupBy("cluster_id").agg(F.min("doc_id").alias("__final__"))
     final = (
@@ -2371,21 +2201,11 @@ def compact_cluster_store(spark, table: str) -> None:
         .select("old_id", F.col("__final__").alias("new_id"))
         .localCheckpoint(eager=True)
     )
-    _drop_table_and_location(spark, f"{table}__remap")
+    stores._drop_table_and_location(spark, f"{table}__remap")
     bridge.write.mode("overwrite").format("parquet").saveAsTable(f"{table}__remap")
-    nb = _table_bucket_count(spark, table)
-    bucket_partitioned(final, nb, ["doc_id"]).write.mode("overwrite").bucketBy(
-        nb, "doc_id"
-    ).format(
-        "parquet"
-    ).saveAsTable(table)
-    _drop_table_and_location(spark, f"{table}__remap")
-    from sparsity_spark.util import local_df
-
-    local_df(spark, [], "old_id long, new_id long").write.mode(
-        "overwrite"
-    ).format("parquet").saveAsTable(f"{table}__remap")
-    _drop_table_and_location(spark, f"{table}__tombstones")
+    stores.rewrite(final, table, ["doc_id"])
+    _empty_remap(spark, table)
+    stores.clear_tombstones(spark, table)
 
 
 def _containment_prefix_parts(grams: DataFrame, t: float):
@@ -2628,15 +2448,13 @@ def write_containment_store(
       order that keeps boilerplate grams out of every probe.
 
     All three append through their bucket/partition spec
-    (:func:`append_containment_store`); nothing rewrites."""
-    from sparsity_spark.operators.skew import _drop_table_and_location, write_bucketed
-
+    (:func:`append_containment_store`); nothing rewrites. A fresh build
+    clears the store's tombstones and the ``__grams`` table's watermarks
+    (the streaming loop's replay screen)."""
     spark = docs.sparkSession
-    # a fresh build starts a fresh lifecycle: stale tombstones from a
-    # dead incarnation would wrongly suppress the new corpus's docs
-    _drop_table_and_location(spark, f"{table}__tombstones")
+    stores.clear_tombstones(spark, table)
     # ensure_parallelism: the shingle map otherwise runs at the scan's
-    # split count (r11 — see containment_join); write_bucketed's own
+    # split count (see containment_join); the bucketed write's own
     # repartition only spreads rows AFTER they are shingled
     from sparsity_spark.util import ensure_parallelism
 
@@ -2644,7 +2462,7 @@ def write_containment_store(
         F.col(id_col).cast("long").alias("id"),
         F.array_distinct(shingles_expr(words_expr(text_col), k)).alias("g"),
     )
-    write_bucketed(grams, f"{table}__grams", ["id"], num_buckets)
+    stores.create(grams, f"{table}__grams", ["id"], num_buckets)
     e = spark.table(f"{table}__grams").select(
         "id", F.explode("g").alias("gram")
     )
@@ -2653,10 +2471,12 @@ def write_containment_store(
     from sparsity_spark.util import overlap_jobs
 
     def _write_post():
-        write_bucketed(e.select("gram", "id"), f"{table}__post", ["gram"], num_buckets)
+        stores.write_bucketed(
+            e.select("gram", "id"), f"{table}__post", ["gram"], num_buckets
+        )
 
     def _write_df():
-        _drop_table_and_location(spark, f"{table}__df")
+        stores._drop_table_and_location(spark, f"{table}__df")
         e.groupBy("gram").agg(F.count("*").cast("long").alias("df")).write.format(
             "parquet"
         ).saveAsTable(f"{table}__df")
@@ -2676,34 +2496,25 @@ def append_containment_store(
     table appends per-gram increments (read side SUMs — the count-store
     discipline, exact because df rows are never rewritten). After the
     append the NEXT batch screens against these docs too."""
-    spark = new_docs.sparkSession
     grams = new_docs.select(
         F.col(id_col).cast("long").alias("id"),
         F.array_distinct(shingles_expr(words_expr(text_col), k)).alias("g"),
     ).localCheckpoint(eager=True)
-    nb = _table_bucket_count(spark, f"{table}__grams")
-    pb = _table_bucket_count(spark, f"{table}__post")
     e = grams.select("id", F.explode("g").alias("gram"))
     # the three appends hit three different tables and all derive from
     # the eagerly-checkpointed batch grams — overlap them (guide §2.6)
     from sparsity_spark.util import overlap_jobs
-
-    def _app_grams():
-        bucket_partitioned(grams, nb, ["id"]).write.mode("append").bucketBy(
-            nb, "id"
-        ).format("parquet").saveAsTable(f"{table}__grams")
-
-    def _app_post():
-        bucket_partitioned(e.select("gram", "id"), pb, ["gram"]).write.mode(
-            "append"
-        ).bucketBy(pb, "gram").format("parquet").saveAsTable(f"{table}__post")
 
     def _app_df():
         e.groupBy("gram").agg(F.count("*").cast("long").alias("df")).write.mode(
             "append"
         ).format("parquet").saveAsTable(f"{table}__df")
 
-    overlap_jobs(_app_grams, _app_post, _app_df)
+    overlap_jobs(
+        lambda: stores.append(grams, f"{table}__grams", ["id"]),
+        lambda: stores.append(e.select("gram", "id"), f"{table}__post", ["gram"]),
+        _app_df,
+    )
 
 
 def compact_containment_store(spark, table: str) -> None:
@@ -2729,40 +2540,23 @@ def compact_containment_store(spark, table: str) -> None:
         .localCheckpoint(eager=True)
     )
     collapsed.write.mode("overwrite").format("parquet").saveAsTable(dft)
-    tt = f"{table}__tombstones"
-    if spark.catalog.tableExists(tt):
-        # physical removal of forgotten docs (r11 right-to-be-forgotten):
-        # rewrite grams and postings WITHOUT the tombstoned ids through
-        # their own bucket specs, recompute df exactly from the live
-        # postings, then drop the tombstone table LAST — a crash at any
-        # point leaves tombstones whose rows are already gone (read-side
-        # anti-join no-ops) or a stale-order df (order-only); the reverse
-        # order would resurrect forgotten docs
-        from sparsity_spark.operators.skew import _drop_table_and_location
-
-        dead = F.broadcast(spark.table(tt).select("id").distinct())
-        nb_g = _table_bucket_count(spark, f"{table}__grams")
-        live_g = (
-            spark.table(f"{table}__grams")
-            .join(dead, "id", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        bucket_partitioned(live_g, nb_g, ["id"]).write.mode("overwrite").bucketBy(
-            nb_g, "id"
-        ).format(
-            "parquet"
-        ).saveAsTable(f"{table}__grams")
-        nb_p = _table_bucket_count(spark, f"{table}__post")
-        live_p = (
-            spark.table(f"{table}__post")
-            .join(dead, "id", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        bucket_partitioned(live_p, nb_p, ["gram"]).write.mode("overwrite").bucketBy(
-            nb_p, "gram"
-        ).format(
-            "parquet"
-        ).saveAsTable(f"{table}__post")
+    dead = stores.tombstones(spark, table)
+    if dead is not None:
+        # physical removal of forgotten docs: rewrite grams and postings
+        # WITHOUT the tombstoned ids through their own bucket specs,
+        # recompute df exactly from the live postings, then drop the
+        # tombstone table LAST — a crash at any point leaves tombstones
+        # whose rows are already gone (read-side anti-join no-ops) or a
+        # stale-order df (order-only); the reverse order would resurrect
+        # forgotten docs
+        dead = F.broadcast(dead.select("id").distinct())
+        for side, cols in (("__grams", ["id"]), ("__post", ["gram"])):
+            live = (
+                spark.table(table + side)
+                .join(dead, "id", "left_anti")
+                .localCheckpoint(eager=True)
+            )
+            stores.rewrite(live, table + side, cols)
         fresh_df = (
             spark.table(f"{table}__grams")
             .dropDuplicates(["id"])
@@ -2772,7 +2566,7 @@ def compact_containment_store(spark, table: str) -> None:
             .localCheckpoint(eager=True)
         )
         fresh_df.write.mode("overwrite").format("parquet").saveAsTable(dft)
-        _drop_table_and_location(spark, tt)
+        stores.clear_tombstones(spark, table)
 
 
 def remove_from_containment_store(
@@ -2794,14 +2588,12 @@ def remove_from_containment_store(
     Physical removal happens on the next
     :func:`compact_containment_store`."""
     spark = ids.sparkSession
-    tt = f"{table}__tombstones"
     new_ids = ids.select(F.col(id_col).cast("long").alias("id")).distinct()
-    if spark.catalog.tableExists(tt):
-        new_ids = new_ids.join(spark.table(tt), "id", "left_anti")
+    dead = stores.tombstones(spark, table)
+    if dead is not None:
+        new_ids = new_ids.join(dead, "id", "left_anti")
     else:
-        from sparsity_spark.operators.skew import _drop_table_and_location
-
-        _drop_table_and_location(spark, tt)
+        stores.clear_tombstones(spark, table)
     new_ids = new_ids.localCheckpoint(eager=True)
     if new_ids.limit(1).count() == 0:
         return
@@ -2814,7 +2606,7 @@ def remove_from_containment_store(
         .agg((-F.count("*")).cast("long").alias("df"))
         .localCheckpoint(eager=True)
     )
-    new_ids.write.mode("append").format("parquet").saveAsTable(tt)
+    stores._append_tombstones(new_ids, table)
     neg.write.mode("append").format("parquet").saveAsTable(f"{table}__df")
 
 
@@ -2897,10 +2689,10 @@ def containment_screen(
     # corpus docs drop here — broadcast anti-join on the deletion-sized
     # tombstone set, before any verification work; physical removal is
     # compact_containment_store's job
-    tt = f"{table}__tombstones"
-    if spark.catalog.tableExists(tt):
+    dead = stores.tombstones(spark, table)
+    if dead is not None:
         cand = cand.join(
-            F.broadcast(spark.table(tt).select(F.col("id").alias("cid")).distinct()),
+            F.broadcast(dead.select(F.col("id").alias("cid")).distinct()),
             "cid",
             "left_anti",
         )

@@ -41,6 +41,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sparsity_spark import stores
+
 __all__ = [
     "symmetrize_edges",
     "pagerank",
@@ -730,16 +732,13 @@ def merge_edge_store(
     batch anti-joins to empty and appends nothing (the at-least-once
     safety the bloom/HLL stores share). The rank recompute re-shuffles
     edges by src once per run regardless, so the bucket spec serves the
-    hot per-batch path. Only table-absent creates the store fresh; transient
-    read errors propagate (merge_bloom_store's r9 rule). The increment
-    is frozen (localCheckpoint) before the append so the write never
-    races its own read. ``num_buckets`` applies only when the store is
-    CREATED; appends restate the existing table's own bucket spec (read
-    from the catalog — a caller-supplied mismatch would make Spark
-    reject the append mid-pipeline, the rule every other store follows).
-    Returns the maintained edge table."""
-    from sparsity_spark.operators.dedup import _table_bucket_count
-
+    hot per-batch path. Only table-absent creates the store fresh;
+    transient read errors propagate. The increment is frozen
+    (localCheckpoint) before the append so the write never races its own
+    read. ``num_buckets`` applies only when the store is CREATED;
+    appends restate the table's own bucket spec
+    (:func:`sparsity_spark.stores.append`). Returns the maintained edge
+    table."""
     spark = batch_df.sparkSession
     inc = batch_df.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
@@ -749,18 +748,9 @@ def merge_edge_store(
             inc.join(spark.table(table), on=["src", "dst"], how="left_anti")
             .localCheckpoint(eager=True)
         )
-        from sparsity_spark.operators.skew import bucket_partitioned
-
-        nb = _table_bucket_count(spark, table)
-        bucket_partitioned(new, nb, ["src", "dst"]).write.mode("append").bucketBy(
-            nb, "src", "dst"
-        ).saveAsTable(table)
+        stores.append(new, table, ["src", "dst"])
     else:
-        from sparsity_spark.operators.skew import write_bucketed
-
-        write_bucketed(
-            inc.localCheckpoint(eager=True), table, ["src", "dst"], num_buckets
-        )
+        stores.create(inc.localCheckpoint(eager=True), table, ["src", "dst"], num_buckets)
     return spark.table(table)
 
 

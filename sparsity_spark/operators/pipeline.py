@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from sparsity_spark import stores
+
 
 def hash_bucket(col, buckets: int = 100):
     """Deterministic content bucket 0..buckets-1: first 8 md5 hex chars as
@@ -577,12 +579,11 @@ def write_benchmark_store(
     training bands shuffle, into the store's bucket count); and
     ``{table}__grams`` — (bench_id, grams) bucketed by bench_id, so the
     exact-Jaccard verify join is Exchange-free on the store side too.
-    A fresh build clears stale tombstones from any dead incarnation
-    (the write_band_store rule)."""
+    A fresh build clears the store's tombstones and the ``__bands``
+    table's watermarks (the streaming loop's replay screen)."""
     from sparsity_spark.operators.dedup import band_keys, shingles_expr, words_expr
-    from sparsity_spark.operators.skew import _drop_table_and_location, write_bucketed
 
-    _drop_table_and_location(benchmark.sparkSession, f"{table}__tombstones")
+    stores.clear_tombstones(benchmark.sparkSession, table)
     # NOTE (r11): sharing one materialized gram table between the two
     # writes was measured SLOWER here (2.9→4.5 s) — each write is its
     # own action, and checkpointing corpus-sized gram arrays costs more
@@ -599,7 +600,7 @@ def write_benchmark_store(
     from sparsity_spark.util import overlap_jobs
 
     def _write_bands():
-        write_bucketed(
+        stores.create(
             b.select(F.col(id_col).alias("bench_id"), "band", "band_key"),
             f"{table}__bands",
             ["band", "band_key"],
@@ -607,7 +608,7 @@ def write_benchmark_store(
         )
 
     def _write_grams():
-        write_bucketed(g, f"{table}__grams", ["bench_id"], num_buckets)
+        stores.write_bucketed(g, f"{table}__grams", ["bench_id"], num_buckets)
 
     overlap_jobs(_write_bands, _write_grams)
 
@@ -626,56 +627,25 @@ def append_benchmark_store(
     validates them against the tables), so the store stays
     shuffle-free-joinable forever. Caller contract: ids are new
     (append-only lake discipline, the append_band_store rule)."""
-    from sparsity_spark.operators.dedup import (
-        _table_bucket_count,
-        band_keys,
-        shingles_expr,
-        words_expr,
-    )
-
-    from sparsity_spark.operators.skew import bucket_partitioned
-
-    spark = benchmark.sparkSession
-    # two cheap text passes by design — see write_benchmark_store's note
-    b = band_keys(benchmark, id_col, text_col, k, num_hashes, bands)
-    nb_b = _table_bucket_count(spark, f"{table}__bands")
-    nb_g = _table_bucket_count(spark, f"{table}__grams")
-    # independent tables — overlapped appends (guide §2.6; the
-    # append_containment_store discipline)
+    from sparsity_spark.operators.dedup import band_keys, shingles_expr, words_expr
     from sparsity_spark.util import overlap_jobs
 
-    def _app_bands():
-        (
-            bucket_partitioned(
-                b.select(F.col(id_col).alias("bench_id"), "band", "band_key"),
-                nb_b,
-                ["band", "band_key"],
-            )
-            .write.mode("append")
-            .bucketBy(nb_b, "band", "band_key")
-            .format("parquet")
-            .saveAsTable(f"{table}__bands")
-        )
-
-    def _app_grams():
-        (
-            bucket_partitioned(
-                benchmark.select(
-                    F.col(id_col).alias("bench_id"),
-                    F.array_distinct(
-                        shingles_expr(words_expr(text_col), k)
-                    ).alias("grams"),
-                ),
-                nb_g,
-                ["bench_id"],
-            )
-            .write.mode("append")
-            .bucketBy(nb_g, "bench_id")
-            .format("parquet")
-            .saveAsTable(f"{table}__grams")
-        )
-
-    overlap_jobs(_app_bands, _app_grams)
+    # two cheap text passes by design — see write_benchmark_store's note
+    b = band_keys(benchmark, id_col, text_col, k, num_hashes, bands)
+    g = benchmark.select(
+        F.col(id_col).alias("bench_id"),
+        F.array_distinct(shingles_expr(words_expr(text_col), k)).alias("grams"),
+    )
+    # independent tables — overlapped appends (guide §2.6; the
+    # append_containment_store discipline)
+    overlap_jobs(
+        lambda: stores.append(
+            b.select(F.col(id_col).alias("bench_id"), "band", "band_key"),
+            f"{table}__bands",
+            ["band", "band_key"],
+        ),
+        lambda: stores.append(g, f"{table}__grams", ["bench_id"]),
+    )
 
 
 def remove_from_benchmark_store(ids: DataFrame, table: str, id_col: str = "bench_id") -> None:
@@ -686,67 +656,34 @@ def remove_from_benchmark_store(ids: DataFrame, table: str, id_col: str = "bench
     benchmark stops flagging training docs immediately with zero store
     rewrite. Idempotent; physical removal is
     :func:`compact_benchmark_store`."""
-    spark = ids.sparkSession
-    tt = f"{table}__tombstones"
-    if not spark.catalog.tableExists(tt):
-        # a stale on-disk location from a dropped incarnation would make
-        # the first append fail — clear it (the remove_from_band_store rule)
-        from sparsity_spark.operators.skew import _drop_table_and_location
-
-        _drop_table_and_location(spark, tt)
-    ids.select(F.col(id_col).alias("bench_id")).distinct().localCheckpoint(
-        eager=True
-    ).write.mode("append").format("parquet").saveAsTable(tt)
+    stores.forget(ids.select(F.col(id_col).alias("bench_id")), table)
 
 
 def compact_benchmark_store(spark, table: str) -> None:
     """Physically remove tombstoned benchmark rows: rewrite both store
     tables' live rows through their own bucket specs, THEN drop the
-    tombstone table — rewrite-then-clear, so a crash between the steps
-    leaves harmless tombstones (the reverse order would resurrect
-    retired benchmarks)."""
-    from sparsity_spark.operators.dedup import _table_bucket_count
-    from sparsity_spark.operators.skew import _drop_table_and_location
+    tombstone table — the rewrite-then-clear ordering of
+    :func:`sparsity_spark.stores.compact`, over two tables."""
+    from sparsity_spark.util import overlap_jobs
 
-    tt = f"{table}__tombstones"
-    if not spark.catalog.tableExists(tt):
+    if stores.tombstones(spark, table) is None:
         return
     bands_t, grams_t = f"{table}__bands", f"{table}__grams"
     live_b = _benchmark_side(spark, table, bands_t).localCheckpoint(eager=True)
     live_g = _benchmark_side(spark, table, grams_t).localCheckpoint(eager=True)
-    from sparsity_spark.operators.skew import bucket_partitioned
-
-    nb_b = _table_bucket_count(spark, bands_t)
-    nb_g = _table_bucket_count(spark, grams_t)
-    # both live sets are frozen (eager checkpoints above) BEFORE either
-    # table mutates, and the two rewrites hit independent tables —
-    # overlap them (guide §2.6); the tombstone drop stays LAST
-    from sparsity_spark.util import overlap_jobs
-
-    def _rw_bands():
-        bucket_partitioned(live_b, nb_b, ["band", "band_key"]).write.mode(
-            "overwrite"
-        ).bucketBy(nb_b, "band", "band_key").format("parquet").saveAsTable(bands_t)
-
-    def _rw_grams():
-        bucket_partitioned(live_g, nb_g, ["bench_id"]).write.mode(
-            "overwrite"
-        ).bucketBy(nb_g, "bench_id").format("parquet").saveAsTable(grams_t)
-
-    overlap_jobs(_rw_bands, _rw_grams)
-    _drop_table_and_location(spark, tt)
+    # both live sets are frozen BEFORE either table mutates, and the two
+    # rewrites hit independent tables — overlap them (guide §2.6); the
+    # tombstone drop stays LAST
+    overlap_jobs(
+        lambda: stores.rewrite(live_b, bands_t, ["band", "band_key"]),
+        lambda: stores.rewrite(live_g, grams_t, ["bench_id"]),
+    )
+    stores.clear_tombstones(spark, table)
 
 
 def _benchmark_side(spark, table: str, side_table: str) -> DataFrame:
-    """One store table with tombstoned bench ids anti-joined out
-    (broadcast, deletion-sized — the bucketed scan stays Exchange-free)."""
-    df = spark.table(side_table)
-    tt = f"{table}__tombstones"
-    if spark.catalog.tableExists(tt):
-        df = df.join(
-            F.broadcast(spark.table(tt).distinct()), "bench_id", "left_anti"
-        )
-    return df
+    """One store table with tombstoned bench ids anti-joined out."""
+    return stores.live(spark, table, spark.table(side_table))
 
 
 def fuzzy_decontaminate_store(

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from sparsity_spark import stores
 from sparsity_spark.util import local_df
 
 
@@ -671,13 +672,12 @@ def write_ivfpq_index(
     reads ONLY those buckets' files (`SelectedBucketsCount: nprobe·|Q| of
     N` in the plan — asserted in tests/test_plans.py). At 100 TB the
     per-query-batch index IO is probed-buckets-sized, not corpus-sized —
-    and the raw vectors are never read at all."""
-    from sparsity_spark.operators.skew import write_bucketed
+    and the raw vectors are never read at all. A rebuild starts with no
+    tombstones, like every other store's fresh write."""
+    from sparsity_spark.util import overlap_jobs
 
     spark = embeddings.sparkSession
     book = codebook or pq_sampled_codebook(embeddings, m, k_code, dim, id_col, vec_col)
-    from sparsity_spark.operators.skew import _drop_table_and_location
-    from sparsity_spark.util import overlap_jobs
 
     # the three tables are independent of each other (different names, no
     # read-after-write among them), so their write jobs overlap from a
@@ -687,7 +687,7 @@ def write_ivfpq_index(
     def _write_index():
         # one fused corpus pass (r11): codes + assignment from the same
         # scan, no id-keyed join/window shuffle — see _encode_with_assignment
-        write_bucketed(
+        stores.create(
             _encode_with_assignment(
                 embeddings, centroids, book, m, k_code, dim, id_col, vec_col
             ),
@@ -697,7 +697,7 @@ def write_ivfpq_index(
         )
 
     def _write_codebook():
-        _drop_table_and_location(spark, f"{index_table}__codebook")
+        stores._drop_table_and_location(spark, f"{index_table}__codebook")
         local_df(
             spark,
             [(s, j, book[s][j]) for s in range(m) for j in range(len(book[s]))],
@@ -705,7 +705,7 @@ def write_ivfpq_index(
         ).write.mode("overwrite").saveAsTable(f"{index_table}__codebook")
 
     def _write_centroids():
-        _drop_table_and_location(spark, f"{index_table}__centroids")
+        stores._drop_table_and_location(spark, f"{index_table}__centroids")
         centroids.write.mode("overwrite").saveAsTable(f"{index_table}__centroids")
 
     overlap_jobs(_write_index, _write_codebook, _write_centroids)
@@ -750,8 +750,6 @@ def append_ivfpq_index(
     retrains. Appending a batch then querying is bit-identical to having
     built the whole index with the same codebook/centroids up front —
     pinned by the `ann_ivfpq_append_topk` oracle row."""
-    from sparsity_spark.operators.dedup import _table_bucket_count
-
     spark = new_embeddings.sparkSession
     book = _read_codebook(spark, index_table)
     m, k_code = len(book), len(book[0])
@@ -760,80 +758,28 @@ def append_ivfpq_index(
     rows = _encode_with_assignment(
         new_embeddings, cents, book, m, k_code, dim, id_col, vec_col
     )
-    from sparsity_spark.operators.skew import bucket_partitioned
-
-    num_buckets = _table_bucket_count(spark, index_table)
-    (
-        bucket_partitioned(rows, num_buckets, ["centroid_id"])
-        .write.mode("append")
-        .bucketBy(num_buckets, "centroid_id")
-        .format("parquet")
-        .saveAsTable(index_table)
-    )
+    stores.append(rows, index_table, ["centroid_id"])
 
 
 def delete_from_ivfpq_index(
     ids: DataFrame, index_table: str, id_col: str = "vec_id"
 ) -> None:
-    """Logical deletion from the persisted IVF-PQ index (r11 — the
-    right-to-be-forgotten path a 100 TB embedding store needs): append
-    the ids to a ``__tombstones`` side table; every query path
-    anti-joins it read-side (broadcast — the tombstone set is
-    deletion-sized, never corpus-sized), so deleted vectors stop
-    surfacing immediately with ZERO index rewrite. Idempotent: duplicate
-    tombstones are harmless to an anti-join. Physical removal is
+    """Logical deletion from the persisted IVF-PQ index (the
+    right-to-be-forgotten path a 100 TB embedding store needs): tombstone
+    the ids (:func:`sparsity_spark.stores.forget`); every query path
+    anti-joins them read-side, so deleted vectors stop surfacing
+    immediately with ZERO index rewrite. Idempotent. Physical removal is
     :func:`compact_ivfpq_index`."""
-    spark = ids.sparkSession
-    tt = f"{index_table}__tombstones"
-    if not spark.catalog.tableExists(tt):
-        # clear a stale managed LOCATION left by a dead incarnation —
-        # append-create fails on it (the _record_max_batch lesson)
-        from sparsity_spark.operators.skew import _drop_table_and_location
-
-        _drop_table_and_location(spark, tt)
-    rows = ids.select(F.col(id_col)).distinct().localCheckpoint(eager=True)
-    rows.write.mode("append").format("parquet").saveAsTable(tt)
-
-
-def _live_codes(spark, index_table: str, id_col: str = "vec_id") -> DataFrame:
-    """The index's code rows minus tombstoned ids (broadcast anti-join;
-    a no-op scan when no tombstone table exists). The centroid_id bucket
-    prune still pushes through — the anti-join only touches surviving
-    rows of the probed buckets."""
-    codes = spark.table(index_table)
-    tt = f"{index_table}__tombstones"
-    if spark.catalog.tableExists(tt):
-        codes = codes.join(
-            F.broadcast(spark.table(tt).select(id_col).distinct()),
-            id_col,
-            "left_anti",
-        )
-    return codes
+    stores.forget(ids.select(F.col(id_col)), index_table)
 
 
 def compact_ivfpq_index(spark, index_table: str, id_col: str = "vec_id") -> None:
-    """Physically remove tombstoned code rows (r11): rewrite the
-    surviving rows through the index's own bucket spec, THEN drop the
-    tombstone table — this order is the safe one (a crash between the
-    two leaves tombstones whose rows are already gone, and the read-side
-    anti-join of an absent id is a no-op; the reverse order would
-    resurrect deleted vectors). Queries before and after compaction are
-    bit-identical by construction — the compacted table IS the
-    anti-joined view, materialized."""
-    from sparsity_spark.operators.dedup import _table_bucket_count
-    from sparsity_spark.operators.skew import _drop_table_and_location
-
-    tt = f"{index_table}__tombstones"
-    if not spark.catalog.tableExists(tt):
-        return
-    live = _live_codes(spark, index_table, id_col).localCheckpoint(eager=True)
-    nb = _table_bucket_count(spark, index_table)
-    from sparsity_spark.operators.skew import bucket_partitioned
-
-    bucket_partitioned(live, nb, ["centroid_id"]).write.mode("overwrite").bucketBy(
-        nb, "centroid_id"
-    ).format("parquet").saveAsTable(index_table)
-    _drop_table_and_location(spark, tt)
+    """Physically remove tombstoned code rows through the index's own
+    centroid_id bucket spec (:func:`sparsity_spark.stores.compact`).
+    Queries before and after compaction are bit-identical by
+    construction. The tombstones carry their own id column, so
+    ``id_col`` is not needed here."""
+    stores.compact(spark, index_table, ["centroid_id"])
 
 
 def ivfpq_index_topk(
@@ -856,7 +802,7 @@ def ivfpq_index_topk(
 
     Returns (query_id, neighbor_id, adc_d2)."""
     spark = queries.sparkSession
-    codes = _live_codes(spark, index_table, id_col)
+    codes = stores.live(spark, index_table)
     cents = spark.table(f"{index_table}__centroids")
     book = _read_codebook(spark, index_table)
     mm = len(book)
@@ -952,7 +898,7 @@ def ivfpq_twin_screen(
     probe_ids = sorted(
         {r["centroid_id"] for r in batch_sig.select("centroid_id").distinct().collect()}
     )
-    live = _live_codes(spark, index_table, id_col)
+    live = stores.live(spark, index_table)
     index_sig = _code_signature(
         live.filter(F.col("centroid_id").isin(probe_ids)),
         id_col,

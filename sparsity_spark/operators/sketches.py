@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from sparsity_spark import stores
+
 HASH_SPACE = float(1 << 60)
 
 
@@ -220,11 +222,7 @@ def write_cms_store(
     is metadata-sized (≤ depth×width rows) so a plain parquet overwrite is
     the right physical shape — no bucketing needed; merges rewrite
     kilobytes, never the corpus."""
-    from sparsity_spark.operators.skew import _drop_table_and_location
-
-    sk = cms_sketch(df, value_col, width, depth).localCheckpoint(eager=True)
-    _drop_table_and_location(df.sparkSession, table)
-    sk.write.mode("overwrite").format("parquet").saveAsTable(table)
+    stores.replace_small(cms_sketch(df, value_col, width, depth), table)
 
 
 def cms_store(spark, table: str) -> DataFrame:
@@ -244,26 +242,8 @@ def merge_cms_store(
     discipline: batch and streaming counts cannot drift). Because
     cms_merge is exactly the sketch of the concatenated inputs, the
     maintained store is bit-equal to rebuilding from everything ever
-    seen — test-pinned. The merged sketch is frozen (localCheckpoint)
-    before the overwrite so the write never reads its own target.
-    Returns the merged sketch."""
-    from sparsity_spark.operators.skew import _drop_table_and_location
-
-    spark = batch_df.sparkSession
-    inc = cms_sketch(batch_df, value_col, width, depth)
-    # only TABLE-ABSENT may fall back to the bare increment — a swallowed
-    # transient read error here would silently replace the accumulated
-    # counters with one batch's (merge_bloom_store had the same bug, r9)
-    if spark.catalog.tableExists(table):
-        existing = spark.table(table)
-        merged = cms_merge(existing, inc)
-    else:
-        merged = inc
-    # freeze BEFORE dropping: the lineage reads the table being replaced
-    merged = merged.localCheckpoint(eager=True)
-    _drop_table_and_location(spark, table)
-    merged.write.mode("overwrite").format("parquet").saveAsTable(table)
-    return merged
+    seen — test-pinned. Returns the merged sketch."""
+    return stores.merge_small(cms_sketch(batch_df, value_col, width, depth), table, cms_merge)
 
 
 # ---------------------------------------------------------------------------
@@ -352,11 +332,7 @@ def hll_estimate(sketch: DataFrame, b: int = HLL_B) -> DataFrame:
 def write_hll_store(df: DataFrame, table: str, value_col: str, b: int = HLL_B) -> None:
     """Persist a corpus's HLL register file as a catalog table — the
     metadata-sized store shape (≤ 2^b rows), like the CMS store."""
-    from sparsity_spark.operators.skew import _drop_table_and_location
-
-    sk = hll_sketch(df, value_col, b).localCheckpoint(eager=True)
-    _drop_table_and_location(df.sparkSession, table)
-    sk.write.mode("overwrite").format("parquet").saveAsTable(table)
+    stores.replace_small(hll_sketch(df, value_col, b), table)
 
 
 def hll_store(spark, table: str) -> DataFrame:
@@ -372,22 +348,7 @@ def merge_hll_store(
     discipline). hll_merge is exact AND idempotent, so the maintained
     store is bit-equal to rebuilding from everything ever seen even if an
     increment is replayed. Returns the merged register file."""
-    from sparsity_spark.operators.skew import _drop_table_and_location
-
-    spark = batch_df.sparkSession
-    inc = hll_sketch(batch_df, value_col, b)
-    # table-absent only — see merge_cms_store: transient read errors must
-    # propagate, not silently reset the register file to one batch
-    if spark.catalog.tableExists(table):
-        existing = spark.table(table)
-        merged = hll_merge(existing, inc)
-    else:
-        merged = inc
-    # freeze BEFORE dropping: the lineage reads the table being replaced
-    merged = merged.localCheckpoint(eager=True)
-    _drop_table_and_location(spark, table)
-    merged.write.mode("overwrite").format("parquet").saveAsTable(table)
-    return merged
+    return stores.merge_small(hll_sketch(batch_df, value_col, b), table, hll_merge)
 
 
 def hll_group_sketch(
@@ -508,144 +469,6 @@ def quantile_sample_estimate(
     )
 
 
-def _meta_table(table: str) -> str:
-    return table + "__maxbatch"
-
-
-def _compacted_table(table: str) -> str:
-    return table + "__compacted"
-
-
-def _write_compaction_watermark(spark, table: str, through: int) -> None:
-    """Record that every batch id <= ``through`` has been folded AND its
-    per-batch presence record destroyed by compaction. Written BEFORE the
-    compacting rewrite: a crash between the two leaves the store
-    uncompacted (reads unchanged — the read-side collapse is idempotent)
-    with ids <= through already screening as folded, which they are; the
-    reverse order would leave a compacted store whose old ids presence-
-    scan as absent and re-fold as duplicates. Monotone like
-    :func:`_record_max_batch`."""
-    ct = _compacted_table(table)
-    if spark.catalog.tableExists(ct):
-        old = spark.table(ct).agg(F.max("compacted_through")).collect()[0][0]
-        new = max(int(through), int(old)) if old is not None else int(through)
-        spark.sql(f"INSERT OVERWRITE {ct} VALUES (CAST({new} AS BIGINT))")
-        return
-    from sparsity_spark.operators.skew import _drop_table_and_location
-
-    _drop_table_and_location(spark, ct)
-    spark.createDataFrame(
-        [(int(through),)], "compacted_through long"
-    ).write.mode("overwrite").saveAsTable(ct)
-
-
-# sentinel for "the watermark was not read": None is a real value (empty
-# meta table), so absence needs its own marker
-_UNREAD = object()
-
-
-def _batch_already_folded(spark, table: str, batch_id: int) -> bool:
-    return _fold_screen(spark, table, batch_id)[0]
-
-
-def _fold_screen(spark, table: str, batch_id: int):
-    """O(1) replay screen for the non-idempotent stores (r10, advisor
-    finding: the old screen re-scanned the store's entire batch_id
-    column every micro-batch, so screen cost grew linearly with batches
-    ever folded). In the steady state — Structured Streaming's strictly
-    increasing batch ids — a new batch satisfies ``batch_id > max folded
-    id`` and the probe never touches the store (one one-row side-table
-    read). ``batch_id <= max`` does NOT prove "already folded", though:
-    merge_count_store / merge_ohlc_store are also public batch APIs, and
-    a direct caller folding an out-of-order id (backfill) would be
-    silently dropped by a pure <=-screen (r11, advisor finding). So a
-    <=-max id falls back to the exact-presence column scan — cheap
-    because it only ever runs in the rare out-of-order case. Legacy
-    stores without the side table take the scan too;
-    :func:`_record_max_batch` creates the table on the next fold.
-
-    Compaction interaction (r11): a compacted store no longer carries
-    per-batch presence rows, so ids at or below the compaction watermark
-    (``{table}__compacted``, written by the compact_* ops) screen as
-    folded unconditionally — compaction SEALS the store against backfill
-    below its watermark (the compact_* docstrings state the contract
-    loudly).
-
-    Returns ``(folded, known_max)`` — known_max is the max-batch
-    watermark READ during this screen (None = empty meta table) or
-    ``_UNREAD`` when the meta table does not exist, so the caller can
-    thread it into :func:`_record_max_batch` and skip the watermark
-    RE-read the old two-call fold shape paid (one collect job + its
-    driver gap per fold, r12 session 4 — safe because both reads were
-    always inside the SAME fold under the single-writer contract)."""
-    meta = _meta_table(table)
-    known = _UNREAD
-    if spark.catalog.tableExists(meta):
-        known = spark.table(meta).agg(F.max("max_batch_id")).collect()[0][0]
-        if known is not None and int(batch_id) > int(known):
-            return False, known
-    ct = _compacted_table(table)
-    if spark.catalog.tableExists(ct):
-        through = spark.table(ct).agg(F.max("compacted_through")).collect()[0][0]
-        if through is not None and int(batch_id) <= int(through):
-            return True, known
-    return (
-        spark.table(table)
-        .where(F.col("batch_id") == int(batch_id))
-        .limit(1)
-        .count()
-        > 0
-    ), known
-
-
-def _reset_store_side_tables(spark, table: str) -> None:
-    """Drop the max-batch and compaction watermarks when a store is
-    created FRESH (r11): callers that rebuild a store drop the data
-    table but not its side tables, and a stale watermark from the dead
-    incarnation would force every fold through the presence-scan
-    fallback (max-batch) or silently screen out live batches
-    (compacted). A fresh store's watermarks start empty by definition."""
-    from sparsity_spark.operators.skew import _drop_table_and_location
-
-    _drop_table_and_location(spark, _meta_table(table))
-    _drop_table_and_location(spark, _compacted_table(table))
-
-
-def _record_max_batch(spark, table: str, batch_id: int, known_max=_UNREAD) -> None:
-    """Overwrite the one-row max-batch-id side table AFTER the store
-    append commits. Ordering makes a crash between the two writes safe:
-    a stale side table only re-admits the same batch on replay, whose
-    duplicate rows the read side collapses with MAX (identical by
-    construction); the reverse order would record a batch whose data
-    never landed and silently drop it forever. The recorded value is
-    ``greatest(old, new)`` — an out-of-order backfill fold (see
-    :func:`_batch_already_folded`) must not LOWER the watermark, or every
-    batch between the backfill id and the true max would re-screen as
-    new and re-fold duplicate data."""
-    meta = _meta_table(table)
-    if spark.catalog.tableExists(meta):
-        # known_max (from _fold_screen, same fold, single-writer
-        # contract) skips the second watermark read of the old shape
-        old = (
-            known_max
-            if known_max is not _UNREAD
-            else spark.table(meta).agg(F.max("max_batch_id")).collect()[0][0]
-        )
-        new = max(int(batch_id), int(old)) if old is not None else int(batch_id)
-        # one-row data-only rewrite — INSERT OVERWRITE skips the
-        # drop/recreate catalog round-trip a saveAsTable overwrite pays
-        spark.sql(f"INSERT OVERWRITE {meta} VALUES (CAST({new} AS BIGINT))")
-        return
-    # a stale managed LOCATION without a catalog entry (dropped table,
-    # persistent warehouse dir) fails saveAsTable — clear it first
-    from sparsity_spark.operators.skew import _drop_table_and_location
-
-    _drop_table_and_location(spark, meta)
-    spark.createDataFrame(
-        [(int(batch_id),)], "max_batch_id long"
-    ).write.mode("overwrite").saveAsTable(meta)
-
-
 def merge_count_store(
     batch_df: DataFrame,
     table: str,
@@ -657,113 +480,65 @@ def merge_count_store(
     the store-family loop for exact heavy hitters, where the CMS gives
     only an estimate). The store holds (batch_id, key, c) APPEND-ONLY
     rows bucketed by key: each micro-batch pre-aggregates to one row per
-    key, skips entirely if its batch_id was already folded (O(1) probe
-    of a one-row max-batch-id side table — :func:`_batch_already_folded`
-    — so at-least-once delivery appends nothing on replay and the screen
-    cost no longer grows with store age), and appends through the
-    table's own bucket spec. Counts are the one store whose merge is NOT a set union
-    (sums are not idempotent), so exactly-once is restored at two
-    layers: the write-side batch_id screen, and the read side
-    (:func:`count_store_topk`) collapsing any raced duplicate
+    key and folds through :func:`sparsity_spark.stores.fold_batch` — an
+    already-folded batch_id appends nothing, so at-least-once delivery
+    is safe and the screen costs O(1). Counts are the one store whose
+    merge is NOT a set union (sums are not idempotent), so exactly-once
+    is restored at two layers: the write-side batch_id screen, and the
+    read side (:func:`count_store_topk`) collapsing any raced duplicate
     (batch_id, key) rows with MAX before summing — identical rows by
     construction, so MAX is exact. The store is (batches · keys)-sized,
     never corpus-sized; nothing rewrites.
 
-    SINGLE-WRITER CONTRACT (r9 review): the batch_id screen assumes one
-    monotone id sequence per table — exactly what one Structured
-    Streaming query with a stable checkpoint provides. Pointing a SECOND
-    writer (or the same query after its checkpoint directory is wiped,
-    which restarts ids at 0) at the table makes the screen treat the new
-    batches as replays and silently drop them. Drop the table together
-    with its checkpoint, and give concurrent pipelines their own tables
-    — the set-union stores tolerate shared writers; a count store by
-    its nature cannot. Returns the maintained table."""
-    spark = batch_df.sparkSession
+    SINGLE-WRITER CONTRACT: the batch_id screen assumes one monotone id
+    sequence per table — exactly what one Structured Streaming query
+    with a stable checkpoint provides. Pointing a SECOND writer (or the
+    same query after its checkpoint directory is wiped, which restarts
+    ids at 0) at the table makes the screen treat the new batches as
+    replays and silently drop them. Drop the table together with its
+    checkpoint, and give concurrent pipelines their own tables — the
+    set-union stores tolerate shared writers; a count store by its
+    nature cannot. Returns the maintained table."""
     inc = (
         batch_df.groupBy(F.col(key_col).alias("key"))
         .agg(F.count("*").cast("long").alias("c"))
         .select(F.lit(int(batch_id)).cast("long").alias("batch_id"), "key", "c")
     )
-    if spark.catalog.tableExists(table):
-        from sparsity_spark.operators.dedup import _table_bucket_count
+    return stores.fold_batch(inc, table, batch_id, ["key"], num_buckets)
 
-        folded, known_max = _fold_screen(spark, table, batch_id)
-        if not folded:
-            from sparsity_spark.operators.skew import bucket_partitioned
 
-            nb = _table_bucket_count(spark, table)
-            bucket_partitioned(
-                inc.localCheckpoint(eager=True), nb, ["key"]
-            ).write.mode("append").bucketBy(nb, "key").saveAsTable(table)
-            _record_max_batch(spark, table, batch_id, known_max)
-    else:
-        from sparsity_spark.operators.skew import write_bucketed
-
-        _reset_store_side_tables(spark, table)
-        write_bucketed(inc.localCheckpoint(eager=True), table, ["key"], num_buckets)
-        _record_max_batch(spark, table, batch_id)
-    return spark.table(table)
+def _count_totals(store: DataFrame) -> DataFrame:
+    """(key, total) over a count store: raced duplicate (batch_id, key)
+    rows collapse with MAX (identical by construction — see
+    merge_count_store), then sum per key on the bucketed layout."""
+    per_batch = store.groupBy("batch_id", "key").agg(F.max("c").alias("c"))
+    return per_batch.groupBy("key").agg(F.sum("c").cast("long").alias("total"))
 
 
 def count_store_topk(spark, table: str, k: int = 10) -> DataFrame:
-    """Exact top-k over the maintained frequency store: collapse raced
-    duplicate (batch_id, key) rows with MAX (identical by construction —
-    see merge_count_store), sum per key on the bucketed layout, rank with
-    a deterministic key tie-break. Returns (key, total)."""
-    per_batch = (
-        spark.table(table)
-        .groupBy("batch_id", "key")
-        .agg(F.max("c").alias("c"))
-    )
-    totals = per_batch.groupBy("key").agg(F.sum("c").cast("long").alias("total"))
+    """Exact top-k over the maintained frequency store, ranked with a
+    deterministic key tie-break. Returns (key, total)."""
+    totals = _count_totals(spark.table(table))
     return totals.orderBy(F.desc("total"), "key").limit(k)
 
 
 def compact_count_store(spark, table: str) -> None:
     """Collapse the append-only count store to ONE row per key (r11 —
-    VERDICT r10 #4: the store grows ∝ batches × keys, so after thousands
-    of folds every read pays a batch-count-sized scan; compaction bounds
-    it back to key-sized). The rewrite goes through the SAME read-side
-    collapse the queries use (MAX over raced duplicates, SUM per key),
-    lands through the table's existing bucket spec, and stamps the
-    surviving rows with the max folded batch id — reads are
+    the store grows ∝ batches × keys, so after thousands of folds every
+    read pays a batch-count-sized scan; compaction bounds it back to
+    key-sized). The rewrite goes through the read path's own collapse
+    and stamps the rows with the max folded batch id — reads are
     bit-identical before and after by construction.
 
-    Replay safety: the compaction watermark (one-row ``__compacted``
-    side table) is written BEFORE the rewrite, so ids at or below it
-    screen as folded even though their per-batch presence rows are gone
-    (crash between the two writes leaves the store uncompacted with the
-    watermark already correct — those ids ARE folded). LOUD CONTRACT:
-    compaction seals the store against out-of-order backfill at or below
-    the watermark — a genuinely-new smaller id folded via the public
-    batch API after compaction is screened out as a replay. Compact only
-    when no backfill below the current max is pending. Single-writer,
-    same as the folds themselves."""
-    from sparsity_spark.operators.dedup import _table_bucket_count
-
-    mx = None
-    meta = _meta_table(table)
-    if spark.catalog.tableExists(meta):
-        mx = spark.table(meta).agg(F.max("max_batch_id")).collect()[0][0]
-    if mx is None:
-        mx = spark.table(table).agg(F.max("batch_id")).collect()[0][0]
-    if mx is None:
-        return  # empty store — nothing to compact
-    collapsed = (
-        spark.table(table)
-        .groupBy("batch_id", "key")
-        .agg(F.max("c").alias("c"))
-        .groupBy("key")
-        .agg(F.sum("c").cast("long").alias("c"))
-        .select(F.lit(int(mx)).cast("long").alias("batch_id"), "key", "c")
-        # eager materialization truncates lineage so the overwrite below
-        # never reads the table it replaces
-        .localCheckpoint(eager=True)
+    LOUD CONTRACT: compaction seals the store against out-of-order
+    backfill at or below the watermark — a genuinely-new smaller id
+    folded via the public batch API after compaction is screened out as
+    a replay. Compact only when no backfill below the current max is
+    pending. Single-writer, same as the folds themselves. Ordering and
+    crash safety: :func:`sparsity_spark.stores.compact_batches`."""
+    stores.compact_batches(
+        spark,
+        table,
+        ["key"],
+        lambda store: _count_totals(store).select("key", F.col("total").alias("c")),
     )
-    nb = _table_bucket_count(spark, table)
-    _write_compaction_watermark(spark, table, int(mx))
-    from sparsity_spark.operators.skew import bucket_partitioned
-
-    bucket_partitioned(collapsed, nb, ["key"]).write.mode("overwrite").bucketBy(
-        nb, "key"
-    ).format("parquet").saveAsTable(table)

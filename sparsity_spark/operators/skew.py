@@ -4,21 +4,22 @@
   any hot key through one reducer: salt by hash(x) % S so each (key, salt)
   partition sees a *disjoint* slice of x's value space; per-salt distinct
   counts then sum exactly (no approximation). Two ordinary hash aggregates.
-* ``write_bucketed`` / ``bucketed_table`` — persist a frame's cells bucketed
-  by key so repeated joins/aggregations on that key are co-located
-  (no Exchange before the join — asserted in tests). This is the engine's
-  answer to the reference's sorted ``divisions`` for *hash* access paths,
-  as range-partitioned parquet is for *range* paths.
+* ``salted_join`` — a skewed fact⋈dim join with explicit key salting.
+* ``bloom_semijoin`` and the persisted bloom store — an explicit bloom
+  prefilter ahead of an exact semi-join.
 
 Spark's AQE skew-join splitting (enabled in session.py) covers the join-side
 skew case at runtime; these helpers cover the aggregation-side and
-repeated-access cases that AQE cannot rewrite.
+too-large-to-broadcast cases that AQE cannot rewrite. Bucketed writes, which co-locate repeated joins on a
+key, live in :mod:`sparsity_spark.stores`.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from sparsity_spark import stores
 
 
 def distinct_count_skew_safe(
@@ -40,62 +41,6 @@ def distinct_count_skew_safe(
         .agg(F.count_distinct(distinct_col).alias("__pd__"))
     )
     return partial.groupBy(*key_cols).agg(F.sum("__pd__").cast("long").alias("n_distinct"))
-
-
-def _drop_table_and_location(spark: SparkSession, table: str) -> None:
-    """DROP the table AND its managed location — a previous session may
-    have left the directory behind without a catalog entry (fresh
-    metastore, persistent warehouse dir), which makes saveAsTable fail
-    with LOCATION_ALREADY_EXISTS."""
-    import shutil
-
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "")
-    if warehouse.startswith("file:"):
-        warehouse = warehouse[5:]
-    if warehouse:
-        shutil.rmtree(f"{warehouse.rstrip('/')}/{table.lower()}", ignore_errors=True)
-
-
-def bucket_partitioned(df: DataFrame, num_buckets: int, bucket_cols: list[str]) -> DataFrame:
-    """One shuffle partition per bucket id ahead of a bucketed write
-    (r11, guide §6 output file sizing): Spark's bucket writer splits each
-    input TASK's rows by bucket id, so an unpartitioned write emits up to
-    ``input_partitions × num_buckets`` files — measured 256-272 part
-    files for KB-sized store tables, paying per-file commit on the write
-    and per-file open on every later scan. ``repartition``'s
-    HashPartitioning is the same murmur3-pmod the writer assigns bucket
-    ids with, so partition i holds exactly bucket i and the write emits
-    ONE file per non-empty bucket; ``num_buckets`` stays the caller's
-    scale knob for target file size."""
-    return df.repartition(num_buckets, *[F.col(c) for c in bucket_cols])
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    num_buckets: int = 8,
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Persist as a bucketed (and optionally sorted) table: joins and
-    aggregations keyed on bucket_cols read it without a shuffle. The
-    input is repartitioned to one partition per bucket id so the table
-    is one file per bucket (see :func:`bucket_partitioned`)."""
-    spark = df.sparkSession
-    _drop_table_and_location(spark, table)
-    writer = (
-        bucket_partitioned(df, num_buckets, bucket_cols)
-        .write.mode("overwrite")
-        .bucketBy(num_buckets, *bucket_cols)
-    )
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table)
-
-
-def bucketed_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
 
 
 def salted_join(
@@ -215,9 +160,7 @@ def write_bloom_store(
     rows (r8 — the membership member of the persisted-sketch family next
     to CMS counts and HLL distincts). Metadata-sized: a plain parquet
     overwrite; merges rewrite kilobytes, never the corpus."""
-    sk = _bloom_byte_rows(small, key_col, m_bits, k).localCheckpoint(eager=True)
-    _drop_table_and_location(small.sparkSession, table)
-    sk.write.mode("overwrite").format("parquet").saveAsTable(table)
+    stores.replace_small(_bloom_byte_rows(small, key_col, m_bits, k), table)
 
 
 def bloom_store_bytes(
@@ -240,35 +183,27 @@ def merge_bloom_store(
     batch cannot change the bitmap — the at-least-once-safety property
     the HLL store has and counter sketches lack — and the maintained
     store is bit-equal to one built from everything ever seen
-    (test-pinned). Frozen (localCheckpoint) before the overwrite so the
-    write never reads its own target. Returns the merged (b, bits)."""
-    spark = batch_df.sparkSession
-    inc = _bloom_byte_rows(batch_df, key_col, m_bits, k)
-    # table-absent is the ONLY condition that may fall back to the bare
-    # increment: a transient read/metastore error swallowed here would
-    # overwrite the persisted bitmap with one batch's bits, and since the
-    # bloom is used as a semijoin PREFILTER the lost bits become silent
-    # false negatives (dropped matches) downstream. Real errors propagate.
-    if spark.catalog.tableExists(table):
-        existing = spark.table(table)
-        merged = (
-            existing.withColumnRenamed("bits", "bits_a")
-            .join(inc.withColumnRenamed("bits", "bits_b"), "b", "full_outer")
-            .select(
-                "b",
-                (
-                    F.coalesce(F.col("bits_a"), F.lit(0)).bitwiseOR(
-                        F.coalesce(F.col("bits_b"), F.lit(0))
-                    )
-                ).alias("bits"),
-            )
+    (test-pinned). Only table-absent falls back to the bare increment:
+    the bloom is a semijoin PREFILTER, so bits lost to a swallowed read
+    error would become silent false negatives downstream. Returns the
+    merged (b, bits)."""
+    return stores.merge_small(_bloom_byte_rows(batch_df, key_col, m_bits, k), table, _bloom_or)
+
+
+def _bloom_or(a: DataFrame, b: DataFrame) -> DataFrame:
+    """Byte-wise OR of two (b, bits) bitmaps — a full outer join on b."""
+    return (
+        a.withColumnRenamed("bits", "bits_a")
+        .join(b.withColumnRenamed("bits", "bits_b"), "b", "full_outer")
+        .select(
+            "b",
+            (
+                F.coalesce(F.col("bits_a"), F.lit(0)).bitwiseOR(
+                    F.coalesce(F.col("bits_b"), F.lit(0))
+                )
+            ).alias("bits"),
         )
-    else:
-        merged = inc
-    merged = merged.localCheckpoint(eager=True)
-    _drop_table_and_location(spark, table)
-    merged.write.mode("overwrite").format("parquet").saveAsTable(table)
-    return merged
+    )
 
 
 def bloom_probe_expr(key, bitmap: bytes, m_bits: int = BLOOM_M_BITS, k: int = 5):

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from sparsity_spark import stores
+
 
 def asof_join(
     left: DataFrame,
@@ -670,17 +672,13 @@ def merge_ohlc_store(
 
     Counts make the merge non-idempotent, so the count-store discipline
     applies verbatim: an append-only (batch_id, key, bucket, …partial…)
-    layout bucketed by (key, bucket), a write-side O(1) batch_id replay
-    screen (one-row max-batch-id side table — sketches'
-    ``_batch_already_folded``), and read-side MAX-collapse of raced
-    duplicate rows before
+    layout bucketed by (key, bucket), folded through
+    :func:`sparsity_spark.stores.fold_batch` (O(1) batch_id replay
+    screen), and read-side MAX-collapse of raced duplicate rows before
     the final merge (identical by construction). Same single-writer
     contract as merge_count_store: the table is married to one
     streaming query's checkpoint. :func:`read_ohlc_store` serves the
     merged view. Returns the maintained table."""
-    from sparsity_spark.operators.dedup import _table_bucket_count
-
-    spark = batch_df.sparkSession
     inc = (
         batch_df.groupBy(
             F.col(by).alias("key"),
@@ -697,31 +695,7 @@ def merge_ohlc_store(
         )
         .select(F.lit(int(batch_id)).cast("long").alias("batch_id"), "*")
     )
-    from sparsity_spark.operators.sketches import (
-        _fold_screen,
-        _record_max_batch,
-    )
-
-    if spark.catalog.tableExists(table):
-        folded, known_max = _fold_screen(spark, table, batch_id)
-        if not folded:
-            from sparsity_spark.operators.skew import bucket_partitioned
-
-            nb = _table_bucket_count(spark, table)
-            bucket_partitioned(
-                inc.localCheckpoint(eager=True), nb, ["key", "bucket"]
-            ).write.mode("append").bucketBy(nb, "key", "bucket").saveAsTable(table)
-            _record_max_batch(spark, table, batch_id, known_max)
-    else:
-        from sparsity_spark.operators.skew import write_bucketed
-        from sparsity_spark.operators.sketches import _reset_store_side_tables
-
-        _reset_store_side_tables(spark, table)
-        write_bucketed(
-            inc.localCheckpoint(eager=True), table, ["key", "bucket"], num_buckets
-        )
-        _record_max_batch(spark, table, batch_id)
-    return spark.table(table)
+    return stores.fold_batch(inc, table, batch_id, ["key", "bucket"], num_buckets)
 
 
 def read_ohlc_store(spark, table: str) -> DataFrame:
@@ -733,20 +707,21 @@ def read_ohlc_store(spark, table: str) -> DataFrame:
     (batches · keys · buckets)-sized store; raw events never rescanned.
     Returns (key, bucket, open, high, low, close, n_events) — the exact
     schema of :func:`ohlc_resample` over the union of every batch."""
-    per_batch = (
-        spark.table(table)
-        .groupBy("batch_id", "key", "bucket")
-        .agg(
-            F.max("open_oid").alias("open_oid"),
-            F.max("open").alias("open"),
-            F.max("high").alias("high"),
-            F.max("low").alias("low"),
-            F.max("close_oid").alias("close_oid"),
-            F.max("close").alias("close"),
-            F.max("n_events").alias("n_events"),
-        )
+    return _ohlc_merged(spark.table(table))
+
+
+_OHLC_PARTIAL = ("open_oid", "open", "high", "low", "close_oid", "close", "n_events")
+
+
+def _ohlc_merged(store: DataFrame, *oid_aggs) -> DataFrame:
+    """The read path's collapse: per-batch MAX over the partial columns,
+    then the exact OHLC merge per (key, bucket); ``oid_aggs`` are extra
+    aggregates placed first (compaction keeps the order ids)."""
+    per_batch = store.groupBy("batch_id", "key", "bucket").agg(
+        *[F.max(c).alias(c) for c in _OHLC_PARTIAL]
     )
     return per_batch.groupBy("key", "bucket").agg(
+        *oid_aggs,
         F.min_by(F.col("open"), F.col("open_oid")).alias("open"),
         F.max("high").alias("high"),
         F.min("low").alias("low"),
@@ -757,70 +732,22 @@ def read_ohlc_store(spark, table: str) -> DataFrame:
 
 def compact_ohlc_store(spark, table: str) -> None:
     """Collapse the append-only OHLC store to ONE partial row per
-    (key, bucket) (r11, VERDICT r10 #4 — same growth bound as
-    compact_count_store). OHLC state is mergeable exactly, so the
-    compacted row is itself a valid partial: open rides the globally
-    smallest order id, close the largest, high/low/count by
-    greatest/least/sum — :func:`read_ohlc_store` over the compacted
-    table is bit-identical to the uncompacted read. Watermark-first
-    ordering and the sealed-against-backfill contract are exactly
-    compact_count_store's (see its docstring)."""
-    from sparsity_spark.operators.dedup import _table_bucket_count
-    from sparsity_spark.operators.sketches import (
-        _meta_table,
-        _write_compaction_watermark,
-    )
+    (key, bucket) (same growth bound as compact_count_store). OHLC state
+    is mergeable exactly, so the compacted row — the read path's own
+    collapse, with the order ids kept — is itself a valid partial:
+    :func:`read_ohlc_store` over the compacted table is bit-identical to
+    the uncompacted read. Watermark-first ordering and the
+    sealed-against-backfill contract are exactly compact_count_store's
+    (see its docstring)."""
 
-    mx = None
-    meta = _meta_table(table)
-    if spark.catalog.tableExists(meta):
-        mx = spark.table(meta).agg(F.max("max_batch_id")).collect()[0][0]
-    if mx is None:
-        mx = spark.table(table).agg(F.max("batch_id")).collect()[0][0]
-    if mx is None:
-        return
-    per_batch = (
-        spark.table(table)
-        .groupBy("batch_id", "key", "bucket")
-        .agg(
-            F.max("open_oid").alias("open_oid"),
-            F.max("open").alias("open"),
-            F.max("high").alias("high"),
-            F.max("low").alias("low"),
-            F.max("close_oid").alias("close_oid"),
-            F.max("close").alias("close"),
-            F.max("n_events").alias("n_events"),
-        )
-    )
-    collapsed = (
-        per_batch.groupBy("key", "bucket")
-        .agg(
+    def collapse(store):
+        merged = _ohlc_merged(
+            store,
             F.min("open_oid").cast("long").alias("open_oid"),
-            F.min_by(F.col("open"), F.col("open_oid")).alias("open"),
-            F.max("high").alias("high"),
-            F.min("low").alias("low"),
             F.max("close_oid").cast("long").alias("close_oid"),
-            F.max_by(F.col("close"), F.col("close_oid")).alias("close"),
-            F.sum("n_events").cast("long").alias("n_events"),
         )
-        .select(
-            F.lit(int(mx)).cast("long").alias("batch_id"),
-            "key",
-            "bucket",
-            "open_oid",
-            "open",
-            "high",
-            "low",
-            "close_oid",
-            "close",
-            "n_events",
-        )
-        .localCheckpoint(eager=True)
-    )
-    nb = _table_bucket_count(spark, table)
-    _write_compaction_watermark(spark, table, int(mx))
-    from sparsity_spark.operators.skew import bucket_partitioned
+        return merged.select("key", "bucket", *_OHLC_PARTIAL)
 
-    bucket_partitioned(collapsed, nb, ["key", "bucket"]).write.mode(
-        "overwrite"
-    ).bucketBy(nb, "key", "bucket").format("parquet").saveAsTable(table)
+    stores.compact_batches(spark, table, ["key", "bucket"], collapse)
+
+

@@ -1067,7 +1067,7 @@ def write_merge_store(spark, merges: list, table: str) -> None:
     versioned wholesale, never incrementally patched (merges are
     order-dependent: appending to a live store would silently change the
     meaning of every earlier encode)."""
-    from sparsity_spark.operators.skew import _drop_table_and_location
+    from sparsity_spark.stores import _drop_table_and_location
 
     rows = [(int(r), str(a), str(b), int(c)) for r, a, b, c in merges]
     df = spark.createDataFrame(

@@ -88,7 +88,7 @@ def _memo_edges(spark, sf_dir: str, kind: str, build) -> DataFrame:
     key = (spark.sparkContext.applicationId, sf_dir, kind)
     table = _EDGE_MEMO.get(key)
     if table is None:
-        from sparsity_spark.operators.skew import write_bucketed
+        from sparsity_spark.stores import write_bucketed
 
         token = "".join(c if c.isalnum() else "_" for c in sf_dir.strip("/"))
         table = f"shared_edges_{kind}_{token}"
@@ -257,7 +257,7 @@ def _doc_dedup_shared(spark, sf_dir: str):
             duplicate_clusters,
             lsh_candidate_pairs,
         )
-        from sparsity_spark.operators.skew import write_bucketed
+        from sparsity_spark.stores import write_bucketed
 
         token = "".join(c if c.isalnum() else "_" for c in sf_dir.strip("/"))
         pt = f"shared_doc_pairs_{token}"
@@ -2977,7 +2977,7 @@ def dedup_cluster_fold_only_q(spark, sf_dir):
         resolve_cluster_store,
         write_cluster_store,
     )
-    from sparsity_spark.operators.skew import _drop_table_and_location
+    from sparsity_spark.stores import _drop_table_and_location
 
     base, pairs_t = "cluster_fold_base", "cluster_fold_base__pairs"
     key = (spark.sparkContext.applicationId, sf_dir)
@@ -3005,7 +3005,7 @@ def dedup_cluster_fold_only_q(spark, sf_dir):
         _FOLD_SETUP_MEMO[key] = True
     # --- steady-state portion: scratch copy + fold + resolve ---
     scratch = "cluster_fold_scratch"
-    from sparsity_spark.operators.skew import write_bucketed
+    from sparsity_spark.stores import write_bucketed
 
     write_bucketed(spark.table(base), scratch, ["doc_id"], 16)
     _drop_table_and_location(spark, f"{scratch}__remap")
@@ -10429,10 +10429,7 @@ def ann_ivfpq_delete_topk_q(spark, sf_dir):
     cents = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("centroid_id"), "embedding"
     )
-    from sparsity_spark.operators.skew import _drop_table_and_location
-
     table = "ivfpq_index_delete_q"
-    _drop_table_and_location(spark, f"{table}__tombstones")
     write_ivfpq_index(emb, cents, table, num_buckets=8)
     delete_from_ivfpq_index(
         emb.filter(F.col("vec_id") % 34 == 0).select("vec_id"), table

@@ -760,12 +760,8 @@ def streaming_cluster_maintain(
     DataStreamWriter."""
     from pyspark.sql import functions as F
 
-    from sparsity_spark.operators.dedup import (
-        _table_bucket_count,
-        band_keys,
-        band_store,
-        fold_cluster_store,
-    )
+    from sparsity_spark import stores
+    from sparsity_spark.operators.dedup import band_keys, band_store, fold_cluster_store
 
     def _process(batch_df, batch_id):
         spark = batch_df.sparkSession
@@ -795,16 +791,7 @@ def streaming_cluster_maintain(
         new_bands = nb.join(
             spark.table(band_table).select(id_col).distinct(), id_col, "left_anti"
         ).localCheckpoint(eager=True)
-        from sparsity_spark.operators.skew import bucket_partitioned
-
-        nbk = _table_bucket_count(spark, band_table)
-        (
-            bucket_partitioned(new_bands, nbk, ["band", "band_key"])
-            .write.mode("append")
-            .bucketBy(nbk, "band", "band_key")
-            .format("parquet")
-            .saveAsTable(band_table)
-        )
+        stores.append(new_bands, band_table, ["band", "band_key"])
         if sink is not None:
             sink(resolved, batch_id)
 
@@ -945,28 +932,15 @@ def _containment_process_batch(
         containment_screen,
         write_containment_store,
     )
-    from sparsity_spark.operators.sketches import (
-        _UNREAD,
-        _meta_table,
-        _record_max_batch,
-    )
+    from sparsity_spark.stores import _UNREAD, _record_max_batch, _recorded_max_batch
 
     grams_t = f"{table}__grams"
     spark = batch_df.sparkSession
-    meta = _meta_table(grams_t)
-    # the replay screen is only meaningful while the store it guards
-    # exists — a stale side table from a dropped incarnation must not
-    # swallow the new store's seeding batch (r11)
-    known_max = _UNREAD  # threads into _record_max_batch (r12 session 4)
-    if spark.catalog.tableExists(meta) and spark.catalog.tableExists(grams_t):
-        mx = spark.table(meta).agg(F.max("max_batch_id")).collect()[0][0]
-        known_max = mx
-        if mx is not None and int(batch_id) <= int(mx):
-            return
+    known_max = _recorded_max_batch(spark, grams_t)
+    if known_max is not _UNREAD and known_max is not None and batch_id <= known_max:
+        return
     if not spark.catalog.tableExists(grams_t):
-        from sparsity_spark.operators.sketches import _reset_store_side_tables
-
-        _reset_store_side_tables(spark, grams_t)
+        # the fresh write also resets the __grams watermarks
         write_containment_store(batch_df, table, id_col, text_col)
         decisions = batch_df.select(
             F.col(id_col).cast("long").alias(id_col),
@@ -1046,9 +1020,8 @@ def streaming_tombstone_maintain(
 
     ``sink(n_tombstones_df, batch_id)`` observes the one-row running
     tombstone count per batch. Returns the started-ready writer."""
-    from pyspark.sql import functions as F
-
     from sparsity_spark.operators.similarity import delete_from_ivfpq_index
+    from sparsity_spark.stores import tombstones
 
     if remover is None:
         remover = delete_from_ivfpq_index
@@ -1059,10 +1032,7 @@ def streaming_tombstone_maintain(
             return
         remover(batch_df.select(id_col), index_table, id_col)
         if sink is not None:
-            tt = spark.table(f"{index_table}__tombstones")
-            # stores differ in their tombstone column name (the
-            # containment lake normalizes to "id") — count by position
-            n = tt.select(tt.columns[0]).distinct().count()
+            n = tombstones(spark, index_table).distinct().count()
             sink(
                 spark.createDataFrame([(int(n),)], "n_tombstoned long"),
                 batch_id,
@@ -1123,35 +1093,21 @@ def _benchmark_process_batch(
 ):
     """foreachBatch body of :func:`streaming_benchmark_maintain`,
     module-level so tests can drive a crash replay directly."""
-    from pyspark.sql import functions as F
-
     from sparsity_spark.operators.pipeline import (
         append_benchmark_store,
         write_benchmark_store,
     )
-    from sparsity_spark.operators.sketches import (
-        _UNREAD,
-        _meta_table,
-        _record_max_batch,
-        _reset_store_side_tables,
-    )
+    from sparsity_spark.stores import _UNREAD, _record_max_batch, _recorded_max_batch
 
     spark = batch_df.sparkSession
     bands_t = f"{table}__bands"
-    meta = _meta_table(bands_t)
-    # the replay screen is only meaningful while the store it guards
-    # exists — a stale side table from a dropped incarnation must not
-    # swallow the new store's seeding batch (the containment-loop rule)
-    known_max = _UNREAD  # threads into _record_max_batch (r12 session 4)
-    if spark.catalog.tableExists(meta) and spark.catalog.tableExists(bands_t):
-        mx = spark.table(meta).agg(F.max("max_batch_id")).collect()[0][0]
-        known_max = mx
-        if mx is not None and int(batch_id) <= int(mx):
-            return
+    known_max = _recorded_max_batch(spark, bands_t)
+    if known_max is not _UNREAD and known_max is not None and batch_id <= known_max:
+        return
     if batch_df.limit(1).count() == 0:
         return
     if not spark.catalog.tableExists(bands_t):
-        _reset_store_side_tables(spark, bands_t)
+        # the fresh write also resets the __bands watermarks
         write_benchmark_store(
             batch_df, table, id_col, text_col, k, num_buckets=num_buckets
         )

@@ -668,14 +668,12 @@ def test_ivfpq_delete_and_compact_lifecycle(spark, sf_dir):
         ivfpq_index_topk,
         write_ivfpq_index,
     )
-    from sparsity_spark.operators.skew import _drop_table_and_location
 
     emb = load_table(spark, sf_dir, "embeddings")
     cents = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("centroid_id"), "embedding"
     )
     t = "ivfpq_del_t"
-    _drop_table_and_location(spark, f"{t}__tombstones")
     write_ivfpq_index(emb, cents, t, num_buckets=8)
     queries = emb.filter(F.col("vec_id") < 5)
     base = ivfpq_index_topk(queries, t).collect()

@@ -831,14 +831,12 @@ def test_ivfpq_tombstoned_scan_still_bucket_prunes(spark, sf_dir):
         ivfpq_index_topk,
         write_ivfpq_index,
     )
-    from sparsity_spark.operators.skew import _drop_table_and_location
 
     emb = load_table(spark, sf_dir, "embeddings")
     cents = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("centroid_id"), "embedding"
     )
     t = "ivfpq_plandel"
-    _drop_table_and_location(spark, f"{t}__tombstones")
     write_ivfpq_index(emb, cents, t, num_buckets=8)
     delete_from_ivfpq_index(
         emb.filter(F.col("vec_id") % 13 == 0).select("vec_id"), t

@@ -5,11 +5,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from sparsity_spark.operators.skew import (
-    bucketed_table,
-    distinct_count_skew_safe,
-    write_bucketed,
-)
+from sparsity_spark.operators.skew import distinct_count_skew_safe
+from sparsity_spark.stores import write_bucketed
 
 
 def test_salted_distinct_count_exact(spark):
@@ -42,8 +39,8 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir):
     write_bucketed(counts, "t_counts", ["user_id"], num_buckets=8)
     write_bucketed(spend, "t_spend", ["user_id"], num_buckets=8)
 
-    joined = bucketed_table(spark, "t_counts").join(
-        bucketed_table(spark, "t_spend").hint("merge"), on="user_id"
+    joined = spark.table("t_counts").join(
+        spark.table("t_spend").hint("merge"), on="user_id"
     )
     plan = formatted_plan(joined)
     assert "Exchange" not in plan, "bucketed join must not shuffle"

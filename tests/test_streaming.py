@@ -1472,7 +1472,6 @@ def test_streaming_tombstone_maintain_deletes_and_replays_free(spark, tmp_path):
         ivfpq_index_topk,
         write_ivfpq_index,
     )
-    from sparsity_spark.operators.skew import _drop_table_and_location
     from sparsity_spark.streaming.ingest import streaming_tombstone_maintain
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
@@ -1480,7 +1479,6 @@ def test_streaming_tombstone_maintain_deletes_and_replays_free(spark, tmp_path):
         F.col("vec_id").alias("centroid_id"), "embedding"
     )
     t = "ivfpq_stream_del_t"
-    _drop_table_and_location(spark, f"{t}__tombstones")
     write_ivfpq_index(emb, cents, t, num_buckets=8)
     queries = emb.filter(F.col("vec_id") < 5)
     base = ivfpq_index_topk(queries, t).collect()
