@@ -13,8 +13,11 @@ scales as ordinary shuffles:
                      bucket — the shuffle key is the band signature, so at
                      100 TB the join only collides truly-similar buckets;
 * simhash          — 2^b bit-majority as B parallel agg expressions;
-* n-gram Jaccard   — blocked self-join (block on cheap metadata) +
-                     array_intersect/array_union on distinct gram sets.
+* n-gram Jaccard   — blocked self-join (block on cheap metadata) + the
+                     overlap verify on distinct gram sets;
+* prefix joins     — Jaccard and containment share ONE prefix-filter
+                     kernel (rarest-first prefix, minimum-match filter,
+                     overlap verify), each supplying its own bounds.
 
 Hashes are md5-based (not Spark-internal xxhash) so results are engine-
 portable and the DuckDB oracle can reproduce them bit-for-bit.
@@ -47,6 +50,13 @@ def shingles_expr(words_col, k: int = 3):
     ).otherwise(F.array().cast("array<string>"))
 
 
+def gram_set_expr(text_col: str, k: int = 3):
+    """Distinct word k-grams of a text column — the gram set every
+    similarity and decontamination operator compares (the one place the
+    tokenization rule lives)."""
+    return F.array_distinct(shingles_expr(words_expr(text_col), k))
+
+
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Exact duplicate groups: one hash aggregate keyed by md5(text).
     Returns (text_hash, n_docs, keep_id) — keep_id is the smallest id, the
@@ -70,7 +80,7 @@ def shingle_sets(
     docs = ensure_parallelism(docs)
     return docs.select(
         F.col(id_col),
-        F.explode(F.array_distinct(shingles_expr(words_expr(text_col), k))).alias("shingle"),
+        F.explode(gram_set_expr(text_col, k)).alias("shingle"),
     )
 
 
@@ -459,25 +469,21 @@ def ngram_jaccard_pairs(
     block_cols: list[str] = ("lang",),
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for pairs sharing a blocking key.
-    Jaccard = |A∩B| / |A∪B| over distinct word k-gram sets, computed with
-    array_intersect/array_union — no explode, no UDF. Returns
-    (id_a, id_b, jaccard rounded to 6)."""
+    Jaccard = |A∩B| / |A∪B| over distinct word k-gram sets, computed by
+    the overlap verify (:func:`_overlap_cols`) — no explode, no UDF.
+    Returns (id_a, id_b, jaccard rounded to 6)."""
     block_cols = list(block_cols)
     g = docs.select(
         F.col(id_col),
         *block_cols,
-        F.array_distinct(shingles_expr(words_expr(text_col), k)).alias("grams"),
+        gram_set_expr(text_col, k).alias("grams"),
     )
     left = g.select(*block_cols, F.col(id_col).alias("id_a"), F.col("grams").alias("g_a"))
     right = g.select(*block_cols, F.col(id_col).alias("id_b"), F.col("grams").alias("g_b"))
     pairs = left.join(right, on=block_cols).filter(F.col("id_a") < F.col("id_b"))
-    jac = F.round(
-        F.size(F.array_intersect("g_a", "g_b"))
-        / F.size(F.array_union("g_a", "g_b")),
-        6,
-    )
     return (
-        pairs.withColumn("jaccard", jac)
+        pairs.select("id_a", "id_b", *_overlap_cols("g_a", "g_b"))
+        .withColumn("jaccard", F.round(_jaccard(), 6))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -787,6 +793,113 @@ def canonical_pick(
     )
 
 
+# ---- the prefix-filter similarity kernel ("Similarity Joins of Sparse
+# Features", SIGMOD 2024: one prefix-filtered join, parameterized by each
+# similarity's bounds). Each caller keeps its own candidate join, bounds
+# and materialization.
+
+
+def _guarded(t: float, sz: str):
+    """``t·sz`` biased 1e-9 low. A product that is exactly an integer in
+    real arithmetic can overshoot it in IEEE (0.55·100 =
+    55.00000000000001, 0.6·35 = 21.000000000000004), and a ceil or floor
+    of the overshoot is one too high. Every prefix length and size bound
+    here takes its ceil/floor of this, which only ever lengthens a prefix
+    or widens a bound — the lossless direction."""
+    return F.lit(t) * F.col(sz) - F.lit(1e-9)
+
+
+def _rarest_first(ranked: DataFrame, plen, positions: bool = False) -> DataFrame:
+    """Rarest-first prefix rows. ``ranked`` is per-doc (id, gram, df)
+    rows, grams distinct per doc; ``plen`` is the prefix length as an
+    expression over the doc's gram count ``sz``. Returns the exploded
+    (id, sz, gram) prefix rows, plus the 1-based global-order position
+    ``pos`` when ``positions``.
+
+    No window: ONE hash aggregate collects each doc's (df, gram) structs,
+    array_sort orders them (df asc, then gram asc — a deterministic total
+    order because grams are distinct per doc), and only the PREFIX is
+    exploded back out — |d|·(1-t)+1 rows per doc instead of |d|.
+    Replacing the two windows (a full sort shuffle of every gram row + a
+    second pass for the count) cut ~2 s of the sf1 scale tier."""
+    doc_sorted = (
+        ranked.groupBy("id")
+        .agg(F.array_sort(F.collect_list(F.struct("df", "gram"))).alias("__srt__"))
+        .withColumn("sz", F.size("__srt__").cast("long"))
+    )
+    head = F.slice(F.col("__srt__"), 1, plen.cast("int"))
+    if not positions:
+        return doc_sorted.select("id", "sz", F.explode(head).alias("__s__")).select(
+            "id", "sz", F.col("__s__.gram").alias("gram")
+        )
+    return doc_sorted.select(
+        "id", "sz", F.posexplode(head).alias("pos0", "__s__")
+    ).select(
+        "id", "sz", (F.col("pos0") + 1).alias("pos"), F.col("__s__.gram").alias("gram")
+    )
+
+
+def _min_match(hits: DataFrame, pair: list[str], sz: str, t: float) -> DataFrame:
+    """Minimum-match filter (the PPJoin m-filter with the containment
+    denominator), lossless. ``hits`` holds one row per shared prefix gram
+    of a candidate pair; ``sz`` is the size |s| of the probed doc, whose
+    prefix is Lp = |s| − floor(t·|s| − 1e-9) + 1 grams. A surviving pair
+    needs overlap >= ceil(t·|s|), and only the m matched prefix grams
+    plus the |s| − Lp grams OUTSIDE the prefix can contribute, so
+    m >= ceil(t·|s|) − (|s| − Lp). With that Lp and the 1e-9 guard,
+    ceil(t·|s|) >= floor(t·|s| − 1e-9) + 1 ALWAYS (integer t·|s| floors
+    to the integer minus one), so the requirement is m >= 2 whenever
+    floor(t·|s| − 1e-9) >= 1, m >= 1 for
+    docs so small their whole gram set is the prefix. Single-shared-
+    prefix-gram collisions — the bulk of the candidate volume on benign
+    corpora (3.77M -> the true multi-gram candidates at the sf1 tier) —
+    drop before any verify work, provably below threshold. Returns the
+    distinct surviving ``pair`` rows."""
+    mmin = F.when(F.floor(_guarded(t, sz)) >= 1, F.lit(2)).otherwise(F.lit(1))
+    return (
+        hits.select(*pair, mmin.alias("__mmin__"))
+        .groupBy(*pair)
+        .agg(F.count("*").alias("__m__"), F.max("__mmin__").alias("__mm__"))
+        .where(F.col("__m__") >= F.col("__mm__"))
+        .select(*pair)
+    )
+
+
+def _overlap_cols(ga: str, gb: str) -> list:
+    """``__c__`` = |A ∩ B|, ``__sa__`` = |A| and ``__sb__`` = |B| over two
+    distinct gram arrays, as longs — the exact integers every similarity
+    here divides. Over distinct arrays |A ∪ B| IS ``__sa__ + __sb__ −
+    __c__``, so a Jaccard divide sees the same integers as an array_union
+    form (bit-identical IEEE result) without a second O(|A|+|B|) array
+    pass per candidate pair — after prefix filtering the verify is
+    pair-bounded, and at t=0.6 the candidate table is ~750× the true-pair
+    count (190,558 candidates -> 256 pairs at sf0.1), so per-pair work is
+    the verify's whole cost."""
+    return [
+        F.size(F.array_intersect(ga, gb)).cast("long").alias("__c__"),
+        F.size(ga).cast("long").alias("__sa__"),
+        F.size(gb).cast("long").alias("__sb__"),
+    ]
+
+
+def _verify(cand: DataFrame, a: DataFrame, b: DataFrame, *keep) -> DataFrame:
+    """Overlap verify: join candidate pairs to the two (key, gram array)
+    sides ``a`` and ``b`` (``cand`` carries both keys) and yield ``keep``
+    plus :func:`_overlap_cols`. A candidate doc's array ships once per
+    pair it appears in, and the per-pair intersect is work ∝ |a|+|b|
+    with no posting re-shuffle (the exploded-posting-join variant
+    re-shuffles corpus-sized (id, gram) rows and measured 2-4× slower at
+    the sf1 tier)."""
+    (ka, ga), (kb, gb) = a.columns, b.columns
+    return cand.join(a, ka).join(b, kb).select(*keep, *_overlap_cols(ga, gb))
+
+
+def _jaccard():
+    """J = |A ∩ B| / |A ∪ B| over :func:`_overlap_cols` — one IEEE divide
+    of exact integers, the compare both engines evaluate identically."""
+    return F.col("__c__") / (F.col("__sa__") + F.col("__sb__") - F.col("__c__"))
+
+
 def jaccard_prefix_join(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -804,8 +917,11 @@ def jaccard_prefix_join(
     |d| - ceil(t*|d|) + 1 tokens as join keys: if two docs' prefixes are
     disjoint under one total order, their overlap is < t*max(|A|,|B|), so
     J < t — such pairs are provably skippable. Candidates additionally pass
-    the length filter t*|A| <= |B| <= |A|/t, then exact verification via
-    array_intersect on the full token arrays.
+    the length filter t*|A| <= |B| <= |A|/t, then exact verification of
+    the overlap on the full token arrays. Every ceil(t*|d|) is taken
+    1e-9 low (:func:`_guarded`), which only lengthens a prefix or widens
+    the length filter: unguarded, IEEE's 0.55*100 = 55.00000000000001
+    ceils to 56 and drops a J = 0.55 pair at t = 0.55.
 
     Scale shape: the equi-join key is the RARE end of the vocabulary —
     stop-word-frequency tokens never become join keys at realistic t, which
@@ -825,9 +941,6 @@ def jaccard_prefix_join(
     word-unit DNF >500 s on 5k docs; k=3 finishes in seconds — SCALE.md).
     """
     t = float(threshold)
-    unit = (
-        words_expr(text_col) if k <= 1 else shingles_expr(words_expr(text_col), k)
-    )
     # r11 (guide §1.2): the corpus used to be tokenized+shingled THREE
     # times (once under the df aggregate, once as the join's probe side,
     # once for the verify arrays) — the per-doc distinct-gram projection
@@ -845,43 +958,22 @@ def jaccard_prefix_join(
     # no-ops.
     from sparsity_spark.util import ensure_parallelism
 
+    unit = F.array_distinct(words_expr(text_col)) if k <= 1 else gram_set_expr(text_col, k)
     grams = ensure_parallelism(docs).select(
-        F.col(id_col).alias("id"), F.array_distinct(unit).alias("g")
+        F.col(id_col).alias("id"), unit.alias("g")
     ).localCheckpoint(eager=False)
-    toks = grams.select("id", F.explode("g").alias("tok"))
-    dfreq = toks.groupBy("tok").agg(F.count("*").alias("df"))
-    # per-doc rarest-first ranking WITHOUT a window: ONE hash aggregate
-    # collects each doc's (df, tok) pairs, array_sort orders them (struct
-    # sort: df asc, then tok asc — the same total order the row_number
-    # window gave, deterministic because toks are distinct per doc), and
-    # only the PREFIX tokens are ever exploded back out — |d|·(1-t)+1 rows
-    # per doc instead of |d|. Replacing the two windows (a full sort
-    # shuffle of every token row + a second pass for the count) cut ~2 s
-    # of the sf1 scale tier.
-    doc_sorted = (
-        toks.join(dfreq, "tok")
-        .groupBy("id")
-        .agg(F.array_sort(F.collect_list(F.struct("df", "tok"))).alias("__srt__"))
-        .withColumn("sz", F.size("__srt__"))
-    )
-    prefix = doc_sorted.select(
-        "id",
-        "sz",
-        F.posexplode(
-            F.slice(
-                F.col("__srt__"),
-                1,
-                (F.col("sz") - F.ceil(F.lit(t) * F.col("sz")) + 1).cast("int"),
-            )
-        ).alias("pos0", "__s__"),
-    ).select(
-        "id", (F.col("pos0") + 1).alias("pos"), F.col("__s__.tok").alias("tok"), "sz"
+    toks = grams.select("id", F.explode("g").alias("gram"))
+    dfreq = toks.groupBy("gram").agg(F.count("*").alias("df"))
+    prefix = _rarest_first(
+        toks.join(dfreq, "gram"),
+        F.col("sz") - F.ceil(_guarded(t, "sz")) + 1,
+        positions=True,
     )
     a = prefix.select(
-        F.col("id").alias("id_a"), "tok", F.col("pos").alias("pa"), F.col("sz").alias("sz_a")
+        F.col("id").alias("id_a"), "gram", F.col("pos").alias("pa"), F.col("sz").alias("sz_a")
     )
     b = prefix.select(
-        F.col("id").alias("id_b"), "tok", F.col("pos").alias("pb"), F.col("sz").alias("sz_b")
+        F.col("id").alias("id_b"), "gram", F.col("pos").alias("pb"), F.col("sz").alias("sz_b")
     )
     # PPJoin POSITIONAL filter (Xiao et al. §3.2), lossless: for a common
     # token at global-order positions (pa, pb), common tokens before it
@@ -899,11 +991,11 @@ def jaccard_prefix_join(
         (F.lit(t) * (F.col("sz_a") + F.col("sz_b")) / F.lit(1.0 + t)) - F.lit(1e-9)
     )
     cand = (
-        a.join(b, "tok")
+        a.join(b, "gram")
         .filter(
             (F.col("id_a") < F.col("id_b"))
-            & (F.col("sz_b") >= F.ceil(F.lit(t) * F.col("sz_a")))
-            & (F.col("sz_a") >= F.ceil(F.lit(t) * F.col("sz_b")))
+            & (F.col("sz_b") >= F.ceil(_guarded(t, "sz_a")))
+            & (F.col("sz_a") >= F.ceil(_guarded(t, "sz_b")))
         )
         .groupBy("id_a", "id_b")
         .agg(F.min(ub).alias("__ub__"), F.min(alpha).alias("__alpha__"))
@@ -912,28 +1004,9 @@ def jaccard_prefix_join(
     )
     ga = grams.select(F.col("id").alias("id_a"), F.col("g").alias("g_a"))
     gb = grams.select(F.col("id").alias("id_b"), F.col("g").alias("g_b"))
-    # J = c / (|A| + |B| - c): |A∪B| over distinct arrays IS |A|+|B|-c,
-    # so the divide sees the SAME exact integers as the array_union form
-    # (bit-identical IEEE result) while skipping a second O(|A|+|B|)
-    # array pass per candidate pair — the verify stage is pair-bounded,
-    # and at t=0.6 the candidate table is ~750× the true-pair count
-    # (190,558 candidates -> 256 pairs at sf0.1), so per-pair work is
-    # the verify's whole cost
-    c = F.size(F.array_intersect("g_a", "g_b")).cast("long")
     return (
-        cand.join(ga, "id_a")
-        .join(gb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            c.alias("__c__"),
-            F.size("g_a").cast("long").alias("__sa__"),
-            F.size("g_b").cast("long").alias("__sb__"),
-        )
-        .withColumn(
-            "jaccard",
-            F.col("__c__") / (F.col("__sa__") + F.col("__sb__") - F.col("__c__")),
-        )
+        _verify(cand, ga, gb, "id_a", "id_b")
+        .withColumn("jaccard", _jaccard())
         .filter(F.col("jaccard") >= t)
         .select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
     )
@@ -1834,7 +1907,7 @@ def shingle_hashes_expr(text_col: str = "text", k: int = 3):
     to num_hashes+1 times per row, and higher-order-function subtrees are
     poor candidates for Spark's subexpression elimination."""
     return F.transform(
-        F.array_distinct(shingles_expr(words_expr(text_col), k)),
+        gram_set_expr(text_col, k),
         lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long"),
     )
 
@@ -2208,81 +2281,38 @@ def compact_cluster_store(spark, table: str) -> None:
     stores.clear_tombstones(spark, table)
 
 
-def _containment_prefix_parts(grams: DataFrame, t: float):
-    """Shared plan pieces for the containment prefix filter:
-    returns (cand, doc_sorted) where ``cand`` is the distinct lossless
-    (ia < ib) candidate pairs and ``doc_sorted`` is the per-doc
-    rarest-first (df, gram) struct array the candidates were derived
-    from — the caller reuses it for verification arrays so the corpus is
-    aggregated ONCE (the exploded posting side carries its own doc size,
-    so no corpus-sized size join exists anywhere in the plan)."""
+def _containment_candidates(grams: DataFrame, t: float) -> DataFrame:
+    """Lossless candidate pairs for :func:`containment_join`:
+    smaller-side rarest-first prefix grams equi-joined against full
+    postings (overlap-constraint prefix principle — see the caller's
+    docstring for the losslessness argument and collision bound), then
+    the minimum-match filter. ``grams`` is (id, g: array<string>
+    distinct). Returns distinct (ia, ib) with ia < ib. Split out so tests
+    can assert the candidate VOLUME directly — the boilerplate-gram
+    fixture pins that a gram shared by every doc contributes zero
+    collision rows. The exploded posting side carries its own doc size,
+    so no corpus-sized size join exists anywhere in the plan."""
     e = grams.select(
         "id", F.size("g").cast("long").alias("szf"), F.explode("g").alias("gram")
     )
     dfreq = e.groupBy("gram").agg(F.count("*").alias("df"))
-    doc_sorted = (
-        e.join(dfreq, "gram")
-        .groupBy("id")
-        .agg(F.array_sort(F.collect_list(F.struct("df", "gram"))).alias("__srt__"))
-        .withColumn("sz", F.size("__srt__").cast("long"))
+    plen = F.col("sz") - F.floor(_guarded(t, "sz")) + 1
+    prefix = _rarest_first(e.join(dfreq, "gram"), plen).select(
+        F.col("id").alias("ip"), F.col("sz").alias("szp"), "gram"
     )
-    plen = (
-        F.col("sz") - F.floor(F.lit(t) * F.col("sz") - F.lit(1e-9)) + 1
-    ).cast("int")
-    prefix = doc_sorted.select(
-        F.col("id").alias("ip"),
-        F.col("sz").alias("szp"),
-        F.explode(F.slice(F.col("__srt__"), 1, plen)).alias("__s__"),
-    ).select("ip", "szp", F.col("__s__.gram").alias("gram"))
     full = e.select(F.col("id").alias("if_"), "szf", "gram")
-    # min side drives: strictly-smaller doc's prefix, or id-order on ties.
-    # Minimum-match filter (r11 — lossless, the PPJoin m-filter adapted to
-    # the containment denominator): a surviving pair needs overlap
-    # >= ceil(t·|s|), and only the m matched prefix grams plus the
-    # |s| − Lp grams OUTSIDE the prefix can contribute, so
-    # m >= ceil(t·|s|) − (|s| − Lp). With Lp = |s| − floor(t·|s| − 1e-9)
-    # + 1 and the 1e-9 guard, ceil(t·|s|) >= floor(t·|s| − 1e-9) + 1
-    # ALWAYS (integer t·|s| floors to the integer minus one), so the
-    # requirement is m >= 2 whenever floor(t·|s| − 1e-9) >= 1, m >= 1 for
-    # docs so small their whole gram set is the prefix. Single-shared-
-    # prefix-gram collisions — the bulk of the candidate volume on benign
-    # corpora (3.77M -> the true multi-gram candidates at the sf1 tier) —
-    # drop before any verify work, provably below threshold.
-    mmin = F.when(
-        F.floor(F.lit(t) * F.col("szp") - F.lit(1e-9)) >= 1, F.lit(2)
-    ).otherwise(F.lit(1))
-    cand = (
+    # min side drives: strictly-smaller doc's prefix, or id-order on ties
+    hits = (
         prefix.join(full, "gram")
         .where(
             (F.col("szp") < F.col("szf"))
             | ((F.col("szp") == F.col("szf")) & (F.col("ip") < F.col("if_")))
         )
         .select(
-            F.least("ip", "if_").alias("ia"),
-            F.greatest("ip", "if_").alias("ib"),
-            mmin.alias("__mmin__"),
+            F.least("ip", "if_").alias("ia"), F.greatest("ip", "if_").alias("ib"), "szp"
         )
-        .groupBy("ia", "ib")
-        .agg(
-            F.count("*").alias("__m__"),
-            F.max("__mmin__").alias("__mm__"),
-        )
-        .where(F.col("__m__") >= F.col("__mm__"))
-        .select("ia", "ib")
     )
-    return cand, doc_sorted
-
-
-def _containment_candidates(grams: DataFrame, t: float) -> DataFrame:
-    """Lossless candidate pairs for :func:`containment_join`:
-    smaller-side rarest-first prefix grams equi-joined against full
-    postings (overlap-constraint prefix principle — see the caller's
-    docstring for the losslessness argument and collision bound).
-    ``grams`` is (id, g: array<string> distinct). Returns distinct
-    (ia, ib) with ia < ib. Split out so tests can assert the candidate
-    VOLUME directly — the boilerplate-gram fixture pins that a gram
-    shared by every doc contributes zero collision rows."""
-    return _containment_prefix_parts(grams, t)[0]
+    return _min_match(hits, ["ia", "ib"], "szp", t)
 
 
 def containment_join(
@@ -2325,7 +2355,7 @@ def containment_join(
     — three lossless changes, each measured at the sf1 tier:
 
     * **Minimum-match filter** on candidates (the PPJoin m-filter with
-      the containment denominator, see ``_containment_prefix_parts``):
+      the containment denominator, see ``_min_match``):
       single-shared-prefix-gram pairs are provably below threshold and
       drop before any verify work (3.77M → the true multi-gram
       candidates).
@@ -2353,7 +2383,7 @@ def containment_join(
 
     grams = ensure_parallelism(docs).select(
         F.col(id_col).alias("id"),
-        F.array_distinct(shingles_expr(words_expr(text_col), k)).alias("g"),
+        gram_set_expr(text_col, k).alias("g"),
     ).persist()
     out = _containment_pairs_from_grams(grams, t)
     # the result is pair-table-sized: materialize it so the gram cache
@@ -2372,51 +2402,33 @@ def _containment_pairs_from_grams(grams: DataFrame, t: float) -> DataFrame:
     pair generation and its per-doc size readout instead of shingling
     the corpus twice. Returns the LAZY directional pair table; the
     caller owns materialization and the gram cache's lifetime."""
-    cand, _ = _containment_prefix_parts(grams, t)
     # the candidate table is PAIR-sized but its plan is the whole prefix
     # pipeline (df aggregate + per-doc sort-aggregate + prefix join);
-    # it fans out to three consumers below, so materialize it once —
-    # without this the prefix pipeline executes once per consumer
+    # it fans out to both directional emits below, so materialize it
+    # once — without this the prefix pipeline executes once per consumer
     # (measured 43-54 s vs 15 s at the sf1 tier on identical logic)
-    cand = cand.localCheckpoint(eager=True)
+    cand = _containment_candidates(grams, t).localCheckpoint(eager=True)
     # verification reads the CACHED raw gram arrays directly — order is
-    # irrelevant to array_intersect, so there is no reason to re-consume
-    # doc_sorted's corpus-wide sort-aggregate here (the r10 plan did, and
-    # every extra consumer re-ran it). A candidate doc's array ships once
-    # per pair it appears in, which after the minimum-match filter is a
-    # pair-table-bounded volume, and the per-pair intersect is work
-    # ∝ |a|+|b| with no posting re-shuffle (the exploded-posting-join
-    # variant re-shuffles corpus-sized (id, gram) rows and measured 2-4×
-    # slower at the sf1 tier).
+    # irrelevant to the overlap, so there is no reason to re-consume the
+    # corpus-wide sort-aggregate here
     ga = grams.select(F.col("id").alias("ia"), F.col("g").alias("g_a"))
     gb = grams.select(F.col("id").alias("ib"), F.col("g").alias("g_b"))
-    sized = (
-        cand.join(ga, "ia")
-        .join(gb, "ib")
-        .select(
-            "ia",
-            "ib",
-            F.size(F.array_intersect("g_a", "g_b")).cast("long").alias("c"),
-            F.size("g_a").cast("long").alias("sza"),
-            F.size("g_b").cast("long").alias("szb"),
-        )
-        .where(F.col("c") > 0)
-    )
+    sized = _verify(cand, ga, gb, "ia", "ib").where(F.col("__c__") > 0)
     # threshold via the SAME single-divide compare both engines evaluate
     # (ceil(t*sz) is the trap: 0.6*35 = 21.000000000000004 in IEEE, whose
     # ceil is 22 — one spurious double rounding and the two engines
     # disagree at exact-boundary pairs)
-    fwd = sized.where(F.col("c") / F.col("sza") >= t).select(
+    fwd = sized.where(F.col("__c__") / F.col("__sa__") >= t).select(
         F.col("ia").alias("src_id"),
         F.col("ib").alias("dst_id"),
-        F.col("c").alias("overlap"),
-        F.col("sza").alias("src_size"),
+        F.col("__c__").alias("overlap"),
+        F.col("__sa__").alias("src_size"),
     )
-    rev = sized.where(F.col("c") / F.col("szb") >= t).select(
+    rev = sized.where(F.col("__c__") / F.col("__sb__") >= t).select(
         F.col("ib").alias("src_id"),
         F.col("ia").alias("dst_id"),
-        F.col("c").alias("overlap"),
-        F.col("szb").alias("src_size"),
+        F.col("__c__").alias("overlap"),
+        F.col("__sb__").alias("src_size"),
     )
     return fwd.unionByName(rev).withColumn(
         "containment", F.round(F.col("overlap") / F.col("src_size"), 6)
@@ -2460,7 +2472,7 @@ def write_containment_store(
 
     grams = ensure_parallelism(docs).select(
         F.col(id_col).cast("long").alias("id"),
-        F.array_distinct(shingles_expr(words_expr(text_col), k)).alias("g"),
+        gram_set_expr(text_col, k).alias("g"),
     )
     stores.create(grams, f"{table}__grams", ["id"], num_buckets)
     e = spark.table(f"{table}__grams").select(
@@ -2498,7 +2510,7 @@ def append_containment_store(
     append the NEXT batch screens against these docs too."""
     grams = new_docs.select(
         F.col(id_col).cast("long").alias("id"),
-        F.array_distinct(shingles_expr(words_expr(text_col), k)).alias("g"),
+        gram_set_expr(text_col, k).alias("g"),
     ).localCheckpoint(eager=True)
     e = grams.select("id", F.explode("g").alias("gram"))
     # the three appends hit three different tables and all derive from
@@ -2644,47 +2656,28 @@ def containment_screen(
     spark = batch.sparkSession
     t = float(threshold)
     bg = batch.select(
-        F.col(id_col).cast("long").alias("bid"),
-        F.array_distinct(shingles_expr(words_expr(text_col), k)).alias("g"),
+        F.col(id_col).cast("long").alias("id"),
+        gram_set_expr(text_col, k).alias("g"),
     )
     dfreq = (
         spark.table(f"{table}__df")
         .groupBy("gram")
         .agg(F.sum("df").cast("long").alias("df"))
     )
-    toks = bg.select("bid", F.explode("g").alias("gram"))
-    doc_sorted = (
-        toks.join(dfreq, "gram", "left")
-        .select("bid", "gram", F.coalesce("df", F.lit(0).cast("long")).alias("df"))
-        .groupBy("bid")
-        .agg(F.array_sort(F.collect_list(F.struct("df", "gram"))).alias("__srt__"))
-        .withColumn("sz", F.size("__srt__").cast("long"))
+    ranked = (
+        bg.select("id", F.explode("g").alias("gram"))
+        .join(dfreq, "gram", "left")
+        .select("id", "gram", F.coalesce("df", F.lit(0).cast("long")).alias("df"))
     )
-    plen = (
-        F.col("sz") - F.floor(F.lit(t) * F.col("sz") - F.lit(1e-9)) + 1
-    ).cast("int")
-    prefix = doc_sorted.select(
-        "bid",
-        "sz",
-        F.explode(F.slice(F.col("__srt__"), 1, plen)).alias("__s__"),
-    ).select("bid", "sz", F.col("__s__.gram").alias("gram"))
-    post = spark.table(f"{table}__post")
-    # minimum-match filter (r11 — same lossless PPJoin m-filter as the
-    # batch join, one-sided): overlap >= ceil(t·|b|) needs m matched
-    # prefix grams with m >= ceil(t·|b|) − (|b| − Lp), which under the
-    # 1e-9-guarded floor is m >= 2 whenever floor(t·|b| − 1e-9) >= 1;
-    # single-gram probe collisions drop before touching the gram arrays
-    mmin = F.when(
-        F.floor(F.lit(t) * F.col("sz") - F.lit(1e-9)) >= 1, F.lit(2)
-    ).otherwise(F.lit(1))
-    cand = (
-        prefix.join(post, "gram")
-        .select("bid", F.col("id").alias("cid"), mmin.alias("__mmin__"))
-        .groupBy("bid", "cid")
-        .agg(F.count("*").alias("__m__"), F.max("__mmin__").alias("__mm__"))
-        .where(F.col("__m__") >= F.col("__mm__"))
-        .select("bid", "cid")
+    plen = F.col("sz") - F.floor(_guarded(t, "sz")) + 1
+    prefix = _rarest_first(ranked, plen).select(
+        F.col("id").alias("bid"), "sz", "gram"
     )
+    hits = (
+        prefix.join(spark.table(f"{table}__post"), "gram")
+        .select("bid", F.col("id").alias("cid"), "sz")
+    )
+    cand = _min_match(hits, ["bid", "cid"], "sz", t)
     # right-to-be-forgotten (r11): candidates pointing at tombstoned
     # corpus docs drop here — broadcast anti-join on the deletion-sized
     # tombstone set, before any verification work; physical removal is
@@ -2707,15 +2700,20 @@ def containment_screen(
         .select(F.col("id").alias("cid"), F.col("g").alias("g_c"))
     )
     ver = (
-        cand.join(bg.select(F.col("bid"), F.col("g").alias("g_b")), "bid")
-        .join(corpus_grams, "cid")
-        .select(
+        _verify(
+            cand,
+            bg.select(F.col("id").alias("bid"), F.col("g").alias("g_b")),
+            corpus_grams,
             F.col("bid").alias("batch_id"),
             F.col("cid").alias("corpus_id"),
-            F.size(F.array_intersect("g_b", "g_c")).cast("long").alias("overlap"),
-            F.size("g_b").cast("long").alias("batch_size"),
         )
-        .where(F.col("overlap") / F.col("batch_size") >= t)
+        .where(F.col("__c__") / F.col("__sa__") >= t)
+        .select(
+            "batch_id",
+            "corpus_id",
+            F.col("__c__").alias("overlap"),
+            F.col("__sa__").alias("batch_size"),
+        )
     )
     return ver.withColumn(
         "containment", F.round(F.col("overlap") / F.col("batch_size"), 6)
@@ -2754,7 +2752,7 @@ def containment_clusters(
 
     grams = ensure_parallelism(docs).select(
         F.col(id_col).alias("id"),
-        F.array_distinct(shingles_expr(words_expr(text_col), k)).alias("g"),
+        gram_set_expr(text_col, k).alias("g"),
     ).persist()
     pairs = (
         _containment_pairs_from_grams(grams, float(threshold))

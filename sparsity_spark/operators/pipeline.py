@@ -496,11 +496,7 @@ def fuzzy_decontaminate(
     Returns (id_col, n_bench_matches, max_jaccard) for CONTAMINATED
     train docs only (verified J >= threshold against >= 1 benchmark
     doc); clean docs are absent, like :func:`decontaminate`."""
-    from sparsity_spark.operators.dedup import (
-        band_keys_from_grams,
-        shingles_expr,
-        words_expr,
-    )
+    from sparsity_spark.operators.dedup import band_keys_from_grams, gram_set_expr
     from sparsity_spark.util import ensure_parallelism
 
     t = float(threshold)
@@ -510,11 +506,11 @@ def fuzzy_decontaminate(
     # tokenized+shingled twice per side
     tg = ensure_parallelism(train).select(
         F.col(id_col),
-        F.array_distinct(shingles_expr(words_expr(text_col), k)).alias("__g_t__"),
+        gram_set_expr(text_col, k).alias("__g_t__"),
     ).localCheckpoint(eager=False)
     bg = ensure_parallelism(benchmark).select(
         F.col(id_col).alias("__bench_id__"),
-        F.array_distinct(shingles_expr(words_expr(text_col), k)).alias("__g_b__"),
+        gram_set_expr(text_col, k).alias("__g_b__"),
     ).localCheckpoint(eager=False)
     tb = band_keys_from_grams(tg, id_col, "__g_t__")
     bb = band_keys_from_grams(bg, "__bench_id__", "__g_b__").select(
@@ -525,23 +521,21 @@ def fuzzy_decontaminate(
         .select(F.col(id_col), F.col("__bench_id__"))
         .distinct()
     )
-    verified = (
-        cand.join(tg, id_col)
-        .join(F.broadcast(bg), "__bench_id__")
-        .select(
-            F.col(id_col),
-            F.size(F.array_intersect("__g_t__", "__g_b__")).cast("long").alias("__c__"),
-            F.size("__g_t__").cast("long").alias("__sa__"),
-            F.size("__g_b__").cast("long").alias("__sb__"),
-        )
-        # exact Jaccard gate: |∩| / |∪| >= t as the single-divide compare
-        # both engines evaluate identically on exact integers
-        .where(
-            F.col("__c__")
-            / (F.col("__sa__") + F.col("__sb__") - F.col("__c__"))
-            >= t
-        )
-    )
+    return _fuzzy_matches(cand, tg, F.broadcast(bg), id_col, t)
+
+
+def _fuzzy_matches(
+    cand: DataFrame, train_grams: DataFrame, bench_grams: DataFrame, id_col: str, t: float
+) -> DataFrame:
+    """The verify both fuzzy decontaminations share: join (id_col, bench
+    id) candidates to the (key, gram array) sides, keep pairs with exact
+    Jaccard >= t, and roll them up per training doc into
+    (id_col, n_bench_matches, max_jaccard)."""
+    from sparsity_spark.operators.dedup import _jaccard, _verify
+
+    # exact Jaccard gate: the single-divide compare both engines
+    # evaluate identically on exact integers
+    verified = _verify(cand, train_grams, bench_grams, id_col).where(_jaccard() >= t)
     # integer half-up micros, not ROUND(double): c/union with a 2^a·5^b
     # union size (e.g. 128) lands EXACTLY on a …5·10⁻⁷ tie, where Spark's
     # BigDecimal HALF_UP and DuckDB's float ROUND split (the r10
@@ -581,7 +575,7 @@ def write_benchmark_store(
     exact-Jaccard verify join is Exchange-free on the store side too.
     A fresh build clears the store's tombstones and the ``__bands``
     table's watermarks (the streaming loop's replay screen)."""
-    from sparsity_spark.operators.dedup import band_keys, shingles_expr, words_expr
+    from sparsity_spark.operators.dedup import band_keys, gram_set_expr
 
     stores.clear_tombstones(benchmark.sparkSession, table)
     # NOTE (r11): sharing one materialized gram table between the two
@@ -592,7 +586,7 @@ def write_benchmark_store(
     b = band_keys(benchmark, id_col, text_col, k, num_hashes, bands)
     g = benchmark.select(
         F.col(id_col).alias("bench_id"),
-        F.array_distinct(shingles_expr(words_expr(text_col), k)).alias("grams"),
+        gram_set_expr(text_col, k).alias("grams"),
     )
     # the two tables are independent (different names, no read-after-write
     # between them) — overlap their write jobs from a driver thread pool
@@ -627,14 +621,14 @@ def append_benchmark_store(
     validates them against the tables), so the store stays
     shuffle-free-joinable forever. Caller contract: ids are new
     (append-only lake discipline, the append_band_store rule)."""
-    from sparsity_spark.operators.dedup import band_keys, shingles_expr, words_expr
+    from sparsity_spark.operators.dedup import band_keys, gram_set_expr
     from sparsity_spark.util import overlap_jobs
 
     # two cheap text passes by design — see write_benchmark_store's note
     b = band_keys(benchmark, id_col, text_col, k, num_hashes, bands)
     g = benchmark.select(
         F.col(id_col).alias("bench_id"),
-        F.array_distinct(shingles_expr(words_expr(text_col), k)).alias("grams"),
+        gram_set_expr(text_col, k).alias("grams"),
     )
     # independent tables — overlapped appends (guide §2.6; the
     # append_containment_store discipline)
@@ -702,11 +696,7 @@ def fuzzy_decontaminate_store(
     per-release screening cost excludes the whole eval-suite lake. The
     training side still computes bands + gram sets in one pass each —
     work ∝ release size, not suite size."""
-    from sparsity_spark.operators.dedup import (
-        band_keys_from_grams,
-        shingles_expr,
-        words_expr,
-    )
+    from sparsity_spark.operators.dedup import band_keys_from_grams, gram_set_expr
     from sparsity_spark.util import ensure_parallelism
 
     spark = train.sparkSession
@@ -718,7 +708,7 @@ def fuzzy_decontaminate_store(
     # previously tokenized+shingled twice per release
     tg = ensure_parallelism(train).select(
         F.col(id_col),
-        F.array_distinct(shingles_expr(words_expr(text_col), k)).alias("__g_t__"),
+        gram_set_expr(text_col, k).alias("__g_t__"),
     ).localCheckpoint(eager=False)
     tb = band_keys_from_grams(tg, id_col, "__g_t__")
     bb = _benchmark_side(spark, table, f"{table}__bands")
@@ -738,27 +728,7 @@ def fuzzy_decontaminate_store(
         .dropDuplicates(["bench_id"])
         .select("bench_id", F.col("grams").alias("__g_b__"))
     )
-    verified = (
-        cand.join(tg, id_col)
-        .join(bg, "bench_id")
-        .select(
-            F.col(id_col),
-            F.size(F.array_intersect("__g_t__", "__g_b__")).cast("long").alias("__c__"),
-            F.size("__g_t__").cast("long").alias("__sa__"),
-            F.size("__g_b__").cast("long").alias("__sb__"),
-        )
-        .where(
-            F.col("__c__") / (F.col("__sa__") + F.col("__sb__") - F.col("__c__")) >= t
-        )
-    )
-    j_micro = F.expr(
-        "cast((2 * __c__ * 1000000 + (__sa__ + __sb__ - __c__))"
-        " div (2 * (__sa__ + __sb__ - __c__)) as double) / 1000000"
-    )
-    return verified.groupBy(id_col).agg(
-        F.count("*").cast("long").alias("n_bench_matches"),
-        F.max(j_micro).alias("max_jaccard"),
-    )
+    return _fuzzy_matches(cand, tg, bg, id_col, t)
 
 
 def stratified_sample(

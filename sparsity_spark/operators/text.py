@@ -286,7 +286,7 @@ def boilerplate_fraction(
     a NULL fraction.
 
     Returns (id_col, n_grams, n_common, boilerplate)."""
-    from sparsity_spark.operators.dedup import shingles_expr, words_expr
+    from sparsity_spark.operators.dedup import gram_set_expr
 
     unit = 1_000_000
     # one corpus pass (r11, guide §1.2): the exploded gram table feeds
@@ -300,9 +300,7 @@ def boilerplate_fraction(
     docs = ensure_parallelism(docs)
     grams = docs.select(
         F.col(id_col),
-        F.explode(F.array_distinct(shingles_expr(words_expr(text_col), k))).alias(
-            "gram"
-        ),
+        F.explode(gram_set_expr(text_col, k)).alias("gram"),
     ).localCheckpoint(eager=False)
     dft = grams.groupBy("gram").agg(F.count("*").cast("long").alias("__df__"))
     per = (

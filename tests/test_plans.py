@@ -752,24 +752,41 @@ def test_sq8_topk_broadcasts_queries_corpus_parallel(spark, sf_dir):
     assert "Broadcast" in plan
 
 
-def test_containment_candidates_no_cartesian_and_pruned_prefix(spark, sf_dir):
-    """r10 containment prefix filter: the candidate plan must be pure
-    equi-joins (no cartesian/nested-loop anywhere) with the prefix slice
-    visible — the boilerplate bound comes from joining SLICED rarest-first
-    grams, not the full posting self-join the r9 plan used."""
-    from sparsity_spark.data import load_table
-    from sparsity_spark.operators.dedup import (
-        _containment_candidates,
-        shingles_expr,
-        words_expr,
+def _containment_candidate_plan(docs):
+    from sparsity_spark.operators.dedup import _containment_candidates, gram_set_expr
+
+    grams = docs.select(F.col("doc_id").alias("id"), gram_set_expr("text", 3).alias("g"))
+    return _containment_candidates(grams, 0.6)
+
+
+def _jaccard_prefix_plan(docs):
+    from sparsity_spark.operators.dedup import jaccard_prefix_join
+
+    return jaccard_prefix_join(docs, threshold=0.6, k=3)
+
+
+def _containment_screen_plan(docs):
+    from sparsity_spark.operators.dedup import containment_screen, write_containment_store
+
+    write_containment_store(docs.filter(F.col("doc_id") % 10 != 0), "cs_prefix_plancheck")
+    return containment_screen(
+        docs.filter(F.col("doc_id") % 10 == 0), "cs_prefix_plancheck", threshold=0.6
     )
 
+
+@pytest.mark.parametrize(
+    "build",
+    [_containment_candidate_plan, _jaccard_prefix_plan, _containment_screen_plan],
+    ids=["containment", "jaccard", "screen"],
+)
+def test_containment_candidates_no_cartesian_and_pruned_prefix(spark, sf_dir, build):
+    """Every prefix-filtered candidate pipeline (containment candidates,
+    the Jaccard prefix join, the store-backed containment screen) must be
+    pure equi-joins (no cartesian/nested-loop anywhere) with the prefix
+    slice visible — the boilerplate bound comes from joining SLICED
+    rarest-first grams, not the full posting self-join the r9 plan used."""
     docs = load_table(spark, sf_dir, "documents")
-    grams = docs.select(
-        F.col("doc_id").alias("id"),
-        F.array_distinct(shingles_expr(words_expr("text"), 3)).alias("g"),
-    )
-    plan = formatted_plan(_containment_candidates(grams, 0.6))
+    plan = formatted_plan(build(docs))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "slice(" in plan, "prefix slice must reach the physical plan"

@@ -8,7 +8,7 @@ import struct
 import numpy as np
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from sparsity_spark import from_pandas
@@ -262,12 +262,19 @@ def test_curriculum_shards_monotone_and_balanced(spark, seed):
     ),
     threshold=st.sampled_from([0.5, 0.7, 0.9]),
 )
+@example(
+    # J = 55/100 exactly, and 0.55 * 100 = 55.00000000000001 in IEEE: an
+    # unguarded ceil(t * |d|) shortens the prefix and tightens the length
+    # filter by one and drops this exact-boundary pair
+    docs=[[f"w{i}" for i in range(100)], [f"w{i}" for i in range(45, 100)]],
+    threshold=0.55,
+)
 @settings(max_examples=15, deadline=None, suppress_health_check=list(HealthCheck))
 def test_ppjoin_positional_filter_lossless(spark, docs, threshold):
     """jaccard_prefix_join (prefix + r5 POSITIONAL filtering) must return
     EXACTLY the brute-force pair set — the filters are provably lossless,
     and this pins it against random corpora (guards the overlap
-    upper-bound arithmetic)."""
+    upper-bound arithmetic, including IEEE overshoot at t·|d|)."""
     rows = [(i, " ".join(toks)) for i, toks in enumerate(docs)]
     from sparsity_spark.operators.dedup import jaccard_prefix_join
 
@@ -824,6 +831,36 @@ def test_containment_join_prefix_lossless_vs_bruteforce(spark, seed, t):
             if ov > 0 and ov / len(grams[a]) >= t:
                 want[(a, b)] = (ov, len(grams[a]))
     assert got == want
+
+
+@pytest.mark.parametrize("seed", [0, 3, 11, 42])
+@pytest.mark.parametrize("t", [0.5, 0.8])
+def test_jaccard_prefix_join_shingles_lossless_vs_bruteforce(spark, seed, t):
+    """The k=3 shingle unit (the one the benchmark and the
+    dedup_jaccard_prefix_shingles row run) returns EXACTLY the pairs a
+    brute-force all-pairs Jaccard scan finds, on corpora mixing
+    boilerplate headers, random bodies and planted near-supersets."""
+    from sparsity_spark.operators.dedup import jaccard_prefix_join
+
+    rng = np.random.RandomState(seed)
+    pdf = _boilerplate_corpus(rng, n_docs=14)
+    got = {
+        (r.id_a, r.id_b): r.jaccard
+        for r in jaccard_prefix_join(spark.createDataFrame(pdf), threshold=t, k=3).collect()
+    }
+    grams = {r.doc_id: _gram_set(r.text) for r in pdf.itertuples()}
+    want = {}
+    for a in grams:
+        for b in grams:
+            if a >= b or not grams[a] or not grams[b]:
+                continue
+            # same single divide of exact integers the engine evaluates
+            j = len(grams[a] & grams[b]) / len(grams[a] | grams[b])
+            if j >= t:
+                want[(a, b)] = j
+    assert set(got) == set(want)
+    # the engine rounds half-up to 4 places
+    assert all(abs(got[p] - want[p]) <= 5e-5 + 1e-12 for p in want)
 
 
 @pytest.mark.parametrize("seed,t", [(1, 0.6), (9, 0.85)])
