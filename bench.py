@@ -444,23 +444,17 @@ def main():
     load_all(spark, sf_dir)
     run_one(QUERIES["a1_onehot_groupby_sum"](spark, sf_dir))
 
-    # protocol knob for A/B studies (SPARK_GRAFT_BENCH_PROTOCOL=r4 replays
-    # the pre-r5 harness: no full warm pass, no inter-query hygiene —
-    # VERDICT r5 #1 asked for exactly this comparison on identical code)
-    steady_state = os.environ.get("SPARK_GRAFT_BENCH_PROTOCOL", "r5") != "r4"
-
     # full untimed warm pass (JMH-style steady state): each query's
     # generated code JIT-compiles on its first execution — without this,
     # per-query numbers measure the C2 compiler lottery (±0.5-1.5 s each)
     # instead of the plan; round-over-round comparisons were drifting by
     # whether a prior suite happened to warm a query's code path
     warm_compiles0 = codegen_compiles(spark)
-    if steady_state:
-        for name in BENCH_QUERIES:
-            if name in QUERIES:
-                run_one(QUERIES[name](spark, sf_dir))
-                spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
+    for name in BENCH_QUERIES:
+        if name in QUERIES:
+            run_one(QUERIES[name](spark, sf_dir))
+            spark.catalog.clearCache()
+    spark.sparkContext._jvm.System.gc()
     warm_compiles = codegen_compiles(spark) - warm_compiles0
 
     timings: dict[str, float] = {}
@@ -488,7 +482,7 @@ def main():
         # in one suite run vs 3.0 s min-of-three isolated — a 1.8 s row
         # at the round open, code-identical); the measurement-bug fix and
         # the old single-run numbers are recorded in OPTIMIZATION_r11.md.
-        if steady_state and el < 10.0:
+        if el < 10.0:
             spark.catalog.clearCache()
             t0 = time.perf_counter()
             run_one(QUERIES[name](spark, sf_dir))
@@ -505,9 +499,8 @@ def main():
         # repeated heavy queries in one JVM get monotonically SLOWER
         # (ppjoin at sf1: 7.9 → 11.1 → 13.1 → 16.4 s run-over-run; with
         # it: stable 5.5-7.7 s — r5 measurement, SCALE.md)
-        if steady_state:
-            spark.catalog.clearCache()
-            spark.sparkContext._jvm.System.gc()
+        spark.catalog.clearCache()
+        spark.sparkContext._jvm.System.gc()
 
     total = round(sum(timings.values()), 3)
     from sparsity_spark.queries import MEMO_BUILD_SECONDS

@@ -25,7 +25,7 @@ order-insensitive value-hash comparison honest:
 
 from __future__ import annotations
 
-import os
+import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -42,88 +42,77 @@ EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
-# Session-scoped memo for the two shared graph edge builds (r10, VERDICT
-# r9 #7): seven rows each rebuilt the SAME symmetric edge table —
-# distinct(lineitem⋈orders) + self-join for co-purchase, the bipartite
-# projection for cust↔supp — paying ~2-3 s apiece at sf0.1 before their
-# actual iteration started. The FIRST use in a session drops and
-# rewrites a bucketed-by-src table (the edge-store discipline — disk,
-# not executor cache, because the bench's inter-query clearCache()
-# hygiene would evict an in-memory handle); every later row reads the
-# bucketed layout, already co-located on the per-iteration join key. A
-# fresh session (each driver correctness run, each oracle replay)
-# rebuilds from scratch — the memo is keyed by Spark application id, so
-# results can never depend on a previous session's table.
-_EDGE_MEMO: dict = {}
-_EDGE_ROWS: dict = {}
+# Bytes per bucket of a shared edge store (OPTIMIZATION_r12.md §16: 32 MB
+# left the sf1 cust_supp store on 6 buckets; 8 MB derives 24 there and
+# keeps sf0.1 at the floor of 4).
+_EDGE_BUCKET_BYTES = 8 << 20
 
-# First-touch accounting for every session-scoped memo (r12, VERDICT r11
-# #3): the bench's untimed warm pass populates these before timing, so the
-# timed rows never pay the shared build. The builds now self-report their
-# wall seconds here and bench.py publishes them as "memo_build_sec" — the
-# amortized-vs-first-touch attribution the round log used to need prose for.
+# Wall seconds each session memo spent building, keyed by memo name;
+# bench.py publishes the total as "memo_build_sec".
 MEMO_BUILD_SECONDS: dict[str, float] = {}
+_MEMO_VALUES: dict[tuple[str, str, str], object] = {}
 
 
-class _memo_timer:
-    def __init__(self, name: str):
-        self.name = name
+def _memo(spark, sf_dir: str, name: str, build):
+    """Build-once-per-session state shared by several query rows (edge
+    stores, the doc-dedup closure, the k-means model, store setups). The
+    first call per (Spark application, ``sf_dir``, ``name``) runs
+    ``build(stem)``, adds its wall time to ``MEMO_BUILD_SECONDS[name]`` and
+    caches its return value; later calls return that value.
 
-    def __enter__(self):
-        import time as _t
-
-        self._t0 = _t.perf_counter()
-        return self
-
-    def __exit__(self, *exc):
-        import time as _t
-
-        MEMO_BUILD_SECONDS[self.name] = MEMO_BUILD_SECONDS.get(self.name, 0.0) + (
-            _t.perf_counter() - self._t0
+    ``stem`` names the build's tables (the build may add suffixes to it).
+    It is derived from ``name`` and ``sf_dir``, so one session that runs a
+    query on two data directories keeps two sets of tables and never
+    answers one directory from the other's. Memo tables are on disk, not
+    in the executor cache: bench's ``clearCache()`` between queries would
+    evict an in-memory handle. The key includes the application id, so a
+    fresh session (each driver correctness run, each oracle replay) always
+    rebuilds and results never depend on a previous session's tables.
+    Edge stores derive their bucket count from the measured size of their
+    build (``_memo_edges``). bench.py's untimed warm pass builds every memo
+    before timing, so the timed rows never pay a build."""
+    key = (spark.sparkContext.applicationId, sf_dir, name)
+    if key not in _MEMO_VALUES:
+        token = "".join(c if c.isalnum() else "_" for c in sf_dir.strip("/"))
+        t0 = time.perf_counter()
+        _MEMO_VALUES[key] = build(f"shared_{name}_{token}")
+        MEMO_BUILD_SECONDS[name] = (
+            MEMO_BUILD_SECONDS.get(name, 0.0) + time.perf_counter() - t0
         )
-        return False
+    return _MEMO_VALUES[key]
 
 
 def _memo_edges(spark, sf_dir: str, kind: str, build) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, kind)
-    table = _EDGE_MEMO.get(key)
-    if table is None:
+    """Session-shared symmetric edge table (r10, VERDICT r9 #7): seven graph
+    rows each rebuilt the same edges before their iteration started. The
+    store is bucketed by src, the key every per-iteration join uses."""
+
+    def build_store(table):
         from sparsity_spark.stores import write_bucketed
 
-        token = "".join(c if c.isalnum() else "_" for c in sf_dir.strip("/"))
-        table = f"shared_edges_{kind}_{token}"
-        with _memo_timer(f"edges_{kind}"):
-            # size-derived bucket count (r12, guide §2.2/§6 — VERDICT r11
-            # #1): a flat 32 buckets meant every consumer's per-round scan
-            # of the shared store (and every loop-invariant persist built
-            # from it) was 32 tasks regardless of data size — at sf0.1
-            # that is 32 micro-tasks of a ~15 MB table repeated ~10
-            # stages per graph query, the measured 32-core overhead
-            # class. Target ~32 MB per bucket (floor 4 for local
-            # parallelism, cap 256): sf0.1's 1.17 M-edge store lands at
-            # 4 buckets; a 100 TB edge set derives thousands — the knob
-            # scales with DATA, not core count. The build is checkpointed
-            # first so the row count costs one metadata job, not a second
-            # run of the upstream join+distinct.
-            df = build().localCheckpoint(eager=True)
-            rows = df.count()
-            width = 16 * len(df.columns) // 2  # ~8 B/col on disk, 2-4 cols
-            target = int(os.environ.get("SPARK_GRAFT_EDGE_BUCKET_BYTES", str(8 << 20)))
-            nb = int(max(4, min(256, (rows * width) // target + 1)))
-            write_bucketed(df, table, ["src"], num_buckets=nb)
-        _EDGE_MEMO[key] = table
-        # the measured count feeds size-gated join strategy downstream
-        # (graph._maybe_merge_hint) — recorded here so consumers never
-        # pay a second count for it
-        _EDGE_ROWS[key] = rows
+        # size-derived bucket count (r12, VERDICT r11 #1): a flat 32
+        # buckets made every consumer's per-round scan 32 micro-tasks
+        # regardless of data size. Floor 4 for local parallelism, cap 256;
+        # the count scales with DATA, not core count. The build is
+        # checkpointed first so the row count costs one metadata job, not
+        # a second run of the upstream join+distinct.
+        df = build().localCheckpoint(eager=True)
+        rows = df.count()
+        width = 16 * len(df.columns) // 2  # ~8 B/col on disk, 2-4 cols
+        nb = int(max(4, min(256, (rows * width) // _EDGE_BUCKET_BYTES + 1)))
+        write_bucketed(df, table, ["src"], num_buckets=nb)
+        return table, rows
+
+    table, _ = _memo(spark, sf_dir, f"edges_{kind}", build_store)
     return spark.table(table)
 
 
-def _memo_edge_rows(spark, sf_dir: str, kind: str) -> int | None:
-    """Measured row count of a shared edge store built this session (None
-    if the memo has not been built yet — callers invoke this AFTER the
-    corresponding _memo_edges build)."""
-    return _EDGE_ROWS.get((spark.sparkContext.applicationId, sf_dir, kind))
+def _memo_edge_rows(spark, sf_dir: str, kind: str) -> int:
+    """Measured row count of a shared edge store. It feeds size-gated join
+    strategy downstream (graph._maybe_merge_hint), so consumers never pay
+    a second count. Call it after the store's ``_memo_edges`` build: this
+    read has no build of its own to run."""
+    return _memo(spark, sf_dir, f"edges_{kind}", None)[1]
 
 
 def _cust_supp_edges(spark, sf_dir: str) -> DataFrame:
@@ -200,78 +189,54 @@ def _co_purchase_edges(spark, sf_dir: str) -> DataFrame:
     return _memo_edges(spark, sf_dir, "co_purchase", build)
 
 
-# Session-scoped memo for the documents corpus's near-dup structure (r11
-# — the shared-edge-table discipline applied to the dedup families):
-# three rows (canonical election, leakage-safe split, per-source dup
-# profile) each need LSH candidate pairs and/or the pointer-jumping
-# closure over the SAME corpus; computing the closure runs a driver
-# fixpoint loop, so rebuilding it per row triples the most expensive
-# part. First use per (application, sf_dir) persists both as bucketed
-# tables; results can never depend on a previous session (app-id key).
-_DOC_DEDUP_MEMO: dict = {}
-
-
-# Session-scoped memo for the semantic family's shared k-means model
-# (r11 session 3 — the same discipline, applied to centroid training):
-# three rows (semantic screen, member-store screen, member forget) each
-# fit Lloyd k=8/iters=2 on the SAME 90% embeddings corpus — identical
-# model, refit per row (~1.2 s each: init collect + 2 Arrow-partials
-# collects). The fitted centroids are a driver-side list (k·d doubles,
-# metadata-sized), so the memo stores the LIST and rebuilds the
-# metadata-sized DataFrame per call; app-id key means a fresh session
-# (every driver correctness run) always retrains from the parquet.
-_CORPUS_KMEANS_MEMO: dict = {}
-
-
 def _corpus_kmeans_shared(spark, sf_dir: str):
     """Centroids of kmeans_fit(embeddings % 10 != 0, k=8, iters=2) —
     fitted once per session, returned as a fresh metadata-sized
     DataFrame (bit-identical to a per-row refit: the fit is
-    deterministic and the memo stores its exact output rows)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    rows = _CORPUS_KMEANS_MEMO.get(key)
-    if rows is None:
-        from sparsity_spark.operators.similarity import kmeans_fit
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        corpus = emb.filter(F.col("vec_id") % 10 != 0)
-        with _memo_timer("corpus_kmeans"):
-            rows = [
-                (r["centroid_id"], list(r["embedding"]))
-                for r in kmeans_fit(corpus, k=8, iters=2).collect()
-            ]
-        _CORPUS_KMEANS_MEMO[key] = rows
+    deterministic and the memo stores its exact output rows). Three rows
+    (semantic screen, member-store screen, member forget) fit the same
+    model; the memo holds the driver-side centroid list (k·d doubles)."""
     from sparsity_spark.util import local_df
 
+    def fit(_stem):
+        from sparsity_spark.operators.similarity import kmeans_fit
+
+        corpus = load_table(spark, sf_dir, "embeddings").filter(
+            F.col("vec_id") % 10 != 0
+        )
+        return [
+            (r["centroid_id"], list(r["embedding"]))
+            for r in kmeans_fit(corpus, k=8, iters=2).collect()
+        ]
+
+    rows = _memo(spark, sf_dir, "corpus_kmeans", fit)
     return local_df(spark, rows, "centroid_id long, embedding array<double>")
 
 
 def _doc_dedup_shared(spark, sf_dir: str):
     """Returns (pairs_df, labels_df) for the documents corpus — LSH
     candidate pairs bucketed by id_a, cluster labels bucketed by
-    doc_id, computed once per session."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    tables = _DOC_DEDUP_MEMO.get(key)
-    if tables is None:
+    doc_id, computed once per session. Three rows (canonical election,
+    leakage-safe split, per-source dup profile) need them; the closure
+    runs a driver fixpoint loop, the most expensive part to repeat."""
+
+    def build(stem):
         from sparsity_spark.operators.dedup import (
             duplicate_clusters,
             lsh_candidate_pairs,
         )
         from sparsity_spark.stores import write_bucketed
 
-        token = "".join(c if c.isalnum() else "_" for c in sf_dir.strip("/"))
-        pt = f"shared_doc_pairs_{token}"
-        lt = f"shared_doc_labels_{token}"
+        pt, lt = f"{stem}__pairs", f"{stem}__labels"
         docs = load_table(spark, sf_dir, "documents")
-        with _memo_timer("doc_dedup"):
-            pairs = lsh_candidate_pairs(docs).persist()
-            labels = duplicate_clusters(pairs, docs)
-            write_bucketed(pairs, pt, ["id_a"], num_buckets=8)
-            write_bucketed(labels, lt, ["doc_id"], num_buckets=8)
-            pairs.unpersist()
-        tables = (pt, lt)
-        _DOC_DEDUP_MEMO[key] = tables
-    pt, lt = tables
+        pairs = lsh_candidate_pairs(docs).persist()
+        labels = duplicate_clusters(pairs, docs)
+        write_bucketed(pairs, pt, ["id_a"], num_buckets=8)
+        write_bucketed(labels, lt, ["doc_id"], num_buckets=8)
+        pairs.unpersist()
+        return pt, lt
+
+    pt, lt = _memo(spark, sf_dir, "doc_dedup", build)
     return spark.table(pt), spark.table(lt)
 
 
@@ -2950,12 +2915,6 @@ def dedup_incremental_clusters_q(spark, sf_dir):
     return resolve_cluster_store(spark, "cluster_store_oracle_q")
 
 
-# session memo for dedup_cluster_fold_only's one-time setup (the corpus
-# clustering + store write + batch-pair screen); keyed by application id
-# so a fresh session always rebuilds
-_FOLD_SETUP_MEMO: dict = {}
-
-
 @query("dedup_cluster_fold_only", _CLUSTER_CLOSURE_ORACLE)
 def dedup_cluster_fold_only_q(spark, sf_dir):
     """The FOLD alone (r10, VERDICT r9 #5: the 38.5 s
@@ -2979,10 +2938,8 @@ def dedup_cluster_fold_only_q(spark, sf_dir):
     )
     from sparsity_spark.stores import _drop_table_and_location
 
-    base, pairs_t = "cluster_fold_base", "cluster_fold_base__pairs"
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _FOLD_SETUP_MEMO:
-      with _memo_timer("cluster_fold_setup"):
+    def setup(base):
+        pairs_t = f"{base}__pairs"
         docs = load_table(spark, sf_dir, "documents")
         corpus = docs.filter(F.col("doc_id") % 10 != 0)
         # one banding pass feeds both pair sets (r11 — the
@@ -3002,7 +2959,9 @@ def dedup_cluster_fold_only_q(spark, sf_dir):
         )
         _drop_table_and_location(spark, pairs_t)
         batch_pairs.write.format("parquet").saveAsTable(pairs_t)
-        _FOLD_SETUP_MEMO[key] = True
+        return base, pairs_t
+
+    base, pairs_t = _memo(spark, sf_dir, "cluster_fold_setup", setup)
     # --- steady-state portion: scratch copy + fold + resolve ---
     scratch = "cluster_fold_scratch"
     from sparsity_spark.stores import write_bucketed
@@ -9555,10 +9514,6 @@ def dedup_containment_clusters_q(spark, sf_dir):
     )
 
 
-# session memo for dedup_containment_screen's one-time store build
-_CONTAIN_STORE_MEMO: dict = {}
-
-
 @query(
     "dedup_containment_screen",
     """
@@ -9604,12 +9559,12 @@ def dedup_containment_screen_q(spark, sf_dir):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    table = "containment_store_q"
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CONTAIN_STORE_MEMO:
-        with _memo_timer("containment_store"):
-            write_containment_store(docs.filter(F.col("doc_id") % 10 != 0), table)
-        _CONTAIN_STORE_MEMO[key] = True
+
+    def setup(table):
+        write_containment_store(docs.filter(F.col("doc_id") % 10 != 0), table)
+        return table
+
+    table = _memo(spark, sf_dir, "containment_store", setup)
     batch = docs.filter(F.col("doc_id") % 10 == 0)
     return containment_screen(batch, table, threshold=0.6, k=3)
 
@@ -10441,10 +10396,6 @@ def ann_ivfpq_delete_topk_q(spark, sf_dir):
     return ivfpq_index_topk(emb.filter(F.col("vec_id") < 10), table)
 
 
-# session memo for dedup_band_forget's one-time build+forget setup
-_BAND_FORGET_MEMO: dict = {}
-
-
 @query(
     "dedup_band_forget",
     f"""
@@ -10488,10 +10439,8 @@ def dedup_band_forget_q(spark, sf_dir):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    table = "band_forget_q"
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BAND_FORGET_MEMO:
-      with _memo_timer("band_forget_setup"):
+
+    def setup(table):
         write_band_store(docs.filter(F.col("doc_id") % 10 != 0), table)
         remove_from_band_store(
             docs.filter(
@@ -10506,13 +10455,11 @@ def dedup_band_forget_q(spark, sf_dir):
             ).select("doc_id"),
             table,
         )
-        _BAND_FORGET_MEMO[key] = True
+        return table
+
+    table = _memo(spark, sf_dir, "band_forget_setup", setup)
     batch = docs.filter(F.col("doc_id") % 10 == 0)
     return incremental_lsh_dedup(batch, band_store(spark, table))
-
-
-# session memo for dedup_containment_forget's one-time build+forget setup
-_CONTAIN_FORGET_MEMO: dict = {}
 
 
 @query(
@@ -10562,10 +10509,8 @@ def dedup_containment_forget_q(spark, sf_dir):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    table = "containment_forget_q"
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CONTAIN_FORGET_MEMO:
-      with _memo_timer("containment_forget_setup"):
+
+    def setup(table):
         write_containment_store(docs.filter(F.col("doc_id") % 10 != 0), table)
         remove_from_containment_store(
             docs.filter(
@@ -10580,7 +10525,9 @@ def dedup_containment_forget_q(spark, sf_dir):
             ).select("doc_id"),
             table,
         )
-        _CONTAIN_FORGET_MEMO[key] = True
+        return table
+
+    table = _memo(spark, sf_dir, "containment_forget_setup", setup)
     batch = docs.filter(F.col("doc_id") % 10 == 0)
     return containment_screen(batch, table, threshold=0.6, k=3)
 
