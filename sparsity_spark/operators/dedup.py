@@ -527,16 +527,19 @@ def embedding_neardup_pairs(
     )
 
 
+# duplicate_clusters labels on the driver at or below this many edges
+_DRIVER_CC_ROWS = 200_000
+
+
 def _cc_labels_driver(edges: DataFrame, universe: DataFrame) -> DataFrame:
     """Min-label connected components on the DRIVER for a MEASURED-tiny
-    edge set (r12 session 4 — the logical end of the tiny-loop line):
-    below the size gate the loop state is KB-sized, and even the fused
-    one-job-per-round regime pays ~0.2-0.4 s of Dataset construction +
-    analysis per pointer-jumping round (job_audit: the gap BEFORE each
-    round's collect). Union-find over the collected edge list computes
-    the identical component-min labels in microseconds with TWO jobs
-    total (seed semi-join collect + edge collect, overlapped) and no
-    per-round driver barriers at all.
+    edge set: below the size gate the loop state is KB-sized, and even
+    the fused one-job-per-round distributed loop pays ~0.2-0.4 s of
+    Dataset construction + analysis per pointer-jumping round (measured
+    as the gap BEFORE each round's collect). Union-find over the
+    collected edge list computes the identical component-min labels in
+    microseconds with TWO jobs total (seed semi-join collect + edge
+    collect, overlapped) and no per-round driver barriers at all.
 
     Exactness vs the distributed loop: labels exist only for edge
     endpoints ∩ universe (the seed semi-join below IS the loop's seed),
@@ -544,9 +547,9 @@ def _cc_labels_driver(edges: DataFrame, universe: DataFrame) -> DataFrame:
     the loop's nbr-min join needs src labeled and propagated keeps only
     labeled ids — so edges touching out-of-universe nodes are skipped
     here too. The collect is collision-sized and size-gated (the caller
-    checks SPARK_GRAFT_DRIVER_CC_ROWS against the measured edge count);
-    at 100 TB the gate fails and the distributed loop runs unchanged —
-    the same keyed-on-data-never-on-cores discipline as tiny_loop_conf."""
+    checks ``_DRIVER_CC_ROWS`` against the measured edge count); at
+    100 TB the gate fails and the distributed loop runs unchanged — the
+    gate keys on data size, never on cores."""
     from sparsity_spark.util import local_df, overlap_jobs
 
     seed = (
@@ -587,6 +590,96 @@ def _cc_labels_driver(edges: DataFrame, universe: DataFrame) -> DataFrame:
     )
 
 
+def _cc_labels_loop(edges: DataFrame, universe: DataFrame, max_iters: int) -> DataFrame:
+    """Distributed min-label propagation with pointer jumping — the regime
+    for edge sets too large for the driver. Each round (1) takes the min
+    label across symmetric edges, (2) compresses label := label(label).
+    Pointer jumping halves chain depth per round, so convergence is
+    O(log diameter) shuffles, not O(diameter) — the same contraction idea
+    as the large-star/small-star algorithm (Kiveris et al., "Connected
+    Components in MapReduce and Beyond"). Labels only decrease, so a
+    cheap sum(label) aggregate detects the fixpoint (one action per
+    round, no extra join). Raises RuntimeError when ``max_iters`` rounds
+    end without reaching the fixpoint — partial labels are never
+    returned.
+
+    Why the loop is shaped this way (measured at sf0.1, where the loop
+    was the single most expensive piece of the whole bench):
+
+    * **The symmetric edge table is frozen eagerly** by the caller
+      (localCheckpoint) — it is loop-invariant; left lazy, every round's
+      neighbor-min join re-ran the ENTIRE upstream candidate pipeline
+      (for LSH input: the minhash aggregate + band self-join, once per
+      round — measured 2.4-2.7 s/round at sf0.1 against 2.6 s for the
+      whole pairs build). The Pregel discipline pagerank already
+      follows: topology materializes once, only node-sized state moves
+      per round.
+    * **Per-round lineage is truncated** (localCheckpoint of the
+      propagated and jumped label tables). The jumped plan references
+      `propagated` TWICE (as rows and as the jump mapping), so under
+      persist-only lineage the logical plan DOUBLED per round —
+      Catalyst planning alone took 9.2 s by round 3, and every
+      downstream consumer (the store write, the collapse argmax)
+      re-planned the full tree (a 4,500-row bucketed label write
+      measured 6.7 s; the multimodal_phash_clusters final plan was
+      641 KB of text). Checkpointed, every round and every consumer
+      plans a constant-size tree."""
+    # lazy checkpoint + fixpoint-sum fusion: the seed-sum action below
+    # materializes the label checkpoint in the SAME job —
+    # an eager checkpoint here would pay a separate barrier action for
+    # node-sized data (one extra driver job per call, and one per round
+    # for `jumped` inside the loop; measured ~0.1-0.3 s/job at sf0.1
+    # across the ten loop-consumer bench rows)
+    labels = (
+        edges.select(F.col("src").alias("id"))
+        .distinct()
+        .join(universe, "id", "leftsemi")
+        .withColumn("label", F.col("id"))
+        .localCheckpoint(eager=False)
+    )
+    prev_sum = labels.agg(F.sum(F.col("label").cast("decimal(38,0)")).alias("s")).collect()[0]["s"]
+    for _ in range(max_iters):
+        nbr_min = (
+            edges.join(labels.withColumnRenamed("id", "src"), on="src")
+            .groupBy("dst")
+            .agg(F.min("label").alias("nmin"))
+            .withColumnRenamed("dst", "id")
+        )
+        # `propagated` and `jumped` are both LAZY: the fixpoint-sum action
+        # materializes them in ONE job, fusing the round's checkpoint
+        # barriers and convergence test; `propagated` is referenced twice
+        # in jumped's plan (rows and jump mapping), and block locks make
+        # that double reference compute-once
+        propagated = (
+            labels.join(nbr_min, on="id", how="left")
+            .select(
+                "id",
+                F.least(F.col("label"), F.coalesce("nmin", "label")).alias("label"),
+            )
+            .localCheckpoint(eager=False)
+        )
+        mapping = propagated.select(
+            F.col("id").alias("__lid"), F.col("label").alias("__llabel")
+        )
+        jumped = (
+            propagated.join(mapping, propagated["label"] == mapping["__lid"], "left")
+            .select(
+                "id",
+                F.least(F.col("label"), F.coalesce("__llabel", "label")).alias("label"),
+            )
+            .localCheckpoint(eager=False)
+        )
+        cur_sum = jumped.agg(F.sum(F.col("label").cast("decimal(38,0)")).alias("s")).collect()[0]["s"]
+        labels = jumped
+        if cur_sum == prev_sum:
+            return labels
+        prev_sum = cur_sum
+    raise RuntimeError(
+        f"connected components did not converge in max_iters={max_iters} "
+        f"rounds; pointer jumping needs O(log diameter) rounds"
+    )
+
+
 def duplicate_clusters(
     pairs: DataFrame,
     ids: DataFrame,
@@ -600,57 +693,25 @@ def duplicate_clusters(
     near-dup pipeline: LSH pairs say "these MIGHT be dups"; clustering says
     "keep doc_id == cluster_id, drop the rest".
 
-    Distributed min-label propagation with pointer jumping: each round
-    (1) takes the min label across symmetric edges, (2) compresses
-    label := label(label). Pointer jumping halves chain depth per round, so
-    convergence is O(log diameter) shuffles, not O(diameter) — the same
-    contraction idea as the large-star/small-star algorithm (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond"). Labels only decrease,
-    so a cheap sum(label) aggregate detects the fixpoint (one action per
-    round, no extra join).
-
-    r11 loop rework (guide §2.4/§3.3 — measured at sf0.1, where the loop
-    was the single most expensive piece of the whole bench):
-
-    * **The symmetric edge table is frozen eagerly** (localCheckpoint) —
-      it is loop-invariant, but the r10 loop left it lazy, so every
-      round's neighbor-min join re-ran the ENTIRE upstream candidate
-      pipeline (for LSH input: the minhash aggregate + band self-join,
-      once per round — measured 2.4-2.7 s/round at sf0.1 against 2.6 s
-      for the whole pairs build). The Pregel discipline pagerank already
-      follows: topology materializes once, only node-sized state moves
-      per round.
-    * **Per-round lineage is truncated** (eager localCheckpoint of the
-      propagated and jumped label tables). The jumped plan references
-      `propagated` TWICE (as rows and as the jump mapping), so under
-      persist-only lineage the logical plan DOUBLED per round —
-      Catalyst planning alone took 9.2 s by round 3, and every
-      downstream consumer (the store write, the collapse argmax)
-      re-planned the full tree (a 4,500-row bucketed label write
-      measured 6.7 s; the multimodal_phash_clusters final plan was
-      641 KB of text). Checkpointed, every round and every consumer
-      plans a constant-size tree.
-    * **Only PAIR-TOUCHED nodes ride the loop.** A node in no pair can
-      never change label, yet the r10 loop shuffled the full `ids`
-      universe through every round's three joins. Labels now start as
-      {edge endpoints} ∩ ids (one node-sized semi-join — the inner
-      nbr-join/left-propagate semantics over that set are identical to
-      the full-universe loop, since singletons never produce or receive
-      a neighbor minimum), and singletons re-enter once at the end via
-      a left join with coalesce(label, id). At 100 TB the loop state
-      drops from corpus-sized to collision-sized.
+    Two regimes, picked by the measured size of the symmetric edge table:
+    at most ``_DRIVER_CC_ROWS`` edges run union-find on the driver
+    (:func:`_cc_labels_driver`); larger edge sets run distributed
+    min-label propagation with pointer jumping (:func:`_cc_labels_loop`,
+    bounded by ``max_iters`` rounds). Both produce identical labels, and
+    both label only {edge endpoints} ∩ ids: a node in no pair never
+    produces or receives a neighbor minimum, so at 100 TB the loop state
+    is collision-sized, not corpus-sized.
 
     `ids` supplies the full universe so singleton docs (never in any pair)
-    still get a cluster (themselves). ``include_singletons=False`` returns
-    only the pair-touched labels (collision-sized) and skips the final
-    corpus-sized left join — for callers like
+    still get a cluster (themselves): they re-enter once at the end via a
+    left join with coalesce(label, id). ``include_singletons=False``
+    returns only the pair-touched labels (collision-sized) and skips the
+    final corpus-sized left join — for callers like
     :func:`containment_clusters` that handle singletons with a cheaper
     union than a join (r11, guide §2.3: the full corpus otherwise rides
     the downstream label join and aggregate for rows whose cluster is
     trivially themselves).
     """
-    from sparsity_spark.util import tiny_loop_conf
-
     a, b = pair_cols
     fwd = pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
     edges = (
@@ -660,80 +721,14 @@ def duplicate_clusters(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    # one cheap count over the materialized checkpoint decides the loop's
-    # execution regime (r12 session 2 — see util.tiny_loop_conf): edges
-    # are collision-sized by construction (LSH/banding screens upstream),
-    # so this pass is pairs-sized, never corpus-sized
-    n_edges = edges.count()
     universe = ids.select(F.col(id_col).alias("id")).distinct()
-    # driver fast path (r12 session 4): a measured-tiny edge set skips the
-    # distributed loop entirely — see _cc_labels_driver. Gate env-tunable
-    # (SPARK_GRAFT_DRIVER_CC_ROWS, 0 disables); default matches the
-    # tiny-loop threshold so both regimes flip together on data size.
-    import os as _os
-
-    _driver_rows = int(_os.environ.get("SPARK_GRAFT_DRIVER_CC_ROWS", "200000"))
-    if 0 < _driver_rows and n_edges <= _driver_rows:
+    # one cheap count over the materialized checkpoint picks the regime:
+    # edges are collision-sized by construction (LSH/banding screens
+    # upstream), so this pass is pairs-sized, never corpus-sized
+    if edges.count() <= _DRIVER_CC_ROWS:
         labels = _cc_labels_driver(edges, universe)
-        if not include_singletons:
-            return labels.select(
-                F.col("id").alias(id_col), F.col("label").alias("cluster_id")
-            )
-        return universe.join(labels, "id", "left").select(
-            F.col("id").alias(id_col),
-            F.coalesce("label", F.col("id")).alias("cluster_id"),
-        )
-    # lazy checkpoint + fixpoint-sum fusion (r11 session 3): the seed-sum
-    # action below materializes the label checkpoint in the SAME job —
-    # an eager checkpoint here would pay a separate barrier action for
-    # node-sized data (one extra driver job per call, and one per round
-    # for `jumped` inside the loop; measured ~0.1-0.3 s/job at sf0.1
-    # across the ten loop-consumer bench rows)
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .join(universe, "id", "leftsemi")
-        .withColumn("label", F.col("id"))
-        .localCheckpoint(eager=False)
-    )
-    with tiny_loop_conf(pairs.sparkSession, n_edges):
-        prev_sum = labels.agg(F.sum(F.col("label").cast("decimal(38,0)")).alias("s")).collect()[0]["s"]
-        for _ in range(max_iters):
-            nbr_min = (
-                edges.join(labels.withColumnRenamed("id", "src"), on="src")
-                .groupBy("dst")
-                .agg(F.min("label").alias("nmin"))
-                .withColumnRenamed("dst", "id")
-            )
-            propagated = (
-                labels.join(nbr_min, on="id", how="left")
-                .select(
-                    "id",
-                    F.least(F.col("label"), F.coalesce("nmin", "label")).alias("label"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            mapping = propagated.select(
-                F.col("id").alias("__lid"), F.col("label").alias("__llabel")
-            )
-            # `propagated` stays EAGER (it is referenced twice in jumped's
-            # plan — rows and jump mapping — so it must be materialized
-            # before jumped plans against it); `jumped` is lazy and the
-            # fixpoint-sum action materializes it, fusing the round's
-            # checkpoint barrier and convergence test into ONE job
-            jumped = (
-                propagated.join(mapping, propagated["label"] == mapping["__lid"], "left")
-                .select(
-                    "id",
-                    F.least(F.col("label"), F.coalesce("__llabel", "label")).alias("label"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            cur_sum = jumped.agg(F.sum(F.col("label").cast("decimal(38,0)")).alias("s")).collect()[0]["s"]
-            labels = jumped
-            if cur_sum == prev_sum:
-                break
-            prev_sum = cur_sum
+    else:
+        labels = _cc_labels_loop(edges, universe, max_iters)
     if not include_singletons:
         return labels.select(
             F.col("id").alias(id_col), F.col("label").alias("cluster_id")

@@ -36,8 +36,6 @@ Scale shape (100 TB posture):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -382,6 +380,10 @@ def hits(
     return out
 
 
+# Row count above which the walk loops force sort-merge joins.
+_WALK_MERGE_ROWS = 2_000_000
+
+
 def _maybe_merge_hint(df: DataFrame, rows: int | None) -> DataFrame:
     """Size-gated join strategy for the walk loops' edge-sized sides
     (r12 session 3, guide §3.1 — pick the strategy deliberately). The
@@ -394,10 +396,9 @@ def _maybe_merge_hint(df: DataFrame, rows: int | None) -> DataFrame:
     step shuffles only frontier-sized rows (sf1 A/B: node2vec 22-42 s
     -> 11-14 s). Below it the planner's broadcast is strictly better —
     forcing merge at sf0.1 regressed every walk row ~60-75% (interleaved
-    A/B) — so small graphs keep the broadcast. Threshold env-overridable;
-    callers that don't know their row count keep the planner's choice."""
-    threshold = int(os.environ.get("SPARK_GRAFT_WALK_MERGE_ROWS", "2000000"))
-    if rows is not None and threshold > 0 and rows > threshold:
+    A/B) — so small graphs keep the broadcast. Callers that don't know
+    their row count keep the planner's choice."""
+    if rows is not None and rows > _WALK_MERGE_ROWS:
         return df.hint("merge")
     return df
 

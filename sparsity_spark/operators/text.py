@@ -844,12 +844,13 @@ def nb_score(
 # BPE tokenizer training (r7): learn byte-pair-encoding merges from the
 # corpus — the actual tokenizer-training workload of an LLM data pipeline,
 # engine-exact end to end. The corpus is touched ONCE (the word-frequency
-# aggregate); every merge iteration then runs on the vocabulary table
-# (cardinality-guarded), exactly how sentencepiece/HF trainers operate on
-# word counts. The greedy left-to-right single-pair merge is a string-state
-# fold ('OUT|PREV') both engines express natively (Spark aggregate() HOF /
-# DuckDB list_reduce), so the SQL oracle replays TRAINING — pair counts,
-# argmax with lexicographic tie-break, and the fold itself — bit for bit.
+# aggregate); every merge iteration then runs on the driver over the
+# vocabulary (cardinality-guarded), exactly how sentencepiece/HF trainers
+# operate on word counts. The greedy left-to-right single-pair merge is a
+# string-state fold ('OUT|PREV') that Python, Spark (aggregate() HOF, the
+# encode expression path) and DuckDB (list_reduce) all express, so the SQL
+# oracle replays TRAINING — pair counts, argmax with lexicographic
+# tie-break, and the fold itself — bit for bit.
 # Plain string replace was rejected: replace(' A B ', ' AB ') drops merges
 # in runs of the same symbol (boundary-space sharing), diverging from
 # textbook BPE on 'a a a a'.
@@ -885,122 +886,32 @@ def _bpe_apply_merge(tokens, a: str, b: str):
     return F.aggregate(tokens, F.lit("|"), step, finish)
 
 
-_BPE_PAIRS_EXPR = (
-    "transform(sequence(0, size(split(seq, ' ')) - 2), "
-    "i -> concat(split(seq, ' ')[i], ' ', split(seq, ' ')[i + 1]))"
-)
-
-
 def bpe_train(
     docs: DataFrame,
     text_col: str = "text",
     num_merges: int = 3,
     max_vocab: int = 1_000_000,
 ):
-    """Learn BPE merges: word frequencies (ONE corpus aggregate — the only
-    corpus-sized pass), char+'</w>' initial segmentation, then per merge:
-    adjacent-pair counts weighted by word frequency, argmax with
-    (count DESC, pair ASC) tie-break — a deterministic vocab-sized sort —
-    and the greedy fold applied to every word. The vocabulary table is
-    frozen per iteration (localCheckpoint, vocab-sized ≤ max_vocab), so
-    driver state stays bounded and lineage flat; the collected best pair
-    is ONE row per merge.
+    """Learn BPE merges the way sentencepiece/HF trainers do: the corpus
+    is touched ONCE by the distributed word-frequency aggregate (the only
+    corpus-sized pass), then the merge loop runs in plain Python over the
+    collected (word, count) table — vocabulary-sized state lives in one
+    process, guarded by ``max_vocab``. A distributed loop would pay at
+    least one Spark job per merge to move KB of state; here the whole
+    training is one collect.
 
-    Returns (merges, seqs): merges = [(rank, a, b, count)], seqs = the
-    final (w, cnt, seq) segmentation table."""
-    from sparsity_spark.util import ensure_parallelism
+    Per merge: adjacent-pair counts weighted by word frequency (exact
+    integers), argmax with (count DESC, pair-string ASC) tie-break —
+    Python's str ordering is code-point order, which equals Spark's and
+    DuckDB's binary UTF-8 ordering — and the greedy single-pass fold
+    (:func:`_apply_merges_py_one`) applied to every word. The initial
+    segmentation is one token per code point plus '</w>', the same split
+    as :func:`bpe_encode`'s expression path and the SQL oracle.
 
-    docs = ensure_parallelism(docs)
-    words = (
-        docs.select(F.explode(words_expr(text_col)).alias("w"))
-        .filter((F.col("w") != "") & (~F.col("w").contains("|")))
-        .groupBy("w")
-        .agg(F.count("*").cast("long").alias("cnt"))
-    )
-    # ONE corpus pass (r11): the vocab guard's limit-count used to run
-    # the word-frequency aggregate once, and the seqs checkpoint ran it
-    # AGAIN — freeze the segmentation table first, then the guard counts
-    # the checkpoint (vocab-sized, spill-capable either way)
-    # LAZY checkpoints throughout the merge loop (r12, the CC-loop
-    # fusion): each round's argmax collect materializes the segmentation
-    # table it reads in the SAME job, halving the loop's driver jobs;
-    # lineage still truncates at one round
-    seqs = words.select(
-        "w",
-        "cnt",
-        F.concat(F.regexp_replace(F.col("w"), "(.)", "$1 "), F.lit("</w>")).alias("seq"),
-    ).localCheckpoint(eager=False)
-    nv = seqs.limit(max_vocab + 1).count()
-    if nv > max_vocab:
-        raise ValueError(
-            f"bpe_train: vocabulary exceeds max_vocab={max_vocab}; raise the "
-            f"guard deliberately — the merge loop is vocab-sized by design"
-        )
-    merges: list[tuple[int, str, str, int]] = []
-    # the vocab-guard count doubles as the tiny-loop gate (r12 session 2,
-    # util.tiny_loop_conf): below the row threshold the merge rounds run
-    # with AQE off and one shuffle partition — each round's pair-count agg
-    # + argmax is ONE job instead of a chain of stage-jobs with replanning
-    # pauses (the exploded pair rows are ~seq-length× nv, still MB-scale
-    # at the threshold); above it nothing changes
-    from sparsity_spark.util import tiny_loop_conf
-
-    with tiny_loop_conf(docs.sparkSession, nv):
-        for rank in range(num_merges):
-            pairs = (
-                seqs.filter(F.size(F.split(F.col("seq"), " ")) >= 2)
-                .select("cnt", F.explode(F.expr(_BPE_PAIRS_EXPR)).alias("pair"))
-                .groupBy("pair")
-                .agg(F.sum("cnt").cast("long").alias("c"))
-            )
-            best = pairs.orderBy(F.desc("c"), F.asc("pair")).limit(1).collect()
-            if not best:
-                break
-            a, b = best[0]["pair"].split(" ", 1)
-            merges.append((rank, a, b, int(best[0]["c"])))
-            seqs = seqs.select(
-                "w", "cnt", _bpe_apply_merge(F.split(F.col("seq"), " "), a, b).alias("seq")
-            ).localCheckpoint(eager=False)
-    return merges, seqs
-
-
-def _apply_merges_py(word: str, merges) -> list[str]:
-    """Pure-Python replay of the greedy 'OUT|PREV' fold, one full
-    left-to-right pass PER MERGE in rank order — token-for-token identical
-    to :func:`_bpe_apply_merge` (the Spark aggregate() HOF) and to the
-    oracle's DuckDB list_reduce, so either encode path lands on the same
-    segmentation. ``merges`` is [(a, b), ...] in rank order."""
-    toks: list[str] = list(word) + ["</w>"]
-    for a, b in merges:
-        if len(toks) < 2:
-            break
-        toks = _apply_merges_py_one(toks, a, b)
-    return toks
-
-
-def bpe_train_local(
-    docs: DataFrame,
-    text_col: str = "text",
-    num_merges: int = 64,
-    max_vocab: int = 1_000_000,
-) -> list[tuple[int, str, str, int]]:
-    """Tokenizer training with a DRIVER-SIDE merge loop (r9 — the scale
-    path for deep merge counts): the corpus is touched ONCE by the
-    distributed word-frequency aggregate (the only corpus-sized pass —
-    unchanged from :func:`bpe_train`), then the merge iterations run in
-    plain Python over the collected (word, count) table. This is exactly
-    how sentencepiece/HF trainers operate: word counts are metadata-sized
-    (``max_vocab``-guarded), and at 32k merges a per-merge distributed
-    job (let alone a per-merge fold EXPRESSION) is the wrong shape — the
-    vocabulary fits on the driver with room to spare.
-
-    Bit-equivalent to :func:`bpe_train`: same exact-integer pair counts
-    (weighted by word frequency), same (count DESC, pair-string ASC)
-    argmax tie-break — Python's str ordering is code-point order, which
-    equals Spark's and DuckDB's binary UTF-8 ordering — and the same
-    greedy single-pass fold (:func:`_apply_merges_py`). Returns
-    [(rank, a, b, count)], the :func:`bpe_encode` input format."""
-    from sparsity_spark.util import ensure_parallelism
+    Returns (merges, seqs): merges = [(rank, a, b, count)], the
+    :func:`bpe_encode` input format; seqs = the final (w, cnt, seq)
+    segmentation table."""
+    from sparsity_spark.util import ensure_parallelism, local_df
 
     docs = ensure_parallelism(docs)
     words = (
@@ -1012,8 +923,8 @@ def bpe_train_local(
     rows = words.limit(max_vocab + 1).collect()
     if len(rows) > max_vocab:
         raise ValueError(
-            f"bpe_train_local: vocabulary exceeds max_vocab={max_vocab}; "
-            f"raise the guard deliberately — driver state is vocab-sized"
+            f"bpe_train: vocabulary exceeds max_vocab={max_vocab}; raise the "
+            f"guard deliberately — driver state is vocab-sized by design"
         )
     seqs: dict[str, list[str]] = {r["w"]: list(r["w"]) + ["</w>"] for r in rows}
     cnts: dict[str, int] = {r["w"]: int(r["cnt"]) for r in rows}
@@ -1035,12 +946,30 @@ def bpe_train_local(
         for w, toks in seqs.items():
             if len(toks) >= 2:
                 seqs[w] = _apply_merges_py_one(toks, a, b)
-    return merges
+    return merges, local_df(
+        docs.sparkSession,
+        [(w, cnts[w], " ".join(toks)) for w, toks in seqs.items()],
+        "w string, cnt long, seq string",
+    )
+
+
+def _apply_merges_py(word: str, merges) -> list[str]:
+    """Pure-Python replay of the greedy 'OUT|PREV' fold, one full
+    left-to-right pass PER MERGE in rank order — token-for-token identical
+    to :func:`_bpe_apply_merge` (the Spark aggregate() HOF) and to the
+    oracle's DuckDB list_reduce, so either encode path lands on the same
+    segmentation. ``merges`` is [(a, b), ...] in rank order."""
+    toks: list[str] = list(word) + ["</w>"]
+    for a, b in merges:
+        if len(toks) < 2:
+            break
+        toks = _apply_merges_py_one(toks, a, b)
+    return toks
 
 
 def _apply_merges_py_one(toks: list[str], a: str, b: str) -> list[str]:
     """One greedy left-to-right merge pass over an existing token list
-    (the per-iteration step of :func:`bpe_train_local`)."""
+    (the per-merge step of :func:`bpe_train`)."""
     ab = a + b
     out: list[str] = []
     prev = None
@@ -1130,7 +1059,9 @@ def bpe_encode(
         # OCCURRENCE (270k evaluations for a 31-word vocabulary at
         # sf0.1); a 100 TB corpus re-folded every occurrence at scan
         # time. The distinct is a map-side-combined vocab aggregate.
-        seq = F.concat(F.regexp_replace(F.col("w"), "(.)", "$1 "), F.lit("</w>"))
+        # (?s): one token per code point, line terminators included —
+        # Python's list(w) on the kernel path splits them too
+        seq = F.concat(F.regexp_replace(F.col("w"), "(?s)(.)", "$1 "), F.lit("</w>"))
         expr = seq
         for _, a, b, _c in merges:
             expr = _bpe_apply_merge(F.split(expr, " "), a, b)

@@ -8043,7 +8043,7 @@ def _bpe_oracle(num_merges: int = 3) -> str:
   GROUP BY w
 )""",
         r"""it0 AS (
-  SELECT w, cnt, regexp_replace(w, '(.)', '\1 ', 'g') || '</w>' AS seq FROM words
+  SELECT w, cnt, regexp_replace(w, '(?s)(.)', '\1 ', 'g') || '</w>' AS seq FROM words
 )""",
     ]
     for r in range(1, num_merges + 1):
@@ -8174,19 +8174,19 @@ def text_bpe_encode_q(spark, sf_dir):
 def text_bpe_encode_deep_q(spark, sf_dir):
     """Deep-merge tokenizer encode — the SCALE path proven at a depth the
     fold-expression form cannot survive (r9, the judge's #1 ask): 64
-    merges trained by the driver-side loop over the one-pass distributed
-    word-frequency table (bpe_train_local — the sentencepiece/HF shape;
-    bit-equal to bpe_train's argmax/fold, test-pinned), then applied by
-    the Arrow vocab-kernel encode path (bpe_encode's max_expr_merges
-    seam): Python work strictly vocab-sized, the corpus's exploded words
-    broadcast-joining back to per-word token counts JVM-side. The oracle
+    merges trained by bpe_train's driver-side loop over the one-pass
+    distributed word-frequency table (the sentencepiece/HF shape), then
+    applied by the Arrow vocab-kernel encode path (bpe_encode's
+    max_expr_merges seam): Python work strictly vocab-sized, the corpus's
+    exploded words broadcast-joining back to per-word token counts
+    JVM-side. The oracle
     unrolls all 64 training iterations as CTE triples and replays the
     64-deep greedy fold with DuckDB list_reduce — one token of drift in
     any of the 64 rounds flips per-doc counts and the hash."""
-    from sparsity_spark.operators.text import bpe_encode, bpe_train_local
+    from sparsity_spark.operators.text import bpe_encode, bpe_train
 
     docs = load_table(spark, sf_dir, "documents")
-    merges = bpe_train_local(docs, num_merges=64)
+    merges = bpe_train(docs, num_merges=64)[0]
     return bpe_encode(docs, merges)
 
 
@@ -8203,13 +8203,13 @@ def text_bpe_encode_stored_q(spark, sf_dir):
     between them."""
     from sparsity_spark.operators.text import (
         bpe_encode,
-        bpe_train_local,
+        bpe_train,
         read_merge_store,
         write_merge_store,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    merges = bpe_train_local(docs, num_merges=64)
+    merges = bpe_train(docs, num_merges=64)[0]
     write_merge_store(spark, merges, "bpe_merge_store_q")
     stored = read_merge_store(spark, "bpe_merge_store_q")
     return bpe_encode(docs, stored)

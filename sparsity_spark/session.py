@@ -38,15 +38,11 @@ def _scratch_root() -> str:
     # /tmp would merely slow down. Only prefer /dev/shm when it has a
     # comfortable multiple of the session's expected scratch footprint
     # (bucketed store tables + shuffle files — ~100 MB at sf0.1, ~1 GB at
-    # sf1; 4 GiB ≈ 4× the largest measured). Threshold env-overridable.
+    # sf1; 4 GiB ≈ 4× the largest measured).
     if os.access("/dev/shm", os.W_OK):
         try:
             st = os.statvfs("/dev/shm")
-            free = st.f_bavail * st.f_frsize
-            min_free = int(
-                os.environ.get("SPARK_GRAFT_SHM_MIN_FREE", str(4 * 1024**3))
-            )
-            if free >= min_free:
+            if st.f_bavail * st.f_frsize >= 4 * 1024**3:
                 return "/dev/shm"
         except OSError:
             pass
@@ -76,10 +72,9 @@ def get_spark(app_name: str = "sparsity_spark", cpus: int | None = None) -> Spar
         # drops 5.5→3.3 s (A/B, dedup_lsh_recall). KB-sized loop-state
         # exchanges still coalesce to ONE task either way, and a real
         # cluster's 100 MB+ exchanges never feel the floor — the knob is
-        # bytes-adaptive, not core-count-tuned. Env-overridable for A/B.
+        # bytes-adaptive, not core-count-tuned.
         .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_BYTES", str(256 * 1024)),
+            "spark.sql.adaptive.coalescePartitions.minPartitionSize", str(256 * 1024)
         )
         # a single ~100 MB parquet file scans as 1 split under the default
         # 128 MB maxPartitionBytes — compute-heavy per-row work after a

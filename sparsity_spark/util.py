@@ -2,53 +2,7 @@
 
 from __future__ import annotations
 
-import os
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame
-
-
-@contextmanager
-def tiny_loop_conf(spark, n_rows: int | None):
-    """Run an iterative loop's actions with AQE off and ONE shuffle
-    partition when the loop's largest table is MEASURED tiny (r12
-    session 2, guide §1.2/§2.2).
-
-    Why: with AQE on, every exchange of every round is submitted as its
-    own stage-job with a replanning pause between jobs. For a
-    coordination-dominated loop over KB-sized state that overhead IS the
-    wall: dedup_incremental_clusters ran 128 jobs, 3.8 s of inter-job
-    gaps inside a 7.0 s wall, and the connected-components rounds fired
-    ~9 one-task stage-jobs each (~50-100 ms of coordination per job) to
-    move a few hundred KB. With AQE off and P=1 each round is ONE job
-    (measured interleaved A/B at sf0.1: 1.57 → 1.21 s per CC call, B
-    faster in 6/6 pairs).
-
-    Why this is scale-safe: the branch keys on the MEASURED row count of
-    the loop's frozen edge/state table, never on core count. Below the
-    threshold (default 200k rows ≈ a few MB) one partition is the
-    guide-§2.2 right size and skew physically cannot matter; above it the
-    conf is untouched, so a 100 TB run keeps AQE's coalescing and
-    skew-split exactly as before. Threshold env-overridable via
-    SPARK_GRAFT_TINY_LOOP_ROWS (0 disables the branch entirely).
-
-    Yields True when the tiny-loop conf is active. Restores the session
-    conf even on exceptions; not safe to nest concurrently from driver
-    threads (no current caller does)."""
-    threshold = int(os.environ.get("SPARK_GRAFT_TINY_LOOP_ROWS", "200000"))
-    if n_rows is None or threshold <= 0 or n_rows > threshold:
-        yield False
-        return
-    conf = spark.conf
-    old_aqe = conf.get("spark.sql.adaptive.enabled")
-    old_p = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.shuffle.partitions", "1")
-    try:
-        yield True
-    finally:
-        conf.set("spark.sql.adaptive.enabled", old_aqe)
-        conf.set("spark.sql.shuffle.partitions", old_p)
 
 
 def local_df(spark, rows, schema: str) -> DataFrame:

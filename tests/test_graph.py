@@ -756,6 +756,7 @@ def test_walk_merge_hint_gate_and_parity(spark, monkeypatch):
     merge hint must not change a single walk row — only the join
     strategy. Parity is the guarantee that lets the gate flip freely
     with data size."""
+    from sparsity_spark.operators import graph
     from sparsity_spark.operators.graph import (
         _maybe_merge_hint,
         node2vec_walks,
@@ -767,13 +768,10 @@ def test_walk_merge_hint_gate_and_parity(spark, monkeypatch):
     # gate off: unknown rows, or measured rows below the threshold
     assert _maybe_merge_hint(df, None) is df
     assert _maybe_merge_hint(df, 10) is df
-    # gate on: above the (env-overridable) threshold the plan gets a hint
-    monkeypatch.setenv("SPARK_GRAFT_WALK_MERGE_ROWS", "5")
-    assert _maybe_merge_hint(df, 10) is not df
-    # threshold 0 disables the branch entirely
-    monkeypatch.setenv("SPARK_GRAFT_WALK_MERGE_ROWS", "0")
-    assert _maybe_merge_hint(df, 10) is df
-    monkeypatch.delenv("SPARK_GRAFT_WALK_MERGE_ROWS")
+    # gate on: above the threshold the plan gets a hint
+    with monkeypatch.context() as m:
+        m.setattr(graph, "_WALK_MERGE_ROWS", 5)
+        assert _maybe_merge_hint(df, 10) is not df
 
     # parity: identical walks whether the ranked side is merge-hinted or
     # broadcast (star + chain + a cycle so walks branch and dead-end)
@@ -788,7 +786,7 @@ def test_walk_merge_hint_gate_and_parity(spark, monkeypatch):
 
     for fn in (random_walks, node2vec_walks):
         base = rows(fn(edges, starts, steps=3, assume_distinct=True))
-        monkeypatch.setenv("SPARK_GRAFT_WALK_MERGE_ROWS", "1")  # force the hint
-        hinted = rows(fn(edges, starts, steps=3, assume_distinct=True))
-        monkeypatch.delenv("SPARK_GRAFT_WALK_MERGE_ROWS")
+        with monkeypatch.context() as m:
+            m.setattr(graph, "_WALK_MERGE_ROWS", 1)  # force the hint
+            hinted = rows(fn(edges, starts, steps=3, assume_distinct=True))
         assert hinted == base and len(base) > 8

@@ -2639,41 +2639,38 @@ def test_quantile_sample_deterministic_and_mergeable(spark):
         quantile_sample(df, "k", "v", rate_ppm=0)
 
 
-def test_bpe_train_local_and_kernel_encode_parity(spark):
-    """r9 scale-path BPE: the driver-side trainer must produce EXACTLY the
-    distributed trainer's merge list (same pair counts, same count-desc /
-    pair-asc tie-break), and the Arrow vocab-kernel encode path (forced
-    via max_expr_merges=0) must land on identical per-doc token counts to
-    the fold-expression path — at every merge-list width including the
-    same-symbol-run edge case."""
+def test_bpe_expr_and_kernel_encode_parity(spark):
+    """Scale-path BPE: the Arrow vocab-kernel encode path (forced via
+    max_expr_merges=0) must land on identical per-doc token counts to
+    the fold-expression path — at every merge-list width, including the
+    same-symbol-run edge case and words holding line terminators (\\n,
+    \\r, \\u2028), which the expression path's character split must
+    cut exactly like Python's list()."""
     import pandas as pd
 
-    from sparsity_spark.operators.text import (
-        bpe_encode,
-        bpe_train,
-        bpe_train_local,
-    )
+    from sparsity_spark.operators.text import bpe_encode, bpe_train
 
     texts = [
         "low low low lower lowest",
         "new newer newest low",
         "aaaa aaaa aa",
         "the cat sat on the mat",
+        "ab\ncd ab\ncd ab\ncd xy",
+        "ab\rcd xy xy",
+        "ab\u2028cd ab\u2028cd",
     ]
     docs = spark.createDataFrame(
         pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
     )
-    for nm in (1, 4, 12):
-        dist_merges, _ = bpe_train(docs, num_merges=nm)
-        local_merges = bpe_train_local(docs, num_merges=nm)
-        assert local_merges == dist_merges, nm
+    for nm in (1, 3, 4, 12):
+        merges, _ = bpe_train(docs, num_merges=nm)
         expr = {
             r["doc_id"]: (r["n_words"], r["n_tokens"])
-            for r in bpe_encode(docs, local_merges, max_expr_merges=99).collect()
+            for r in bpe_encode(docs, merges, max_expr_merges=99).collect()
         }
         kern = {
             r["doc_id"]: (r["n_words"], r["n_tokens"])
-            for r in bpe_encode(docs, local_merges, max_expr_merges=0).collect()
+            for r in bpe_encode(docs, merges, max_expr_merges=0).collect()
         }
         assert expr == kern, nm
 
@@ -2685,7 +2682,7 @@ def test_bpe_encode_deep_merges_via_kernel(spark):
     import pandas as pd
     from collections import Counter
 
-    from sparsity_spark.operators.text import bpe_encode, bpe_train_local
+    from sparsity_spark.operators.text import bpe_encode, bpe_train
 
     texts = [
         f"alpha beta gamma delta epsilon {w}"
@@ -2694,14 +2691,14 @@ def test_bpe_encode_deep_merges_via_kernel(spark):
     docs = spark.createDataFrame(
         pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
     )
-    merges = bpe_train_local(docs, num_merges=64)
+    merges = bpe_train(docs, num_merges=64)[0]
     assert len(merges) > 8  # deep enough to force the kernel path
     got = {
         r["doc_id"]: r["n_tokens"] for r in bpe_encode(docs, merges).collect()
     }
 
-    # python replay (same greedy fold, merges already trusted from the
-    # parity test above)
+    # python replay (same greedy fold, merges already trusted from
+    # test_bpe_train_matches_textbook_reference)
     wc = Counter(w for t in texts for w in t.split(" ") if w and "|" not in w)
     seg = {}
     for w in wc:
@@ -2826,7 +2823,7 @@ def test_bpe_merge_store_roundtrip_exact(spark):
 
     from sparsity_spark.operators.text import (
         bpe_encode,
-        bpe_train_local,
+        bpe_train,
         read_merge_store,
         write_merge_store,
     )
@@ -2835,7 +2832,7 @@ def test_bpe_merge_store_roundtrip_exact(spark):
     docs = spark.createDataFrame(
         pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
     )
-    merges = bpe_train_local(docs, num_merges=12)
+    merges = bpe_train(docs, num_merges=12)[0]
     write_merge_store(spark, merges, "bpe_store_test")
     assert read_merge_store(spark, "bpe_store_test") == merges
 
@@ -2846,7 +2843,7 @@ def test_bpe_merge_store_roundtrip_exact(spark):
     }
     assert mem == stored
 
-    shorter = bpe_train_local(docs, num_merges=3)
+    shorter = bpe_train(docs, num_merges=3)[0]
     write_merge_store(spark, shorter, "bpe_store_test")
     assert read_merge_store(spark, "bpe_store_test") == shorter  # no stale tail
 
@@ -3446,50 +3443,6 @@ def test_band_keys_from_grams_matches_text_path(spark, sf_dir):
     assert a == b
 
 
-def test_tiny_loop_conf_scope_and_parity(spark, monkeypatch):
-    """r12 session 2: the tiny-loop regime (AQE off, one shuffle
-    partition while a measured-small iterative loop runs) must (a) set
-    and RESTORE the session conf even when the body raises, (b) stay
-    inert above the threshold or when disabled, and (c) leave
-    duplicate_clusters' labels bit-identical either way."""
-    from sparsity_spark.util import tiny_loop_conf
-
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    old_p = spark.conf.get("spark.sql.shuffle.partitions")
-
-    with tiny_loop_conf(spark, 10) as active:
-        assert active
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
-    assert spark.conf.get("spark.sql.adaptive.enabled") == old_aqe
-    assert spark.conf.get("spark.sql.shuffle.partitions") == old_p
-
-    with pytest.raises(RuntimeError):
-        with tiny_loop_conf(spark, 10):
-            raise RuntimeError("boom")
-    assert spark.conf.get("spark.sql.adaptive.enabled") == old_aqe
-    assert spark.conf.get("spark.sql.shuffle.partitions") == old_p
-
-    # above threshold / disabled -> conf untouched
-    with tiny_loop_conf(spark, 10**9) as active:
-        assert not active
-        assert spark.conf.get("spark.sql.adaptive.enabled") == old_aqe
-    monkeypatch.setenv("SPARK_GRAFT_TINY_LOOP_ROWS", "0")
-    with tiny_loop_conf(spark, 10) as active:
-        assert not active
-        assert spark.conf.get("spark.sql.adaptive.enabled") == old_aqe
-
-    # result parity: same clustering with the regime on and off
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (7, 8)], ["id_a", "id_b"]
-    )
-    ids = spark.createDataFrame([(i,) for i in range(1, 9)], ["doc_id"])
-    off = sorted(map(tuple, dedup.duplicate_clusters(pairs, ids).collect()))
-    monkeypatch.setenv("SPARK_GRAFT_TINY_LOOP_ROWS", "200000")
-    on = sorted(map(tuple, dedup.duplicate_clusters(pairs, ids).collect()))
-    assert on == off
-
-
 def test_driver_cc_fast_path_matches_distributed(spark, monkeypatch):
     """r12 session 4: the size-gated driver union-find path of
     duplicate_clusters must produce EXACTLY the distributed loop's
@@ -3511,29 +3464,29 @@ def test_driver_cc_fast_path_matches_distributed(spark, monkeypatch):
     )
     ids = spark.createDataFrame([(i,) for i in range(1, n + 1)], ["doc_id"])
 
+    def labels(**kw):
+        return sorted(map(tuple, dedup.duplicate_clusters(pairs, ids, **kw).collect()))
+
     for include_singletons in (True, False):
-        monkeypatch.setenv("SPARK_GRAFT_DRIVER_CC_ROWS", "0")
-        dist = sorted(
-            map(
-                tuple,
-                dedup.duplicate_clusters(
-                    pairs, ids, include_singletons=include_singletons
-                ).collect(),
-            )
-        )
-        monkeypatch.setenv("SPARK_GRAFT_DRIVER_CC_ROWS", "200000")
-        drv = sorted(
-            map(
-                tuple,
-                dedup.duplicate_clusters(
-                    pairs, ids, include_singletons=include_singletons
-                ).collect(),
-            )
-        )
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "_DRIVER_CC_ROWS", -1)  # force the loop
+            dist = labels(include_singletons=include_singletons)
+        drv = labels(include_singletons=include_singletons)
         assert drv == dist
     # schema parity too: downstream unions require matching types
-    monkeypatch.setenv("SPARK_GRAFT_DRIVER_CC_ROWS", "0")
-    dist_schema = dedup.duplicate_clusters(pairs, ids).schema
-    monkeypatch.setenv("SPARK_GRAFT_DRIVER_CC_ROWS", "200000")
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "_DRIVER_CC_ROWS", -1)
+        dist_schema = dedup.duplicate_clusters(pairs, ids).schema
     drv_schema = dedup.duplicate_clusters(pairs, ids).schema
     assert [f.dataType for f in drv_schema] == [f.dataType for f in dist_schema]
+
+
+def test_cc_loop_raises_when_not_converged(spark, monkeypatch):
+    """The distributed CC loop never returns partial labels: a 40-node
+    chain needs several pointer-jumping rounds, so max_iters=1 must raise
+    instead of handing back an unconverged labeling."""
+    monkeypatch.setattr(dedup, "_DRIVER_CC_ROWS", -1)
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(1, 40)], ["id_a", "id_b"])
+    ids = spark.createDataFrame([(i,) for i in range(1, 41)], ["doc_id"])
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup.duplicate_clusters(pairs, ids, max_iters=1)
