@@ -1558,7 +1558,7 @@ def remove_from_band_store(ids: DataFrame, table: str, id_col: str = "doc_id") -
 def compact_band_store(spark, table: str) -> None:
     """Physically remove tombstoned band rows through the store's own
     (band, band_key) bucket spec (:func:`sparsity_spark.stores.compact`)."""
-    stores.compact(spark, table, ["band", "band_key"])
+    stores.compact(spark, table)
 
 
 def append_band_store(
@@ -1620,7 +1620,7 @@ def append_band_store(
     keep_bands = nb.join(
         decisions.filter(F.col("keep")).select(id_col), on=id_col
     ).select(id_col, "band", "band_key")
-    stores.append(keep_bands, table, ["band", "band_key"])
+    stores.append(keep_bands, table)
     nb.unpersist()
     return decisions
 
@@ -1682,7 +1682,7 @@ def remove_from_hash_store(
 def compact_hash_store(spark, table: str) -> None:
     """Physically remove tombstoned ledger rows through the store's own
     content_hash bucket spec (:func:`sparsity_spark.stores.compact`)."""
-    stores.compact(spark, table, ["content_hash"])
+    stores.compact(spark, table)
 
 
 def append_hash_store(
@@ -1737,7 +1737,7 @@ def append_hash_store(
         .groupBy("content_hash")
         .agg(F.min(id_col).alias(id_col))
     )
-    stores.append(keep_rows, table, ["content_hash"])
+    stores.append(keep_rows, table)
     return decisions
 
 
@@ -1789,7 +1789,7 @@ def remove_from_member_store(
 def compact_member_store(spark, table: str) -> None:
     """Physically remove tombstoned member rows through the store's own
     cid bucket spec (:func:`sparsity_spark.stores.compact`)."""
-    stores.compact(spark, table, ["cid"])
+    stores.compact(spark, table)
 
 
 def append_member_store(
@@ -1888,7 +1888,7 @@ def append_member_store(
         s.join(decisions.filter(F.col("keep")).select(id_col), on=id_col)
         .select("cid", F.col(id_col), "vec_d", F.col("__nrm__").alias("norm"))
     )
-    stores.append(keep_rows, table, ["cid"])
+    stores.append(keep_rows, table)
     s.unpersist()
     return decisions
 
@@ -2191,7 +2191,7 @@ def fold_cluster_store(
             f"{table}__remap"
         )
 
-    overlap_jobs(lambda: stores.append(new_assign, table, ["doc_id"]), _rewrite_remap)
+    overlap_jobs(lambda: stores.append(new_assign, table), _rewrite_remap)
     return resolve_cluster_store(spark, table)
 
 
@@ -2271,7 +2271,7 @@ def compact_cluster_store(spark, table: str) -> None:
     )
     stores._drop_table_and_location(spark, f"{table}__remap")
     bridge.write.mode("overwrite").format("parquet").saveAsTable(f"{table}__remap")
-    stores.rewrite(final, table, ["doc_id"])
+    stores.rewrite(final, table)
     _empty_remap(spark, table)
     stores.clear_tombstones(spark, table)
 
@@ -2518,8 +2518,8 @@ def append_containment_store(
         ).format("parquet").saveAsTable(f"{table}__df")
 
     overlap_jobs(
-        lambda: stores.append(grams, f"{table}__grams", ["id"]),
-        lambda: stores.append(e.select("gram", "id"), f"{table}__post", ["gram"]),
+        lambda: stores.append(grams, f"{table}__grams"),
+        lambda: stores.append(e.select("gram", "id"), f"{table}__post"),
         _app_df,
     )
 
@@ -2533,7 +2533,7 @@ def compact_containment_store(spark, table: str) -> None:
     materialized so the overwrite never reads the table it replaces —
     ``containment_screen``'s df lookup is bit-identical before and
     after. No batch ids live in this table (the loop's replay screen is
-    the ``__grams__maxbatch`` side table, untouched), so compaction here
+    the ``__grams`` manifest's max batch id, untouched), so compaction here
     needs no watermark and composes with crash replays: a replayed
     batch's duplicate df increments remain duplicate after compaction,
     and duplicated df only perturbs the rarest-first probe ORDER, never
@@ -2557,13 +2557,13 @@ def compact_containment_store(spark, table: str) -> None:
         # stale-order df (order-only); the reverse order would resurrect
         # forgotten docs
         dead = F.broadcast(dead.select("id").distinct())
-        for side, cols in (("__grams", ["id"]), ("__post", ["gram"])):
+        for side in ("__grams", "__post"):
             live = (
                 spark.table(table + side)
                 .join(dead, "id", "left_anti")
                 .localCheckpoint(eager=True)
             )
-            stores.rewrite(live, table + side, cols)
+            stores.rewrite(live, table + side)
         fresh_df = (
             spark.table(f"{table}__grams")
             .dropDuplicates(["id"])

@@ -749,7 +749,7 @@ def merge_edge_store(
             inc.join(spark.table(table), on=["src", "dst"], how="left_anti")
             .localCheckpoint(eager=True)
         )
-        stores.append(new, table, ["src", "dst"])
+        stores.append(new, table)
     else:
         stores.create(inc.localCheckpoint(eager=True), table, ["src", "dst"], num_buckets)
     return spark.table(table)

@@ -636,9 +636,8 @@ def append_benchmark_store(
         lambda: stores.append(
             b.select(F.col(id_col).alias("bench_id"), "band", "band_key"),
             f"{table}__bands",
-            ["band", "band_key"],
         ),
-        lambda: stores.append(g, f"{table}__grams", ["bench_id"]),
+        lambda: stores.append(g, f"{table}__grams"),
     )
 
 
@@ -669,8 +668,8 @@ def compact_benchmark_store(spark, table: str) -> None:
     # rewrites hit independent tables — overlap them (guide §2.6); the
     # tombstone drop stays LAST
     overlap_jobs(
-        lambda: stores.rewrite(live_b, bands_t, ["band", "band_key"]),
-        lambda: stores.rewrite(live_g, grams_t, ["bench_id"]),
+        lambda: stores.rewrite(live_b, bands_t),
+        lambda: stores.rewrite(live_g, grams_t),
     )
     stores.clear_tombstones(spark, table)
 

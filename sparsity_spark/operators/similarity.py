@@ -758,7 +758,7 @@ def append_ivfpq_index(
     rows = _encode_with_assignment(
         new_embeddings, cents, book, m, k_code, dim, id_col, vec_col
     )
-    stores.append(rows, index_table, ["centroid_id"])
+    stores.append(rows, index_table)
 
 
 def delete_from_ivfpq_index(
@@ -773,13 +773,12 @@ def delete_from_ivfpq_index(
     stores.forget(ids.select(F.col(id_col)), index_table)
 
 
-def compact_ivfpq_index(spark, index_table: str, id_col: str = "vec_id") -> None:
+def compact_ivfpq_index(spark, index_table: str) -> None:
     """Physically remove tombstoned code rows through the index's own
     centroid_id bucket spec (:func:`sparsity_spark.stores.compact`).
     Queries before and after compaction are bit-identical by
-    construction. The tombstones carry their own id column, so
-    ``id_col`` is not needed here."""
-    stores.compact(spark, index_table, ["centroid_id"])
+    construction."""
+    stores.compact(spark, index_table)
 
 
 def ivfpq_index_topk(

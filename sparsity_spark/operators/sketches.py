@@ -539,6 +539,5 @@ def compact_count_store(spark, table: str) -> None:
     stores.compact_batches(
         spark,
         table,
-        ["key"],
         lambda store: _count_totals(store).select("key", F.col("total").alias("c")),
     )

@@ -748,6 +748,6 @@ def compact_ohlc_store(spark, table: str) -> None:
         )
         return merged.select("key", "bucket", *_OHLC_PARTIAL)
 
-    stores.compact_batches(spark, table, ["key", "bucket"], collapse)
+    stores.compact_batches(spark, table, collapse)
 
 

@@ -8,22 +8,25 @@ helpers here; the families keep only their bucket columns, id column and
 genuinely family-specific logic. The metadata-sized sketch stores (CMS,
 HLL, bloom) are unbucketed and share :func:`merge_small`.
 
-Side tables, named after the store table and formatted only here:
+Metadata, named after the store table and formatted only here:
 
-* ``{table}__tombstones`` — one column of forgotten ids. :func:`live`
+* ``{table}__tombstones`` — a side table of forgotten ids. :func:`live`
   anti-joins it on every read (broadcast: the set is deletion-sized), so
   a forget takes effect immediately with no store rewrite; appends of an
-  id already tombstoned are harmless duplicates.
-* ``{table}__maxbatch`` — the one-row max folded batch id, the O(1)
-  replay screen of the non-idempotent batch-id stores (count, OHLC, and
-  the streaming containment and benchmark loops).
-* ``{table}__compacted`` — the one-row compaction watermark: batch ids
-  at or below it were folded and their per-batch rows collapsed.
+  id already tombstoned are harmless duplicates. :func:`create` drops it.
+* ``{warehouse}/{table}.manifest.json`` — beside, not inside, the data
+  directory an overwrite or DROP deletes: ``bucket_cols`` and
+  ``num_buckets``, which appends and rewrites restate (Spark validates
+  the spec); ``max_batch_id``, the O(1) replay screen of the
+  non-idempotent batch-id stores (count, OHLC, and the streaming
+  containment and benchmark loops); and ``compacted_through``, the
+  watermark at or below which batches were folded and collapsed.
+  :func:`write_bucketed` publishes it fresh (temp file, ``os.replace``)
+  after each data write. It is read only for a table the catalog knows,
+  so a file left by a dropped table never screens out a new store's
+  batches.
 
-A fresh :func:`create` drops all three: a stale side table from a dead
-incarnation would hide the new store's rows or screen out its batches.
-Appends and rewrites restate the table's own bucket spec (Spark
-validates it) and repartition to one partition per bucket first, so
+Appends and rewrites repartition to one partition per bucket first, so
 each write emits at most one file per bucket.
 
 No write here is atomic across tables, so each multi-write operation
@@ -34,17 +37,17 @@ store that still reads correctly:
   drop the tombstones. A crash between leaves tombstones whose rows are
   already gone, and anti-joining an absent id is a no-op; the reverse
   order would resurrect forgotten rows.
-* **watermark-before-rewrite** (:func:`compact_batches`): record the
-  compaction watermark, THEN rewrite the collapsed rows. A crash between
+* **watermark-before-rewrite** (:func:`compact_batches`): publish
+  ``compacted_through``, THEN rewrite the collapsed rows. A crash between
   leaves an uncompacted store (the read-side collapse is idempotent)
   whose ids at or below the watermark screen as folded, which they are;
   the reverse order would leave a compacted store whose old ids
   presence-scan as absent and re-fold as duplicates.
 * **append-then-record** (:func:`fold_batch`): append the batch, THEN
-  raise ``__maxbatch``. A crash between only re-admits the same batch on
-  replay, and the read side collapses its duplicate rows with MAX
-  (identical by construction); the reverse order would record a batch
-  whose rows never landed and drop it forever.
+  publish the raised ``max_batch_id``. A crash between only re-admits
+  the same batch on replay, and the read side collapses its duplicate
+  rows with MAX (identical by construction); the reverse order would
+  record a batch whose rows never landed and drop it forever.
 
 Single-writer contract: the batch-id screen assumes one monotone id
 sequence per table, which is what one Structured Streaming query with a
@@ -52,6 +55,12 @@ stable checkpoint provides. Give concurrent writers their own tables.
 """
 
 from __future__ import annotations
+
+import contextlib
+import json
+import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -61,27 +70,83 @@ def _tombstone_table(table: str) -> str:
     return table + "__tombstones"
 
 
-def _meta_table(table: str) -> str:
-    return table + "__maxbatch"
+def _warehouse(spark: SparkSession) -> str:
+    return spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:").rstrip("/")
 
 
-def _compacted_table(table: str) -> str:
-    return table + "__compacted"
+def _manifest_path(spark: SparkSession, table: str) -> str:
+    return f"{_warehouse(spark)}/{table.lower()}.manifest.json"
 
 
 def _drop_table_and_location(spark: SparkSession, table: str) -> None:
-    """DROP the table AND its managed location — a previous session may
-    have left the directory behind without a catalog entry (fresh
-    metastore, persistent warehouse dir), which makes saveAsTable fail
-    with LOCATION_ALREADY_EXISTS."""
-    import shutil
-
+    """DROP the table, its managed location and its manifest — a previous
+    session may have left the directory behind without a catalog entry
+    (fresh metastore, persistent warehouse dir), which makes saveAsTable
+    fail with LOCATION_ALREADY_EXISTS."""
     spark.sql(f"DROP TABLE IF EXISTS {table}")
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "")
-    if warehouse.startswith("file:"):
-        warehouse = warehouse[5:]
-    if warehouse:
-        shutil.rmtree(f"{warehouse.rstrip('/')}/{table.lower()}", ignore_errors=True)
+    shutil.rmtree(f"{_warehouse(spark)}/{table.lower()}", ignore_errors=True)
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(_manifest_path(spark, table))
+
+
+# ---------------------------------------------------------------------------
+# the manifest
+# ---------------------------------------------------------------------------
+
+
+def _publish(spark: SparkSession, table: str, manifest: dict) -> None:
+    """Replace ``table``'s manifest in one step: write a temp file in the
+    warehouse dir, then ``os.replace`` it over the old one, so a reader
+    sees the old manifest or the new one, never a torn write."""
+    path = _manifest_path(spark, table)
+    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), suffix=".tmp")
+    with os.fdopen(fd, "w") as f:
+        json.dump(manifest, f)
+    os.replace(tmp, path)
+
+
+def _manifest(spark: SparkSession, table: str) -> dict | None:
+    """``table``'s manifest, or None when the catalog has no ``table``.
+    A catalog table without one raises: every bucketed table is written
+    by :func:`write_bucketed`."""
+    if not spark.catalog.tableExists(table):
+        return None
+    path = _manifest_path(spark, table)
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        raise RuntimeError(f"bucketed table {table} has no manifest at {path}") from None
+
+
+def _store_manifest(spark: SparkSession, table: str) -> dict:
+    """:func:`_manifest` of a table that must exist."""
+    m = _manifest(spark, table)
+    if m is None:
+        raise ValueError(f"no bucketed table {table}")
+    return m
+
+
+def _raise_mark(spark: SparkSession, table: str, key: str, value: int) -> None:
+    """Publish ``max(old, value)`` as the manifest's ``key`` — monotone,
+    so an out-of-order fold never LOWERS a watermark (every batch between
+    it and the true max would otherwise re-screen as new)."""
+    m = _store_manifest(spark, table)
+    m[key] = int(value) if m[key] is None else max(int(value), m[key])
+    _publish(spark, table, m)
+
+
+def max_batch(spark: SparkSession, table: str) -> int | None:
+    """The max batch id folded into ``table``, or None when the table is
+    absent or has folded no batch yet."""
+    m = _manifest(spark, table)
+    return None if m is None else m["max_batch_id"]
+
+
+def _record_max_batch(spark: SparkSession, table: str, batch_id: int) -> None:
+    """Raise ``max_batch_id`` AFTER the store append commits
+    (append-then-record)."""
+    _raise_mark(spark, table, "max_batch_id", batch_id)
 
 
 # ---------------------------------------------------------------------------
@@ -112,7 +177,8 @@ def write_bucketed(
     """Persist as a bucketed (and optionally sorted) table: joins and
     aggregations keyed on bucket_cols read it without a shuffle. The
     input is repartitioned to one partition per bucket id so the table
-    is one file per bucket (see :func:`bucket_partitioned`)."""
+    is one file per bucket (see :func:`bucket_partitioned`). A fresh
+    manifest, with no watermarks, is published after the data write."""
     spark = df.sparkSession
     _drop_table_and_location(spark, table)
     writer = (
@@ -123,47 +189,39 @@ def write_bucketed(
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table)
+    spec = {"bucket_cols": list(bucket_cols), "num_buckets": int(num_buckets)}
+    _publish(spark, table, {**spec, "max_batch_id": None, "compacted_through": None})
 
 
-def _table_bucket_count(spark, table: str) -> int:
-    """Bucket count of an existing bucketed table (appends must restate
-    the exact spec — Spark validates it)."""
-    for r in spark.sql(f"DESCRIBE EXTENDED {table}").collect():
-        if r["col_name"] == "Num Buckets":
-            return int(r["data_type"])
-    raise ValueError(f"{table} is not a bucketed table")
+def _write_through_spec(df: DataFrame, table: str, mode: str) -> None:
+    m = _store_manifest(df.sparkSession, table)
+    nb, cols = m["num_buckets"], m["bucket_cols"]
+    bucket_partitioned(df, nb, cols).write.mode(mode).bucketBy(nb, *cols).format(
+        "parquet"
+    ).saveAsTable(table)
 
 
-def _write_through_spec(df: DataFrame, table: str, bucket_cols: list[str], mode: str) -> None:
-    nb = _table_bucket_count(df.sparkSession, table)
-    bucket_partitioned(df, nb, bucket_cols).write.mode(mode).bucketBy(
-        nb, *bucket_cols
-    ).format("parquet").saveAsTable(table)
+def append(df: DataFrame, table: str) -> None:
+    """Append rows through the table's bucket spec, one file per bucket.
+    A caller whose rows are derived from ``table`` itself must freeze
+    them first (localCheckpoint): Spark invalidates cached plans over a
+    written table, and a lazy plan would re-read it."""
+    _write_through_spec(df, table, "append")
 
 
-def append(df: DataFrame, table: str, bucket_cols: list[str]) -> None:
-    """Append rows through the existing table's own bucket spec, one file
-    per bucket. A caller whose rows are derived from ``table`` itself
-    must freeze them first (localCheckpoint): Spark invalidates cached
-    plans over a written table, and a lazy plan would re-read it."""
-    _write_through_spec(df, table, bucket_cols, "append")
-
-
-def rewrite(df: DataFrame, table: str, bucket_cols: list[str]) -> None:
-    """Overwrite the table's rows through its own bucket spec, one file
-    per bucket. ``df`` must already be frozen if it reads ``table``."""
-    _write_through_spec(df, table, bucket_cols, "overwrite")
+def rewrite(df: DataFrame, table: str) -> None:
+    """Overwrite the table's rows through its bucket spec, one file per
+    bucket; the manifest, outside the data directory, survives. ``df``
+    must already be frozen if it reads ``table``."""
+    _write_through_spec(df, table, "overwrite")
 
 
 def create(df: DataFrame, table: str, bucket_cols: list[str], num_buckets: int) -> None:
-    """Write a store FRESH: drop its tombstones and watermarks (a stale
-    side table from a dead incarnation would hide the new rows, force
-    every fold through the presence-scan fallback, or screen out live
-    batches), then write ``df`` bucketed by ``bucket_cols`` into
-    ``num_buckets`` buckets — the one moment the bucket count is chosen."""
-    spark = df.sparkSession
-    for side in (_tombstone_table(table), _meta_table(table), _compacted_table(table)):
-        _drop_table_and_location(spark, side)
+    """Write a store FRESH: drop its tombstones (a stale side table from a
+    dead incarnation would hide the new rows), then write ``df`` bucketed
+    by ``bucket_cols`` into ``num_buckets`` buckets — the one moment the
+    bucket spec is chosen — under a fresh manifest."""
+    _drop_table_and_location(df.sparkSession, _tombstone_table(table))
     write_bucketed(df, table, bucket_cols, num_buckets)
 
 
@@ -212,105 +270,47 @@ def live(spark, table: str, rows: DataFrame | None = None) -> DataFrame:
     return rows.join(F.broadcast(dead.distinct()), dead.columns[0], "left_anti")
 
 
-def compact(spark, table: str, bucket_cols: list[str]) -> None:
+def compact(spark, table: str) -> None:
     """Physically remove tombstoned rows: freeze the live rows, rewrite
     them through the table's bucket spec, then drop the tombstones
     (rewrite-then-clear). Reads are identical before and after — the
     rewritten table IS the anti-joined view. No-op without tombstones."""
     if not spark.catalog.tableExists(_tombstone_table(table)):
         return
-    rewrite(live(spark, table).localCheckpoint(eager=True), table, bucket_cols)
+    rewrite(live(spark, table).localCheckpoint(eager=True), table)
     clear_tombstones(spark, table)
 
 
 # ---------------------------------------------------------------------------
-# batch-id stores: replay screen, watermarks, fold, compaction
+# batch-id stores: replay screen, fold, compaction
 # ---------------------------------------------------------------------------
 
-# sentinel for "the watermark was not read": None is a real value (empty
-# meta table), so absence needs its own marker
-_UNREAD = object()
 
-
-def _read_watermark(spark, side: str, col: str):
-    return spark.table(side).agg(F.max(col)).collect()[0][0]
-
-
-def _raise_watermark(spark, side: str, col: str, value: int, known=_UNREAD) -> None:
-    """Write ``greatest(old, value)`` into a one-row watermark table —
-    monotone, so an out-of-order fold never LOWERS it (every batch
-    between it and the true max would otherwise re-screen as new).
-    ``known`` is the old value if the caller already read it this fold."""
-    if spark.catalog.tableExists(side):
-        old = known if known is not _UNREAD else _read_watermark(spark, side, col)
-        new = max(int(value), int(old)) if old is not None else int(value)
-        # one-row data-only rewrite — INSERT OVERWRITE skips the
-        # drop/recreate catalog round-trip a saveAsTable overwrite pays
-        spark.sql(f"INSERT OVERWRITE {side} VALUES (CAST({new} AS BIGINT))")
-        return
-    # a stale managed LOCATION without a catalog entry fails saveAsTable
-    _drop_table_and_location(spark, side)
-    spark.createDataFrame([(int(value),)], f"{col} long").write.mode(
-        "overwrite"
-    ).saveAsTable(side)
-
-
-def _record_max_batch(spark, table: str, batch_id: int, known_max=_UNREAD) -> None:
-    """Raise the max-batch watermark AFTER the store append commits
-    (append-then-record). ``known_max`` comes from :func:`_fold_screen`
-    in the same fold and saves re-reading the watermark."""
-    _raise_watermark(spark, _meta_table(table), "max_batch_id", batch_id, known_max)
-
-
-def _recorded_max_batch(spark, table: str):
-    """The max batch id recorded for ``table`` (None when the side table
-    is empty), or ``_UNREAD`` when the store or its side table is absent:
-    a stale side table from a dropped incarnation must not swallow the
-    new store's seeding batch."""
-    meta = _meta_table(table)
-    if spark.catalog.tableExists(meta) and spark.catalog.tableExists(table):
-        return _read_watermark(spark, meta, "max_batch_id")
-    return _UNREAD
-
-
-def _fold_screen(spark, table: str, batch_id: int):
+def _fold_screen(spark, table: str, manifest: dict, batch_id: int) -> bool:
     """O(1) replay screen for the non-idempotent batch-id stores. In the
     steady state — Structured Streaming's strictly increasing batch ids —
-    a new batch satisfies ``batch_id > max folded id`` and the probe
-    never touches the store (one one-row side-table read). ``batch_id <=
-    max`` does NOT prove "already folded": the folds are also public
-    batch APIs, and a direct caller folding an out-of-order id (backfill)
-    would be silently dropped by a pure <=-screen. So a <=-max id falls
-    back to the exact-presence column scan, which only runs in that rare
-    case. Stores without the side table take the scan too;
-    :func:`_record_max_batch` creates it on the next fold.
+    a new batch satisfies ``batch_id > max_batch_id`` and the probe never
+    touches the store. ``batch_id <= max`` does NOT prove "already
+    folded": the folds are also public batch APIs, and a direct caller
+    folding an out-of-order id (backfill) would be silently dropped by a
+    pure <=-screen. So a <=-max id falls back to the exact-presence
+    column scan, which only runs in that rare case.
 
     A compacted store no longer carries per-batch presence rows, so ids
-    at or below the compaction watermark screen as folded unconditionally
-    — compaction SEALS the store against backfill below its watermark.
-
-    Returns ``(folded, known_max)`` — known_max is the max-batch
-    watermark read during this screen (None = empty meta table) or
-    ``_UNREAD`` when the meta table does not exist, for the caller to
-    pass on to :func:`_record_max_batch`."""
-    meta = _meta_table(table)
-    known = _UNREAD
-    if spark.catalog.tableExists(meta):
-        known = _read_watermark(spark, meta, "max_batch_id")
-        if known is not None and int(batch_id) > int(known):
-            return False, known
-    ct = _compacted_table(table)
-    if spark.catalog.tableExists(ct):
-        through = _read_watermark(spark, ct, "compacted_through")
-        if through is not None and int(batch_id) <= int(through):
-            return True, known
+    at or below ``compacted_through`` screen as folded unconditionally —
+    compaction SEALS the store against backfill below its watermark."""
+    mx, through = manifest["max_batch_id"], manifest["compacted_through"]
+    if mx is not None and int(batch_id) > mx:
+        return False
+    if through is not None and int(batch_id) <= through:
+        return True
     return (
         spark.table(table)
         .where(F.col("batch_id") == int(batch_id))
         .limit(1)
         .count()
         > 0
-    ), known
+    )
 
 
 def fold_batch(
@@ -323,31 +323,27 @@ def fold_batch(
     batch. Only table-absent creates — a transient read error propagates
     rather than resetting the store. Returns the maintained table."""
     spark = inc.sparkSession
-    if spark.catalog.tableExists(table):
-        folded, known_max = _fold_screen(spark, table, batch_id)
-        if not folded:
-            append(inc.localCheckpoint(eager=True), table, bucket_cols)
-            _record_max_batch(spark, table, batch_id, known_max)
-    else:
+    m = _manifest(spark, table)
+    if m is None:
         create(inc.localCheckpoint(eager=True), table, bucket_cols, num_buckets)
-        _record_max_batch(spark, table, batch_id)
+    elif _fold_screen(spark, table, m, batch_id):
+        return spark.table(table)
+    else:
+        append(inc.localCheckpoint(eager=True), table)
+    _record_max_batch(spark, table, batch_id)
     return spark.table(table)
 
 
-def compact_batches(spark, table: str, bucket_cols: list[str], collapse) -> None:
+def compact_batches(spark, table: str, collapse) -> None:
     """Collapse an append-only batch-id store to the rows of one batch:
     ``collapse(store_df)`` must return the table's columns minus
     ``batch_id`` with reads over it identical to reads over the store.
     The rows are stamped with the max folded batch id, frozen, and
-    rewritten after the compaction watermark (watermark-before-rewrite).
-    No-op on an empty store. Seals the store against backfill at or below
-    the watermark (see :func:`_fold_screen`)."""
-    meta = _meta_table(table)
-    mx = None
-    if spark.catalog.tableExists(meta):
-        mx = _read_watermark(spark, meta, "max_batch_id")
-    if mx is None:  # a store older than its side table
-        mx = _read_watermark(spark, table, "batch_id")
+    rewritten after ``compacted_through`` is published
+    (watermark-before-rewrite). No-op on a store with no folded batch.
+    Seals the store against backfill at or below the watermark (see
+    :func:`_fold_screen`)."""
+    mx = _store_manifest(spark, table)["max_batch_id"]
     if mx is None:
         return
     collapsed = (
@@ -357,8 +353,8 @@ def compact_batches(spark, table: str, bucket_cols: list[str], collapse) -> None
         # never reads the table it replaces
         .localCheckpoint(eager=True)
     )
-    _raise_watermark(spark, _compacted_table(table), "compacted_through", mx)
-    rewrite(collapsed, table, bucket_cols)
+    _raise_mark(spark, table, "compacted_through", mx)
+    rewrite(collapsed, table)
 
 
 # ---------------------------------------------------------------------------

@@ -791,7 +791,7 @@ def streaming_cluster_maintain(
         new_bands = nb.join(
             spark.table(band_table).select(id_col).distinct(), id_col, "left_anti"
         ).localCheckpoint(eager=True)
-        stores.append(new_bands, band_table, ["band", "band_key"])
+        stores.append(new_bands, band_table)
         if sink is not None:
             sink(resolved, batch_id)
 
@@ -883,8 +883,8 @@ def streaming_containment_maintain(
     (``containment_join`` is the all-pairs form; a screen's contract is
     batch-vs-lake).
 
-    Replay safety (r11, advisor finding): the max-batch side table is
-    written AFTER the append, so a crash between the two replays the
+    Replay safety (r11, advisor finding): the manifest's max batch id is
+    published AFTER the append, so a crash between the two replays the
     batch against its OWN just-appended grams — every originally-kept
     doc would self-match at containment 1.0 and the sink would receive
     keep=False for docs that ARE the store's keepers. Two guards close
@@ -932,15 +932,15 @@ def _containment_process_batch(
         containment_screen,
         write_containment_store,
     )
-    from sparsity_spark.stores import _UNREAD, _record_max_batch, _recorded_max_batch
+    from sparsity_spark.stores import _record_max_batch, max_batch
 
     grams_t = f"{table}__grams"
     spark = batch_df.sparkSession
-    known_max = _recorded_max_batch(spark, grams_t)
-    if known_max is not _UNREAD and known_max is not None and batch_id <= known_max:
+    mx = max_batch(spark, grams_t)
+    if mx is not None and batch_id <= mx:
         return
     if not spark.catalog.tableExists(grams_t):
-        # the fresh write also resets the __grams watermarks
+        # the fresh write also publishes a fresh __grams manifest
         write_containment_store(batch_df, table, id_col, text_col)
         decisions = batch_df.select(
             F.col(id_col).cast("long").alias(id_col),
@@ -982,7 +982,7 @@ def _containment_process_batch(
         )
         if keepers.limit(1).count() > 0:
             append_containment_store(keepers, table, id_col, text_col)
-    _record_max_batch(spark, grams_t, batch_id, known_max)
+    _record_max_batch(spark, grams_t, batch_id)
     if sink is not None:
         sink(decisions, batch_id)
 
@@ -1061,13 +1061,14 @@ def streaming_benchmark_maintain(
 
     Replay safety: benchmark appends are NOT idempotent (duplicate gram
     rows would double-count verify rows), so the loop runs the
-    count-store discipline — the max-batch side table is written AFTER
-    the append and batches at or below it are screened out; the crash
-    window between the two (batch appended, watermark not yet written)
-    replays one duplicate append, whose rows the READ side collapses
-    (``fuzzy_decontaminate_store`` dropDuplicates the id-bucketed gram
-    table and distincts band candidates — both bucket-local). Same
-    single-writer / checkpoint-married contract as merge_count_store.
+    count-store discipline — the manifest's max batch id is published
+    AFTER the append and batches at or below it are screened out; the
+    crash window between the two (batch appended, watermark not yet
+    published) replays one duplicate append, whose rows the READ side
+    collapses (``fuzzy_decontaminate_store`` dropDuplicates the
+    id-bucketed gram table and distincts band candidates — both
+    bucket-local). Same single-writer / checkpoint-married contract as
+    merge_count_store.
 
     ``sink(n_benchmarks_df, batch_id)`` observes the one-row running
     benchmark count per appended batch. Returns the started-ready
@@ -1097,23 +1098,23 @@ def _benchmark_process_batch(
         append_benchmark_store,
         write_benchmark_store,
     )
-    from sparsity_spark.stores import _UNREAD, _record_max_batch, _recorded_max_batch
+    from sparsity_spark.stores import _record_max_batch, max_batch
 
     spark = batch_df.sparkSession
     bands_t = f"{table}__bands"
-    known_max = _recorded_max_batch(spark, bands_t)
-    if known_max is not _UNREAD and known_max is not None and batch_id <= known_max:
+    mx = max_batch(spark, bands_t)
+    if mx is not None and batch_id <= mx:
         return
     if batch_df.limit(1).count() == 0:
         return
     if not spark.catalog.tableExists(bands_t):
-        # the fresh write also resets the __bands watermarks
+        # the fresh write also publishes a fresh __bands manifest
         write_benchmark_store(
             batch_df, table, id_col, text_col, k, num_buckets=num_buckets
         )
     else:
         append_benchmark_store(batch_df, table, id_col, text_col, k)
-    _record_max_batch(spark, bands_t, batch_id, known_max)
+    _record_max_batch(spark, bands_t, batch_id)
     if sink is not None:
         n = spark.table(f"{table}__grams").select("bench_id").distinct().count()
         sink(spark.createDataFrame([(int(n),)], "n_benchmarks long"), batch_id)

@@ -757,8 +757,7 @@ def test_containment_store_forget_lifecycle(spark):
         spark.createDataFrame([(3,)], "doc_id long"), t
     )
     assert hits() == set()
-    for s in (f"{t}__grams", f"{t}__post", f"{t}__df", f"{t}__tombstones",
-              f"{t}__grams__maxbatch"):
+    for s in (f"{t}__grams", f"{t}__post", f"{t}__df", f"{t}__tombstones"):
         spark.sql(f"DROP TABLE IF EXISTS {s}")
 
 

@@ -4,6 +4,7 @@ writers emit at most one file per bucket per write."""
 
 import os
 import re
+import uuid
 from collections import Counter
 
 import pytest
@@ -201,3 +202,127 @@ def test_band_store_writes_one_file_per_bucket(spark, sf_dir):
     assert max(after_compact.values()) == 1
     for s in (t, f"{t}__tombstones"):
         spark.sql(f"DROP TABLE IF EXISTS {s}")
+
+
+def _jobs_run_by(spark, fn) -> int:
+    """The Spark jobs ``fn()`` runs, counted by job group once the
+    listener bus has delivered every job event to the status store."""
+    sc = spark.sparkContext
+    group = f"job_count_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _count_fold(spark):
+    from sparsity_spark.operators.sketches import merge_count_store
+
+    df = spark.createDataFrame([(i, i % 3) for i in range(30)], "event_id long, k long")
+    return lambda t, b: merge_count_store(df.where(F.col("event_id") % 3 == b), t, "k", b)
+
+
+def _ohlc_fold(spark):
+    import datetime as dt
+
+    from sparsity_spark.operators.temporal import merge_ohlc_store
+
+    base = dt.datetime(2024, 1, 1)
+    df = spark.createDataFrame(
+        [(i, "ab"[i % 2], base + dt.timedelta(minutes=7 * i), float(i)) for i in range(30)],
+        "event_id long, event_type string, ts timestamp, value double",
+    )
+    return lambda t, b: merge_ohlc_store(df.where(F.col("event_id") % 3 == b), t, b)
+
+
+FOLDS = [_count_fold, _ohlc_fold]
+
+
+@pytest.mark.parametrize("family", FOLDS, ids=["count", "ohlc"])
+def test_fold_job_counts(spark, family):
+    """A new-batch fold runs four jobs (freeze the increment, bucketed
+    append) and a replay two (the presence scan); the replay screen and
+    the watermark publish read and write the manifest, not Spark."""
+    t = f"jobs{family.__name__}_t"
+    spark.sql(f"DROP TABLE IF EXISTS {t}")
+    fold = family(spark)
+    fold(t, 0)
+    fold(t, 1)
+    assert _jobs_run_by(spark, lambda: fold(t, 2)) == 4
+    assert _jobs_run_by(spark, lambda: fold(t, 1)) == 2
+    spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+# Each batch-id store below returns (deliver, tables, rows): fold batch b
+# into the store named t, the store's data tables, and the ids it holds
+# (batch b holds id b).
+
+
+def _count_store(spark, t):
+    from sparsity_spark.operators.sketches import merge_count_store
+
+    def deliver(b):
+        ev = spark.createDataFrame([(3 * b + j, b) for j in range(3)], "event_id long, k long")
+        merge_count_store(ev, t, "k", b)
+
+    return deliver, [t], lambda: sorted(r.key for r in spark.table(t).collect())
+
+
+def _batch_docs(spark, b):
+    text = " ".join(f"w{b}x{j}" for j in range(12))
+    return spark.createDataFrame([(b, text)], "doc_id long, text string")
+
+
+def _containment_loop(spark, t):
+    from sparsity_spark.streaming.ingest import _containment_process_batch
+
+    def deliver(b):
+        _containment_process_batch(
+            _batch_docs(spark, b), b, table=t, threshold=0.9, id_col="doc_id",
+            text_col="text", sink=None,
+        )
+
+    tables = [f"{t}__grams", f"{t}__post", f"{t}__df"]
+    return deliver, tables, lambda: sorted(r.id for r in spark.table(f"{t}__grams").collect())
+
+
+def _benchmark_loop(spark, t):
+    from sparsity_spark.streaming.ingest import _benchmark_process_batch
+
+    def deliver(b):
+        _benchmark_process_batch(
+            _batch_docs(spark, b), b, table=t, id_col="doc_id", text_col="text",
+            k=3, num_buckets=4, sink=None,
+        )
+
+    tables = [f"{t}__bands", f"{t}__grams"]
+    return deliver, tables, lambda: sorted(r.bench_id for r in spark.table(f"{t}__grams").collect())
+
+
+RESEEDED = [_count_store, _containment_loop, _benchmark_loop]
+
+
+@pytest.mark.parametrize("family", RESEEDED, ids=[f.__name__[1:] for f in RESEEDED])
+def test_dropped_store_reseeds(spark, family):
+    """DROP TABLE leaves the manifest file behind with max_batch_id 5; the
+    catalog, not that file, decides whether the store exists, so batch 0
+    seeds the new store instead of screening out as a replay."""
+    from sparsity_spark import stores
+
+    t = f"reseed{family.__name__}_t"
+    deliver, tables, rows = family(spark, t)
+    for tb in tables:
+        spark.sql(f"DROP TABLE IF EXISTS {tb}")
+    for b in range(6):
+        deliver(b)
+    for tb in tables:
+        spark.sql(f"DROP TABLE {tb}")
+    assert os.path.exists(stores._manifest_path(spark, tables[0]))
+    deliver(0)
+    fresh = rows()
+    for tb in tables:
+        spark.sql(f"DROP TABLE IF EXISTS {tb}")
+    assert fresh == [0]

@@ -1010,41 +1010,32 @@ def test_count_store_batch_parity_and_replay(spark):
     assert got == {0: 10, 1: 10, 2: 10, 3: 10}
 
 
-def test_count_store_replay_screen_is_o1_side_table(spark):
-    """r10 advisor fix: the replay screen reads a one-row max-batch-id
-    side table instead of rescanning the store's batch_id column, so its
+def test_count_store_replay_screen_is_o1(spark):
+    """r10 advisor fix: the replay screen reads the store manifest's max
+    batch id instead of rescanning the store's batch_id column, so its
     cost no longer grows with the number of batches ever folded. Pins:
-    the side table tracks the max folded id; any id <= max is screened
-    out (the single-writer monotone contract); a legacy store whose side
-    table is missing falls back to the column scan and heals itself on
-    the next fold."""
+    the manifest tracks the max folded id; any id <= max is screened out
+    (the single-writer monotone contract)."""
     from sparsity_spark.operators.sketches import count_store_topk, merge_count_store
+    from sparsity_spark.stores import max_batch
 
     df = spark.createDataFrame([(i, i % 2) for i in range(20)], "event_id long, k long")
     t = "count_store_meta_t"
     spark.sql(f"DROP TABLE IF EXISTS {t}")
-    spark.sql(f"DROP TABLE IF EXISTS {t}__maxbatch")
     for b in range(3):
         merge_count_store(df.where(F.col("event_id") % 3 == b), t, "k", b)
-    meta = spark.table(f"{t}__maxbatch").collect()
-    assert len(meta) == 1 and meta[0]["max_batch_id"] == 2
+    assert max_batch(spark, t) == 2
     before = spark.table(t).count()
     # replays of EVERY already-folded id are screened without touching data
     for b in range(3):
         merge_count_store(df.where(F.col("event_id") % 3 == b), t, "k", b)
     assert spark.table(t).count() == before
-    # legacy store: no side table -> column-scan fallback still screens,
-    # and the next genuinely-new fold recreates the side table
-    spark.sql(f"DROP TABLE IF EXISTS {t}__maxbatch")
-    merge_count_store(df.where(F.col("event_id") % 3 == 1), t, "k", 1)
-    assert spark.table(t).count() == before
     merge_count_store(df.limit(5), t, "k", 7)
-    assert spark.table(f"{t}__maxbatch").collect()[0]["max_batch_id"] == 7
+    assert max_batch(spark, t) == 7
     # totals stay exactly-once throughout
     got = {r["key"]: r["total"] for r in count_store_topk(spark, t, k=10).collect()}
     assert sum(got.values()) == 25  # 20 delivered once + 5 from batch 7
     spark.sql(f"DROP TABLE IF EXISTS {t}")
-    spark.sql(f"DROP TABLE IF EXISTS {t}__maxbatch")
 
 
 def test_streaming_topk_maintain_equals_exact_counts(spark, tmp_path):
@@ -1189,8 +1180,7 @@ def test_streaming_containment_maintain_screens_and_appends(spark, tmp_path):
     _time.sleep(1.2)
     spark.createDataFrame(b3, schema).coalesce(1).write.mode("append").parquet(src)
 
-    for t in ("contain_ml_t__grams", "contain_ml_t__post", "contain_ml_t__df",
-              "contain_ml_t__grams__maxbatch"):
+    for t in ("contain_ml_t__grams", "contain_ml_t__post", "contain_ml_t__df"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
     decisions = {}
 
@@ -1218,9 +1208,10 @@ def test_streaming_containment_maintain_screens_and_appends(spark, tmp_path):
     # store holds exactly the keepers
     kept = {r["id"] for r in spark.table("contain_ml_t__grams").select("id").collect()}
     assert kept == {1, 2, 11}
-    # replay screen: the side table pins the last folded batch id
-    mx = spark.table("contain_ml_t__grams__maxbatch").collect()[0]["max_batch_id"]
-    assert mx == 2
+    # replay screen: the manifest pins the last folded batch id
+    from sparsity_spark.stores import max_batch
+
+    assert max_batch(spark, "contain_ml_t__grams") == 2
 
 
 def test_count_store_out_of_order_backfill_folds(spark):
@@ -1231,16 +1222,16 @@ def test_count_store_out_of_order_backfill_folds(spark):
     every batch between the backfill id and the true max would re-fold
     as a duplicate)."""
     from sparsity_spark.operators.sketches import count_store_topk, merge_count_store
+    from sparsity_spark.stores import max_batch
 
     t = "count_store_backfill_t"
     spark.sql(f"DROP TABLE IF EXISTS {t}")
-    spark.sql(f"DROP TABLE IF EXISTS {t}__maxbatch")
     df = spark.createDataFrame(
         [(i, i % 2) for i in range(20)], "event_id long, k long"
     )
     merge_count_store(df.where(F.col("event_id") < 10), t, "k", 0)
     merge_count_store(df.where(F.col("event_id") >= 15), t, "k", 5)
-    assert spark.table(f"{t}__maxbatch").collect()[0]["max_batch_id"] == 5
+    assert max_batch(spark, t) == 5
     # out-of-order backfill: batch 2 arrives after batch 5 -> must fold
     merge_count_store(
         df.where((F.col("event_id") >= 10) & (F.col("event_id") < 15)), t, "k", 2
@@ -1248,7 +1239,7 @@ def test_count_store_out_of_order_backfill_folds(spark):
     got = {r["key"]: r["total"] for r in count_store_topk(spark, t, k=10).collect()}
     assert sum(got.values()) == 20  # every event counted exactly once
     # the watermark was NOT lowered by the smaller backfill id
-    assert spark.table(f"{t}__maxbatch").collect()[0]["max_batch_id"] == 5
+    assert max_batch(spark, t) == 5
     # replaying the backfill and an old in-range id both screen out
     before = spark.table(t).count()
     merge_count_store(
@@ -1258,9 +1249,8 @@ def test_count_store_out_of_order_backfill_folds(spark):
     assert spark.table(t).count() == before
     # a genuinely-new id above the max still folds through the O(1) path
     merge_count_store(df.limit(3), t, "k", 9)
-    assert spark.table(f"{t}__maxbatch").collect()[0]["max_batch_id"] == 9
+    assert max_batch(spark, t) == 9
     spark.sql(f"DROP TABLE IF EXISTS {t}")
-    spark.sql(f"DROP TABLE IF EXISTS {t}__maxbatch")
 
 
 def test_containment_loop_crash_replay_reproduces_decisions(spark):
@@ -1275,7 +1265,7 @@ def test_containment_loop_crash_replay_reproduces_decisions(spark):
     from sparsity_spark.streaming.ingest import _containment_process_batch
 
     for t in ("contain_replay_t__grams", "contain_replay_t__post",
-              "contain_replay_t__df", "contain_replay_t__grams__maxbatch"):
+              "contain_replay_t__df"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
     decisions = {}
 
@@ -1301,11 +1291,11 @@ def test_containment_loop_crash_replay_reproduces_decisions(spark):
     rows_before = spark.table("contain_replay_t__grams").count()
 
     # simulate the crash window: the keeper append committed but the
-    # max-batch write did not -> roll the watermark back and re-deliver
-    spark.sql(
-        "INSERT OVERWRITE contain_replay_t__grams__maxbatch"
-        " VALUES (CAST(0 AS BIGINT))"
-    )
+    # manifest publish did not -> roll the watermark back and re-deliver
+    from sparsity_spark import stores
+
+    manifest = stores._manifest(spark, "contain_replay_t__grams")
+    stores._publish(spark, "contain_replay_t__grams", {**manifest, "max_batch_id": 0})
     decisions.pop(1)
     _containment_process_batch(b1, 1, **kw)
     assert decisions[1] == first  # replay reproduces original decisions
@@ -1316,7 +1306,7 @@ def test_containment_loop_crash_replay_reproduces_decisions(spark):
     _containment_process_batch(b2, 2, **kw)
     assert decisions[2][20] == (1, False)
     for t in ("contain_replay_t__grams", "contain_replay_t__post",
-              "contain_replay_t__df", "contain_replay_t__grams__maxbatch"):
+              "contain_replay_t__df"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
@@ -1334,8 +1324,7 @@ def test_compact_count_store_reads_bit_identical_and_replay_safe(spark):
     )
 
     t = "count_store_compact_t"
-    for s in (t, f"{t}__maxbatch", f"{t}__compacted"):
-        spark.sql(f"DROP TABLE IF EXISTS {s}")
+    spark.sql(f"DROP TABLE IF EXISTS {t}")
     df = spark.createDataFrame(
         [(i, i % 3) for i in range(30)], "event_id long, k long"
     )
@@ -1358,8 +1347,7 @@ def test_compact_count_store_reads_bit_identical_and_replay_safe(spark):
     merge_count_store(df.limit(6), t, "k", 7)
     got = {r["key"]: r["total"] for r in count_store_topk(spark, t, k=10).collect()}
     assert sum(got.values()) == 36  # 30 once + 6 from batch 7
-    for s in (t, f"{t}__maxbatch", f"{t}__compacted"):
-        spark.sql(f"DROP TABLE IF EXISTS {s}")
+    spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_compact_ohlc_store_reads_bit_identical(spark):
@@ -1376,8 +1364,7 @@ def test_compact_ohlc_store_reads_bit_identical(spark):
     )
 
     t = "ohlc_compact_t"
-    for s in (t, f"{t}__maxbatch", f"{t}__compacted"):
-        spark.sql(f"DROP TABLE IF EXISTS {s}")
+    spark.sql(f"DROP TABLE IF EXISTS {t}")
     base = dt.datetime(2024, 1, 1, 10, 0, 0)
     rows = [
         (i, "a" if i % 2 == 0 else "b", base + dt.timedelta(minutes=7 * i), float(100 + ((i * 37) % 50)))
@@ -1402,8 +1389,7 @@ def test_compact_ohlc_store_reads_bit_identical(spark):
     rows_n = spark.table(t).count()
     merge_ohlc_store(df.where(F.col("event_id") % 3 == 0), t, 0)
     assert spark.table(t).count() == rows_n
-    for s in (t, f"{t}__maxbatch", f"{t}__compacted"):
-        spark.sql(f"DROP TABLE IF EXISTS {s}")
+    spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_compact_containment_store_screen_unchanged(spark):
@@ -1419,7 +1405,7 @@ def test_compact_containment_store_screen_unchanged(spark):
     )
 
     t = "contain_compact_t"
-    for s in (f"{t}__grams", f"{t}__post", f"{t}__df", f"{t}__grams__maxbatch"):
+    for s in (f"{t}__grams", f"{t}__post", f"{t}__df"):
         spark.sql(f"DROP TABLE IF EXISTS {s}")
     schema = "doc_id long, text string"
     seed = spark.createDataFrame(
@@ -1454,7 +1440,7 @@ def test_compact_containment_store_screen_unchanged(spark):
         spark.createDataFrame([(4, "alpha beta gamma omega psi chi")], schema), t
     )
     assert spark.table(f"{t}__df").count() > n_grams
-    for s in (f"{t}__grams", f"{t}__post", f"{t}__df", f"{t}__grams__maxbatch"):
+    for s in (f"{t}__grams", f"{t}__post", f"{t}__df"):
         spark.sql(f"DROP TABLE IF EXISTS {s}")
 
 
@@ -1597,7 +1583,7 @@ def test_streaming_benchmark_maintain_appends_and_replays(spark, tmp_path):
     spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(src)
 
     t = "bmk_stream_t"
-    for side in ("__bands", "__grams", "__tombstones", "__bands__maxbatch"):
+    for side in ("__bands", "__grams", "__tombstones"):
         spark.sql(f"DROP TABLE IF EXISTS {t}{side}")
     counts = {}
 
