@@ -225,9 +225,25 @@ class SparseFrame:
         """
         if idx is not None:
             vals = list(idx)
-            n = self.index.count()
+            pos_join = self.has_pos and self.cells_have_pos
+            if pos_join:
+                n = self.index.count()
+            else:
+                # without a position column the cells join on key labels
+                # alone — duplicate labels would fan every cell out to every
+                # new index value assigned to that label, silently diverging
+                # from the reference's strict row-i-gets-idx[i] assignment
+                # (ADVICE r3). Detect and fail loudly below.
+                n, n_distinct = self._label_counts(self.index)
             if len(vals) != n:
                 raise AssertionError(f"len(idx)={len(vals)} != nrows={n}")
+            if not pos_join and n_distinct != n:
+                raise ValueError(
+                    f"set_index(idx=) on a frame without row positions "
+                    f"requires unique index labels ({n - n_distinct} "
+                    f"duplicates found) — call drop_duplicate_idx() "
+                    f"first, or build the frame with position tracking"
+                )
             spark = self._cells.sparkSession
             # temp name avoids collision with an existing key named "idx"
             new_map = spark.createDataFrame(
@@ -237,21 +253,6 @@ class SparseFrame:
             w = Window.orderBy(*[F.col(c) for c in order_cols])
             old = self.index.withColumn("__ord__", F.row_number().over(w) - 1)
             keyed = old.join(F.broadcast(new_map), on="__ord__").drop("__ord__")
-            pos_join = self.has_pos and self.cells_have_pos
-            if not pos_join:
-                # without a position column the cells join on key labels
-                # alone — duplicate labels would fan every cell out to every
-                # new index value assigned to that label, silently diverging
-                # from the reference's strict row-i-gets-idx[i] assignment
-                # (ADVICE r3). Detect and fail loudly instead.
-                n_distinct = self.index.select(*self.key_cols).distinct().count()
-                if n_distinct != n:
-                    raise ValueError(
-                        f"set_index(idx=) on a frame without row positions "
-                        f"requires unique index labels ({n - n_distinct} "
-                        f"duplicates found) — call drop_duplicate_idx() "
-                        f"first, or build the frame with position tracking"
-                    )
             join_on = self.key_cols + ([POS] if pos_join else [])
             pos_cols = [POS] if pos_join else []
             cells = (
@@ -270,8 +271,7 @@ class SparseFrame:
             # new keys through the join below — same hazard the idx= path
             # guards; merged cells make the per-label key value unique,
             # then distinct labels are still required
-            n = self.index.count()
-            n_distinct = self.index.select(*self.key_cols).distinct().count()
+            n, n_distinct = self._label_counts(self.index)
             if n != n_distinct:
                 raise ValueError(
                     f"set_index(column=) requires unique index labels "
@@ -314,6 +314,21 @@ class SparseFrame:
             idx = self._index.select(*keep)
         return SparseFrame(cells, keys, self.columns, idx)
 
+    def _label_counts(self, index: DataFrame) -> tuple[int, int]:
+        """(rows, distinct labels) of ``index`` from ONE aggregate: one
+        group per label, then the groups' row sum and count. NULL labels
+        form one group, so they count once, as under ``distinct()``."""
+        row = (
+            index.groupBy(*self.key_cols)
+            .agg(F.count("*").alias("__rows__"))
+            .agg(
+                F.coalesce(F.sum("__rows__"), F.lit(0)).alias("n"),
+                F.count("*").alias("n_distinct"),
+            )
+            .collect()[0]
+        )
+        return row["n"], row["n_distinct"]
+
     def dropna(self) -> "SparseFrame":
         """Drop rows whose row *label* is NULL (reference sparse_frame.py:469-474
         drops NaN index labels; cell values have no NULL semantics)."""
@@ -333,8 +348,7 @@ class SparseFrame:
                 # would keep every duplicate's cells under the single kept
                 # index row, i.e. silently SUM them instead of keeping the
                 # first row's values. Allowed only when no duplicates exist.
-                n = self._index.count()
-                n_distinct = self._index.select(*self.key_cols).distinct().count()
+                n, n_distinct = self._label_counts(self._index)
                 if n != n_distinct:
                     raise ValueError(
                         "drop_duplicate_idx: this frame's index is ordered but "
@@ -592,20 +606,19 @@ class SparseFrame:
             raise ValueError(f"key mismatch: {self.key_cols} vs {other.key_cols}")
         ks = self.key_cols
         left, right = self._bare_cells(), other._bare_cells().select(*ks, COL, VAL)
-        lk, rk = self.index.select(*ks).distinct(), other.index.select(*ks).distinct()
+        lk, rk = self.index.select(*ks), other.index.select(*ks)
         if how == "outer":
             cells = left.unionByName(right)
             idx = lk.unionByName(rk).distinct()
         elif how == "inner":
-            keys = lk.join(rk, on=ks, how="inner")
-            cells = left.unionByName(right).join(keys, on=ks, how="leftsemi")
-            idx = keys
+            idx = lk.distinct().join(rk.distinct(), on=ks, how="inner")
+            cells = left.unionByName(right).join(idx, on=ks, how="leftsemi")
         elif how == "left":
-            cells = left.unionByName(right.join(lk, on=ks, how="leftsemi"))
-            idx = lk
+            idx = lk.distinct()
+            cells = left.unionByName(right.join(idx, on=ks, how="leftsemi"))
         elif how == "right":
-            cells = left.join(rk, on=ks, how="leftsemi").unionByName(right)
-            idx = rk
+            idx = rk.distinct()
+            cells = left.join(idx, on=ks, how="leftsemi").unionByName(right)
         else:
             raise ValueError(f"how={how!r}")
         dup = [c for c in other.columns if c in self.columns]
@@ -765,18 +778,18 @@ class SparseFrame:
             raise ValueError("add requires identical column sets (reference asserts this)")
         ks = self.key_cols
         left, right = self._bare_cells(), other._bare_cells().select(*ks, COL, VAL)
-        lk, rk = self.index.select(*ks).distinct(), other.index.select(*ks).distinct()
+        lk, rk = self.index.select(*ks), other.index.select(*ks)
         unioned = left.unionByName(right)
         if how == "outer":
             idx = lk.unionByName(rk).distinct()
         elif how == "inner":
-            idx = lk.join(rk, on=ks, how="inner")
+            idx = lk.distinct().join(rk.distinct(), on=ks, how="inner")
             unioned = unioned.join(idx, on=ks, how="leftsemi")
         elif how == "left":
-            idx = lk
+            idx = lk.distinct()
             unioned = unioned.join(idx, on=ks, how="leftsemi")
         elif how == "right":
-            idx = rk
+            idx = rk.distinct()
             unioned = unioned.join(idx, on=ks, how="leftsemi")
         else:
             raise ValueError(f"how={how!r}")
@@ -904,10 +917,38 @@ class SparseFrame:
             F.lit(len(self.columns)).alias("size"),
         )
 
-    def _dims(self) -> tuple[int, int]:
-        n = self.index.count()
-        k = len(self.columns)
-        return n, k
+    def _with_row_markers(self, cells: DataFrame) -> DataFrame:
+        """``cells`` plus one marker row per index row, whose ``__n__`` is
+        1 and every other column NULL: value aggregates skip the markers
+        and ``count("__n__")`` is the row count N, so ONE aggregate over
+        this union reads the stored values and N together."""
+        markers = self.index.select(F.lit(1).alias("__n__"))
+        return cells.unionByName(markers, allowMissingColumns=True)
+
+    def _agg_with_nrows(
+        self, cells: DataFrame, *aggs, by: str | None = None
+    ) -> tuple[list, int]:
+        """Collect ``aggs`` over ``cells`` (per ``by`` group, else one
+        global row) and the row count N in ONE query. Grouped by column,
+        the markers form the NULL-column group, which :meth:`_per_column`
+        drops. Returns (rows, N)."""
+        rows = (
+            self._with_row_markers(cells)
+            .groupBy(*([by] if by else []))
+            .agg(*aggs, F.count("__n__").alias("__n__"))
+            .collect()
+        )
+        return rows, sum(r["__n__"] for r in rows)
+
+    def _per_column(self, rows: list, field: str) -> pd.Series:
+        """``field`` of collected per-column ``(col, field)`` rows as a
+        Series over every frame column, 0.0 where no cell is stored."""
+        return pd.Series(
+            [r[field] for r in rows],
+            index=pd.Index([r[COL] for r in rows], name=COL),
+            name="s",
+            dtype="float64",
+        ).reindex(self.columns, fill_value=0.0)
 
     def sum(self, axis: int | None = None):
         """Matrix sum (reference sparse_frame.py:143-144, scipy semantics).
@@ -918,10 +959,9 @@ class SparseFrame:
             row = self._cells.agg(F.coalesce(F.sum(VAL), F.lit(0.0)).alias("s")).collect()[0]
             return row["s"]
         if axis == 0:
-            pdf = (
-                self._cells.groupBy(COL).agg(F.sum(VAL).alias("s")).toPandas().set_index(COL)["s"]
+            return self._per_column(
+                self._cells.groupBy(COL).agg(F.sum(VAL).alias("s")).collect(), "s"
             )
-            return pdf.reindex(self.columns, fill_value=0.0)
         # per-PHYSICAL-row sums: group by position when known so duplicate
         # labels stay distinct rows (scipy semantics); left join from the
         # index so all-zero rows appear with 0.0
@@ -952,13 +992,19 @@ class SparseFrame:
     def mean(self, axis: int | None = None):
         """Matrix mean with the **dense denominator** N·K — explicit zeros
         count, matching scipy (reference sparse_frame.py:146-147).  NOT the
-        nnz-mean a naive ``avg(value)`` over long rows would give."""
-        n, k = self._dims()
+        nnz-mean a naive ``avg(value)`` over long rows would give.
+
+        axis=None and axis=0 read their sums and N from one aggregate
+        (:meth:`_agg_with_nrows`); axis=1 divides the row sums by K and
+        needs no N."""
+        total = F.coalesce(F.sum(VAL), F.lit(0.0)).alias("s")
         if axis is None:
-            return self.sum(None) / float(n * k)
+            (row,), n = self._agg_with_nrows(self._cells, total)
+            return row["s"] / float(n * len(self.columns))
         if axis == 0:
-            return self.sum(0) / float(n)
-        return self.sum(1) / float(k)
+            rows, n = self._agg_with_nrows(self._cells, total, by=COL)
+            return self._per_column(rows, "s") / float(n)
+        return self.sum(1) / float(len(self.columns))
 
     def _merged_bare_cells(self) -> DataFrame:
         """Stored cells with coexisting duplicate (key, col) entries SUMMED
@@ -975,66 +1021,60 @@ class SparseFrame:
 
     def std(self, axis: int | None = None):
         """Dense-denominator standard deviation (reference sparse_frame.py:149-150):
-        sqrt(E[x²] − E[x]²) over all N·K cells including implicit zeros."""
+        sqrt(E[x²] − E[x]²) over all N·K cells including implicit zeros.
+        The sums, the sums of squares and N come from one aggregate over
+        the merged cells (:meth:`_agg_with_nrows`)."""
         import math
 
-        n, k = self._dims()
         merged = self._merged_bare_cells()
-        sq = merged.withColumn(VAL, F.col(VAL) * F.col(VAL))
+        sums = [
+            F.coalesce(F.sum(VAL), F.lit(0.0)).alias("s"),
+            F.coalesce(F.sum(F.col(VAL) * F.col(VAL)), F.lit(0.0)).alias("s2"),
+        ]
         if axis is None:
-            ex2 = (
-                sq.agg(F.coalesce(F.sum(VAL), F.lit(0.0)).alias("s"))
-                .collect()[0]["s"]
-                / float(n * k)
-            )
-            ex = self.sum(None) / float(n * k)
+            (row,), n = self._agg_with_nrows(merged, *sums)
+            nk = float(n * len(self.columns))
+            ex, ex2 = row["s"] / nk, row["s2"] / nk
             return math.sqrt(ex2 - ex * ex)
         if axis == 0:
-            s2 = (
-                sq.groupBy(COL).agg(F.sum(VAL).alias("s")).toPandas().set_index(COL)["s"]
-            ).reindex(self.columns, fill_value=0.0)
-            m = self.mean(0)
-            return ((s2 / float(n)) - m * m).pow(0.5)
+            rows, n = self._agg_with_nrows(merged, *sums, by=COL)
+            m = self._per_column(rows, "s") / float(n)
+            return ((self._per_column(rows, "s2") / float(n)) - m * m).pow(0.5)
         raise NotImplementedError("std(axis=1) not in reference surface")
 
     def max(self):
-        """Matrix max — implicit zeros participate (reference sparse_frame.py:152-153)."""
-        n, k = self._dims()
-        row = self._merged_bare_cells().agg(
-            F.max(VAL).alias("m"), F.count(F.when(F.col(VAL) != 0.0, 1)).alias("nz")
-        ).collect()[0]
-        stored = float("-inf") if row["m"] is None else row["m"]
-        if row["nz"] < n * k:
-            return max(stored, 0.0)
-        return stored
+        """Matrix max — implicit zeros participate (reference
+        sparse_frame.py:152-153). Collects :meth:`minmax_df`; -inf when
+        the frame has no cells and no implicit zeros."""
+        m = self.minmax_df().collect()[0]["max_value"]
+        return float("-inf") if m is None else m
 
     def min(self):
-        """Matrix min — implicit zeros participate (reference sparse_frame.py:155-156)."""
-        n, k = self._dims()
-        row = self._merged_bare_cells().agg(
-            F.min(VAL).alias("m"), F.count(F.when(F.col(VAL) != 0.0, 1)).alias("nz")
-        ).collect()[0]
-        stored = float("inf") if row["m"] is None else row["m"]
-        if row["nz"] < n * k:
-            return min(stored, 0.0)
-        return stored
+        """Matrix min — implicit zeros participate (reference
+        sparse_frame.py:155-156). Collects :meth:`minmax_df`; inf when
+        the frame has no cells and no implicit zeros."""
+        m = self.minmax_df().collect()[0]["min_value"]
+        return float("inf") if m is None else m
 
     def minmax_df(self) -> DataFrame:
         """max/min as ONE lazy plan (no driver round-trips): implicit zeros
         participate exactly when the frame is not completely dense
-        (reference sparse_frame.py:152-156's semantics, relational form)."""
+        (reference sparse_frame.py:152-156's semantics, relational form).
+        The extrema, the nonzero count and N come from one aggregate over
+        the merged cells (:meth:`_with_row_markers`)."""
         k = len(self.columns)
-        stats = self._merged_bare_cells().agg(
+        stats = self._with_row_markers(self._merged_bare_cells()).agg(
             F.max(VAL).alias("mx"),
             F.min(VAL).alias("mn"),
             F.count(F.when(F.col(VAL) != 0.0, 1)).alias("nnz"),
+            F.count("__n__").alias("n"),
         )
-        nrows = self.index.agg(F.count("*").alias("n"))
-        return stats.crossJoin(nrows).select(
-            F.when(F.col("nnz") < F.col("n") * k, F.greatest(F.col("mx"), F.lit(0.0)))
+        sparse = F.col("nnz") < F.col("n") * k
+        return stats.select(
+            F.when(sparse, F.greatest(F.col("mx"), F.lit(0.0)))
             .otherwise(F.col("mx"))
             .alias("max_value"),
-            F.when(F.col("nnz") < F.col("n") * k, F.least(F.col("mn"), F.lit(0.0)))
+            F.when(sparse, F.least(F.col("mn"), F.lit(0.0)))
             .otherwise(F.col("mn"))
             .alias("min_value"),
         )

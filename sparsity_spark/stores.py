@@ -252,11 +252,13 @@ def forget(ids: DataFrame, table: str) -> None:
     out of every later read. Idempotent — duplicate tombstones change
     nothing under the anti-join. The first forget clears a stale
     location left by a dead incarnation, on which the append-create would
-    fail."""
+    fail. A caller whose ids are derived from ``table``'s tombstones
+    (e.g. through :func:`live`) must freeze them first, as for
+    :func:`append`."""
     spark = ids.sparkSession
     if not spark.catalog.tableExists(_tombstone_table(table)):
         clear_tombstones(spark, table)
-    _append_tombstones(ids.distinct().localCheckpoint(eager=True), table)
+    _append_tombstones(ids.distinct(), table)
 
 
 def live(spark, table: str, rows: DataFrame | None = None) -> DataFrame:
@@ -321,15 +323,17 @@ def fold_batch(
     :func:`_fold_screen`, else append and record the id
     (append-then-record); a missing store is created fresh from the
     batch. Only table-absent creates — a transient read error propagates
-    rather than resetting the store. Returns the maintained table."""
+    rather than resetting the store. Returns the maintained table.
+    A caller whose rows are derived from ``table`` itself must freeze
+    them first (localCheckpoint), as for :func:`append`."""
     spark = inc.sparkSession
     m = _manifest(spark, table)
     if m is None:
-        create(inc.localCheckpoint(eager=True), table, bucket_cols, num_buckets)
+        create(inc, table, bucket_cols, num_buckets)
     elif _fold_screen(spark, table, m, batch_id):
         return spark.table(table)
     else:
-        append(inc.localCheckpoint(eager=True), table)
+        append(inc, table)
     _record_max_batch(spark, table, batch_id)
     return spark.table(table)
 

@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import numpy as np
 import pandas as pd
@@ -17,6 +18,20 @@ def spark():
     spark = get_spark("sparsity_spark_tests")
     yield spark
     spark.stop()
+
+
+def jobs_run_by(spark, fn) -> int:
+    """The Spark jobs ``fn()`` runs, counted by job group once the
+    listener bus has delivered every job event to the status store."""
+    sc = spark.sparkContext
+    group = f"job_count_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

@@ -597,13 +597,14 @@ def test_triangle_count_never_cartesian(spark):
 
 def test_events_coo_scaled_no_event_sized_single_partition_window(spark, sf_dir):
     """r9 (VERDICT r8 #6): the scaled COO row must number events through
-    the bucketed parallel path — the ONLY SinglePartition exchange in its
-    plan is the lexicon-sized dictionary window's, and a per-bucket
-    Window (partitioned, parallel) does the event-sized numbering. The
-    parity row (s5_events_coo) by contrast carries the event-sized global
-    window — pinned here so the two rows never silently converge."""
+    the bucketed parallel path — its plan has NO SinglePartition
+    exchange (the dictionary is a driver-collected, broadcast local
+    relation), and a per-bucket Window (partitioned, parallel) does the
+    event-sized numbering. The parity row (s5_events_coo) by contrast
+    carries the event-sized global window — pinned here so the two rows
+    never silently converge."""
     plan = formatted_plan(QUERIES["s5_events_coo_scaled"](spark, sf_dir))
-    assert plan.count("SinglePartition") <= 1, plan
+    assert plan.count("SinglePartition") == 0, plan
     assert "__bkt__" in plan  # the bucketed numbering actually engaged
     assert re.findall(r"\(\d+\) Window", plan)  # per-bucket row_number window
 

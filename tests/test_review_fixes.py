@@ -353,9 +353,9 @@ def test_append_hash_store_no_intra_batch_keeps_ledger_unique(spark, tmp_path):
 
 
 def test_read_events_cardinality_probe_fires_before_window(spark):
-    """read_events must run field_dictionary's pre-window probe so a
-    high-cardinality field fails BEFORE the one-task dictionary window
-    (r5 ADVICE)."""
+    """A high-cardinality field must fail in read_events' bounded
+    dictionary collect (at most max_values + 1 rows reach the driver),
+    before any cell is built (r5 ADVICE)."""
     from sparsity_spark.events import read_events
 
     ev = spark.range(0, 500).select(

@@ -4,13 +4,13 @@ writers emit at most one file per bucket per write."""
 
 import os
 import re
-import uuid
 from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
 from sparsity_spark.data import load_table
+from tests.conftest import jobs_run_by
 
 DOCS = [
     (1, "alpha beta gamma delta epsilon zeta eta theta"),
@@ -204,20 +204,6 @@ def test_band_store_writes_one_file_per_bucket(spark, sf_dir):
         spark.sql(f"DROP TABLE IF EXISTS {s}")
 
 
-def _jobs_run_by(spark, fn) -> int:
-    """The Spark jobs ``fn()`` runs, counted by job group once the
-    listener bus has delivered every job event to the status store."""
-    sc = spark.sparkContext
-    group = f"job_count_{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _count_fold(spark):
     from sparsity_spark.operators.sketches import merge_count_store
 
@@ -243,16 +229,17 @@ FOLDS = [_count_fold, _ohlc_fold]
 
 @pytest.mark.parametrize("family", FOLDS, ids=["count", "ohlc"])
 def test_fold_job_counts(spark, family):
-    """A new-batch fold runs four jobs (freeze the increment, bucketed
-    append) and a replay two (the presence scan); the replay screen and
-    the watermark publish read and write the manifest, not Spark."""
+    """A new-batch fold runs three jobs (the bucketed append of the
+    unfrozen increment) and a replay two (the presence scan); the replay
+    screen and the watermark publish read and write the manifest, not
+    Spark."""
     t = f"jobs{family.__name__}_t"
     spark.sql(f"DROP TABLE IF EXISTS {t}")
     fold = family(spark)
     fold(t, 0)
     fold(t, 1)
-    assert _jobs_run_by(spark, lambda: fold(t, 2)) == 4
-    assert _jobs_run_by(spark, lambda: fold(t, 1)) == 2
+    assert jobs_run_by(spark, lambda: fold(t, 2)) == 3
+    assert jobs_run_by(spark, lambda: fold(t, 1)) == 2
     spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
