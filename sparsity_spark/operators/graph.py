@@ -581,7 +581,6 @@ def _lpa_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
 def label_propagation(
     edges: DataFrame,
     iterations: int = 3,
-    checkpoint_every: int = 0,
     assume_distinct: bool = False,
 ) -> DataFrame:
     """Community detection by synchronous label propagation (LPA,
@@ -616,9 +615,7 @@ def label_propagation(
     labels were never persisted — re-EXECUTED the doubled tree: 3
     iterations ran the round body 2³−1 = 7 times instead of 3 (measured
     8.8 s → 4.3 s at sf0.1 on the co-purchase graph). A node-sized
-    checkpoint per round is the Pregel discipline; ``checkpoint_every``
-    is kept for API compatibility but the per-round truncation already
-    bounds lineage at one round."""
+    checkpoint per round is the Pregel discipline."""
     if iterations < 1:
         raise ValueError("label_propagation: iterations must be >= 1")
     # votes are multiset counts, so edge MULTIPLICITY changes results:
@@ -650,7 +647,6 @@ def k_core(
     k: int = 2,
     peels: int = 8,
     until_converged: bool = False,
-    checkpoint_every: int = 1,
     assume_distinct: bool = False,
 ) -> DataFrame:
     """k-core decomposition by iterative peeling (r9): repeatedly drop
@@ -660,14 +656,11 @@ def k_core(
     boilerplate mirror farms live in dense cores; tendrils and one-off
     links peel away. Input is an undirected (symmetric, distinct) edge
     table; returns (node, deg) — each survivor with its WITHIN-CORE
-    degree. ``checkpoint_every`` must be ≥ 1: each round references the
+    degree. Every peel is localCheckpointed: each round references the
     previous round's edge set three times (degree agg + two semi-joins),
-    so the logical plan grows ~3× per un-checkpointed round — bounded at
-    3^checkpoint_every between localCheckpoints, unbounded without them.
-    The default is every round (r11 — the un-persisted rounds between
-    checkpoints were not just planned but re-EXECUTED ~3× per extra
-    round; at the old default of 4 the first checkpoint ran the peel
-    body ~40 times for 4 rounds of work. One edge-sized checkpoint per
+    so an un-checkpointed round grows the logical plan ~3× and is
+    re-EXECUTED ~3× (r11 — checkpointing every 4th round ran the peel
+    body ~40 times for 4 rounds of work; one edge-sized checkpoint per
     peel is strictly cheaper from the second round on).
 
     Determinism/oracle seam: a FIXED ``peels`` count replays exactly in
@@ -676,15 +669,10 @@ def k_core(
     keeps peeling past ``peels`` until the node count is stable (one
     metadata-sized count action per extra round), for graphs whose peel
     depth exceeds the fixed count. Peeling is monotone — each round's
-    subgraph shrinks — so lineage is bounded with periodic
-    localCheckpoints and per-round work is edge-linear."""
+    subgraph shrinks — so lineage stays one peel deep and per-round
+    work is edge-linear."""
     if k < 1:
         raise ValueError("k_core: k must be >= 1")
-    if checkpoint_every < 1:
-        raise ValueError(
-            "k_core: checkpoint_every must be >= 1 (plan size grows ~3x "
-            "per un-checkpointed peel round)"
-        )
     cur = _undirected(edges, assume_distinct)
     prev_nodes = None
     rounds = 0
@@ -697,11 +685,10 @@ def k_core(
             .select("src", "dst")
         )
         rounds += 1
-        if checkpoint_every and rounds % checkpoint_every == 0:
-            # LAZY (r12): materialized by the next action that reaches it
-            # (the final aggregate, or the until_converged count) — the
-            # three per-round references still read ONE persisted copy
-            cur = cur.localCheckpoint(eager=False)
+        # LAZY (r12): materialized by the next action that reaches it
+        # (the final aggregate, or the until_converged count) — the
+        # three per-round references still read ONE persisted copy
+        cur = cur.localCheckpoint(eager=False)
         if rounds >= peels:
             if not until_converged:
                 break

@@ -293,6 +293,13 @@ def image_to_rgb(img):
     return img[:, :, :3]
 
 
+def _decode_image(payload: bytes):
+    """PPM or PNG payload → (H, W, 3) RGB; ValueError for anything else."""
+    if payload[:2] == b"P6":
+        return image_to_rgb(decode_ppm(payload))
+    return image_to_rgb(decode_png(payload))
+
+
 def decode_stub(payload: bytes, media_type: str):
     """The codec seam: binary PPM (P6) and PNG images, 16-bit PCM WAV
     audio, and YUV4MPEG2 video decode for REAL via :func:`decode_ppm` /
@@ -314,714 +321,6 @@ def decode_stub(payload: bytes, media_type: str):
     raise NotImplementedError(
         f"no codec available for {media_type}; install a decoder or pass fake=True"
     )
-
-
-# One inline copy of the real decoders for kernel closures, exec'd with
-# numpy bound as `np` — kernels must be self-contained (executors may not
-# have this module importable), and a single shared source string keeps
-# the inline parsers from drifting apart across kernels. decode_ppm /
-# decode_wav remain the reference implementations; parity is pinned by
-# kernel-vs-decoder tests (tests/test_operators.py).
-_INLINE_CODEC_SRC = '''
-def parse_p6(payload):
-    if not payload.startswith(b"P6"):
-        raise ValueError("not P6")
-    pos, tokens = 2, []
-    while len(tokens) < 3:
-        while pos < len(payload) and payload[pos : pos + 1].isspace():
-            pos += 1
-        if payload[pos : pos + 1] == b"#":
-            while pos < len(payload) and payload[pos] != 0x0A:
-                pos += 1
-            continue
-        start = pos
-        while pos < len(payload) and not payload[pos : pos + 1].isspace():
-            pos += 1
-        tokens.append(payload[start:pos])
-    pos += 1
-    w, h, maxval = int(tokens[0]), int(tokens[1]), int(tokens[2])
-    if maxval > 255:
-        raise ValueError("16-bit PPM not supported")
-    pix = np.frombuffer(payload, dtype=np.uint8, count=w * h * 3, offset=pos)
-    return pix.reshape(h, w, 3)
-
-
-IMA_STEP_TABLE = [
-    7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37,
-    41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143, 157, 173,
-    190, 209, 230, 253, 279, 307, 337, 371, 408, 449, 494, 544, 598, 658,
-    724, 796, 876, 963, 1060, 1166, 1282, 1411, 1552, 1707, 1878, 2066,
-    2272, 2499, 2749, 3024, 3327, 3660, 4026, 4428, 4871, 5358, 5894,
-    6484, 7132, 7845, 8630, 9493, 10442, 11487, 12635, 13899, 15289,
-    16818, 18500, 20350, 22385, 24623, 27086, 29794, 32767,
-]
-IMA_INDEX_ADJ = [-1, -1, -1, -1, 2, 4, 6, 8]
-
-
-def adpcm_decode_block(body):
-    pred = int.from_bytes(body[0:2], "little", signed=True)
-    idx = body[2]
-    if idx > 88:
-        raise ValueError("step index out of range")
-    out = [pred]
-    for byte in body[4:]:
-        for nib in (byte & 0xF, byte >> 4):
-            step = IMA_STEP_TABLE[idx]
-            code = nib & 7
-            diffq = (
-                (step >> 3)
-                + (code & 1) * (step >> 2)
-                + ((code >> 1) & 1) * (step >> 1)
-                + ((code >> 2) & 1) * step
-            )
-            pred = pred - diffq if nib & 8 else pred + diffq
-            pred = max(-32768, min(32767, pred))
-            idx = max(0, min(88, idx + IMA_INDEX_ADJ[code]))
-            out.append(pred)
-    return out
-
-
-def encode_adpcm_wav(samples, rate=16000, block_align=256):
-    s = np.asarray(samples, dtype=np.int64).reshape(-1)
-    n = len(s)
-    if n == 0 or block_align < 5:
-        raise ValueError("bad adpcm encode input")
-    spb = (block_align - 4) * 2 + 1
-    blocks, idx, i = [], 0, 0
-    while i < n:
-        chunk = s[i : i + spb]
-        pred = int(chunk[0])
-        hdr = (pred & 0xFFFF).to_bytes(2, "little") + bytes([idx, 0])
-        nibbles = []
-        for x in chunk[1:]:
-            step = IMA_STEP_TABLE[idx]
-            d = int(x) - pred
-            sgn = 8 if d < 0 else 0
-            m = -d if d < 0 else d
-            code = 0
-            if m >= step:
-                code |= 4
-                m -= step
-            if m >= step >> 1:
-                code |= 2
-                m -= step >> 1
-            if m >= step >> 2:
-                code |= 1
-            diffq = (
-                (step >> 3)
-                + (code & 1) * (step >> 2)
-                + ((code >> 1) & 1) * (step >> 1)
-                + ((code >> 2) & 1) * step
-            )
-            pred = pred - diffq if sgn else pred + diffq
-            pred = max(-32768, min(32767, pred))
-            idx = max(0, min(88, idx + IMA_INDEX_ADJ[code]))
-            nibbles.append(code | sgn)
-        packed = bytearray()
-        for j in range(0, len(nibbles), 2):
-            lo = nibbles[j]
-            hi = nibbles[j + 1] if j + 1 < len(nibbles) else 0
-            packed.append(lo | (hi << 4))
-        blocks.append(hdr + bytes(packed))
-        i += spb
-    data = b"".join(blocks)
-    fmt = (
-        (17).to_bytes(2, "little")
-        + (1).to_bytes(2, "little")
-        + rate.to_bytes(4, "little")
-        + ((rate * block_align) // spb).to_bytes(4, "little")
-        + block_align.to_bytes(2, "little")
-        + (4).to_bytes(2, "little")
-        + (2).to_bytes(2, "little")
-        + spb.to_bytes(2, "little")
-    )
-    body = b"fmt " + len(fmt).to_bytes(4, "little") + fmt
-    body += b"fact" + (4).to_bytes(4, "little") + n.to_bytes(4, "little")
-    body += b"data" + len(data).to_bytes(4, "little") + data
-    if len(data) & 1:
-        body += b"\\x00"
-    return b"RIFF" + (4 + len(body)).to_bytes(4, "little") + b"WAVE" + body
-
-
-def encode_adpcm_wav_batch(mat, rate=16000, block_align=256):
-    s = np.asarray(mat, dtype=np.int64)
-    if s.ndim != 2 or s.shape[1] == 0 or block_align < 5:
-        raise ValueError("bad adpcm batch encode input")
-    D, n = s.shape
-    spb = (block_align - 4) * 2 + 1
-    steps_t = np.asarray(IMA_STEP_TABLE, dtype=np.int64)
-    adj_t = np.asarray(IMA_INDEX_ADJ, dtype=np.int64)
-    pred = s[:, 0].copy()
-    idx = np.zeros(D, dtype=np.int64)
-    nibs = np.zeros((D, n), dtype=np.uint8)
-    hdr_pred = {0: pred.copy()}
-    hdr_idx = {0: idx.copy()}
-    for t in range(1, n):
-        if t % spb == 0:
-            pred = s[:, t].copy()
-            hdr_pred[t] = pred.copy()
-            hdr_idx[t] = idx.copy()
-            continue
-        step = steps_t[idx]
-        d = s[:, t] - pred
-        sgn = d < 0
-        m = np.abs(d)
-        b2 = m >= step
-        m = m - b2 * step
-        h1 = step >> 1
-        b1 = m >= h1
-        m = m - b1 * h1
-        b0 = m >= step >> 2
-        code3 = b2 * 4 + b1 * 2 + b0 * 1
-        diffq = (step >> 3) + b0 * (step >> 2) + b1 * h1 + b2 * step
-        pred = np.clip(pred + np.where(sgn, -diffq, diffq), -32768, 32767)
-        idx = np.clip(idx + adj_t[code3], 0, 88)
-        nibs[:, t] = (code3 + sgn * 8).astype(np.uint8)
-    out = []
-    fmt = (
-        (17).to_bytes(2, "little")
-        + (1).to_bytes(2, "little")
-        + rate.to_bytes(4, "little")
-        + ((rate * block_align) // spb).to_bytes(4, "little")
-        + block_align.to_bytes(2, "little")
-        + (4).to_bytes(2, "little")
-        + (2).to_bytes(2, "little")
-        + spb.to_bytes(2, "little")
-    )
-    pre = b"fmt " + len(fmt).to_bytes(4, "little") + fmt
-    pre += b"fact" + (4).to_bytes(4, "little") + n.to_bytes(4, "little")
-    for d0 in range(D):
-        blocks = []
-        for b_start in range(0, n, spb):
-            codes = nibs[d0, b_start + 1 : min(b_start + spb, n)]
-            if len(codes) & 1:
-                codes = np.concatenate([codes, np.zeros(1, dtype=np.uint8)])
-            packed = (codes[0::2] | (codes[1::2] << 4)).tobytes()
-            p = int(hdr_pred[b_start][d0])
-            blocks.append(
-                (p & 0xFFFF).to_bytes(2, "little")
-                + bytes([int(hdr_idx[b_start][d0]), 0])
-                + packed
-            )
-        data = b"".join(blocks)
-        body = pre + b"data" + len(data).to_bytes(4, "little") + data
-        if len(data) & 1:
-            body += b"\\x00"
-        out.append(b"RIFF" + (4 + len(body)).to_bytes(4, "little") + b"WAVE" + body)
-    return out
-
-
-def parse_wav(payload):
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not RIFF/WAVE")
-    pos, fmt, data, fact = 12, None, None, None
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        size = int.from_bytes(payload[pos + 4 : pos + 8], "little")
-        body = payload[pos + 8 : pos + 8 + size]
-        if cid == b"fmt ":
-            fmt = body
-        elif cid == b"data":
-            data = body
-        elif cid == b"fact":
-            fact = body
-        pos += 8 + size + (size & 1)
-    if fmt is None or data is None:
-        raise ValueError("missing fmt/data chunk")
-    audio_format = int.from_bytes(fmt[0:2], "little")
-    channels = int.from_bytes(fmt[2:4], "little")
-    bits = int.from_bytes(fmt[14:16], "little")
-    if audio_format == 17:
-        if channels != 1 or bits != 4:
-            raise ValueError("IMA ADPCM supported as 4-bit mono only")
-        block_align = int.from_bytes(fmt[12:14], "little")
-        if block_align < 5:
-            raise ValueError("bad ADPCM block align")
-        out = []
-        for off in range(0, len(data), block_align):
-            body = data[off : off + block_align]
-            if len(body) < 4:
-                raise ValueError("truncated ADPCM block")
-            out.extend(adpcm_decode_block(body))
-        samples = np.array(out, dtype="<i2")
-        if fact is not None:
-            n_samples = int.from_bytes(fact[0:4], "little")
-            if n_samples > len(samples):
-                raise ValueError("fact count exceeds decoded samples")
-            samples = samples[:n_samples]
-        return samples
-    if audio_format != 1 or bits != 16:
-        raise ValueError("only 16-bit PCM and IMA ADPCM supported")
-    samples = np.frombuffer(data, dtype="<i2", count=len(data) // 2)
-    if channels > 1:
-        samples = samples[: (len(samples) // channels) * channels].reshape(
-            -1, channels
-        )
-    return samples
-
-
-PNG_SIG = bytes.fromhex("89504e470d0a1a0a")
-
-
-def parse_png(payload):
-    import zlib
-
-    if payload[:8] != PNG_SIG:
-        raise ValueError("not PNG")
-    pos, ihdr, idat, seen_iend = 8, None, [], False
-    while pos + 8 <= len(payload):
-        size = int.from_bytes(payload[pos : pos + 4], "big")
-        ctype = payload[pos + 4 : pos + 8]
-        body = payload[pos + 8 : pos + 8 + size]
-        if len(body) < size:
-            raise ValueError("truncated chunk body")
-        crc = payload[pos + 8 + size : pos + 12 + size]
-        if len(crc) < 4:
-            raise ValueError("truncated chunk CRC")
-        if zlib.crc32(ctype + body) != int.from_bytes(crc, "big"):
-            raise ValueError("CRC mismatch")
-        if ctype == b"IHDR":
-            ihdr = body
-        elif ctype == b"IDAT":
-            idat.append(body)
-        elif ctype == b"IEND":
-            seen_iend = True
-            break
-        pos += 12 + size
-    if ihdr is None or not idat or not seen_iend:
-        raise ValueError("missing IHDR/IDAT/IEND")
-    if len(ihdr) != 13:
-        raise ValueError("bad IHDR length")
-    w = int.from_bytes(ihdr[0:4], "big")
-    h = int.from_bytes(ihdr[4:8], "big")
-    depth, color, comp, filt, interlace = ihdr[8], ihdr[9], ihdr[10], ihdr[11], ihdr[12]
-    if depth != 8:
-        raise ValueError("only 8-bit depth supported")
-    channels = {0: 1, 2: 3, 6: 4}.get(color)
-    if channels is None:
-        raise ValueError("unsupported color type")
-    if comp != 0 or filt != 0 or interlace != 0:
-        raise ValueError("unsupported compression/filter/interlace")
-    if w == 0 or h == 0:
-        raise ValueError("zero-dimension image")
-    try:
-        raw = zlib.decompress(b"".join(idat))
-    except zlib.error:
-        raise ValueError("bad IDAT stream")
-    stride = w * channels
-    if len(raw) != h * (1 + stride):
-        raise ValueError("decompressed size mismatch")
-    arr = np.frombuffer(raw, dtype=np.uint8).reshape(h, 1 + stride)
-    ftypes, data = arr[:, 0], arr[:, 1:].astype(np.int64)
-    recon = np.zeros((h, stride), dtype=np.int64)
-    bpp = channels
-    for y in range(h):
-        ft, row = int(ftypes[y]), data[y]
-        prev = recon[y - 1] if y else np.zeros(stride, dtype=np.int64)
-        if ft == 0:
-            recon[y] = row
-        elif ft == 1:
-            for j in range(bpp):
-                recon[y, j::bpp] = np.cumsum(row[j::bpp]) % 256
-        elif ft == 2:
-            recon[y] = (row + prev) % 256
-        elif ft == 3:
-            r = recon[y]
-            for i in range(stride):
-                left = r[i - bpp] if i >= bpp else 0
-                r[i] = (row[i] + (left + prev[i]) // 2) % 256
-        elif ft == 4:
-            r = recon[y]
-            for i in range(stride):
-                a = r[i - bpp] if i >= bpp else 0
-                b = int(prev[i])
-                c = int(prev[i - bpp]) if i >= bpp else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                r[i] = (row[i] + pred) % 256
-        else:
-            raise ValueError("unknown filter type")
-    return recon.astype(np.uint8).reshape(h, w, channels)
-
-
-def parse_image(payload):
-    if payload[:2] == b"P6":
-        img = parse_p6(payload)
-    elif payload[:8] == PNG_SIG:
-        img = parse_png(payload)
-    else:
-        raise ValueError("not a supported image payload")
-    if img.shape[2] == 1:
-        return np.repeat(img, 3, axis=2)
-    return img[:, :, :3]
-
-
-def encode_png(arr, filter_mode="cycle"):
-    import zlib
-
-    a = np.asarray(arr, dtype=np.uint8)
-    if a.ndim == 2:
-        a = a[:, :, None]
-    h, w, c = a.shape
-    if c not in (1, 3, 4):
-        raise ValueError("unsupported channel count")
-    color = {1: 0, 3: 2, 4: 6}[c]
-    flat = a.reshape(h, w * c).astype(np.int64)
-    bpp = c
-    stride = w * c
-    zrow = np.zeros((1, stride), dtype=np.int64)
-    prev = np.vstack([zrow, flat[:-1]])
-    zcol = np.zeros((h, bpp), dtype=np.int64)
-    left = np.concatenate([zcol, flat[:, :-bpp]], axis=1) if stride > bpp else flat * 0
-    upleft = np.concatenate([zcol, prev[:, :-bpp]], axis=1) if stride > bpp else prev * 0
-    f0 = flat
-    f1 = (flat - left) % 256
-    f2 = (flat - prev) % 256
-    f3 = (flat - (left + prev) // 2) % 256
-    p = left + prev - upleft
-    pa, pb, pc = np.abs(p - left), np.abs(p - prev), np.abs(p - upleft)
-    pred = np.where((pa <= pb) & (pa <= pc), left, np.where(pb <= pc, prev, upleft))
-    f4 = (flat - pred) % 256
-    if filter_mode == "cycle":
-        ftypes = (np.arange(h, dtype=np.int64) % 5).astype(np.uint8)
-    else:
-        ft = int(filter_mode)
-        if not 0 <= ft <= 4:
-            raise ValueError("unknown filter mode")
-        ftypes = np.full(h, ft, dtype=np.uint8)
-    sel = np.choose(ftypes[:, None], [f0, f1, f2, f3, f4]).astype(np.uint8)
-    raw_rows = np.concatenate([ftypes[:, None], sel], axis=1)
-    lines = [raw_rows.tobytes()]
-
-    def chunk(t, b):
-        return (
-            len(b).to_bytes(4, "big")
-            + t
-            + b
-            + (zlib.crc32(t + b) & 0xFFFFFFFF).to_bytes(4, "big")
-        )
-
-    ihdr = w.to_bytes(4, "big") + h.to_bytes(4, "big") + bytes([8, color, 0, 0, 0])
-    return (
-        PNG_SIG
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(b"".join(lines)))
-        + chunk(b"IEND", b"")
-    )
-
-
-def parse_y4m(payload):
-    if not payload.startswith(b"YUV4MPEG2"):
-        raise ValueError("not Y4M")
-    nl = payload.find(b"\\n", 0, 512)
-    if nl < 0:
-        raise ValueError("unterminated stream header")
-    w = h = None
-    colorspace = b"C420jpeg"
-    for tag in payload[9:nl].split(b" "):
-        if not tag:
-            continue
-        key = tag[:1]
-        try:
-            if key == b"W":
-                w = int(tag[1:])
-            elif key == b"H":
-                h = int(tag[1:])
-            elif key == b"C":
-                colorspace = tag
-            elif key in (b"F", b"I", b"A", b"X"):
-                pass
-            else:
-                raise ValueError("unknown stream tag")
-        except ValueError:
-            raise
-        except Exception:
-            raise ValueError("bad stream tag")
-    if not w or not h or w < 0 or h < 0:
-        raise ValueError("missing or bad W/H")
-    if colorspace == b"C444":
-        planes = 3
-    elif colorspace == b"Cmono":
-        planes = 1
-    else:
-        raise ValueError("unsupported colorspace")
-    fsize = w * h * planes
-    frames, pos = [], nl + 1
-    while pos < len(payload):
-        if payload[pos : pos + 5] != b"FRAME":
-            raise ValueError("bad FRAME marker")
-        fnl = payload.find(b"\\n", pos)
-        if fnl < 0:
-            raise ValueError("unterminated frame header")
-        params = payload[pos + 5 : fnl]
-        if params and not params.startswith(b" "):
-            raise ValueError("bad frame parameters")
-        pos = fnl + 1
-        if pos + fsize > len(payload):
-            raise ValueError("truncated frame payload")
-        raw = np.frombuffer(payload, dtype=np.uint8, count=fsize, offset=pos)
-        frames.append(raw.reshape(planes, h, w))
-        pos += fsize
-    if not frames:
-        raise ValueError("stream has no frames")
-    stack = np.stack(frames)
-    if planes == 1:
-        return stack[:, 0]
-    return np.moveaxis(stack, 1, 3)
-
-
-def encode_y4m(frames, fps=(25, 1)):
-    a = np.asarray(frames, dtype=np.uint8)
-    if a.ndim == 3:
-        n, h, w = a.shape
-        cs, body = b"Cmono", a
-    elif a.ndim == 4 and a.shape[3] == 3:
-        n, h, w, _ = a.shape
-        cs, body = b"C444", np.moveaxis(a, 3, 1)
-    else:
-        raise ValueError("frames must be (N,H,W) or (N,H,W,3)")
-    if n == 0 or h == 0 or w == 0:
-        raise ValueError("empty stream")
-    header = b"YUV4MPEG2 W%d H%d F%d:%d Ip A1:1 %s\\n" % (w, h, fps[0], fps[1], cs)
-    return header + b"".join(b"FRAME\\n" + f.tobytes() for f in body)
-
-
-def gif_lzw_decode(data, mcs, npix):
-    if not 2 <= mcs <= 11:
-        raise ValueError("gif: bad LZW min code size")
-    clear, end = 1 << mcs, (1 << mcs) + 1
-    table = {}
-    width = mcs + 1
-    nxt = end + 1
-
-    def reset():
-        nonlocal table, width, nxt
-        table = {i: (i,) for i in range(clear)}
-        width = mcs + 1
-        nxt = end + 1
-
-    reset()
-    out = []
-    prev = None
-    acc = nbits = i = 0
-    while True:
-        while nbits < width:
-            if i >= len(data):
-                raise ValueError("gif: truncated LZW stream")
-            acc |= data[i] << nbits
-            nbits += 8
-            i += 1
-        code = acc & ((1 << width) - 1)
-        acc >>= width
-        nbits -= width
-        if code == clear:
-            reset()
-            prev = None
-            continue
-        if code == end:
-            break
-        if prev is None:
-            entry = table.get(code)
-            if entry is None:
-                raise ValueError("gif: bad first LZW code")
-        elif code < nxt:
-            entry = table[code]
-        elif code == nxt:
-            entry = prev + (prev[0],)
-        else:
-            raise ValueError("gif: LZW code out of range")
-        if prev is not None and nxt <= 4095:
-            table[nxt] = prev + (entry[0],)
-            nxt += 1
-            if nxt == (1 << width) and width < 12:
-                width += 1
-        out.extend(entry)
-        prev = entry
-        if len(out) > npix:
-            raise ValueError("gif: more pixels than the frame holds")
-    return out
-
-
-def gif_lzw_encode(idxs, mcs):
-    clear, end = 1 << mcs, (1 << mcs) + 1
-    table = {(i,): i for i in range(clear)}
-    enc_nxt = end + 1
-    dec_nxt = end + 1
-    width = mcs + 1
-    bits = [(clear, width)]
-    t = 0
-
-    def after_emit():
-        nonlocal t, dec_nxt, width
-        t += 1
-        if t >= 2 and dec_nxt <= 4095:
-            dec_nxt += 1
-            if dec_nxt == (1 << width) and width < 12:
-                width += 1
-
-    seq = ()
-    for k in idxs:
-        k = int(k)
-        if not 0 <= k < clear:
-            raise ValueError("gif: palette index out of range for code size")
-        cand = seq + (k,)
-        if cand in table:
-            seq = cand
-            continue
-        bits.append((table[seq], width))
-        after_emit()
-        if enc_nxt <= 4095:
-            table[cand] = enc_nxt
-            enc_nxt += 1
-        seq = (k,)
-    if seq:
-        bits.append((table[seq], width))
-        after_emit()
-    bits.append((end, width))
-    acc = nbits = 0
-    out = bytearray()
-    for code, w in bits:
-        acc |= code << nbits
-        nbits += w
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
-GIF_INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
-
-
-def parse_gif(payload):
-    if payload[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF payload")
-    if len(payload) < 13:
-        raise ValueError("truncated header")
-    W = int.from_bytes(payload[6:8], "little")
-    H = int.from_bytes(payload[8:10], "little")
-    if W == 0 or H == 0:
-        raise ValueError("zero logical screen")
-    packed = payload[10]
-    pos = 13
-    gct = None
-    if packed & 0x80:
-        n = 2 << (packed & 7)
-        if pos + 3 * n > len(payload):
-            raise ValueError("truncated global color table")
-        gct = np.frombuffer(payload, np.uint8, 3 * n, pos).reshape(n, 3)
-        pos += 3 * n
-    frames = []
-    while True:
-        if pos >= len(payload):
-            raise ValueError("missing trailer")
-        block = payload[pos]
-        pos += 1
-        if block == 0x3B:
-            break
-        if block == 0x21:
-            pos += 1
-            while True:
-                if pos >= len(payload):
-                    raise ValueError("truncated extension")
-                sz = payload[pos]
-                pos += 1 + sz
-                if sz == 0:
-                    break
-        elif block == 0x2C:
-            if pos + 9 > len(payload):
-                raise ValueError("truncated image descriptor")
-            left = int.from_bytes(payload[pos : pos + 2], "little")
-            top = int.from_bytes(payload[pos + 2 : pos + 4], "little")
-            w = int.from_bytes(payload[pos + 4 : pos + 6], "little")
-            h = int.from_bytes(payload[pos + 6 : pos + 8], "little")
-            ip = payload[pos + 8]
-            pos += 9
-            if left or top or w != W or h != H:
-                raise ValueError("partial frames unsupported")
-            pal = gct
-            if ip & 0x80:
-                n = 2 << (ip & 7)
-                if pos + 3 * n > len(payload):
-                    raise ValueError("truncated local color table")
-                pal = np.frombuffer(payload, np.uint8, 3 * n, pos).reshape(n, 3)
-                pos += 3 * n
-            if pal is None:
-                raise ValueError("frame has no color table")
-            if pos >= len(payload):
-                raise ValueError("missing LZW code size")
-            mcs = payload[pos]
-            pos += 1
-            data = bytearray()
-            while True:
-                if pos >= len(payload):
-                    raise ValueError("truncated image data")
-                sz = payload[pos]
-                pos += 1
-                if sz == 0:
-                    break
-                chunk = payload[pos : pos + sz]
-                if len(chunk) < sz:
-                    raise ValueError("truncated data sub-block")
-                data += chunk
-                pos += sz
-            idxs = gif_lzw_decode(bytes(data), mcs, w * h)
-            if len(idxs) != w * h:
-                raise ValueError("pixel count mismatch")
-            grid = np.asarray(idxs, np.int64).reshape(h, w)
-            if (grid >= len(pal)).any():
-                raise ValueError("palette index out of range")
-            if ip & 0x40:
-                order = [y for s, st in GIF_INTERLACE_PASSES for y in range(s, h, st)]
-                de = np.empty_like(grid)
-                de[order] = grid
-                grid = de
-            frames.append(pal[grid])
-        else:
-            raise ValueError("unknown block type")
-    if not frames:
-        raise ValueError("stream has no frames")
-    return np.stack(frames)
-
-
-def encode_gif(frames_idx, palette, interlace=False):
-    fi = np.asarray(frames_idx, dtype=np.uint8)
-    pal = np.asarray(palette, dtype=np.uint8)
-    if fi.ndim != 3 or fi.shape[0] == 0:
-        raise ValueError("frames must be (N, H, W) indices")
-    if pal.ndim != 2 or pal.shape[1] != 3 or not 2 <= len(pal) <= 256:
-        raise ValueError("palette must be (2..256, 3)")
-    if int(fi.max()) >= len(pal):
-        raise ValueError("index out of palette range")
-    n, h, w = fi.shape
-    bits = max(1, (len(pal) - 1).bit_length())
-    table = np.zeros((1 << bits, 3), dtype=np.uint8)
-    table[: len(pal)] = pal
-    out = bytearray(b"GIF89a")
-    out += w.to_bytes(2, "little") + h.to_bytes(2, "little")
-    out += bytes([0x80 | (bits - 1), 0, 0])
-    out += table.tobytes()
-    mcs = max(2, bits)
-    for f in range(n):
-        grid = fi[f]
-        if interlace:
-            order = [y for s, st in GIF_INTERLACE_PASSES for y in range(s, h, st)]
-            grid = grid[order]
-        out += bytes([0x2C]) + bytes(4)
-        out += w.to_bytes(2, "little") + h.to_bytes(2, "little")
-        out += bytes([0x40 if interlace else 0x00])
-        out += bytes([mcs])
-        data = gif_lzw_encode(grid.reshape(-1), mcs)
-        for i in range(0, len(data), 255):
-            chunk = data[i : i + 255]
-            out += bytes([len(chunk)]) + chunk
-        out += bytes([0])
-    out += bytes([0x3B])
-    return bytes(out)
-'''
 
 
 def extract_features(
@@ -1059,30 +358,9 @@ def extract_features(
     )
     schema = f"{id_col} long, feature array<double>, n_bytes long"
 
-    # the closure must be self-contained (stdlib imports inside, no
-    # module-level globals): cloudpickle would otherwise ship it as a
-    # reference to this module, which the executors may not have on their
-    # PYTHONPATH when the driver process runs outside the repo
-    def _extract(batches, _src=_INLINE_CODEC_SRC):
-        import hashlib
-
+    def _extract(batches):
         import numpy as np
         import pandas as pd
-
-        ns = {"np": np}
-        exec(_src, ns)
-        parse_image, parse_wav = ns["parse_image"], ns["parse_wav"]
-        parse_y4m, parse_gif = ns["parse_y4m"], ns["parse_gif"]
-        png_sig = ns["PNG_SIG"]
-
-        def fake_features(payload: bytes) -> list[float]:
-            out: list[float] = []
-            seed = payload
-            while len(out) < dim:
-                seed = hashlib.md5(seed).digest()
-                for i in range(0, 16, 4):
-                    out.append(int.from_bytes(seed[i : i + 4], "big") / 2**32)
-            return out[:dim]
 
         def image_features(img):
             h, w = img.shape[:2]
@@ -1133,19 +411,19 @@ def extract_features(
             for payload, mt in zip(pdf["content"], pdf["media_type"]):
                 raw = bytes(payload)
                 if fake:
-                    feats.append(fake_features(raw))
-                elif raw[:2] == b"P6" or raw[:8] == png_sig:
+                    feats.append(_fake_features(raw, dim))
+                elif raw[:2] == b"P6" or raw[:8] == PNG_SIG:
                     if g * g != dim:
                         raise ValueError(
                             f"extract_features: image features need a square dim, got {dim}"
                         )
                     try:
-                        feats.append(image_features(parse_image(raw)))
+                        feats.append(image_features(_decode_image(raw)))
                     except ValueError:
                         feats.append(None)
                 elif raw[:4] == b"RIFF":
                     try:
-                        feats.append(audio_features(parse_wav(raw)))
+                        feats.append(audio_features(decode_wav(raw)[0]))
                     except ValueError:
                         feats.append(None)
                 elif raw[:9] == b"YUV4MPEG2":
@@ -1154,7 +432,7 @@ def extract_features(
                             f"extract_features: video features need a square dim, got {dim}"
                         )
                     try:
-                        feats.append(video_features(parse_y4m(raw)))
+                        feats.append(video_features(decode_y4m(raw)))
                     except ValueError:
                         feats.append(None)
                 elif raw[:3] == b"GIF":
@@ -1165,7 +443,7 @@ def extract_features(
                     # GIF frames are RGB: integer BT.601 luma per frame,
                     # then the same temporal-mean block grid as Y4M
                     try:
-                        fr = parse_gif(raw).astype(np.int64)
+                        fr = decode_gif(raw).astype(np.int64)
                     except ValueError:
                         feats.append(None)
                     else:
@@ -1220,32 +498,22 @@ def frame_sample(
     )
     schema = f"{id_col} long, frame_idx int, frame_md5 string"
 
-    # self-contained closure — see extract_features for why (executors may
-    # not have this module importable)
-    def _decode(batches, _src=_INLINE_CODEC_SRC):
-        import hashlib
-
+    def _decode(batches):
         import numpy as np
         import pandas as pd
-
-        ns = {"np": np}
-        exec(_src, ns)
-        parse_image, parse_wav = ns["parse_image"], ns["parse_wav"]
-        parse_y4m, parse_gif = ns["parse_y4m"], ns["parse_gif"]
-        png_sig = ns["PNG_SIG"]
 
         def frame_md5(raw, idx, n_frames):
             if fake:
                 return hashlib.md5(raw + b":" + str(idx).encode()).hexdigest()
-            if raw[:2] == b"P6" or raw[:8] == png_sig:
+            if raw[:2] == b"P6" or raw[:8] == PNG_SIG:
                 try:
-                    img = parse_image(raw)
+                    img = _decode_image(raw)
                 except ValueError:
                     return None
                 return hashlib.md5(img.tobytes()).hexdigest()
             if raw[:4] == b"RIFF":
                 try:
-                    s = np.asarray(parse_wav(raw)).reshape(-1)
+                    s = np.asarray(decode_wav(raw)[0]).reshape(-1)
                 except ValueError:
                     return None
                 n = len(s)
@@ -1256,7 +524,7 @@ def frame_sample(
                 # frames; the md5 hashes the frame's raw PLANAR bytes
                 # exactly as stored in the stream (Y then U then V)
                 try:
-                    fr = parse_y4m(raw)
+                    fr = decode_y4m(raw)
                 except ValueError:
                     return None
                 if idx >= fr.shape[0]:
@@ -1268,7 +536,7 @@ def frame_sample(
                 # REAL animated-GIF frames (r7): md5 of the frame's decoded
                 # interleaved RGB bytes (post palette lookup + deinterlace)
                 try:
-                    fr = parse_gif(raw)
+                    fr = decode_gif(raw)
                 except ValueError:
                     return None
                 if idx >= fr.shape[0]:
@@ -1315,17 +583,9 @@ def resize_images(
     )
     schema = f"{id_col} long, width int, height int, thumb_md5 string, out_bytes long"
 
-    # self-contained closure — executors may not have this module importable
-    def _resize(batches, _src=_INLINE_CODEC_SRC):
-        import hashlib
-
+    def _resize(batches):
         import numpy as np
         import pandas as pd
-
-        ns = {"np": np}
-        exec(_src, ns)
-        parse_image, encode_png = ns["parse_image"], ns["encode_png"]
-        png_sig = ns["PNG_SIG"]
 
         def thumb(raw):
             # real downsample (VERDICT r6 #3): per-channel block means
@@ -1334,7 +594,7 @@ def resize_images(
             # PNG for PNG inputs; md5 is of the REAL thumbnail payload.
             # None for corrupt or smaller-than-target images.
             try:
-                img = parse_image(raw)
+                img = _decode_image(raw)
             except ValueError:
                 return None, None
             h, w = img.shape[:2]
@@ -1349,10 +609,10 @@ def resize_images(
                     blk = px[y0:y1, x0:x1]
                     npix = blk.shape[0] * blk.shape[1]
                     t[by, bx] = blk.sum(axis=(0, 1)) // npix
-            if raw[:8] == png_sig:
-                payload = encode_png(t, 0)
+            if raw[:8] == PNG_SIG:
+                payload = png_encode(t, 0)
             else:
-                payload = b"P6\n%d %d\n255\n" % (width, height) + t.tobytes()
+                payload = ppm_encode(t)
             return hashlib.md5(payload).hexdigest(), len(payload)
 
         for pdf in batches:
@@ -1364,7 +624,7 @@ def resize_images(
                 md5s, obytes = [], []
                 for c in pdf["content"]:
                     raw = bytes(c)
-                    if raw[:2] != b"P6" and raw[:8] != png_sig:
+                    if raw[:2] != b"P6" and raw[:8] != PNG_SIG:
                         raise NotImplementedError(
                             "no codec available for this image type; "
                             "install a decoder or pass fake=True"
@@ -1532,9 +792,10 @@ def dhash_fingerprints(
             return out
 
         for pdf in batches:
-            yield pd.DataFrame(
-                {_id: pdf[_id], "dhash": [dh(c) for c in pdf[_c]]}
-            )
+            # Int64: a NULL in an object list would turn the column into
+            # float64 and round every 64-bit hash in the batch
+            dhash = pd.array([dh(c) for c in pdf[_c]], dtype="Int64")
+            yield pd.DataFrame({_id: pdf[_id], "dhash": dhash})
 
     return flat.mapInPandas(kern, schema=f"{id_col} {id_type}, dhash long")
 
@@ -1600,25 +861,15 @@ def dhash_real_fingerprints(
     id_type = assets.schema[id_col].dataType.simpleString()
     flat = ensure_parallelism(assets.select(F.col(id_col), F.col(content_col)))
 
-    def kern(batches, _id=id_col, _c=content_col, _src=_INLINE_CODEC_SRC):
-        # self-contained closure (imports + the shared inline parsers):
-        # executors may not have this module importable — same discipline
-        # as every other kernel in the package. decode_ppm / decode_png
-        # are the reference implementations; the inline parsers are
-        # identical and parity-tested (test_operators.py::
-        # test_dhash_real_kernel_matches_decode_ppm and the PNG twin).
+    def kern(batches, _id=id_col, _c=content_col):
         import numpy as np
         import pandas as pd
-
-        ns = {"np": np}
-        exec(_src, ns)
-        parse_image = ns["parse_image"]
 
         def dh(raw):
             if raw is None:
                 return None
             try:
-                img = parse_image(bytes(raw))
+                img = _decode_image(bytes(raw))
             except Exception:
                 return None
             h, w = img.shape[:2]
@@ -1641,7 +892,8 @@ def dhash_real_fingerprints(
             return out
 
         for pdf in batches:
-            yield pd.DataFrame({_id: pdf[_id], "dhash": [dh(c) for c in pdf[_c]]})
+            dhash = pd.array([dh(c) for c in pdf[_c]], dtype="Int64")
+            yield pd.DataFrame({_id: pdf[_id], "dhash": dhash})
 
     return flat.mapInPandas(kern, schema=f"{id_col} {id_type}, dhash long")
 
@@ -1813,7 +1065,9 @@ def decode_wav(payload: bytes):
     come back as (n_frames, channels)); format tag 0x11 (IMA ADPCM, r7)
     runs the real 4-bit adaptive-quantizer decode block by block —
     a genuinely COMPRESSED audio codec, truncated to the `fact` chunk's
-    sample count. MP3/AAC/FLAC remain the documented seam. Returns
+    sample count. A chunk shorter than its declared size (a truncated
+    payload) raises ValueError rather than decoding a shorter stream.
+    MP3/AAC/FLAC remain the documented seam. Returns
     (samples, sample_rate)."""
     import numpy as np
 
@@ -1824,6 +1078,8 @@ def decode_wav(payload: bytes):
         cid = payload[pos : pos + 4]
         size = int.from_bytes(payload[pos + 4 : pos + 8], "little")
         body = payload[pos + 8 : pos + 8 + size]
+        if len(body) < size:
+            raise ValueError("decode_wav: truncated chunk body")
         if cid == b"fmt ":
             fmt = body
         elif cid == b"data":
@@ -1911,23 +1167,15 @@ def audio_fingerprints(
     id_type = assets.schema[id_col].dataType.simpleString()
     flat = ensure_parallelism(assets.select(F.col(id_col), F.col(content_col)))
 
-    def kern(batches, _id=id_col, _c=content_col, _src=_INLINE_CODEC_SRC):
-        # self-contained closure (shared inline RIFF/ADPCM parser,
-        # identical to decode_wav and parity-tested against it) —
-        # executors may not have this module importable, same discipline
-        # as every kernel.
+    def kern(batches, _id=id_col, _c=content_col):
         import numpy as np
         import pandas as pd
-
-        ns = {"np": np}
-        exec(_src, ns)
-        parse_wav = ns["parse_wav"]
 
         def afp(raw):
             if raw is None:
                 return None
             try:
-                s = np.asarray(parse_wav(bytes(raw))).astype(np.int64)
+                s = np.asarray(decode_wav(bytes(raw))[0]).astype(np.int64)
             except Exception:
                 return None
             if s.ndim > 1:  # mixdown: first channel (deterministic)
@@ -1947,7 +1195,8 @@ def audio_fingerprints(
             return out
 
         for pdf in batches:
-            yield pd.DataFrame({_id: pdf[_id], "afp": [afp(c) for c in pdf[_c]]})
+            afps = pd.array([afp(c) for c in pdf[_c]], dtype="Int64")
+            yield pd.DataFrame({_id: pdf[_id], "afp": afps})
 
     return flat.mapInPandas(kern, schema=f"{id_col} {id_type}, afp long")
 
@@ -2181,7 +1430,7 @@ def video_frame_stats(
     Sampled frame indices are derived and exploded JVM-side from the
     metadata frame count (the frame_sample discipline — Python only sees
     rows it must decode); the per-frame decode is Arrow-batched
-    mapInPandas over the shared inline parser. Returns
+    mapInPandas over :func:`decode_y4m`. Returns
     (id, frame_idx, y_sum, u_sum, v_sum) — u/v NULL for Cmono streams,
     all three NULL for corrupt payloads or out-of-range indices."""
     flat = assets.select(
@@ -2198,18 +1447,13 @@ def video_frame_stats(
     )
     schema = f"{id_col} long, frame_idx int, y_sum long, u_sum long, v_sum long"
 
-    # self-contained closure — executors may not have this module importable
-    def _stats(batches, _src=_INLINE_CODEC_SRC):
+    def _stats(batches):
         import numpy as np
         import pandas as pd
 
-        ns = {"np": np}
-        exec(_src, ns)
-        parse_y4m = ns["parse_y4m"]
-
         def stats(raw, idx):
             try:
-                fr = parse_y4m(raw)
+                fr = decode_y4m(raw)
             except ValueError:
                 return None, None, None
             if idx >= fr.shape[0]:
@@ -2261,20 +1505,15 @@ def video_shot_mad(assets: DataFrame, id_col: str = "doc_id") -> DataFrame:
     flat = assets.select(F.col(id_col), F.col("content"))
     schema = f"{id_col} long, frame_idx int, mad long"
 
-    # self-contained closure — executors may not have this module importable
-    def _mad(batches, _src=_INLINE_CODEC_SRC):
+    def _mad(batches):
         import numpy as np
         import pandas as pd
-
-        ns = {"np": np}
-        exec(_src, ns)
-        parse_y4m = ns["parse_y4m"]
 
         for pdf in batches:
             ids, idxs, mads = [], [], []
             for rid, c in zip(pdf[id_col], pdf["content"]):
                 try:
-                    fr = parse_y4m(bytes(c))
+                    fr = decode_y4m(bytes(c))
                 except ValueError:
                     continue
                 luma = fr if fr.ndim == 3 else fr[:, :, :, 0]
@@ -2598,18 +1837,13 @@ def gif_frame_stats(
     )
     schema = f"{id_col} long, frame_idx int, r_sum long, g_sum long, b_sum long"
 
-    # self-contained closure — executors may not have this module importable
-    def _stats(batches, _src=_INLINE_CODEC_SRC):
+    def _stats(batches):
         import numpy as np
         import pandas as pd
 
-        ns = {"np": np}
-        exec(_src, ns)
-        parse_gif = ns["parse_gif"]
-
         def stats(raw, idx):
             try:
-                fr = parse_gif(raw)
+                fr = decode_gif(raw)
             except ValueError:
                 return None, None, None
             if idx >= fr.shape[0]:
@@ -2698,25 +1932,14 @@ def audio_spectral_bands(
     flat = assets.select(F.col(id_col), F.col("content"))
     schema = f"{id_col} long, bin int, energy long"
 
-    def _bands(
-        batches,
-        _src=_INLINE_CODEC_SRC,
-        _C=Cm,
-        _S=Sm,
-        _frame=frame,
-        _chunk=safe_chunk,
-    ):
+    def _bands(batches, _C=Cm, _S=Sm, _frame=frame, _chunk=safe_chunk):
         import pandas as pd
-
-        ns = {"np": np}
-        exec(_src, ns)
-        parse_wav = ns["parse_wav"]
 
         for pdf in batches:
             ids, bins, energies = [], [], []
             for rid, c in zip(pdf[id_col], pdf["content"]):
                 try:
-                    v = parse_wav(bytes(c)).astype(np.int64)
+                    v = decode_wav(bytes(c))[0].astype(np.int64)
                 except ValueError:
                     continue
                 nf = len(v) // _frame

@@ -1752,7 +1752,7 @@ def multimodal_dhash_real_q(spark, sf_dir):
     packing — the full perceptual pipeline on actual pixels, not the
     fake-decode segmentation. The oracle regenerates the same pixels in
     SQL and must land on the identical 64-bit fingerprint."""
-    from sparsity_spark.operators.multimodal import dhash_real_fingerprints
+    from sparsity_spark.operators.multimodal import dhash_real_fingerprints, ppm_encode
 
     ids = load_table(spark, sf_dir, "documents").select("doc_id").filter(
         F.col("doc_id") % 4 == 0  # corpus-proportional fixture: the real
@@ -1772,8 +1772,7 @@ def multimodal_dhash_real_q(spark, sf_dir):
             r = (doc_id * 31 + xs * 7 + ys * 13) % 256
             g = (doc_id * 17 + xs * 3 + ys * 11) % 256
             b = (doc_id * 23 + xs * 5 + ys * 19) % 256
-            img = np.stack([r, g, b], axis=2).astype(np.uint8)
-            return b"P6\n%d %d\n255\n" % (W, H) + img.tobytes()
+            return ppm_encode(np.stack([r, g, b], axis=2))
 
         for pdf in batches:
             yield pd.DataFrame(
@@ -1821,7 +1820,7 @@ def multimodal_features_real_q(spark, sf_dir):
     (doc_id, fi, fval) long rows the oracle reproduces exactly — proving
     the decode_stub routing fix made feature extraction real, not just
     the dedicated dHash kernel."""
-    from sparsity_spark.operators.multimodal import extract_features
+    from sparsity_spark.operators.multimodal import extract_features, ppm_encode
 
     ids = load_table(spark, sf_dir, "documents").select("doc_id").filter(
         F.col("doc_id") % 4 == 0  # corpus-proportional fixture: the real
@@ -1841,10 +1840,7 @@ def multimodal_features_real_q(spark, sf_dir):
             r = (doc_id * 31 + xs * 7 + ys * 13) % 256
             g = (doc_id * 17 + xs * 3 + ys * 11) % 256
             b = (doc_id * 23 + xs * 5 + ys * 19) % 256
-            img = np.stack(
-                [np.broadcast_to(c, (H, W)) for c in (r, g, b)], axis=2
-            ).astype(np.uint8)
-            return b"P6\n%d %d\n255\n" % (W, H) + img.tobytes()
+            return ppm_encode(np.stack([np.broadcast_to(c, (H, W)) for c in (r, g, b)], axis=2))
 
         for pdf in batches:
             yield pd.DataFrame(
@@ -1920,20 +1916,17 @@ def multimodal_png_real_q(spark, sf_dir):
     dispatch to the same g×g integer block-mean luma grid as the PPM
     fixture. The oracle regenerates the pixels in SQL and must land on
     identical exact rationals."""
-    from sparsity_spark.operators.multimodal import _INLINE_CODEC_SRC, extract_features
+    from sparsity_spark.operators.multimodal import extract_features, png_encode
 
     ids = load_table(spark, sf_dir, "documents").select("doc_id").filter(
         F.col("doc_id") % 4 == 1  # corpus-proportional fixture, disjoint
         # from the PPM fixture's %4==0 slice
     ).distinct()
 
-    def mk_png(batches, _src=_INLINE_CODEC_SRC):
+    def mk_png(batches):
         import numpy as np
         import pandas as pd
 
-        ns = {"np": np}
-        exec(_src, ns)
-        encode_png = ns["encode_png"]
         W, H = 24, 20
         xs = np.arange(W, dtype=np.int64)[None, :]
         ys = np.arange(H, dtype=np.int64)[:, None]
@@ -1952,7 +1945,7 @@ def multimodal_png_real_q(spark, sf_dir):
                         np.broadcast_to((doc_id + xs + ys) % 256, (H, W))
                     )
                 img = np.stack(chans, axis=2).astype(np.uint8)
-            return encode_png(img, "cycle")
+            return png_encode(img, "cycle")
 
         for pdf in batches:
             yield pd.DataFrame(
@@ -2016,7 +2009,7 @@ def multimodal_audio_real_q(spark, sf_dir):
     pipeline on actual audio, not the fake-decode segmentation. The
     oracle regenerates the same samples in SQL and must land on the
     identical 64-bit fingerprint."""
-    from sparsity_spark.operators.multimodal import audio_fingerprints
+    from sparsity_spark.operators.multimodal import audio_fingerprints, wav_encode
 
     ids = load_table(spark, sf_dir, "documents").select("doc_id").filter(
         F.col("doc_id") % 4 == 0  # corpus-proportional fixture: the real
@@ -2025,31 +2018,15 @@ def multimodal_audio_real_q(spark, sf_dir):
     ).distinct()
 
     def mk_wav(batches):
-        # self-contained closure (inline RIFF encoder, identical to
-        # multimodal.wav_encode and parity-tested against it)
         import numpy as np
         import pandas as pd
 
         N = 650
         i = np.arange(N, dtype=np.int64)
 
-        def enc(samples, rate=16000):
-            data = np.asarray(samples, dtype="<i2").tobytes()
-            fmt = (
-                (1).to_bytes(2, "little")
-                + (1).to_bytes(2, "little")
-                + rate.to_bytes(4, "little")
-                + (rate * 2).to_bytes(4, "little")
-                + (2).to_bytes(2, "little")
-                + (16).to_bytes(2, "little")
-            )
-            body = b"fmt " + len(fmt).to_bytes(4, "little") + fmt
-            body += b"data" + len(data).to_bytes(4, "little") + data
-            return b"RIFF" + (4 + len(body)).to_bytes(4, "little") + b"WAVE" + body
-
         def wav(doc_id):
             v = ((doc_id * 31 + i * i * 7 + i * 13) % 65536) - 32768
-            return enc(v.astype("<i2"), rate=16000)
+            return wav_encode(v.astype("<i2"), rate=16000)
 
         for pdf in batches:
             yield pd.DataFrame(
@@ -2106,7 +2083,7 @@ def multimodal_spectral_bands_q(spark, sf_dir):
     anywhere in decode → framing → matmul → energy flips the hash. One
     Arrow decode per asset, map-only (the audio sibling of the dhash
     real-pixel discipline, extended into the frequency domain)."""
-    from sparsity_spark.operators.multimodal import audio_spectral_bands
+    from sparsity_spark.operators.multimodal import audio_spectral_bands, wav_encode
 
     ids = load_table(spark, sf_dir, "documents").select("doc_id").filter(
         F.col("doc_id") % 4 == 0
@@ -2119,23 +2096,9 @@ def multimodal_spectral_bands_q(spark, sf_dir):
         N = 650
         i = np.arange(N, dtype=np.int64)
 
-        def enc(samples, rate=16000):
-            data = np.asarray(samples, dtype="<i2").tobytes()
-            fmt = (
-                (1).to_bytes(2, "little")
-                + (1).to_bytes(2, "little")
-                + rate.to_bytes(4, "little")
-                + (rate * 2).to_bytes(4, "little")
-                + (2).to_bytes(2, "little")
-                + (16).to_bytes(2, "little")
-            )
-            body = b"fmt " + len(fmt).to_bytes(4, "little") + fmt
-            body += b"data" + len(data).to_bytes(4, "little") + data
-            return b"RIFF" + (4 + len(body)).to_bytes(4, "little") + b"WAVE" + body
-
         def wav(doc_id):
             v = ((doc_id * 31 + i * i * 7 + i * 13) % 65536) - 32768
-            return enc(v.astype("<i2"), rate=16000)
+            return wav_encode(v.astype("<i2"), rate=16000)
 
         for pdf in batches:
             yield pd.DataFrame(
@@ -2221,25 +2184,22 @@ def multimodal_adpcm_real_q(spark, sf_dir):
     The oracle replays the full quantizer state machine as a set-based
     recursive CTE — the strongest form of the real-decode discipline:
     even a one-ulp drift in the step-table walk flips the hash."""
-    from sparsity_spark.operators.multimodal import _INLINE_CODEC_SRC
+    from sparsity_spark.operators.multimodal import adpcm_wav_encode_batch, decode_wav
 
     ids = load_table(spark, sf_dir, "documents").select("doc_id").filter(
         F.col("doc_id") % 4 == 2  # corpus-proportional, disjoint from the
         # PPM (%4==0), PNG (%4==1) and PCM-WAV fixtures
     ).distinct()
 
-    def mk(batches, _src=_INLINE_CODEC_SRC):
+    def mk(batches):
         import numpy as np
         import pandas as pd
 
-        ns = {"np": np}
-        exec(_src, ns)
         # fixture construction (the encode) is the vectorized-across-docs
         # batch encoder — byte-identical to the per-doc encoder
         # (parity-pinned) but one numpy pass per sample instead of a
         # Python loop per doc; the DECODE under test stays the real
         # per-payload RIFF/ADPCM parser
-        encode_batch, parse_wav = ns["encode_adpcm_wav_batch"], ns["parse_wav"]
         N = 650
         i = np.arange(N, dtype=np.int64)[None, :]
 
@@ -2251,9 +2211,9 @@ def multimodal_adpcm_real_q(spark, sf_dir):
             mat = (
                 (ids[:, None] * 37 + i * i * 11 + i * 17) % 65536 - 32768
             ).astype("<i2")
-            payloads = encode_batch(mat)
+            payloads = adpcm_wav_encode_batch(mat)
             dec = np.stack(
-                [np.asarray(parse_wav(p), dtype=np.int64) for p in payloads]
+                [np.asarray(decode_wav(p)[0], dtype=np.int64) for p in payloads]
             )
             energy = (dec.reshape(len(ids), 65, 10) ** 2).sum(axis=2)
             out = pd.DataFrame(
@@ -2268,22 +2228,17 @@ def multimodal_adpcm_real_q(spark, sf_dir):
     return ensure_parallelism(ids).mapInPandas(mk, schema="doc_id long, fi int, energy long")
 
 
-def _y4m_fixture_gen(_src=None):
+def _y4m_fixture_gen():
     """Shared Y4M fixture generator (r7): a deterministic 6-frame 16×12
     C444 video per doc_id — integer channel formulas over (doc_id, t, x,
     y) both engines reproduce — encoded through the real YUV4MPEG2
     encoder. Returns a mapInPandas generator."""
-    from sparsity_spark.operators.multimodal import _INLINE_CODEC_SRC
+    from sparsity_spark.operators.multimodal import y4m_encode
 
-    src = _src or _INLINE_CODEC_SRC
-
-    def mk(batches, _src=src):
+    def mk(batches):
         import numpy as np
         import pandas as pd
 
-        ns = {"np": np}
-        exec(_src, ns)
-        encode_y4m = ns["encode_y4m"]
         T, H, W = 6, 12, 16
         t = np.arange(T, dtype=np.int64)[:, None, None]
         y = np.arange(H, dtype=np.int64)[None, :, None]
@@ -2296,7 +2251,7 @@ def _y4m_fixture_gen(_src=None):
             fr = np.stack(
                 [np.broadcast_to(c, (T, H, W)) for c in (yv, uv, vv)], axis=3
             ).astype(np.uint8)
-            return encode_y4m(fr)
+            return y4m_encode(fr)
 
         for pdf in batches:
             yield pd.DataFrame(
@@ -2420,19 +2375,16 @@ def _shot_y4m_assets(spark, sf_dir, mod: int = 3, rem: int = 1):
     Integer formulas both engines reproduce, encoded through the real
     Y4M encoder (the mono colorspace branch, which the color fixture
     never exercises)."""
-    from sparsity_spark.operators.multimodal import _INLINE_CODEC_SRC
+    from sparsity_spark.operators.multimodal import y4m_encode
 
     ids = load_table(spark, sf_dir, "documents").select("doc_id").filter(
         F.col("doc_id") % mod == rem
     ).distinct()
 
-    def mk(batches, _src=_INLINE_CODEC_SRC):
+    def mk(batches):
         import numpy as np
         import pandas as pd
 
-        ns = {"np": np}
-        exec(_src, ns)
-        encode_y4m = ns["encode_y4m"]
         T, H, W = 6, 12, 16
         t = np.arange(T, dtype=np.int64)[:, None, None]
         y = np.arange(H, dtype=np.int64)[None, :, None]
@@ -2442,7 +2394,7 @@ def _shot_y4m_assets(spark, sf_dir, mod: int = 3, rem: int = 1):
             seg_a = (doc_id * 7 + x * 2 + y * 5) % 190 + t
             seg_b = 200 + (doc_id * 3 + x * 5 + y * 2) % 50 + (t - 3)
             yv = np.where(t < 3, seg_a, seg_b)
-            return encode_y4m(np.broadcast_to(yv, (T, H, W)).astype(np.uint8))
+            return y4m_encode(np.broadcast_to(yv, (T, H, W)).astype(np.uint8))
 
         for pdf in batches:
             yield pd.DataFrame(
@@ -2516,19 +2468,16 @@ def _gif_assets(spark, sf_dir, mod: int = 4, rem: int = 1):
     formulas both engines reproduce, LZW-encoded through the real GIF
     encoder — odd doc_ids take the interlaced path so both row orders are
     on the decode path. chunk_count carries the real frame count."""
-    from sparsity_spark.operators.multimodal import _INLINE_CODEC_SRC
+    from sparsity_spark.operators.multimodal import gif_encode
 
     ids = load_table(spark, sf_dir, "documents").select("doc_id").filter(
         F.col("doc_id") % mod == rem
     ).distinct()
 
-    def mk(batches, _src=_INLINE_CODEC_SRC):
+    def mk(batches):
         import numpy as np
         import pandas as pd
 
-        ns = {"np": np}
-        exec(_src, ns)
-        encode_gif = ns["encode_gif"]
         T, H, W = 4, 12, 20
         pal = np.stack(
             [
@@ -2544,7 +2493,7 @@ def _gif_assets(spark, sf_dir, mod: int = 4, rem: int = 1):
 
         def gif(doc_id):
             idx = ((doc_id + 5 * t + 3 * y + x) % 8).astype(np.uint8)
-            return encode_gif(
+            return gif_encode(
                 np.broadcast_to(idx, (T, H, W)), pal, interlace=bool(doc_id % 2)
             )
 

@@ -17,6 +17,9 @@ from pyspark.sql import SparkSession
 # the engine's working set: see get_spark
 CODEGEN_CACHE_ENTRIES = 4096
 
+# the directory that holds the sparsity_spark package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _scratch_root() -> str:
     """Fast scratch for shuffle files, localCheckpoint blocks, and the
@@ -128,6 +131,11 @@ def get_spark(app_name: str = "sparsity_spark", cpus: int | None = None) -> Spar
         # which Spark only reads as long via this legacy flag; data.py
         # converts them back to proper timestamps
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # kernels call this package's module functions (media codecs, BPE
+        # merges, TrailDB decode), which cloudpickle ships by reference:
+        # the Python workers import the package from its root, also when
+        # the driver runs outside the repo
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     # measurement hook (r12): SPARK_GRAFT_EVENTLOG=<dir> turns on the
     # standard Spark event log so probes can count jobs/stages/tasks and

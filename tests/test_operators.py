@@ -1341,8 +1341,8 @@ def test_ivfpq_trained_codebook_recall_floor(spark):
 def test_ppm_decode_roundtrip_and_real_dhash_perceptual(spark):
     """VERDICT r5 #6: the REAL PPM decoder + real-pixel dHash behave
     perceptually — a lightly-noised image lands within max_hamming of its
-    original while a structurally different image does not — and the
-    Arrow kernel's inline parser is bit-identical to decode_ppm."""
+    original while a structurally different image does not; undecodable
+    and truncated payloads fingerprint to NULL."""
     import numpy as np
 
     from sparsity_spark.operators.multimodal import (
@@ -1372,11 +1372,12 @@ def test_ppm_decode_roundtrip_and_real_dhash_perceptual(spark):
             (2, bytearray(ppm_encode(noised))),
             (3, bytearray(ppm_encode(different))),
             (4, bytearray(b"\x00gibberish-not-a-ppm")),
+            (5, bytearray(ppm_encode(base)[:1000])),  # truncated pixels
         ],
         "doc_id long, content binary",
     )
     fps = {r["doc_id"]: r["dhash"] for r in dhash_real_fingerprints(assets).collect()}
-    assert fps[4] is None  # undecodable -> NULL, no crash
+    assert fps[4] is None and fps[5] is None  # undecodable -> NULL, no crash
 
     def ham(a, b):
         return bin((a & 0xFFFFFFFFFFFFFFFF) ^ (b & 0xFFFFFFFFFFFFFFFF)).count("1")
@@ -1394,8 +1395,7 @@ def test_wav_decode_roundtrip_and_audio_fingerprint_perceptual(spark):
     """The REAL WAV decoder + frame-energy fingerprint behave
     perceptually — lightly-noised audio lands within max_hamming of its
     original while a different signal does not — and the Arrow kernel's
-    inline RIFF parser agrees with decode_wav (same fingerprint via
-    either parse path)."""
+    fingerprint equals one recomputed from decode_wav."""
     import numpy as np
 
     from sparsity_spark.operators.multimodal import (
@@ -1443,11 +1443,13 @@ def test_wav_decode_roundtrip_and_audio_fingerprint_perceptual(spark):
             (3, bytearray(wav_encode(different))),
             (4, bytearray(b"\x00not-a-riff-payload")),
             (5, None),
+            (6, bytearray(wav_encode(base)[:700])),  # truncated data chunk
         ],
         "doc_id long, content binary",
     )
     fps = {r["doc_id"]: r["afp"] for r in audio_fingerprints(assets).collect()}
-    assert fps[4] is None and fps[5] is None  # undecodable/NULL -> NULL
+    # undecodable/NULL/truncated -> NULL
+    assert fps[4] is None and fps[5] is None and fps[6] is None
 
     def ham(a, b):
         return bin((a & 0xFFFFFFFFFFFFFFFF) ^ (b & 0xFFFFFFFFFFFFFFFF)).count("1")
@@ -1505,8 +1507,10 @@ def test_extract_features_real_ppm_parity(spark):
 
     g = int(FEATURE_DIM ** 0.5)
     payloads = [(i, _mk_ppm(i)) for i in range(6)]
-    assets = _binary_asset_df(spark, payloads, "image/x-portable-pixmap")
+    truncated = (99, _mk_ppm(99)[:1000])
+    assets = _binary_asset_df(spark, payloads + [truncated], "image/x-portable-pixmap")
     got = extract_features(assets, fake=False).toPandas().set_index("doc_id")
+    assert got.loc[99, "feature"] is None  # corrupt payload -> NULL feature
     for i, raw in payloads:
         img = decode_ppm(raw).astype(np.int64)
         luma = (299 * img[:, :, 0] + 587 * img[:, :, 1] + 114 * img[:, :, 2]) // 1000
@@ -1534,8 +1538,10 @@ def test_extract_features_real_wav_parity(spark):
     for i in range(4):
         s = ((np.arange(650, dtype=np.int64) ** 2 * 7 + i * 31) % 65536) - 32768
         rows.append((i, wav_encode(s.astype("<i2"))))
-    assets = _binary_asset_df(spark, rows, "audio/wav")
+    truncated = (99, rows[0][1][:700])  # data chunk cut mid-stream
+    assets = _binary_asset_df(spark, rows + [truncated], "audio/wav")
     got = extract_features(assets, fake=False).toPandas().set_index("doc_id")
+    assert got.loc[99, "feature"] is None  # corrupt payload -> NULL feature
     for i, raw in rows:
         s, _ = decode_wav(raw)
         s = np.asarray(s, dtype=np.int64)
@@ -1555,6 +1561,7 @@ def test_resize_images_real_ppm(spark):
 
     W, H = 9, 4
     rows = [(i, _mk_ppm(i)) for i in range(4)] + [(99, _mk_ppm(99, w=4, h=2))]
+    rows.append((98, _mk_ppm(98)[:1000]))  # truncated pixels
     assets = _binary_asset_df(spark, rows, "image/x-portable-pixmap")
     got = resize_images(assets, width=W, height=H, fake=False).toPandas().set_index("doc_id")
     for i, raw in rows[:4]:
@@ -1569,12 +1576,13 @@ def test_resize_images_real_ppm(spark):
         assert got.loc[i, "thumb_md5"] == hashlib.md5(payload).hexdigest()
         assert got.loc[i, "out_bytes"] == len(payload)
     assert pd.isna(got.loc[99, "thumb_md5"])  # smaller than target -> NULL
+    assert pd.isna(got.loc[98, "thumb_md5"]) and pd.isna(got.loc[98, "out_bytes"])
 
 
 def test_frame_sample_real_wav_and_ppm(spark):
     """frame_sample real paths: WAV frames hash equal int16 sample slices
     (recomputed through decode_wav); a PPM still hashes its pixel grid for
-    every sampled index."""
+    every sampled index; truncated payloads of either type yield NULLs."""
     import hashlib
 
     from sparsity_spark.operators.multimodal import decode_wav, frame_sample
@@ -1584,8 +1592,12 @@ def test_frame_sample_real_wav_and_ppm(spark):
 
     wav = wav_encode(s.astype("<i2"))
     ppm = _mk_ppm(7)
-    assets = _binary_asset_df(spark, [(1, wav), (2, ppm)], "audio/wav", chunk_count=8)
+    rows = [(1, wav), (2, ppm), (3, wav[:700]), (4, ppm[:1000])]
+    assets = _binary_asset_df(spark, rows, "audio/wav", chunk_count=8)
     got = frame_sample(assets, every_k=2, fake=False).toPandas()
+    for doc_id in (3, 4):
+        sub = got[got.doc_id == doc_id]
+        assert len(sub) == 4 and sub["frame_md5"].isna().all(), doc_id
     dec, _ = decode_wav(wav)
     dec = np.asarray(dec).reshape(-1)
     n = len(dec)
@@ -1601,17 +1613,21 @@ def test_frame_sample_real_wav_and_ppm(spark):
 
 
 def test_dhash_real_kernel_matches_decode_ppm(spark):
-    """r6 ADVICE: the dhash_real_fingerprints inline P6 parser must agree
-    with the reference decode_ppm — recompute each fingerprint from
-    decode_ppm's pixel grid and compare bit for bit."""
+    """r6 ADVICE: dhash_real_fingerprints must agree with the reference
+    decode_ppm — recompute each fingerprint from decode_ppm's pixel grid
+    and compare bit for bit. Truncated payloads interleaved with the good
+    ones share their Arrow batches: they come back NULL, and the NULLs
+    must not round their neighbours' 64-bit hashes."""
     from sparsity_spark.operators.multimodal import decode_ppm, dhash_real_fingerprints
 
     rows = [(i, _mk_ppm(i)) for i in range(8)]
+    mixed = [r for i, raw in rows for r in ((i, raw), (100 + i, raw[:1000]))]
     assets = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [r[0] for r in rows], "content": [bytearray(r[1]) for r in rows]}),
+        pd.DataFrame({"doc_id": [r[0] for r in mixed], "content": [bytearray(r[1]) for r in mixed]}),
         "doc_id long, content binary",
     )
-    got = dhash_real_fingerprints(assets).toPandas().set_index("doc_id")
+    got = {r["doc_id"]: r["dhash"] for r in dhash_real_fingerprints(assets).collect()}
+    assert all(got[100 + i] is None for i, _ in rows)
     for i, raw in rows:
         img = decode_ppm(raw).astype(np.int64)
         luma = (299 * img[:, :, 0] + 587 * img[:, :, 1] + 114 * img[:, :, 2]) // 1000
@@ -1627,7 +1643,7 @@ def test_dhash_real_kernel_matches_decode_ppm(spark):
                 if m[y, x] > m[y, x + 1]:
                     k = y * 8 + x
                     out += (1 << k) if k < 63 else -(1 << 63)
-        assert int(got.loc[i, "dhash"]) == out
+        assert got[i] == out
 
 
 def _mk_png_arr(doc_id, w=24, h=20):
@@ -1649,26 +1665,21 @@ def _mk_png_arr(doc_id, w=24, h=20):
 def test_png_codec_roundtrip_all_filters_and_color_types():
     """r7: decode(encode(img)) == img for gray/RGB/RGBA across every
     scanline filter (fixed 0-4 and the cycling mode); CRC corruption and
-    truncation raise ValueError, never return a wrong array; and the
-    inline kernel encoder/parser are bit-identical to the references."""
+    truncation raise ValueError, never return a wrong array; grayscale
+    and RGBA normalize to RGB."""
     from sparsity_spark.operators.multimodal import (
-        _INLINE_CODEC_SRC,
         decode_png,
         decode_stub,
+        image_to_rgb,
         png_encode,
     )
 
     rng = np.random.RandomState(17)
-    ns = {"np": np}
-    exec(_INLINE_CODEC_SRC, ns)
     for c in (1, 3, 4):
         for fm in (0, 1, 2, 3, 4, "cycle"):
             a = rng.randint(0, 256, size=(11, 13, c)).astype(np.uint8)
             p = png_encode(a, fm)
             assert (decode_png(p) == a).all(), (c, fm)
-            # inline kernel parity: same bytes out, same pixels back
-            assert ns["encode_png"](a, fm) == p
-            assert (ns["parse_png"](p) == a).all()
     a = rng.randint(0, 256, size=(8, 9, 3)).astype(np.uint8)
     p = png_encode(a, "cycle")
     assert (decode_stub(p, "image/png") == a).all()
@@ -1681,17 +1692,18 @@ def test_png_codec_roundtrip_all_filters_and_color_types():
         decode_png(p[: len(p) // 2])
     # gray normalizes to replicated RGB, RGBA drops alpha
     g = rng.randint(0, 256, size=(6, 7)).astype(np.uint8)
-    img = ns["parse_image"](png_encode(g, 1))
+    img = image_to_rgb(decode_png(png_encode(g, 1)))
     assert img.shape == (6, 7, 3) and (img[:, :, 0] == g).all() and (img[:, :, 2] == g).all()
     rgba = rng.randint(0, 256, size=(6, 7, 4)).astype(np.uint8)
-    assert (ns["parse_image"](png_encode(rgba, 4)) == rgba[:, :, :3]).all()
+    assert (image_to_rgb(decode_png(png_encode(rgba, 4))) == rgba[:, :, :3]).all()
 
 
 def test_png_real_pipeline_features_resize_dhash_framesample(spark):
     """r7: PNG payloads flow through EVERY generic multimodal operator for
     real — extract_features parity vs decode_png, resize_images thumbnails
     re-encoded as filter-0 PNG, dhash fingerprints recomputed from the
-    reference decoder, frame_sample hashing the normalized RGB grid."""
+    reference decoder, frame_sample hashing the normalized RGB grid; a
+    truncated PNG yields NULLs from every one of them."""
     import hashlib
 
     from sparsity_spark.operators.multimodal import (
@@ -1707,9 +1719,11 @@ def test_png_real_pipeline_features_resize_dhash_framesample(spark):
 
     g = int(FEATURE_DIM**0.5)
     rows = [(i, png_encode(_mk_png_arr(i), "cycle")) for i in range(6)]
-    assets = _binary_asset_df(spark, rows, "image/png")
+    truncated = (99, rows[1][1][: len(rows[1][1]) // 2])
+    assets = _binary_asset_df(spark, rows + [truncated], "image/png")
 
     got = extract_features(assets, fake=False).toPandas().set_index("doc_id")
+    assert got.loc[99, "feature"] is None
     for i, raw in rows:
         img = image_to_rgb(decode_png(raw)).astype(np.int64)
         luma = (299 * img[:, :, 0] + 587 * img[:, :, 1] + 114 * img[:, :, 2]) // 1000
@@ -1724,6 +1738,7 @@ def test_png_real_pipeline_features_resize_dhash_framesample(spark):
 
     W, H = 8, 5
     thumbs = resize_images(assets, width=W, height=H, fake=False).toPandas().set_index("doc_id")
+    assert pd.isna(thumbs.loc[99, "thumb_md5"]) and pd.isna(thumbs.loc[99, "out_bytes"])
     for i, raw in rows:
         img = image_to_rgb(decode_png(raw)).astype(np.int64)
         h, w = img.shape[:2]
@@ -1738,13 +1753,17 @@ def test_png_real_pipeline_features_resize_dhash_framesample(spark):
         assert thumbs.loc[i, "out_bytes"] == len(payload)
 
     big = [(i, png_encode(_mk_png_arr(i, w=36, h=16), "cycle")) for i in range(6)]
-    fps = dhash_real_fingerprints(
-        spark.createDataFrame(
-            pd.DataFrame({"doc_id": [r[0] for r in big],
-                          "content": [bytearray(r[1]) for r in big]}),
-            "doc_id long, content binary",
-        )
-    ).toPandas().set_index("doc_id")
+    fps = {
+        r["doc_id"]: r["dhash"]
+        for r in dhash_real_fingerprints(
+            spark.createDataFrame(
+                pd.DataFrame({"doc_id": [r[0] for r in big + [truncated]],
+                              "content": [bytearray(r[1]) for r in big + [truncated]]}),
+                "doc_id long, content binary",
+            )
+        ).collect()
+    }
+    assert fps[99] is None
     for i, raw in big:
         img = image_to_rgb(decode_png(raw)).astype(np.int64)
         luma = (299 * img[:, :, 0] + 587 * img[:, :, 1] + 114 * img[:, :, 2]) // 1000
@@ -1760,10 +1779,14 @@ def test_png_real_pipeline_features_resize_dhash_framesample(spark):
                 if m[y, x] > m[y, x + 1]:
                     k = y * 8 + x
                     out += (1 << k) if k < 63 else -(1 << 63)
-        assert int(fps.loc[i, "dhash"]) == out
+        assert fps[i] == out
 
-    frames = frame_sample(assets.limit(2), every_k=1, fake=False).toPandas()
-    for _, row in frames.iterrows():
+    frames = frame_sample(
+        assets.filter(F.col("doc_id").isin(0, 1, 99)), every_k=1, fake=False
+    ).toPandas()
+    bad = frames[frames.doc_id == 99]
+    assert len(bad) > 0 and bad["frame_md5"].isna().all()
+    for _, row in frames[frames.doc_id != 99].iterrows():
         raw = dict(rows)[int(row["doc_id"])]
         still = hashlib.md5(image_to_rgb(decode_png(raw)).tobytes()).hexdigest()
         assert row["frame_md5"] == still
@@ -1819,17 +1842,17 @@ def test_ivfpq_refine_recall_floor_clustered(spark):
 def test_adpcm_codec_roundtrip_parity_and_block_anchor(spark):
     """r7 IMA ADPCM: lossy 4:1 compression whose decode is a pure integer
     function — SNR bound on a smooth signal, every block's first sample
-    exact (stored verbatim in the header), deterministic across runs,
-    inline kernel encoder/decoder bit-identical to the references, and
+    exact (stored verbatim in the header), deterministic across runs, and
     audio fingerprints flow through the SAME generic kernels as PCM."""
     import numpy as np
 
     from sparsity_spark.operators.multimodal import (
-        _INLINE_CODEC_SRC,
         adpcm_wav_encode,
         audio_fingerprints,
         decode_stub,
         decode_wav,
+        extract_features,
+        frame_sample,
     )
 
     t = np.arange(1400)
@@ -1845,19 +1868,22 @@ def test_adpcm_codec_roundtrip_parity_and_block_anchor(spark):
         assert dec[b] == s[b], b
     assert len(p) < len(s) * 2 / 3  # genuinely compressed vs 16-bit PCM
 
-    ns = {"np": np}
-    exec(_INLINE_CODEC_SRC, ns)
-    assert ns["encode_adpcm_wav"](s, rate=8000) == p
-    assert (np.asarray(ns["parse_wav"](p)) == dec).all()
+    assert adpcm_wav_encode(s, rate=8000) == p
     assert (decode_stub(p, "audio/wav")[0] == dec).all()
 
-    # the generic fingerprint kernel accepts ADPCM WAVs transparently
-    assets = spark.createDataFrame(
-        [(1, bytearray(p)), (2, bytearray(b"\x00junk"))],
-        "doc_id long, content binary",
+    # the generic kernels accept ADPCM WAVs transparently; a truncated
+    # ADPCM payload is NULL from each of them, never a task failure
+    assets = _binary_asset_df(
+        spark, [(1, p), (2, b"\x00junk"), (3, p[: len(p) // 2])], "audio/wav", chunk_count=4
     )
     fps = {r["doc_id"]: r["afp"] for r in audio_fingerprints(assets).collect()}
-    assert fps[1] is not None and fps[2] is None
+    assert fps[1] is not None and fps[2] is None and fps[3] is None
+    riff = assets.filter(F.col("doc_id") != 2)  # no codec matches the junk row
+    feats = {r["doc_id"]: r["feature"] for r in extract_features(riff).collect()}
+    assert feats[1] is not None and feats[3] is None
+    md5s = frame_sample(riff, every_k=1).toPandas()
+    assert md5s[md5s.doc_id == 1]["frame_md5"].notna().all()
+    assert len(md5s[md5s.doc_id == 3]) == 4 and md5s[md5s.doc_id == 3]["frame_md5"].isna().all()
 
 
 def test_rrf_fuse_hand_checked_and_partitioned(spark):
@@ -1910,47 +1936,36 @@ def test_rrf_fuse_hand_checked_and_partitioned(spark):
 def test_adpcm_batch_encoder_byte_parity():
     """r7: the vectorized-across-streams ADPCM encoder must be
     byte-identical to the per-stream reference across block boundaries,
-    odd lengths, and single-sample streams — inline kernel copy included."""
+    odd lengths, and single-sample streams."""
     import numpy as np
 
     from sparsity_spark.operators.multimodal import (
-        _INLINE_CODEC_SRC,
         adpcm_wav_encode,
         adpcm_wav_encode_batch,
     )
 
-    ns = {"np": np}
-    exec(_INLINE_CODEC_SRC, ns)
     rng = np.random.RandomState(3)
     for n in (1, 5, 505, 506, 650, 1400):
         mat = rng.randint(-32768, 32768, size=(5, n)).astype(np.int16)
         batch = adpcm_wav_encode_batch(mat, rate=16000)
-        inline = ns["encode_adpcm_wav_batch"](mat, rate=16000)
         for d in range(5):
-            ref = adpcm_wav_encode(mat[d], rate=16000)
-            assert batch[d] == ref == inline[d], (n, d)
+            assert batch[d] == adpcm_wav_encode(mat[d], rate=16000), (n, d)
 
 
-def test_y4m_codec_roundtrip_and_inline_parity():
-    """r7: decode(encode(frames)) == frames for C444 and Cmono; the inline
-    kernel encoder/parser are bit-identical to the references; header
+def test_y4m_codec_roundtrip():
+    """r7: decode(encode(frames)) == frames for C444 and Cmono; header
     extension tags and per-frame parameters are skipped; malformed streams
     raise ValueError, never return a wrong array."""
     from sparsity_spark.operators.multimodal import (
-        _INLINE_CODEC_SRC,
         decode_stub,
         decode_y4m,
         y4m_encode,
     )
 
     rng = np.random.RandomState(23)
-    ns = {"np": np}
-    exec(_INLINE_CODEC_SRC, ns)
     fr = rng.randint(0, 256, size=(5, 9, 14, 3)).astype(np.uint8)
     p = y4m_encode(fr, fps=(30, 1))
     assert (decode_y4m(p) == fr).all()
-    assert ns["encode_y4m"](fr, (30, 1)) == p
-    assert (ns["parse_y4m"](p) == fr).all()
     assert (decode_stub(p, "video/x-yuv4mpeg") == fr).all()
     mono = rng.randint(0, 256, size=(3, 6, 8)).astype(np.uint8)
     pm = y4m_encode(mono)
@@ -2305,29 +2320,23 @@ def test_nb_classifier_learns_and_is_partition_invariant(spark):
     assert acc > base + 0.1, (acc, base)
 
 
-def test_gif_codec_roundtrip_lzw_and_inline_parity():
+def test_gif_codec_roundtrip_lzw():
     """r7: decode(encode(idx, pal)) == pal[idx] across interlace modes,
     palette sizes, LZW width growth (256-color random frame) and the
-    4095-entry dictionary freeze (long repetitive stream); the inline
-    kernel encoder/parser are bit-identical to the references; malformed
+    4095-entry dictionary freeze (long repetitive stream); malformed
     streams raise ValueError, never wrong pixels."""
     from sparsity_spark.operators.multimodal import (
-        _INLINE_CODEC_SRC,
         decode_gif,
         decode_stub,
         gif_encode,
     )
 
     rng = np.random.RandomState(41)
-    ns = {"np": np}
-    exec(_INLINE_CODEC_SRC, ns)
     pal8 = rng.randint(0, 256, (8, 3)).astype(np.uint8)
     idx = rng.randint(0, 8, (4, 10, 20)).astype(np.uint8)
     for inter in (False, True):
         p = gif_encode(idx, pal8, interlace=inter)
         assert (decode_gif(p) == pal8[idx]).all()
-        assert ns["encode_gif"](idx, pal8, inter) == p
-        assert (ns["parse_gif"](p) == pal8[idx]).all()
     p = gif_encode(idx, pal8)
     assert (decode_stub(p, "image/gif") == pal8[idx]).all()
 

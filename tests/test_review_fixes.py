@@ -406,13 +406,12 @@ def test_money_math_hash_stable_across_partitioning(spark, sf_dir):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-def test_r9_review_node2vec_steps_and_kcore_checkpoint_validate(spark):
+def test_r9_review_node2vec_steps_validate(spark):
     """r9 review: node2vec_walks(steps=0) would silently emit the step-1
-    hop; k_core(checkpoint_every=0) would grow the plan ~3x per peel
-    unbounded — both must raise instead."""
+    hop — it must raise instead."""
     import pytest
 
-    from sparsity_spark.operators.graph import k_core, node2vec_walks, symmetrize_edges
+    from sparsity_spark.operators.graph import node2vec_walks, symmetrize_edges
 
     edges = symmetrize_edges(
         spark.createDataFrame([(1, 2)], "a long, b long"), "a", "b", as_string=False
@@ -420,8 +419,6 @@ def test_r9_review_node2vec_steps_and_kcore_checkpoint_validate(spark):
     starts = spark.createDataFrame([(1,)], "node long")
     with pytest.raises(ValueError, match="steps"):
         node2vec_walks(edges, starts, steps=0)
-    with pytest.raises(ValueError, match="checkpoint_every"):
-        k_core(edges, k=1, checkpoint_every=0)
 
 
 def test_r9_review_join_level_axis0_raises(spark):
