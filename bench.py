@@ -318,7 +318,7 @@ SCALE_QUERIES = [
     "graph_pagerank_weighted",
     "dedup_containment_pairs",
     # top keywords ride the tfidf aggregates + one per-doc rank window;
-    # MMR is k map-only corpus passes with literal selected codes
+    # MMR is k map-only corpus passes with the selected codes in an Arrow kernel
     "text_top_keywords",
     "ann_mmr_diversified",
     # OHLC is one partial+final agg; A/B is two aggs + a day-sized join

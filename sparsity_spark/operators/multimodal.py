@@ -1,21 +1,24 @@
 """Multimodal columns: image/audio/video as opaque binary + typed metadata.
 
 The Spark-side plumbing is fully real — binary columns, metadata structs,
-deterministic chunking, Arrow-batched `mapInPandas` feature extraction with
-a declared schema. Six codecs are fully real, from-scratch over public
-formats: binary PPM (P6), PNG (stdlib zlib inflate + per-scanline
-unfiltering), GIF (from-scratch variable-width LZW, animated), 16-bit PCM
-WAV, IMA ADPCM WAV, and YUV4MPEG2 video. The remaining *codec* seam is
-JPEG/MP3/FLAC/H.264 (the container ships no decoders): for those media types
-`decode_stub` raises NotImplementedError unless `fake=True`, in which case
-a deterministic md5-seeded pseudo-feature vector stands in, so batch
-shapes, schemas and partitioning are exercised for real.
+deterministic chunking, and one Arrow-batched `mapInPandas` runner
+(`_per_asset`) with a declared schema that every media kernel uses, so
+each asset is decoded once per kernel. Six codecs are fully real,
+from-scratch over public formats: binary PPM (P6), PNG (stdlib zlib
+inflate + per-scanline unfiltering), GIF (from-scratch variable-width LZW,
+animated), 16-bit PCM WAV, IMA ADPCM WAV, and YUV4MPEG2 video. The
+remaining *codec* seam is JPEG/MP3/FLAC/H.264 (no decoder for them ships
+with Python or numpy): for those media types the kernels raise
+NotImplementedError unless `fake=True`, in which case a deterministic
+md5-seeded stand-in is used, so batch shapes, schemas and partitioning
+are exercised for real.
 """
 
 from __future__ import annotations
 
 import hashlib
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -75,8 +78,6 @@ def decode_ppm(payload: bytes):
     classic codec-free interchange format, so this one decoder makes the
     perceptual pipeline (dHash → pigeonhole pairs) run on actual pixel
     grids; compressed formats (JPEG/PNG) remain the documented seam."""
-    import numpy as np
-
     if not payload.startswith(b"P6"):
         raise ValueError("decode_ppm: not a binary PPM (P6) payload")
     # header tokens: magic, width, height, maxval — whitespace-separated,
@@ -106,8 +107,6 @@ def decode_ppm(payload: bytes):
 def ppm_encode(arr) -> bytes:
     """Inverse of :func:`decode_ppm` — (H, W, 3) uint8 → P6 bytes. Fixture
     construction for tests and the real-decode oracle query."""
-    import numpy as np
-
     a = np.asarray(arr, dtype=np.uint8)
     h, w, _ = a.shape
     return b"P6\n%d %d\n255\n" % (w, h) + a.tobytes()
@@ -130,7 +129,6 @@ def decode_png(payload: bytes):
     (their codecs are not in the container)."""
     import zlib
 
-    import numpy as np
 
     if payload[:8] != PNG_SIG:
         raise ValueError("decode_png: not a PNG payload")
@@ -220,7 +218,6 @@ def png_encode(arr, filter_mode="cycle") -> bytes:
     ``multimodal_png_real`` oracle query relies on)."""
     import zlib
 
-    import numpy as np
 
     a = np.asarray(arr, dtype=np.uint8)
     if a.ndim == 2:
@@ -284,8 +281,6 @@ def image_to_rgb(img):
     luma channel, RGBA drops alpha (deterministic — no compositing), RGB
     passes through. The single entry point downstream pipelines (features,
     dHash, thumbnails) use so PPM and PNG payloads flow identically."""
-    import numpy as np
-
     if img.ndim == 2:
         img = img[:, :, None]
     if img.shape[2] == 1:
@@ -300,14 +295,84 @@ def _decode_image(payload: bytes):
     return image_to_rgb(decode_png(payload))
 
 
+def _is_image(raw: bytes) -> bool:
+    """True for a PPM (P6) or PNG payload — the types `_decode_image` reads."""
+    return raw[:2] == b"P6" or raw[:8] == PNG_SIG
+
+
+def _luma(rgb):
+    """Integer BT.601 luma ``(299R + 587G + 114B) // 1000`` of an RGB array
+    of shape (..., 3): exact integers, so every engine agrees bit for bit."""
+    px = rgb.astype(np.int64)
+    return (299 * px[..., 0] + 587 * px[..., 1] + 114 * px[..., 2]) // 1000
+
+
+def _grid_means(stack, g: int):
+    """g×g block means of a (T, H, W) luma stack: floor-boundary blocks,
+    each summed over all T frames and all its pixels, ONE integer divide,
+    then /255.0 — every value an exact small rational both engines
+    reproduce. None when a frame is smaller than the grid."""
+    _, h, w = stack.shape
+    if h < g or w < g:
+        return None
+    px = stack.astype(np.int64)
+    feats = []
+    for by in range(g):
+        y0, y1 = (by * h) // g, ((by + 1) * h) // g
+        for bx in range(g):
+            x0, x1 = (bx * w) // g, ((bx + 1) * w) // g
+            blk = px[:, y0:y1, x0:x1]
+            feats.append(float(int(blk.sum()) // blk.size) / 255.0)
+    return feats
+
+
+def _pack_signs(bits) -> int:
+    """Pack gradient signs into one signed long: bit k is set when
+    ``bits[k]`` is true, and bit 63 carries its two's-complement weight —
+    the packing of :func:`dhash_expr` and ``dedup.simhash_expr``."""
+    return sum((1 << k) if k < 63 else -(1 << 63) for k, b in enumerate(bits) if b)
+
+
+# pandas dtypes for the integer output columns: nullable, so a NULL never
+# turns a 64-bit hash column into float64
+_NULLABLE_INT = {"long": "Int64", "bigint": "Int64", "int": "Int32"}
+
+
+def _per_asset(flat: DataFrame, id_col: str, out_ddl: str, fn) -> DataFrame:
+    """The one Arrow kernel runner of this module. ``flat`` is the kernel's
+    selected frame — ``id_col`` first, then the columns ``fn`` reads — and
+    ``fn(*values)`` maps one row to a list of output tuples, one per output
+    row (an empty list emits none). ``out_ddl`` declares the columns after
+    the id as flat ``name type`` pairs; the id keeps its input type."""
+    id_type = flat.schema[id_col].dataType.simpleString()
+    cols = [(id_col, id_type)] + [tuple(c.split()) for c in out_ddl.split(",")]
+
+    def run(batches):
+        for pdf in batches:
+            rows = [
+                (rid, *out)
+                for rid, *values in zip(*(pdf[c] for c in pdf.columns))
+                for out in fn(*values)
+            ]
+            by_col = list(zip(*rows)) or [()] * len(cols)
+            yield pd.DataFrame(
+                {
+                    name: pd.Series(list(vals), dtype=_NULLABLE_INT.get(typ, object))
+                    for (name, typ), vals in zip(cols, by_col)
+                }
+            )
+
+    return flat.mapInPandas(run, schema=f"{id_col} {id_type}, {out_ddl}")
+
+
 def decode_stub(payload: bytes, media_type: str):
     """The codec seam: binary PPM (P6) and PNG images, 16-bit PCM WAV
-    audio, and YUV4MPEG2 video decode for REAL via :func:`decode_ppm` /
-    :func:`decode_png` / :func:`decode_wav` / :func:`decode_y4m`; every
-    other media type still raises — the container ships no further
-    image/audio/video libraries, and the surrounding Spark plumbing
-    (schema, partitioning, Arrow batch shape) is exercised with the
-    deterministic fake instead."""
+    audio, YUV4MPEG2 video and GIF animations decode for REAL via
+    :func:`decode_ppm` / :func:`decode_png` / :func:`decode_wav` /
+    :func:`decode_y4m` / :func:`decode_gif`; every other media type still
+    raises — no further image/audio/video codec ships with Python or
+    numpy, and the surrounding Spark plumbing (schema, partitioning, Arrow
+    batch shape) is exercised with the deterministic fake instead."""
     if media_type == "image/x-portable-pixmap" or payload[:2] == b"P6":
         return decode_ppm(payload)
     if media_type == "image/png" or payload[:8] == PNG_SIG:
@@ -329,16 +394,15 @@ def extract_features(
     fake: bool = False,
     dim: int = FEATURE_DIM,
 ) -> DataFrame:
-    """Arrow-batched feature extraction over binary assets via mapInPandas.
-    The UDF sees (id, content, media_type) batches and must emit
-    (id, feature: array<double>, n_bytes) — schema enforced by Spark.
+    """Arrow-batched feature extraction over binary assets: each
+    (id, content, media_type) row becomes (id, feature: array<double>,
+    n_bytes), one decode per asset.
 
-    Real features for the real codecs (VERDICT r6 #3): PPM and PNG
-    payloads yield
-    a g×g block-mean luma grid (g = √dim; exact integer BT.601 luma,
-    floor-boundary blocks, integer mean, one division by 255.0 — every
-    value an exact small rational both engines reproduce, pinned by the
-    ``multimodal_features_real`` oracle row); WAV payloads yield `dim`
+    Real features for the real codecs (VERDICT r6 #3): PPM, PNG, Y4M and
+    GIF payloads yield a g×g block-mean luma grid (g = √dim; exact integer
+    BT.601 luma — a Y4M stream's Y plane is its luma — floor-boundary
+    blocks averaged over every frame, see :func:`_grid_means`; pinned by
+    the ``multimodal_features_real`` oracle row); WAV payloads yield `dim`
     exact integer frame energies (sum of squared int16 samples per
     floor-boundary frame, < 2^53 so exact as double). Other media types
     still raise — the documented codec seam — unless ``fake=True``, which
@@ -356,111 +420,68 @@ def extract_features(
             F.col(id_col), F.col("content"), F.col("meta.media_type").alias("media_type")
         )
     )
-    schema = f"{id_col} long, feature array<double>, n_bytes long"
 
-    def _extract(batches):
-        import numpy as np
-        import pandas as pd
+    def energies(samples):
+        s = np.asarray(samples, dtype=np.int64).reshape(-1)
+        n = len(s)
+        if n < dim:
+            return None
+        e = np.zeros(dim, dtype=np.int64)
+        np.add.at(e, (np.arange(n, dtype=np.int64) * dim) // n, s * s)
+        return [float(x) for x in e]
 
-        def image_features(img):
-            h, w = img.shape[:2]
-            if h < g or w < g:
-                return None
-            px = img.astype(np.int64)
-            luma = (299 * px[:, :, 0] + 587 * px[:, :, 1] + 114 * px[:, :, 2]) // 1000
-            feats = []
-            for by in range(g):
-                y0, y1 = (by * h) // g, ((by + 1) * h) // g
-                for bx in range(g):
-                    x0, x1 = (bx * w) // g, ((bx + 1) * w) // g
-                    blk = luma[y0:y1, x0:x1]
-                    feats.append(float(int(blk.sum()) // blk.size) / 255.0)
-            return feats
-
-        def audio_features(samples):
-            s = np.asarray(samples, dtype=np.int64).reshape(-1)
-            n = len(s)
-            if n < dim:
-                return None
-            f = (np.arange(n, dtype=np.int64) * dim) // n
-            e = np.zeros(dim, dtype=np.int64)
-            np.add.at(e, f, s * s)
-            return [float(x) for x in e]
-
-        def video_features(frames):
-            # temporal-mean luma grid: Y IS the luma plane in YUV, so the
-            # g×g block means run on exact integers — sum over all frames
-            # and pixels in the block, ONE integer divide, /255.0 (the
-            # image-feature rational discipline, extended in time)
-            y = frames if frames.ndim == 3 else frames[:, :, :, 0]
-            n, h, w = y.shape
-            if h < g or w < g:
-                return None
-            px = y.astype(np.int64)
-            feats = []
-            for by in range(g):
-                y0, y1 = (by * h) // g, ((by + 1) * h) // g
-                for bx in range(g):
-                    x0, x1 = (bx * w) // g, ((bx + 1) * w) // g
-                    blk = px[:, y0:y1, x0:x1]
-                    feats.append(float(int(blk.sum()) // blk.size) / 255.0)
-            return feats
-
-        for pdf in batches:
-            feats, nbytes = [], []
-            for payload, mt in zip(pdf["content"], pdf["media_type"]):
-                raw = bytes(payload)
-                if fake:
-                    feats.append(_fake_features(raw, dim))
-                elif raw[:2] == b"P6" or raw[:8] == PNG_SIG:
-                    if g * g != dim:
-                        raise ValueError(
-                            f"extract_features: image features need a square dim, got {dim}"
-                        )
-                    try:
-                        feats.append(image_features(_decode_image(raw)))
-                    except ValueError:
-                        feats.append(None)
-                elif raw[:4] == b"RIFF":
-                    try:
-                        feats.append(audio_features(decode_wav(raw)[0]))
-                    except ValueError:
-                        feats.append(None)
-                elif raw[:9] == b"YUV4MPEG2":
-                    if g * g != dim:
-                        raise ValueError(
-                            f"extract_features: video features need a square dim, got {dim}"
-                        )
-                    try:
-                        feats.append(video_features(decode_y4m(raw)))
-                    except ValueError:
-                        feats.append(None)
-                elif raw[:3] == b"GIF":
-                    if g * g != dim:
-                        raise ValueError(
-                            f"extract_features: video features need a square dim, got {dim}"
-                        )
-                    # GIF frames are RGB: integer BT.601 luma per frame,
-                    # then the same temporal-mean block grid as Y4M
-                    try:
-                        fr = decode_gif(raw).astype(np.int64)
-                    except ValueError:
-                        feats.append(None)
-                    else:
-                        luma = (
-                            299 * fr[:, :, :, 0] + 587 * fr[:, :, :, 1] + 114 * fr[:, :, :, 2]
-                        ) // 1000
-                        feats.append(video_features(luma))
-                else:
-                    raise NotImplementedError(
-                        f"no codec available for {mt}; install a decoder or pass fake=True"
-                    )
-                nbytes.append(len(raw))
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "feature": feats, "n_bytes": nbytes}
+    def feature(raw, media_type):
+        if fake:
+            return _fake_features(raw, dim)
+        try:
+            if raw[:4] == b"RIFF":
+                return energies(decode_wav(raw)[0])
+            if _is_image(raw):
+                stack = _luma(_decode_image(raw))[None]
+            elif raw[:9] == Y4M_SIG:
+                fr = decode_y4m(raw)
+                stack = fr if fr.ndim == 3 else fr[..., 0]
+            elif raw[:3] == b"GIF":
+                stack = _luma(decode_gif(raw))
+            else:
+                raise NotImplementedError(
+                    f"no codec available for {media_type}; install a decoder or pass fake=True"
+                )
+        except ValueError:
+            return None
+        if g * g != dim:
+            raise ValueError(
+                f"extract_features: image and video features need a square dim, got {dim}"
             )
+        return _grid_means(stack, g)
 
-    return flat.mapInPandas(_extract, schema=schema)
+    def per_asset(content, media_type):
+        raw = bytes(content)
+        return [(feature(raw, media_type), len(raw))]
+
+    return _per_asset(flat, id_col, "feature array<double>, n_bytes long", per_asset)
+
+
+def _sample_frames(
+    assets: DataFrame, id_col: str, every_k: int, out_ddl: str, frames_of
+) -> DataFrame:
+    """Shared body of the frame kernels: one row per sampled index
+    ``range(0, chunk_count, every_k)`` of every asset whose
+    ``meta.chunk_count`` is at least 1. ``frames_of(raw, n_frames)``
+    decodes the payload ONCE and returns ``at(idx)``, the output values of
+    frame ``idx`` — so an asset sampled at k indices is shipped and
+    decoded once, not k times. Returns (id, frame_idx, *out_ddl)."""
+    if every_k < 1:
+        raise ValueError(f"every_k must be >= 1, got {every_k}")
+    flat = assets.select(
+        F.col(id_col), F.col("content"), F.col("meta.chunk_count").alias("n_frames")
+    ).filter(F.col("n_frames") >= 1)
+
+    def sample(content, n_frames):
+        at = frames_of(bytes(content), int(n_frames))
+        return [(idx, *at(idx)) for idx in range(0, int(n_frames), every_k)]
+
+    return _per_asset(flat, id_col, f"frame_idx int, {out_ddl}", sample)
 
 
 def frame_sample(
@@ -469,97 +490,49 @@ def frame_sample(
     every_k: int = 4,
     fake: bool = False,
 ) -> DataFrame:
-    """Frame sampling: the sampled frame indices are derived and exploded
-    JVM-side (sequence over the metadata frame count, stride every_k) so
-    the Python UDF only receives rows it must actually decode; the
-    per-frame decode is Arrow-batched mapInPandas. Real for the real
+    """Frame sampling: frame indices ``0, every_k, 2·every_k, …`` below the
+    metadata frame count, each asset decoded once. Real for the real
     codecs (VERDICT r6 #3): a Y4M payload's frame f is the f-th ACTUAL
     decoded video frame and frame_md5 hashes its raw planar bytes (r7); a
-    WAV payload's frame f is the f-th of chunk_count equal sample slices
+    GIF payload's frame f hashes its decoded interleaved RGB bytes; a WAV
+    payload's frame f is the f-th of chunk_count equal sample slices
     (floor boundaries) hashing that slice's raw int16 bytes; a PPM/PNG
     payload is a still — every sampled frame hashes the decoded pixel
     grid. Compressed-video types remain the codec seam (raise) unless
     fake=True, which keeps the deterministic md5(payload:idx) stand-in.
-    Corrupt payloads of a supported type yield NULL md5s.
+    Corrupt payloads and indices past the decoded frames yield NULL md5s.
 
     Returns (id, frame_idx, frame_md5)."""
-    flat = assets.select(
-        F.col(id_col),
-        F.col("content"),
-        F.col("meta.chunk_count").alias("n_frames"),
-    ).filter(F.col("n_frames") >= 1)
-    sampled = flat.select(
-        F.col(id_col),
-        F.col("content"),
-        F.col("n_frames"),
-        F.explode(
-            F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every_k))
-        ).alias("frame_idx"),
-    )
-    schema = f"{id_col} long, frame_idx int, frame_md5 string"
 
-    def _decode(batches):
-        import numpy as np
-        import pandas as pd
+    def md5(a):
+        return hashlib.md5(a.tobytes()).hexdigest()
 
-        def frame_md5(raw, idx, n_frames):
-            if fake:
-                return hashlib.md5(raw + b":" + str(idx).encode()).hexdigest()
-            if raw[:2] == b"P6" or raw[:8] == PNG_SIG:
-                try:
-                    img = _decode_image(raw)
-                except ValueError:
-                    return None
-                return hashlib.md5(img.tobytes()).hexdigest()
+    def frames_of(raw, n_frames):
+        if fake:
+            return lambda idx: (hashlib.md5(raw + b":" + str(idx).encode()).hexdigest(),)
+        try:
+            if _is_image(raw):
+                still = (md5(_decode_image(raw)),)
+                return lambda idx: still
             if raw[:4] == b"RIFF":
-                try:
-                    s = np.asarray(decode_wav(raw)[0]).reshape(-1)
-                except ValueError:
-                    return None
+                s = np.asarray(decode_wav(raw)[0]).reshape(-1).astype("<i2")
                 n = len(s)
-                lo, hi = (idx * n) // n_frames, ((idx + 1) * n) // n_frames
-                return hashlib.md5(s[lo:hi].astype("<i2").tobytes()).hexdigest()
-            if raw[:9] == b"YUV4MPEG2":
-                # REAL video frames (r7): frame_idx indexes actual decoded
-                # frames; the md5 hashes the frame's raw PLANAR bytes
-                # exactly as stored in the stream (Y then U then V)
-                try:
-                    fr = decode_y4m(raw)
-                except ValueError:
-                    return None
-                if idx >= fr.shape[0]:
-                    return None
-                f = fr[idx]
-                planar = f if f.ndim == 2 else np.moveaxis(f, 2, 0)
-                return hashlib.md5(planar.tobytes()).hexdigest()
-            if raw[:3] == b"GIF":
-                # REAL animated-GIF frames (r7): md5 of the frame's decoded
-                # interleaved RGB bytes (post palette lookup + deinterlace)
-                try:
-                    fr = decode_gif(raw)
-                except ValueError:
-                    return None
-                if idx >= fr.shape[0]:
-                    return None
-                return hashlib.md5(fr[idx].tobytes()).hexdigest()
-            raise NotImplementedError(
-                "no codec available for this media type; install a decoder or pass fake=True"
-            )
+                return lambda idx: (md5(s[(idx * n) // n_frames : ((idx + 1) * n) // n_frames]),)
+            if raw[:9] == Y4M_SIG:
+                # planar bytes exactly as stored in the stream: Y, U, V
+                fr = decode_y4m(raw)
+                frames = fr if fr.ndim == 3 else np.moveaxis(fr, 3, 1)
+            elif raw[:3] == b"GIF":
+                frames = decode_gif(raw)
+            else:
+                raise NotImplementedError(
+                    "no codec available for this media type; install a decoder or pass fake=True"
+                )
+        except ValueError:
+            return lambda idx: (None,)
+        return lambda idx: (md5(frames[idx]) if idx < len(frames) else None,)
 
-        for pdf in batches:
-            md5s = [
-                frame_md5(bytes(c), int(i), int(nf))
-                for c, i, nf in zip(pdf["content"], pdf["frame_idx"], pdf["n_frames"])
-            ]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "frame_idx": pdf["frame_idx"].astype("int32"),
-                    "frame_md5": md5s,
-                }
-            )
-
-    return sampled.mapInPandas(_decode, schema=schema)
+    return _sample_frames(assets, id_col, every_k, "frame_md5 string", frames_of)
 
 
 def resize_images(
@@ -569,80 +542,48 @@ def resize_images(
     height: int = 64,
     fake: bool = False,
 ) -> DataFrame:
-    """Image resize: Arrow-batched mapInPandas whose UDF contract is
-    (id, content, n_bytes) → (id, width, height, thumb_md5, out_bytes).
-    PPM (P6) and PNG payloads are resized for REAL (VERDICT r6 #3): per-channel
-    block-mean downsample to width×height (floor-boundary blocks, exact
-    integer means), re-encoded as P6 — thumb_md5 hashes the actual
-    thumbnail payload and out_bytes is its true size; corrupt or
-    smaller-than-target images yield NULLs. Other image types remain the
-    codec seam (raise), and fake=True keeps the deterministic
+    """Image resize: (id, content) → (id, width, height, thumb_md5,
+    out_bytes), one decode per asset. PPM (P6) and PNG payloads are
+    resized for REAL (VERDICT r6 #3): per-channel block-mean downsample to
+    width×height (floor-boundary blocks, exact integer means), re-encoded
+    as P6 for P6 inputs and filter-0 PNG for PNG inputs — thumb_md5 hashes
+    the actual thumbnail payload and out_bytes is its true size; corrupt
+    or smaller-than-target images yield NULLs. Other image types remain
+    the codec seam (raise), and fake=True keeps the deterministic
     md5(payload:WxH) stand-in for all types."""
-    flat = assets.select(
-        F.col(id_col), F.col("content"), F.col("meta.n_bytes").alias("n_bytes")
-    )
-    schema = f"{id_col} long, width int, height int, thumb_md5 string, out_bytes long"
+    tag = f":{width}x{height}".encode()
 
-    def _resize(batches):
-        import numpy as np
-        import pandas as pd
-
-        def thumb(raw):
-            # real downsample (VERDICT r6 #3): per-channel block means
-            # (floor boundaries, integer mean — the dHash segmentation
-            # discipline), re-encoded as P6 for P6 inputs and filter-0
-            # PNG for PNG inputs; md5 is of the REAL thumbnail payload.
-            # None for corrupt or smaller-than-target images.
-            try:
-                img = _decode_image(raw)
-            except ValueError:
-                return None, None
-            h, w = img.shape[:2]
-            if h < height or w < width:
-                return None, None
-            px = img.astype(np.int64)
-            t = np.empty((height, width, 3), dtype=np.uint8)
-            for by in range(height):
-                y0, y1 = (by * h) // height, ((by + 1) * h) // height
-                for bx in range(width):
-                    x0, x1 = (bx * w) // width, ((bx + 1) * w) // width
-                    blk = px[y0:y1, x0:x1]
-                    npix = blk.shape[0] * blk.shape[1]
-                    t[by, bx] = blk.sum(axis=(0, 1)) // npix
-            if raw[:8] == PNG_SIG:
-                payload = png_encode(t, 0)
-            else:
-                payload = ppm_encode(t)
-            return hashlib.md5(payload).hexdigest(), len(payload)
-
-        for pdf in batches:
-            if fake:
-                tag = f":{width}x{height}".encode()
-                md5s = [hashlib.md5(bytes(c) + tag).hexdigest() for c in pdf["content"]]
-                obytes = [3 * width * height] * len(pdf)
-            else:
-                md5s, obytes = [], []
-                for c in pdf["content"]:
-                    raw = bytes(c)
-                    if raw[:2] != b"P6" and raw[:8] != PNG_SIG:
-                        raise NotImplementedError(
-                            "no codec available for this image type; "
-                            "install a decoder or pass fake=True"
-                        )
-                    m, nb = thumb(raw)
-                    md5s.append(m)
-                    obytes.append(nb)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": width,
-                    "height": height,
-                    "thumb_md5": md5s,
-                    "out_bytes": obytes,
-                }
+    def thumb(raw):
+        if fake:
+            return hashlib.md5(raw + tag).hexdigest(), 3 * width * height
+        if not _is_image(raw):
+            raise NotImplementedError(
+                "no codec available for this image type; install a decoder or pass fake=True"
             )
+        try:
+            img = _decode_image(raw)
+        except ValueError:
+            return None, None
+        h, w = img.shape[:2]
+        if h < height or w < width:
+            return None, None
+        px = img.astype(np.int64)
+        t = np.empty((height, width, 3), dtype=np.uint8)
+        for by in range(height):
+            y0, y1 = (by * h) // height, ((by + 1) * h) // height
+            for bx in range(width):
+                x0, x1 = (bx * w) // width, ((bx + 1) * w) // width
+                blk = px[y0:y1, x0:x1]
+                t[by, bx] = blk.sum(axis=(0, 1)) // (blk.shape[0] * blk.shape[1])
+        payload = png_encode(t, 0) if raw[:8] == PNG_SIG else ppm_encode(t)
+        return hashlib.md5(payload).hexdigest(), len(payload)
 
-    return flat.mapInPandas(_resize, schema=schema)
+    return _per_asset(
+        assets.select(F.col(id_col), F.col("content")),
+        id_col,
+        "width int, height int, thumb_md5 string, out_bytes long",
+        lambda content: [(width, height, *thumb(bytes(content)))],
+    )
 
 
 def load_binary_files(
@@ -764,40 +705,22 @@ def dhash_fingerprints(
     from sparsity_spark.util import ensure_parallelism
 
     npix = bits + 1
-    id_type = assets.schema[id_col].dataType.simpleString()
     flat = ensure_parallelism(assets.select(F.col(id_col), F.col(content_col)))
 
-    def kern(batches, _bits=bits, _npix=npix, _id=id_col, _c=content_col):
-        import hashlib
+    def dh(raw):
+        # NULL content → NULL dhash, mirroring dhash_expr's null
+        # propagation (r5 ADVICE: bytes(None) raised and failed the job)
+        if raw is None:
+            return None
+        hx = bytes(raw).hex().upper()
+        L = len(hx)
+        if L < npix:
+            return None
+        segs = (hx[(i * L) // npix : ((i + 1) * L) // npix] for i in range(npix))
+        pix = [int(hashlib.md5(seg.encode()).hexdigest()[:8], 16) for seg in segs]
+        return _pack_signs(pix[i] > pix[i + 1] for i in range(bits))
 
-        import pandas as pd
-
-        def dh(raw):
-            # NULL content → NULL dhash, mirroring dhash_expr's null
-            # propagation (r5 ADVICE: bytes(None) raised and failed the job)
-            if raw is None:
-                return None
-            hx = bytes(raw).hex().upper()
-            L = len(hx)
-            if L < _npix:
-                return None
-            pix = []
-            for i in range(_npix):
-                seg = hx[(i * L) // _npix : ((i + 1) * L) // _npix]
-                pix.append(int(hashlib.md5(seg.encode()).hexdigest()[:8], 16))
-            out = 0
-            for i in range(_bits):
-                if pix[i] > pix[i + 1]:
-                    out += (1 << i) if i < 63 else -(1 << 63)
-            return out
-
-        for pdf in batches:
-            # Int64: a NULL in an object list would turn the column into
-            # float64 and round every 64-bit hash in the batch
-            dhash = pd.array([dh(c) for c in pdf[_c]], dtype="Int64")
-            yield pd.DataFrame({_id: pdf[_id], "dhash": dhash})
-
-    return flat.mapInPandas(kern, schema=f"{id_col} {id_type}, dhash long")
+    return _per_asset(flat, id_col, "dhash long", lambda raw: [(dh(raw),)])
 
 
 def phash_pairs(
@@ -858,44 +781,29 @@ def dhash_real_fingerprints(
     image content."""
     from sparsity_spark.util import ensure_parallelism
 
-    id_type = assets.schema[id_col].dataType.simpleString()
     flat = ensure_parallelism(assets.select(F.col(id_col), F.col(content_col)))
 
-    def kern(batches, _id=id_col, _c=content_col):
-        import numpy as np
-        import pandas as pd
+    def dh(raw):
+        if raw is None:
+            return None
+        try:
+            img = _decode_image(bytes(raw))
+        except Exception:
+            return None
+        h, w = img.shape[:2]
+        if w < 9 or h < 8:
+            return None
+        luma = _luma(img)
+        m = np.empty((8, 9), dtype=np.float64)
+        for by in range(8):
+            y0, y1 = (by * h) // 8, ((by + 1) * h) // 8
+            for bx in range(9):
+                x0, x1 = (bx * w) // 9, ((bx + 1) * w) // 9
+                m[by, bx] = luma[y0:y1, x0:x1].mean()
+        # bit y·8 + x is the sign of the (y, x) → (y, x+1) gradient
+        return _pack_signs((m[:, :8] > m[:, 1:]).reshape(-1))
 
-        def dh(raw):
-            if raw is None:
-                return None
-            try:
-                img = _decode_image(bytes(raw))
-            except Exception:
-                return None
-            h, w = img.shape[:2]
-            if w < 9 or h < 8:
-                return None
-            px = img.astype(np.int64)
-            luma = (299 * px[:, :, 0] + 587 * px[:, :, 1] + 114 * px[:, :, 2]) // 1000
-            m = np.empty((8, 9), dtype=np.float64)
-            for by in range(8):
-                y0, y1 = (by * h) // 8, ((by + 1) * h) // 8
-                for bx in range(9):
-                    x0, x1 = (bx * w) // 9, ((bx + 1) * w) // 9
-                    m[by, bx] = luma[y0:y1, x0:x1].mean()
-            out = 0
-            for y in range(8):
-                for x in range(8):
-                    if m[y, x] > m[y, x + 1]:
-                        k = y * 8 + x
-                        out += (1 << k) if k < 63 else -(1 << 63)
-            return out
-
-        for pdf in batches:
-            dhash = pd.array([dh(c) for c in pdf[_c]], dtype="Int64")
-            yield pd.DataFrame({_id: pdf[_id], "dhash": dhash})
-
-    return flat.mapInPandas(kern, schema=f"{id_col} {id_type}, dhash long")
+    return _per_asset(flat, id_col, "dhash long", lambda raw: [(dh(raw),)])
 
 
 def phash_pairs_real(
@@ -991,8 +899,6 @@ def adpcm_wav_encode(samples, rate: int = 16000, block_align: int = 256) -> byte
     integer arithmetic — the decoded waveform is a pure deterministic
     function of the input, which is what lets a SQL oracle replay the
     whole quantizer state machine."""
-    import numpy as np
-
     s = np.asarray(samples, dtype=np.int64).reshape(-1)
     n = len(s)
     if n == 0:
@@ -1069,8 +975,6 @@ def decode_wav(payload: bytes):
     payload) raises ValueError rather than decoding a shorter stream.
     MP3/AAC/FLAC remain the documented seam. Returns
     (samples, sample_rate)."""
-    import numpy as np
-
     if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise ValueError("decode_wav: not a RIFF/WAVE payload")
     pos, fmt, data, fact = 12, None, None, None
@@ -1125,8 +1029,6 @@ def decode_wav(payload: bytes):
 def wav_encode(samples, rate: int = 16000) -> bytes:
     """Inverse of :func:`decode_wav` — int16 mono samples → RIFF/WAVE
     bytes. Fixture construction for tests and the real-decode oracle."""
-    import numpy as np
-
     s = np.asarray(samples, dtype="<i2")
     data = s.tobytes()
     fmt = (
@@ -1164,41 +1066,25 @@ def audio_fingerprints(
     audio content."""
     from sparsity_spark.util import ensure_parallelism
 
-    id_type = assets.schema[id_col].dataType.simpleString()
     flat = ensure_parallelism(assets.select(F.col(id_col), F.col(content_col)))
 
-    def kern(batches, _id=id_col, _c=content_col):
-        import numpy as np
-        import pandas as pd
+    def afp(raw):
+        if raw is None:
+            return None
+        try:
+            s = np.asarray(decode_wav(bytes(raw))[0]).astype(np.int64)
+        except Exception:
+            return None
+        if s.ndim > 1:  # mixdown: first channel (deterministic)
+            s = s[:, 0]
+        n = len(s)
+        if n < 65:
+            return None
+        sq = s * s
+        e = [int(sq[(f * n) // 65 : ((f + 1) * n) // 65].sum()) for f in range(65)]
+        return _pack_signs(e[k] > e[k + 1] for k in range(64))
 
-        def afp(raw):
-            if raw is None:
-                return None
-            try:
-                s = np.asarray(decode_wav(bytes(raw))[0]).astype(np.int64)
-            except Exception:
-                return None
-            if s.ndim > 1:  # mixdown: first channel (deterministic)
-                s = s[:, 0]
-            n = len(s)
-            if n < 65:
-                return None
-            sq = s * s
-            e = [
-                int(sq[(f * n) // 65 : ((f + 1) * n) // 65].sum())
-                for f in range(65)
-            ]
-            out = 0
-            for k in range(64):
-                if e[k] > e[k + 1]:
-                    out += (1 << k) if k < 63 else -(1 << 63)
-            return out
-
-        for pdf in batches:
-            afps = pd.array([afp(c) for c in pdf[_c]], dtype="Int64")
-            yield pd.DataFrame({_id: pdf[_id], "afp": afps})
-
-    return flat.mapInPandas(kern, schema=f"{id_col} {id_type}, afp long")
+    return _per_asset(flat, id_col, "afp long", lambda raw: [(afp(raw),)])
 
 
 def audio_pairs(
@@ -1228,8 +1114,6 @@ def adpcm_wav_encode_batch(mat, rate: int = 16000, block_align: int = 256) -> li
     per-doc cost that no longer dominates the real decode under test
     (measured: the per-doc Python encoder was half of the 23 s sf1
     multimodal_adpcm_real row)."""
-    import numpy as np
-
     s = np.asarray(mat, dtype=np.int64)
     if s.ndim != 2 or s.shape[1] == 0:
         raise ValueError("adpcm_wav_encode_batch: need a (D, n) sample matrix")
@@ -1332,8 +1216,6 @@ def decode_y4m(payload: bytes):
     stream tag, truncated frame, zero frames) raises ValueError — never a
     wrong array.
     """
-    import numpy as np
-
     if not payload.startswith(Y4M_SIG):
         raise ValueError("decode_y4m: not a YUV4MPEG2 payload")
     nl = payload.find(b"\n", 0, 512)
@@ -1399,8 +1281,6 @@ def y4m_encode(frames, fps=(25, 1)) -> bytes:
     """Inverse of :func:`decode_y4m` — ``(N, H, W, 3)`` uint8 YUV frames →
     C444 stream, ``(N, H, W)`` → Cmono. Fixture construction for tests and
     the real-decode oracle queries; round-trip parity is test-pinned."""
-    import numpy as np
-
     a = np.asarray(frames, dtype=np.uint8)
     if a.ndim == 3:
         n, h, w = a.shape
@@ -1416,6 +1296,34 @@ def y4m_encode(frames, fps=(25, 1)) -> bytes:
     return header + b"".join(b"FRAME\n" + f.tobytes() for f in body)
 
 
+def _frame_channel_sums(
+    assets: DataFrame, id_col: str, every_k: int, decode, sum_cols: str
+) -> DataFrame:
+    """Shared body of :func:`video_frame_stats` and :func:`gif_frame_stats`:
+    EXACT integer per-channel sums of each sampled frame of
+    ``decode(payload)``, one decode per asset. A single-plane frame gives
+    (sum, NULL, NULL); a corrupt payload or an index past the decoded
+    frames gives all NULLs."""
+
+    def frames_of(raw, n_frames):
+        try:
+            frames = decode(raw)
+        except ValueError:
+            frames = ()
+
+        def at(idx):
+            if idx >= len(frames):
+                return None, None, None
+            f = frames[idx].astype(np.int64)
+            if f.ndim == 2:
+                return int(f.sum()), None, None
+            return tuple(int(c) for c in f.sum(axis=(0, 1)))
+
+        return at
+
+    return _sample_frames(assets, id_col, every_k, sum_cols, frames_of)
+
+
 def video_frame_stats(
     assets: DataFrame,
     id_col: str = "doc_id",
@@ -1427,62 +1335,13 @@ def video_frame_stats(
     pinned in unit tests instead because the SQL oracle engine cannot hash
     constructed binary).
 
-    Sampled frame indices are derived and exploded JVM-side from the
-    metadata frame count (the frame_sample discipline — Python only sees
-    rows it must decode); the per-frame decode is Arrow-batched
-    mapInPandas over :func:`decode_y4m`. Returns
+    Frame indices are sampled as in :func:`frame_sample`, with one
+    :func:`decode_y4m` per asset. Returns
     (id, frame_idx, y_sum, u_sum, v_sum) — u/v NULL for Cmono streams,
     all three NULL for corrupt payloads or out-of-range indices."""
-    flat = assets.select(
-        F.col(id_col),
-        F.col("content"),
-        F.col("meta.chunk_count").alias("n_frames"),
-    ).filter(F.col("n_frames") >= 1)
-    sampled = flat.select(
-        F.col(id_col),
-        F.col("content"),
-        F.explode(
-            F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every_k))
-        ).alias("frame_idx"),
+    return _frame_channel_sums(
+        assets, id_col, every_k, decode_y4m, "y_sum long, u_sum long, v_sum long"
     )
-    schema = f"{id_col} long, frame_idx int, y_sum long, u_sum long, v_sum long"
-
-    def _stats(batches):
-        import numpy as np
-        import pandas as pd
-
-        def stats(raw, idx):
-            try:
-                fr = decode_y4m(raw)
-            except ValueError:
-                return None, None, None
-            if idx >= fr.shape[0]:
-                return None, None, None
-            f = fr[idx].astype(np.int64)
-            if f.ndim == 2:
-                return int(f.sum()), None, None
-            return (
-                int(f[:, :, 0].sum()),
-                int(f[:, :, 1].sum()),
-                int(f[:, :, 2].sum()),
-            )
-
-        for pdf in batches:
-            rows = [
-                stats(bytes(c), int(i))
-                for c, i in zip(pdf["content"], pdf["frame_idx"])
-            ]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "frame_idx": pdf["frame_idx"].astype("int32"),
-                    "y_sum": pd.array([r[0] for r in rows], dtype="Int64"),
-                    "u_sum": pd.array([r[1] for r in rows], dtype="Int64"),
-                    "v_sum": pd.array([r[2] for r in rows], dtype="Int64"),
-                }
-            )
-
-    return sampled.mapInPandas(_stats, schema=schema)
 
 
 def video_shot_mad(assets: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1502,36 +1361,19 @@ def video_shot_mad(assets: DataFrame, id_col: str = "doc_id") -> DataFrame:
     contribute no rows (the decode-or-ValueError contract is pinned in
     unit tests; a signal row from a corrupt stream would be a wrong
     answer, not a degraded one)."""
-    flat = assets.select(F.col(id_col), F.col("content"))
-    schema = f"{id_col} long, frame_idx int, mad long"
 
-    def _mad(batches):
-        import numpy as np
-        import pandas as pd
+    def mads(content):
+        try:
+            fr = decode_y4m(bytes(content))
+        except ValueError:
+            return []
+        luma = (fr if fr.ndim == 3 else fr[..., 0]).astype(np.int64)
+        per_pair = np.abs(np.diff(luma, axis=0)).sum(axis=(1, 2))
+        return [(t, int(m)) for t, m in enumerate(per_pair, start=1)]
 
-        for pdf in batches:
-            ids, idxs, mads = [], [], []
-            for rid, c in zip(pdf[id_col], pdf["content"]):
-                try:
-                    fr = decode_y4m(bytes(c))
-                except ValueError:
-                    continue
-                luma = fr if fr.ndim == 3 else fr[:, :, :, 0]
-                d = np.abs(np.diff(luma.astype(np.int64), axis=0))
-                per_pair = d.reshape(d.shape[0], -1).sum(axis=1)
-                for t, m in enumerate(per_pair, start=1):
-                    ids.append(rid)
-                    idxs.append(t)
-                    mads.append(int(m))
-            yield pd.DataFrame(
-                {
-                    id_col: pd.array(ids, dtype="Int64"),
-                    "frame_idx": pd.array(idxs, dtype="Int32"),
-                    "mad": pd.array(mads, dtype="Int64"),
-                }
-            )
-
-    return flat.mapInPandas(_mad, schema=schema)
+    return _per_asset(
+        assets.select(F.col(id_col), F.col("content")), id_col, "frame_idx int, mad long", mads
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1674,8 +1516,6 @@ def decode_gif(payload: bytes):
     frames would need disposal-method compositing — refused loudly).
     Returns (n_frames, H, W, 3) uint8 RGB; any malformation raises
     ValueError."""
-    import numpy as np
-
     if payload[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("decode_gif: not a GIF payload")
     if len(payload) < 13:
@@ -1773,8 +1613,6 @@ def gif_encode(frames_idx, palette, interlace: bool = False) -> bytes:
     uint8 palette indices + a (k≤256, 3) palette → a real GIF89a stream
     (global color table, one full-screen image descriptor per frame,
     proper LZW). decode(encode(idx, pal)) == pal[idx] is test-pinned."""
-    import numpy as np
-
     fi = np.asarray(frames_idx, dtype=np.uint8)
     pal = np.asarray(palette, dtype=np.uint8)
     if fi.ndim != 3 or fi.shape[0] == 0:
@@ -1823,54 +1661,9 @@ def gif_frame_stats(
     in LZW → sub-block walk → palette lookup → deinterlace breaks the
     sums). Returns (id, frame_idx, r_sum, g_sum, b_sum) — NULLs for
     corrupt payloads or out-of-range indices."""
-    flat = assets.select(
-        F.col(id_col),
-        F.col("content"),
-        F.col("meta.chunk_count").alias("n_frames"),
-    ).filter(F.col("n_frames") >= 1)
-    sampled = flat.select(
-        F.col(id_col),
-        F.col("content"),
-        F.explode(
-            F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every_k))
-        ).alias("frame_idx"),
+    return _frame_channel_sums(
+        assets, id_col, every_k, decode_gif, "r_sum long, g_sum long, b_sum long"
     )
-    schema = f"{id_col} long, frame_idx int, r_sum long, g_sum long, b_sum long"
-
-    def _stats(batches):
-        import numpy as np
-        import pandas as pd
-
-        def stats(raw, idx):
-            try:
-                fr = decode_gif(raw)
-            except ValueError:
-                return None, None, None
-            if idx >= fr.shape[0]:
-                return None, None, None
-            f = fr[idx].astype(np.int64)
-            return (
-                int(f[:, :, 0].sum()),
-                int(f[:, :, 1].sum()),
-                int(f[:, :, 2].sum()),
-            )
-
-        for pdf in batches:
-            rows = [
-                stats(bytes(c), int(i))
-                for c, i in zip(pdf["content"], pdf["frame_idx"])
-            ]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "frame_idx": pdf["frame_idx"].astype("int32"),
-                    "r_sum": pd.array([r[0] for r in rows], dtype="Int64"),
-                    "g_sum": pd.array([r[1] for r in rows], dtype="Int64"),
-                    "b_sum": pd.array([r[2] for r in rows], dtype="Int64"),
-                }
-            )
-
-    return sampled.mapInPandas(_stats, schema=schema)
 
 
 def dft8_coeffs(scale: int = 512):
@@ -1919,8 +1712,6 @@ def audio_spectral_bands(
     the numpy matmul still doing all the per-sample work. Sums beyond
     2^63 raise (the BIGINT output column cannot carry them; shrink
     ``coeff_scale``). Corrupt payloads contribute no rows."""
-    import numpy as np
-
     if frame != 8:
         raise ValueError("audio_spectral_bands: the integer table is 8-point")
     Ct, St = dft8_coeffs(coeff_scale)
@@ -1929,45 +1720,30 @@ def audio_spectral_bands(
     # frames per int64-safe partial sum: worst-case per-frame bin energy
     # is 2·(frame·32768·coeff_scale)², so chunks of this size cannot wrap
     safe_chunk = max(1, (1 << 62) // (2 * (frame * 32768 * coeff_scale) ** 2))
-    flat = assets.select(F.col(id_col), F.col("content"))
-    schema = f"{id_col} long, bin int, energy long"
 
-    def _bands(batches, _C=Cm, _S=Sm, _frame=frame, _chunk=safe_chunk):
-        import pandas as pd
-
-        for pdf in batches:
-            ids, bins, energies = [], [], []
-            for rid, c in zip(pdf[id_col], pdf["content"]):
-                try:
-                    v = decode_wav(bytes(c))[0].astype(np.int64)
-                except ValueError:
-                    continue
-                nf = len(v) // _frame
-                if nf == 0:
-                    continue
-                X = v[: nf * _frame].reshape(nf, _frame)
-                re = X @ _C.T  # (nf, 5)
-                im = X @ _S.T
-                per_frame = re * re + im * im  # each entry < 2^63 (bound above)
-                e = [0] * _C.shape[0]
-                for lo in range(0, nf, _chunk):
-                    part = per_frame[lo : lo + _chunk].sum(axis=0)
-                    e = [acc + int(p) for acc, p in zip(e, part)]
-                if max(e) >= 1 << 63:
-                    raise ValueError(
-                        "audio_spectral_bands: bin energy exceeds BIGINT; "
-                        "shrink coeff_scale for assets this long/loud"
-                    )
-                for k in range(_C.shape[0]):
-                    ids.append(rid)
-                    bins.append(k)
-                    energies.append(e[k])
-            yield pd.DataFrame(
-                {
-                    id_col: pd.array(ids, dtype="Int64"),
-                    "bin": pd.array(bins, dtype="Int32"),
-                    "energy": pd.array(energies, dtype="Int64"),
-                }
+    def bands(content):
+        try:
+            v = decode_wav(bytes(content))[0].astype(np.int64)
+        except ValueError:
+            return []
+        nf = len(v) // frame
+        if nf == 0:
+            return []
+        X = v[: nf * frame].reshape(nf, frame)
+        re = X @ Cm.T  # (nf, 5)
+        im = X @ Sm.T
+        per_frame = re * re + im * im  # each entry < 2^63 (bound above)
+        e = [0] * Cm.shape[0]
+        for lo in range(0, nf, safe_chunk):
+            part = per_frame[lo : lo + safe_chunk].sum(axis=0)
+            e = [acc + int(p) for acc, p in zip(e, part)]
+        if max(e) >= 1 << 63:
+            raise ValueError(
+                "audio_spectral_bands: bin energy exceeds BIGINT; "
+                "shrink coeff_scale for assets this long/loud"
             )
+        return list(enumerate(e))
 
-    return flat.mapInPandas(_bands, schema=schema)
+    return _per_asset(
+        assets.select(F.col(id_col), F.col("content")), id_col, "bin int, energy long", bands
+    )

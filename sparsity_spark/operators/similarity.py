@@ -2026,19 +2026,6 @@ def _sq8_codes(df: DataFrame, id_alias: str, id_col: str, vec_col: str):
     return df.select(F.col(id_col).alias(id_alias), codes.alias(f"{id_alias}_c"))
 
 
-# mmr_topk: max total literals (selected-codes × dim) allowed to inline
-# into the per-step plan before using the broadcast-joined selected-set
-# DataFrame. Default 0 — ALWAYS broadcast (r11): inlined literals force
-# a fresh whole-stage-codegen compile every selection step (the literal
-# values are part of the generated source), measured 5.8 s vs 4.6 s
-# min-of-5 for the 5-step sf0.1 row on identical picks; the broadcast
-# plan's generated code is step-invariant (only the k-row LocalRelation
-# data changes), and at realistic dims (512-1024) the literal tree also
-# hits codegen/plan limits. The literal path stays for A/B parity
-# pinning (tests force it by raising the budget).
-_MMR_LITERAL_BUDGET = 0
-
-
 def _code_dot(a, b):
     """Exact BIGINT dot of two int8 code arrays (Column exprs or names) —
     the ONE scoring expression sq8_topk's relevance, mmr_topk's relevance,
@@ -2115,25 +2102,18 @@ def mmr_topk(
 
     Determinism: rel and sim are the int8 code dots of :func:`sq8_topk` —
     exact BIGINTs — and λ is an integer percent, so every objective is an
-    exact integer and the argmax (ties to the smaller id via one
-    max(struct)) cannot drift between engines; the oracle replays all k
-    selection steps.
+    exact integer and the argmax (ties to the smaller id) cannot drift
+    between engines; the oracle replays all k selection steps.
 
-    Scale shape: the corpus codes persist once; each of the k steps is
-    ONE map-only corpus pass plus one all-reduce argmax. The ≤k selected
-    code arrays ride as LITERALS while k·d stays small (metadata-sized,
-    the kmeans centroid discipline), but literal expression trees are
-    O(k·d) PLAN-sized — at realistic embedding dims (512-1024) that hits
-    codegen/plan-size limits and slows every planning round (r10 advisor
-    finding) — so past ``_MMR_LITERAL_BUDGET`` total literals the
-    selected set ships as a broadcast-joined k-row DataFrame instead
-    (one broadcast cross join + a per-candidate max aggregate; same
-    exact integer dots, bitwise-identical picks). k corpus scans for a
-    k-item answer is the honest cost of greedy MMR; k is single-digits
-    in practice. One query per call (the selection state is per-query by
-    definition); loop callers batch queries outside. Returns
-    (step, neighbor_id, rel_i8, obj_i8) with step 1..k in selection
-    order."""
+    Scale shape: the query codes broadcast once and the scored corpus
+    persists once; each of the k steps is ONE Arrow kernel pass over it
+    (the ≤k selected code arrays ride in the kernel's closure, so the
+    plan is the same every step) plus a driver-side max over the
+    per-partition winners. k corpus scans for a k-item answer is the
+    honest cost of greedy MMR; k is single-digits in practice. One query
+    per call (the selection state is per-query by definition); loop
+    callers batch queries outside. Returns (step, neighbor_id, rel_i8,
+    obj_i8) with step 1..k in selection order."""
     if not 0 <= lambda_pct <= 100:
         raise ValueError("mmr_topk: lambda_pct must be in [0, 100]")
     # ONE query-side job for both the id guard and the codes (r11: the
@@ -2148,22 +2128,12 @@ def mmr_topk(
     corpus = _sq8_codes(
         embeddings.where(F.col(id_col) != qid), "neighbor_id", id_col, vec_col
     ).withColumnRenamed("neighbor_id_c", "code")
-    dim = len(qcodes)
-
-    def lit_arr(xs):
-        return F.array(*[F.lit(int(x)).cast("long") for x in xs])
-
-    if dim <= _MMR_LITERAL_BUDGET:
-        rel_scored = corpus.select(
-            "neighbor_id", "code", _code_dot("code", lit_arr(qcodes)).alias("rel")
-        )
-    else:
-        qdf = local_df(spark, [([int(x) for x in qcodes],)], "qc array<long>")
-        rel_scored = (
-            corpus.crossJoin(F.broadcast(qdf))
-            .select("neighbor_id", "code", _code_dot("code", "qc").alias("rel"))
-        )
-    corpus = rel_scored.persist()
+    qdf = local_df(spark, [([int(x) for x in qcodes],)], "qc array<long>")
+    corpus = (
+        corpus.crossJoin(F.broadcast(qdf))
+        .select("neighbor_id", "code", _code_dot("code", "qc").alias("rel"))
+        .persist()
+    )
     picked = []  # (step, id, rel, obj, code)
     try:
         # no materializing count() here (r11): step 1's argmax fills the
@@ -2174,41 +2144,8 @@ def mmr_topk(
                 if picked
                 else F.lit(True)
             )
-            if picked and len(picked) * dim <= _MMR_LITERAL_BUDGET:
-                # literal expression path, kept under the parity test —
-                # see _MMR_LITERAL_BUDGET
-                sims = [
-                    _code_dot("code", lit_arr(code))
-                    for _, _, _, _, code in picked
-                ]
-                max_sim = F.greatest(*sims) if len(sims) > 1 else sims[0]
-                cand = cand.select("neighbor_id", "rel", "code",
-                                   max_sim.alias("__ms__"))
-                obj = (
-                    F.lit(100 - lambda_pct).cast("long") * F.col("rel")
-                    - F.lit(lambda_pct).cast("long") * F.col("__ms__")
-                )
-                best = (
-                    cand.select("neighbor_id", "rel", "code", obj.alias("obj"))
-                    .select(
-                        F.max(
-                            F.struct(
-                                F.col("obj"), (-F.col("neighbor_id")).alias("nid"),
-                                "rel", "neighbor_id", "code",
-                            )
-                        ).alias("m")
-                    )
-                    .collect()[0]["m"]
-                )
-                if best is None:  # corpus exhausted before k picks
-                    break
-                picked.append(
-                    (step, best["neighbor_id"], best["rel"], best["obj"],
-                     best["code"])
-                )
-                continue
-            # default path (r12, guide §4.2): ONE Arrow kernel pass over
-            # the cached corpus computes each partition's best candidate —
+            # ONE Arrow kernel pass (r12, guide §4.2) over the cached
+            # corpus computes each partition's best candidate —
             # the r11 broadcast-join form was crossJoin → per-candidate
             # hash aggregate (an Exchange) → scalar max (another Exchange)
             # → collect, ~4 driver jobs per step of a 2,000-row corpus
@@ -2217,7 +2154,7 @@ def mmr_topk(
             # EXACT integer math: int8-ranged code dots in int64 (max
             # |dot| ≈ d·127² ≪ 2^63), obj = (100−λ)·rel − λ·max_sim, ties
             # to the smallest neighbor_id — bit-identical picks, pinned by
-            # the literal-path parity test and the oracle's k-step replay.
+            # the plain-Python reference test and the oracle's k-step replay.
             import numpy as np
 
             sel_np = (

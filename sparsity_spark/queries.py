@@ -2267,7 +2267,7 @@ def _y4m_fixture_gen():
 def _y4m_assets(spark, sf_dir, mod: int = 4, rem: int = 3):
     """doc_id %4==3 slice (disjoint from the PPM/PNG/ADPCM fixtures) →
     real Y4M payloads with typed metadata; chunk_count carries the REAL
-    frame count the JVM-side stride explode samples from."""
+    frame count the frame kernels sample from."""
     ids = load_table(spark, sf_dir, "documents").select("doc_id").filter(
         F.col("doc_id") % mod == rem
     ).distinct()
@@ -2319,8 +2319,8 @@ def multimodal_y4m_frames_q(spark, sf_dir):
     """REAL video decode through the real YUV4MPEG2 parser (r7 — the
     video member of the real-codec family, next to PPM/PNG stills and
     PCM/ADPCM audio): a deterministic 6-frame 16×12 C444 video per doc_id
-    is encoded as an actual Y4M stream, frames 0/2/4 are sampled by the
-    JVM-side stride explode, and each sampled frame's decoded planes are
+    is encoded as an actual Y4M stream, decoded once, frames 0/2/4 are
+    sampled from that decode, and each sampled frame's decoded planes are
     reduced to exact integer sums the oracle reproduces from first
     principles."""
     from sparsity_spark.operators.multimodal import video_frame_stats
@@ -2544,8 +2544,8 @@ def multimodal_gif_frames_q(spark, sf_dir):
     genuinely compressed codec after PNG/ADPCM): the deterministic
     palette-indexed fixture round-trips through the real GIF encoder and
     decoder (variable-width LZW with early change, sub-block walk, palette
-    lookup, interlace on odd doc_ids), frames 0/2 are sampled by the
-    JVM-side stride explode, and each decoded frame's exact integer RGB
+    lookup, interlace on odd doc_ids), frames 0/2 are sampled from one
+    decode per asset, and each sampled frame's exact integer RGB
     channel sums must equal the oracle's first-principles regeneration."""
     from sparsity_spark.operators.multimodal import gif_frame_stats
 
@@ -3594,9 +3594,9 @@ def multimodal_meta_q(spark, sf_dir):
     """,
 )
 def multimodal_frames(spark, sf_dir):
-    """Frame-sampling plumbing: JVM-side stride explode over metadata frame
-    counts, Arrow-batched per-frame 'decode' (deterministic fake at the
-    codec seam) — the oracle reproduces the fake byte-for-byte."""
+    """Frame-sampling plumbing: every 4th index below the metadata frame
+    count, emitted by one Arrow-batched per-asset 'decode' (deterministic
+    fake at the codec seam) — the oracle reproduces the fake byte-for-byte."""
     from sparsity_spark.operators.multimodal import as_binary_assets, frame_sample
 
     assets = as_binary_assets(load_table(spark, sf_dir, "documents"))

@@ -286,6 +286,12 @@ def test_frame_sample_stride_and_stub(spark, docs):
     # the real-codec path must surface the NotImplementedError contract
     with pytest.raises(Exception, match="no codec"):
         multimodal.frame_sample(assets, every_k=2, fake=False).collect()
+    # a stride below 1 is refused on the driver, before any job runs
+    for kernel in (multimodal.frame_sample, multimodal.video_frame_stats,
+                   multimodal.gif_frame_stats):
+        for bad in (0, -1):
+            with pytest.raises(ValueError, match="every_k"):
+                kernel(assets, every_k=bad)
 
 
 def test_quantize_embeddings_roundtrip_error(spark, sf_dir):
@@ -658,7 +664,11 @@ def test_load_binary_files_roundtrip(spark, tmp_path):
     byte-exact content and the same meta schema as table-borne payloads."""
     import os
 
-    from sparsity_spark.operators.multimodal import extract_features, load_binary_files
+    from sparsity_spark.operators.multimodal import (
+        extract_features,
+        frame_sample,
+        load_binary_files,
+    )
 
     d = str(tmp_path / "media")
     os.makedirs(d)
@@ -673,11 +683,14 @@ def test_load_binary_files_roundtrip(spark, tmp_path):
     assert bytes(got["a.img"]["content"]) == payloads["a.img"]
     assert got["b.img"]["meta"]["n_bytes"] == 30
     assert got["b.img"]["meta"]["media_type"] == "image/fake"
-    # plugs into the existing Arrow feature pipeline unchanged (the
-    # extractor's contract keys assets by a long id — hash the path)
-    keyed = assets.withColumn("doc_id", F.xxhash64("asset_id")).drop("asset_id")
-    feats = extract_features(keyed, fake=True)
-    assert feats.count() == 2
+    # plugs into the Arrow kernels unchanged: the output id keeps the
+    # string path
+    feats = extract_features(assets, id_col="asset_id", fake=True)
+    assert dict(feats.dtypes)["asset_id"] == "string"
+    assert {os.path.basename(r["asset_id"]) for r in feats.collect()} == set(got)
+    frames = frame_sample(assets, id_col="asset_id", fake=True)
+    assert dict(frames.dtypes)["asset_id"] == "string"
+    assert {os.path.basename(r["asset_id"]) for r in frames.collect()} == set(got)
 
 
 def test_ann_recall_vs_bruteforce(spark):
@@ -2137,7 +2150,8 @@ def test_video_shot_mad_detects_cut(spark):
     """r8 shot boundaries: the exact luma-MAD signal equals a numpy
     recompute for both mono and C444 streams, the hard-cut pair is the
     unique maximum, and corrupt payloads contribute NO rows (a signal
-    from a broken stream would be a wrong answer, not a degraded one)."""
+    from a broken stream would be a wrong answer, not a degraded one), nor
+    does a one-frame stream, which has no frame pair."""
     from sparsity_spark.operators.multimodal import video_shot_mad, y4m_encode
 
     # mono: flat segments with a jump between frames 2 and 3
@@ -2155,6 +2169,7 @@ def test_video_shot_mad_detects_cut(spark):
 
     rows = [(1, y4m_encode(mono)), (2, y4m_encode(color))]
     rows.append((9, b"YUV4MPEG2 W16 H12 Cmono\nFRAME\n" + b"\x00" * 4))  # truncated
+    rows.append((10, y4m_encode(mono[:1])))  # one frame: no pair, no rows
     assets = _binary_asset_df(spark, rows, "video/x-yuv4mpeg", chunk_count=6)
 
     got = video_shot_mad(assets).toPandas()
@@ -2166,6 +2181,7 @@ def test_video_shot_mad_detects_cut(spark):
         assert sub["mad"].idxmax() == 3  # the cut pair (frames 2→3)
         assert sub.loc[3, "mad"] > 4 * sub.drop(index=3)["mad"].max()
     assert (got.doc_id == 9).sum() == 0
+    assert (got.doc_id == 10).sum() == 0
 
 
 def test_audio_spectral_bands_integer_dft(spark):
@@ -3274,22 +3290,47 @@ def test_mmr_validates_inputs(spark):
         mmr_topk(emb, emb.where(F.col("vec_id") == 0), lambda_pct=101)
 
 
-def test_mmr_broadcast_path_matches_literal_path(spark, monkeypatch):
-    """r10 advisor fix / r11 default flip: the selected codes ship via
-    broadcast join by default (step-invariant codegen); the literal-tree
-    path remains behind the budget knob. Both paths must make bitwise-
-    identical picks — same exact integer dots, same argmax tie-break —
-    so the budget is purely a planning-cost knob."""
-    import sparsity_spark.operators.similarity as sim
+def _mmr_reference(vecs: dict, qid: int, k: int, lambda_pct: int) -> list:
+    """Greedy MMR in plain Python over sq8 codes floor(x·127/max|x| + ½):
+    step j picks argmax (100−λ)·rel − λ·max-sim over the unselected ids,
+    ties to the smaller id. Returns [(step, id, rel, obj)]."""
+    import math
 
-    rng = [(i, [((i * 7 + j * 13) % 19 - 9) / 10.0 for j in range(24)])
-           for i in range(30)]
-    emb = spark.createDataFrame(rng, "vec_id long, embedding array<double>")
+    def codes(x):
+        m = max(abs(v) for v in x)
+        return [math.floor(v * 127 / m + 0.5) if m else 0 for v in x]
+
+    def dot(a, b):
+        return sum(x * y for x, y in zip(a, b))
+
+    c = {i: codes(v) for i, v in vecs.items()}
+    rel = {i: dot(c[i], c[qid]) for i in c if i != qid}
+    picked = []
+    for step in range(1, k + 1):
+        best = None
+        for i in sorted(rel):
+            if i in [p[1] for p in picked]:
+                continue
+            ms = max((dot(c[i], c[p[1]]) for p in picked), default=0)
+            obj = (100 - lambda_pct) * rel[i] - lambda_pct * ms
+            if best is None or obj > best[3]:
+                best = (step, i, rel[i], obj)
+        picked.append(best)
+    return picked
+
+
+def test_mmr_matches_python_reference(spark):
+    """The Arrow argmax kernel makes the same picks, with the same exact
+    integer relevance and objective, as a plain-Python greedy MMR over the
+    same int8 codes."""
+    from sparsity_spark.operators.similarity import mmr_topk
+
+    vecs = {i: [((i * 7 + j * 13) % 19 - 9) / 10.0 for j in range(24)]
+            for i in range(30)}
+    emb = spark.createDataFrame(list(vecs.items()), "vec_id long, embedding array<double>")
     q = emb.where(F.col("vec_id") == 0)
-    bc = [tuple(r) for r in sim.mmr_topk(emb, q, k=4, lambda_pct=60).collect()]
-    monkeypatch.setattr(sim, "_MMR_LITERAL_BUDGET", 4096)  # force literal path
-    lit = [tuple(r) for r in sim.mmr_topk(emb, q, k=4, lambda_pct=60).collect()]
-    assert lit == bc and len(lit) == 4
+    got = [tuple(r) for r in mmr_topk(emb, q, k=4, lambda_pct=60).orderBy("step").collect()]
+    assert got == _mmr_reference(vecs, 0, k=4, lambda_pct=60)
 
 
 def test_containment_clusters_superset_survives(spark):

@@ -545,19 +545,27 @@ def test_c4_clean_is_pure_projection(spark, sf_dir):
     assert "HashAggregate" not in plan and "SortAggregate" not in plan
 
 
-def test_video_shot_mad_no_shuffle(spark):
-    """r8: the shot-boundary kernel decodes once per asset and never
-    shuffles — corpus-width map parallelism only."""
-    from sparsity_spark.operators.multimodal import video_shot_mad, y4m_encode
+@pytest.mark.parametrize(
+    "kernel", ["video_shot_mad", "video_frame_stats", "gif_frame_stats", "frame_sample"]
+)
+def test_video_shot_mad_no_shuffle(spark, kernel):
+    """r8: the media kernels decode once per asset and never shuffle —
+    corpus-width map parallelism only, and no Generate: sampled frames
+    come out of the one per-asset decode, not a JVM explode that ships
+    and decodes the payload once per sampled index."""
+    from sparsity_spark.operators import multimodal
     import numpy as np
 
     fr = (np.arange(2 * 4 * 4, dtype=np.uint8)).reshape(2, 4, 4)
     assets = spark.createDataFrame(
-        [(1, bytearray(y4m_encode(fr)))], "doc_id long, content binary"
+        [(1, bytearray(multimodal.y4m_encode(fr)), ("video/x-yuv4mpeg", 60, 2))],
+        "doc_id long, content binary, "
+        "meta struct<media_type: string, n_bytes: int, chunk_count: int>",
     )
-    plan = formatted_plan(video_shot_mad(assets))
+    plan = formatted_plan(getattr(multimodal, kernel)(assets))
     assert "Exchange" not in plan
-    assert "ArrowEvalPython" in plan or "MapInPandas" in plan or "mapInPandas" in plan.lower()
+    assert "Generate" not in plan
+    assert "MapInPandas" in plan
 
 
 def test_pagerank_iteration_shape(spark):
