@@ -29,6 +29,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from sparsity_spark import stores
+from sparsity_spark.operators.similarity import (
+    _cosine,
+    _norm,
+    assign_centroids,
+    kmeans_fit,
+    with_norm,
+)
 
 
 def words_expr(text_col: str):
@@ -500,29 +507,33 @@ def embedding_neardup_pairs(
     label; at scale an LSH/IVF bucket). Cosine via built-in array exprs —
     norms precomputed per side BEFORE the join so the pair computation is
     one zip_with dot product."""
-    from sparsity_spark.operators.similarity import with_norm, dot_expr
-
     e = with_norm(embeddings, vec_col).select(
         F.col(id_col), F.col(block_col), F.col("vec_d"), F.col("norm")
     )
-    left = e.select(
+    return _cosine_pairs(e, id_col, block_col, threshold)
+
+
+def _cosine_pairs(rows: DataFrame, id_col: str, block_col: str, t: float) -> DataFrame:
+    """Blocked cosine self-join over (id, block, vec_d, norm) rows: every
+    same-block pair with id_a < id_b whose round-6 cosine is ≥ ``t``.
+    Returns (id_a, id_b, cosine)."""
+    left = rows.select(
         F.col(block_col),
         F.col(id_col).alias("id_a"),
         F.col("vec_d").alias("va"),
         F.col("norm").alias("na"),
     )
-    right = e.select(
+    right = rows.select(
         F.col(block_col),
         F.col(id_col).alias("id_b"),
         F.col("vec_d").alias("vb"),
         F.col("norm").alias("nb"),
     )
-    cos = F.round(dot_expr("va", "vb") / (F.col("na") * F.col("nb")), 6)
     return (
         left.join(right, on=block_col)
         .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", cos)
-        .filter(F.col("cosine") >= threshold)
+        .withColumn("cosine", _cosine("va", "na", "vb", "nb", 6))
+        .filter(F.col("cosine") >= t)
         .select("id_a", "id_b", "cosine")
     )
 
@@ -1313,8 +1324,6 @@ def semdedup_prune(
 
     Returns one row per vector: (id_col, cid, keep) — `keep=false` rows
     are the prune set."""
-    from sparsity_spark.operators.similarity import assign_centroids, kmeans_fit
-
     cents = kmeans_fit(embeddings, k=k, iters=iters, id_col=id_col, vec_col=vec_col)
     assigned = assign_centroids(embeddings, cents, id_col, vec_col, out_col="cid")
     id_type = embeddings.schema[id_col].dataType.simpleString()
@@ -1354,19 +1363,6 @@ def semdedup_prune(
     )
 
 
-def _vec_norm_expr(col: str):
-    """L2 norm of an array<double> column — the shared seam expression of
-    the semantic store/screen family (one definition so store, screen, and
-    append can never disagree on the denominator)."""
-    return F.sqrt(
-        F.aggregate(
-            F.transform(F.col(col), lambda x: x * x),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
 def semantic_member_store(
     embeddings: DataFrame,
     centroids: DataFrame,
@@ -1378,12 +1374,26 @@ def semantic_member_store(
     Persist with :func:`write_member_store` (bucketed BY cid) and both the
     batch and streaming semantic screens join it per-cluster with NO
     corpus-side shuffle, never corpus-wide."""
-    from sparsity_spark.operators.similarity import assign_centroids
-
     assigned = assign_centroids(embeddings, centroids, id_col, vec_col, out_col="cid")
-    return assigned.select(
-        "cid", F.col(id_col), "vec_d", _vec_norm_expr("vec_d").alias("norm")
+    return assigned.select("cid", F.col(id_col), "vec_d", _norm("vec_d").alias("norm"))
+
+
+def _member_join(
+    s: DataFrame, store: DataFrame, threshold: float, how: str
+) -> DataFrame:
+    """Join assigned batch rows (cid, vec_d, norm) to the member store
+    rows of the SAME cid whose round-6 cosine is ≥ ``threshold`` — one
+    cid-keyed equi-join with the cosine predicate as its residual, so the
+    work per batch vector is its cluster's population."""
+    m = store.select(
+        F.col("cid").alias("__mcid__"),
+        F.col("vec_d").alias("__mv__"),
+        F.col("norm").alias("__mn__"),
     )
+    cond = (F.col("cid") == F.col("__mcid__")) & (
+        _cosine("vec_d", "norm", "__mv__", "__mn__", 6) >= F.lit(float(threshold))
+    )
+    return s.join(m, on=cond, how=how)
 
 
 def semantic_screen(
@@ -1410,26 +1420,9 @@ def semantic_screen(
     wraps exactly this.
 
     Returns the SURVIVING rows as (id_col, cid, vec_d)."""
-    from sparsity_spark.operators.similarity import assign_centroids
-
     s = assign_centroids(new_embeddings, centroids, id_col, vec_col, out_col="cid")
-    s = s.withColumn("__nrm__", _vec_norm_expr("vec_d"))
-    m = member_store.select(
-        F.col("cid").alias("__mcid__"),
-        F.col("vec_d").alias("__mv__"),
-        F.col("norm").alias("__mn__"),
-    )
-    cos = F.round(
-        F.aggregate(
-            F.zip_with(F.col("vec_d"), F.col("__mv__"), lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        / (F.col("__nrm__") * F.col("__mn__")),
-        6,
-    )
-    cond = (F.col("cid") == F.col("__mcid__")) & (cos >= F.lit(float(threshold)))
-    return s.join(m, on=cond, how="left_anti").select(id_col, "cid", "vec_d")
+    s = s.withColumn("norm", _norm("vec_d"))
+    return _member_join(s, member_store, threshold, "left_anti").select(id_col, "cid", "vec_d")
 
 
 def incremental_lsh_dedup(
@@ -1812,36 +1805,12 @@ def append_member_store(
     decisions' lineage reads.
 
     Returns one row per batch vector: (id_col, cid, keep)."""
-    from sparsity_spark.operators.similarity import assign_centroids
-
     spark = new_embeddings.sparkSession
     store = member_store(spark, table)
     s = assign_centroids(new_embeddings, centroids, id_col, vec_col, out_col="cid")
-    s = s.withColumn("__nrm__", _vec_norm_expr("vec_d")).persist()
-    thr = float(threshold)
-    m = store.select(
-        F.col("cid").alias("__mcid__"),
-        F.col("vec_d").alias("__mv__"),
-        F.col("norm").alias("__mn__"),
-    )
-
-    def _cos(av, an, bv, bn):
-        return F.round(
-            F.aggregate(
-                F.zip_with(av, bv, lambda a, b: a * b),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            / (an * bn),
-            6,
-        )
-
-    cond = (F.col("cid") == F.col("__mcid__")) & (
-        _cos(F.col("vec_d"), F.col("__nrm__"), F.col("__mv__"), F.col("__mn__"))
-        >= F.lit(thr)
-    )
+    s = s.withColumn("norm", _norm("vec_d")).persist()
     collided = (
-        s.join(m, on=cond, how="left_semi")
+        _member_join(s, store, threshold, "left_semi")
         .select(F.col(id_col))
         .withColumn("__hit__", F.lit(True))
     )
@@ -1852,29 +1821,9 @@ def append_member_store(
         # within-batch near-dup pairs: a cid-keyed self-join with the
         # cosine residual (work ∝ within-cluster batch pairs — batch-sized
         # and bounded by the cluster granularity, never corpus-sized)
-        left = s.select(
-            F.col(id_col).alias("__ia__"),
-            F.col("cid").alias("__ca__"),
-            F.col("vec_d").alias("__va__"),
-            F.col("__nrm__").alias("__na__"),
-        )
-        right = s.select(
-            F.col(id_col).alias("__ib__"),
-            F.col("cid").alias("__cb__"),
-            F.col("vec_d").alias("__vb__"),
-            F.col("__nrm__").alias("__nb__"),
-        )
-        pcond = (
-            (F.col("__ca__") == F.col("__cb__"))
-            & (F.col("__ia__") < F.col("__ib__"))
-            & (
-                _cos(F.col("__va__"), F.col("__na__"), F.col("__vb__"), F.col("__nb__"))
-                >= F.lit(thr)
-            )
-        )
         batch_dups = (
-            left.join(right, on=pcond)
-            .select(F.col("__ib__").alias(id_col))
+            _cosine_pairs(s, id_col, "cid", float(threshold))
+            .select(F.col("id_b").alias(id_col))
             .distinct()
             .withColumn("__batch_dup__", F.lit(True))
         )
@@ -1886,7 +1835,7 @@ def append_member_store(
     decisions = decisions.localCheckpoint(eager=True)
     keep_rows = (
         s.join(decisions.filter(F.col("keep")).select(id_col), on=id_col)
-        .select("cid", F.col(id_col), "vec_d", F.col("__nrm__").alias("norm"))
+        .select("cid", F.col(id_col), "vec_d", "norm")
     )
     stores.append(keep_rows, table)
     s.unpersist()

@@ -1726,6 +1726,8 @@ def audio_spectral_bands(
             v = decode_wav(bytes(content))[0].astype(np.int64)
         except ValueError:
             return []
+        if v.ndim > 1:  # mixdown: first channel, as audio_fingerprints
+            v = v[:, 0]
         nf = len(v) // frame
         if nf == 0:
             return []

@@ -8,40 +8,113 @@ so work scales with bucket size, not corpus size).
 All math is built-in array expressions (zip_with + aggregate) over doubles:
 JVM-side, codegen, no Python in the hot path. Norms are computed once per
 side BEFORE any join — never per pair.
+
+Every search here is one generate, score, rank pipeline, and each scoring
+and ranking step is written once, as a private helper the ANN and semantic
+dedup operators share:
+
+* ``_fold`` — the sequential zip_with/aggregate fold behind
+  :func:`dot_expr` (double dot), ``_code_dot`` (BIGINT dot of int8 codes
+  or integer projections) and ``_sq_l2`` (squared L2, rounded by each
+  caller); every fold keeps its zero literal and left-to-right order, so
+  the doubles match any row-at-a-time oracle bit for bit.
+* ``_norm`` — the L2 norm behind :func:`with_norm` and the semantic
+  member store.
+* ``_cosine`` — ``round(dot / (‖a‖·‖b‖), places)``.
+* ``_top_k`` — the per-partition ``row_number`` window that keeps the
+  first k rows.
+* ``_adc_lut`` / ``_adc_topk`` — the round-6 ADC lookup table, and the
+  join, sum, round, self-filter and rank tail every PQ search shares.
+* ``_code_signature`` — a vector's PQ codes in subspace order, the twin
+  screen's unit of identity.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from sparsity_spark import stores
 from sparsity_spark.util import local_df
 
 
-def dot_expr(a: str, b: str):
+def _col(c) -> Column:
+    return F.col(c) if isinstance(c, str) else c
+
+
+def _fold(a, b, pair, zero) -> Column:
+    """Σ pair(aᵢ, bᵢ) as a sequential zip_with + aggregate fold over two
+    array columns (names or Columns), starting from ``zero``."""
+    return F.aggregate(F.zip_with(_col(a), _col(b), pair), zero, lambda acc, x: acc + x)
+
+
+def dot_expr(a, b) -> Column:
     """Σ aᵢ·bᵢ via zip_with + aggregate (sequential fold — matches the
-    summation order of any row-at-a-time oracle engine exactly)."""
-    return F.aggregate(
-        F.zip_with(F.col(a), F.col(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    summation order of any row-at-a-time oracle engine exactly). ``a`` and
+    ``b`` are column names or Columns."""
+    return _fold(a, b, lambda x, y: x * y, F.lit(0.0))
+
+
+def _code_dot(a, b) -> Column:
+    """Exact BIGINT dot of two integer arrays (Column exprs or names) —
+    the ONE integer scoring expression sq8_topk's relevance, mmr_topk's
+    relevance and redundancy penalty, and both PCA projections share."""
+    return _fold(a, b, lambda x, y: x * y, F.lit(0).cast("long"))
+
+
+def _sq_l2(a, b) -> Column:
+    """Σ (aᵢ − bᵢ)², unrounded (each caller applies its own rounding)."""
+    return _fold(a, b, lambda x, y: (x - y) * (x - y), F.lit(0.0))
+
+
+def _norm(v) -> Column:
+    """L2 norm of an array<double> column — one definition, so every store,
+    screen and search divides by the same denominator."""
+    return F.sqrt(
+        F.aggregate(F.transform(_col(v), lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x)
+    )
+
+
+def _cosine(va, na, vb, nb, places: int) -> Column:
+    """Cosine from precomputed norms, rounded to ``places`` decimals
+    (half-up, BEFORE any threshold or rank, so engine float noise cannot
+    flip a boundary)."""
+    return F.round(dot_expr(va, vb) / (_col(na) * _col(nb)), places)
+
+
+def _top_k(scored: DataFrame, by: list, order: list, k: int, cols: list) -> DataFrame:
+    """The first ``k`` rows of each ``by`` group under ``order`` (which
+    must end in a unique tie-break), projected to ``cols``."""
+    w = Window.partitionBy(*by).orderBy(*order)
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select(*cols)
     )
 
 
 def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """Add vec_d (double vector) and norm columns."""
-    d = F.col(vec_col).cast("array<double>")
-    out = df.withColumn("vec_d", d)
-    return out.withColumn(
-        "norm",
-        F.sqrt(
-            F.aggregate(
-                F.transform(F.col("vec_d"), lambda x: x * x),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        ),
+    out = df.withColumn("vec_d", F.col(vec_col).cast("array<double>"))
+    return out.withColumn("norm", _norm("vec_d"))
+
+
+def _broadcast_cosine(
+    embeddings: DataFrame, queries: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """(neighbor_id, query_id, cosine) for every corpus × query pair,
+    self-matches excluded: the (small) query set broadcasts against the
+    partition-parallel corpus, cosine rounded to 4."""
+    corpus = with_norm(embeddings, vec_col).select(
+        F.col(id_col).alias("neighbor_id"), F.col("vec_d").alias("vc"), F.col("norm").alias("nc")
+    )
+    q = with_norm(queries, vec_col).select(
+        F.col(id_col).alias("query_id"), F.col("vec_d").alias("vq"), F.col("norm").alias("nq")
+    )
+    return (
+        corpus.join(F.broadcast(q))
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .withColumn("cosine", _cosine("vq", "nq", "vc", "nc", 4))
     )
 
 
@@ -59,25 +132,13 @@ def cosine_topk(
     At 100 TB the corpus side stays partition-parallel; only the query set
     is broadcast. Cosine is rounded BEFORE ranking so engine-specific float
     noise cannot flip the top-k boundary."""
-    corpus = with_norm(embeddings, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col("vec_d").alias("vc"), F.col("norm").alias("nc")
-    )
-    q = with_norm(queries, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col("vec_d").alias("vq"), F.col("norm").alias("nq")
-    )
-    scored = (
-        corpus.join(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            F.round(dot_expr("vq", "vc") / (F.col("nq") * F.col("nc")), 4),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cosine")
+    scored = _broadcast_cosine(embeddings, queries, id_col, vec_col)
+    return _top_k(
+        scored,
+        ["query_id"],
+        [F.col("cosine").desc(), F.col("neighbor_id")],
+        k,
+        ["query_id", "neighbor_id", "cosine"],
     )
 
 
@@ -111,12 +172,7 @@ def random_projection_buckets(
     v = F.col(vec_col).cast("array<double>")
     bucket = None
     for p, plane in enumerate(planes):
-        lit_plane = F.array(*[F.lit(x) for x in plane])
-        dot = F.aggregate(
-            F.zip_with(v, lit_plane, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+        dot = dot_expr(v, F.array(*[F.lit(x) for x in plane]))
         bit = F.when(dot >= 0, F.lit(1 << p).cast("long")).otherwise(F.lit(0).cast("long"))
         bucket = bit if bucket is None else bucket + bit
     return embeddings.select(F.col(id_col), bucket.alias("bucket"))
@@ -159,13 +215,14 @@ def ivf_assign(
         F.col("norm").alias("cn"),
     )
     scored = corpus.join(F.broadcast(cents)).withColumn(
-        "cs", F.round(dot_expr("vec_d", "cv") / (F.col("norm") * F.col("cn")), 6)
+        "cs", _cosine("vec_d", "norm", "cv", "cn", 6)
     )
-    w = Window.partitionBy(id_col).orderBy(F.col("cs").desc(), F.col("__cid__"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= n)
-        .select(id_col, F.col("__cid__").alias(centroid_id_col), "vec_d", "norm")
+    return _top_k(
+        scored,
+        [id_col],
+        [F.col("cs").desc(), F.col("__cid__")],
+        n,
+        [id_col, F.col("__cid__").alias(centroid_id_col), "vec_d", "norm"],
     )
 
 
@@ -201,13 +258,14 @@ def ivf_topk(
     scored = (
         corpus.join(qa, on=centroid_id_col)
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", F.round(dot_expr("vq", "vc") / (F.col("nq") * F.col("nc")), 4))
+        .withColumn("cosine", _cosine("vq", "nq", "vc", "nc", 4))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", F.col(centroid_id_col), "neighbor_id", "cosine")
+    return _top_k(
+        scored,
+        ["query_id"],
+        [F.col("cosine").desc(), F.col("neighbor_id")],
+        k,
+        ["query_id", F.col(centroid_id_col), "neighbor_id", "cosine"],
     )
 
 
@@ -582,13 +640,7 @@ def pq_adc_topk(
     book = codebook or pq_sampled_codebook(embeddings, m, k_code, dim, id_col, vec_col)
     codes = pq_encode(embeddings, m, k_code, dim, id_col, vec_col, codebook=book)
     lut = _adc_lut(queries, book, m, dim, id_col, vec_col)
-    scored = (
-        codes.join(F.broadcast(lut), on=["subspace", "code"])
-        .groupBy("query_id", F.col(id_col).alias("neighbor_id"))
-        .agg(F.round(F.sum("d2"), 6).alias("adc_d2"))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-    )
-    return _adc_topk(scored, topk)
+    return _adc_topk(codes, lut, ["subspace", "code"], id_col, topk)
 
 
 def _adc_lut(
@@ -604,7 +656,7 @@ def _adc_lut(
     d2) — the round-6 per-subspace distance discipline lives HERE and only
     here, shared by plain ADC search and the IVF-PQ compositions (a
     drifted copy would silently disagree with whichever oracle guards the
-    other). ``extra_cols`` pass through unchanged (the residual variant
+    other). ``extra_cols`` pass through unchanged (:func:`ivf_pq_topk`
     keys its LUT by (query, probed centroid), since the query residual
     differs per probe bucket)."""
     sub = dim // m
@@ -627,24 +679,30 @@ def _adc_lut(
         *extra_cols,
         "subspace",
         "code",
-        F.round(
-            F.aggregate(
-                F.zip_with(qsub, F.col("c"), lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,
-        ).alias("d2"),
+        F.round(_sq_l2(qsub, "c"), 6).alias("d2"),
     )
 
 
-def _adc_topk(scored: DataFrame, topk: int) -> DataFrame:
-    """Shared ADC ranking tail: ascending distance, ties → lowest id."""
-    w = Window.partitionBy("query_id").orderBy(F.col("adc_d2").asc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= topk)
-        .select("query_id", "neighbor_id", "adc_d2")
+def _adc_topk(
+    codes: DataFrame, lut: DataFrame, on: list, id_col: str, topk: int
+) -> DataFrame:
+    """The one ADC scoring body: the code rows join the BROADCAST lookup
+    table on ``on``, one partial+final aggregate sums the per-subspace
+    d2 per (query, doc) and rounds the sum to 6, self-matches drop, and
+    each query keeps its ``topk`` nearest (ties → lowest id). Returns
+    (query_id, neighbor_id, adc_d2)."""
+    scored = (
+        codes.join(F.broadcast(lut), on=on)
+        .groupBy("query_id", F.col(id_col).alias("neighbor_id"))
+        .agg(F.round(F.sum("d2"), 6).alias("adc_d2"))
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+    )
+    return _top_k(
+        scored,
+        ["query_id"],
+        [F.col("adc_d2").asc(), F.col("neighbor_id")],
+        topk,
+        ["query_id", "neighbor_id", "adc_d2"],
     )
 
 
@@ -794,10 +852,11 @@ def ivfpq_index_topk(
     """ANN search against a PERSISTED :func:`write_ivfpq_index` — the
     production query path: the corpus appears ONLY as its bucketed code
     table; queries route to their nprobe buckets (broadcast centroids
-    from the side table), the ADC lookup table broadcasts, and the one
-    big-side join is bucket-aligned (no index-side Exchange). Same
-    round-6 ADC discipline and ranking as :func:`ivf_pq_topk` — results
-    are identical by construction, which the oracle row proves.
+    from the side table), the (query, probed bucket)-keyed ADC lookup
+    table broadcasts, and the one big-side join is bucket-aligned (no
+    index-side Exchange). Same round-6 ADC discipline and ranking as
+    :func:`ivf_pq_topk` — results are identical by construction, which
+    the oracle row proves.
 
     Returns (query_id, neighbor_id, adc_d2)."""
     spark = queries.sparkSession
@@ -805,33 +864,25 @@ def ivfpq_index_topk(
     cents = spark.table(f"{index_table}__centroids")
     book = _read_codebook(spark, index_table)
     mm = len(book)
-    qa = ivf_assign(queries, cents, id_col, vec_col, n=nprobe).select(
-        F.col(id_col).alias("query_id"), "centroid_id"
-    )
+    probes = ivf_assign(queries, cents, id_col, vec_col, n=nprobe)
     # probed bucket ids are metadata-sized (nprobe × |queries|): pushing
     # them as an IN filter lets the bucketed scan PRUNE to exactly those
     # buckets' files — the index read is probe-sized, never corpus-sized
     probe_ids = sorted(
-        {r["centroid_id"] for r in qa.select("centroid_id").distinct().collect()}
+        {r["centroid_id"] for r in probes.select("centroid_id").distinct().collect()}
     )
     codes = codes.filter(F.col("centroid_id").isin(probe_ids))
-    lut_b = _adc_lut(queries, book, mm, dim, id_col, vec_col).join(qa, on="query_id")
-    scored = (
-        codes.join(F.broadcast(lut_b), on=["centroid_id", "subspace", "code"])
-        .groupBy("query_id", F.col(id_col).alias("neighbor_id"))
-        .agg(F.round(F.sum("d2"), 6).alias("adc_d2"))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-    )
-    return _adc_topk(scored, topk)
+    lut = _adc_lut(probes, book, mm, dim, id_col, "vec_d", extra_cols=("centroid_id",))
+    return _adc_topk(codes, lut, ["centroid_id", "subspace", "code"], id_col, topk)
 
 
-def _code_signature(codes: DataFrame, id_col: str) -> DataFrame:
-    """Pivot (id, subspace, code) long rows to one (id, sig) row where sig
-    is the array of codes in subspace order — the vector's complete
-    identity under the frozen codebook. array_sort on (subspace, code)
-    structs orders by subspace (unique per id), so the transform extracts
-    the codes positionally; one partial+final hash aggregate."""
-    return codes.groupBy(id_col).agg(
+def _code_signature(codes: DataFrame, keys: list) -> DataFrame:
+    """Pivot (keys..., subspace, code) long rows to one (keys..., sig) row
+    where sig is the array of codes in subspace order — the vector's
+    complete identity under the frozen codebook. array_sort on (subspace,
+    code) structs orders by subspace (unique per key), so the transform
+    extracts the codes positionally; one partial+final hash aggregate."""
+    return codes.groupBy(*keys).agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("subspace", "code"))),
             lambda x: x["code"],
@@ -862,14 +913,18 @@ def ivfpq_twin_screen(
     unit of identity IS the cell.
 
     ``intra_batch=True`` additionally keeps only the LOWEST id per
-    signature within the batch itself (the band/member/hash-store
-    keep-first discipline, dedup.py:1184) so two twins arriving in the
-    same increment don't both land in the index.
+    signature within the batch itself (the keep-first discipline of
+    :func:`sparsity_spark.operators.dedup.append_band_store`) so two twins
+    arriving in the same increment don't both land in the index.
 
     Scale: the index side is read bucket-pruned to the batch's own
-    centroid buckets (one metadata-sized collect of probed ids), grouped
-    to signatures within those buckets only; the comparison is one
-    equi-join on (centroid_id, sig). Work ∝ probed buckets, never corpus.
+    centroid buckets (one metadata-sized collect of probed ids) in ONE
+    scan, grouped to signatures per (id, centroid_id) within those
+    buckets only — both sides through :func:`_code_signature`; the
+    comparison is one equi-join on (centroid_id, sig). Work ∝ probed
+    buckets, never corpus. An id indexed under two centroids (the same
+    id appended twice with different vectors) contributes one signature
+    per bucket.
 
     Returns (id_col, keep boolean) — the store-family decisions shape."""
     spark = new_embeddings.sparkSession
@@ -880,32 +935,17 @@ def ivfpq_twin_screen(
     # fused (id, centroid_id, subspace, code) rows directly — centroid_id
     # is constant per id, so carrying it through the groupBy replaces the
     # separate assignment pass + id join
+    keys = [id_col, "centroid_id"]
     fused = _encode_with_assignment(
         new_embeddings, cents, book, m, k_code, dim, id_col, vec_col
     )
-    batch_sig = (
-        fused.groupBy(id_col, "centroid_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("subspace", "code"))),
-                lambda x: x["code"],
-            ).alias("sig")
-        )
-        .select(id_col, "sig", "centroid_id")
-    )
-    batch_sig = batch_sig.localCheckpoint(eager=True)
+    batch_sig = _code_signature(fused, keys).localCheckpoint(eager=True)
     probe_ids = sorted(
         {r["centroid_id"] for r in batch_sig.select("centroid_id").distinct().collect()}
     )
-    live = stores.live(spark, index_table)
     index_sig = _code_signature(
-        live.filter(F.col("centroid_id").isin(probe_ids)),
-        id_col,
-    ).join(
-        live.filter(F.col("centroid_id").isin(probe_ids))
-        .select(id_col, "centroid_id")
-        .distinct(),
-        on=id_col,
+        stores.live(spark, index_table).filter(F.col("centroid_id").isin(probe_ids)),
+        keys,
     )
     hit = (
         index_sig.select("centroid_id", "sig")
@@ -1172,30 +1212,15 @@ def hard_negatives(
     and apply the same band filter.
 
     Returns (query_id, neighbor_id, cosine), ties → lowest neighbor id."""
-    corpus = with_norm(embeddings, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("vec_d").alias("vc"),
-        F.col("norm").alias("nc"),
+    scored = _broadcast_cosine(embeddings, queries, id_col, vec_col).filter(
+        (F.col("cosine") >= F.lit(lo)) & (F.col("cosine") < F.lit(hi))
     )
-    q = with_norm(queries, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col("vec_d").alias("vq"),
-        F.col("norm").alias("nq"),
-    )
-    scored = (
-        corpus.join(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            F.round(dot_expr("vq", "vc") / (F.col("nq") * F.col("nc")), 4),
-        )
-        .filter((F.col("cosine") >= F.lit(lo)) & (F.col("cosine") < F.lit(hi)))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cosine")
+    return _top_k(
+        scored,
+        ["query_id"],
+        [F.col("cosine").desc(), F.col("neighbor_id")],
+        k,
+        ["query_id", "neighbor_id", "cosine"],
     )
 
 
@@ -1226,16 +1251,7 @@ def embedding_outliers(
     cmap = cents.select(
         F.col("centroid_id").alias("cid"), F.col("embedding").alias("cvec")
     )
-    dist = F.round(
-        F.sqrt(
-            F.aggregate(
-                F.zip_with(F.col("vec_d"), F.col("cvec"), lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        ),
-        6,
-    )
+    dist = F.round(F.sqrt(_sq_l2("vec_d", "cvec")), 6)
     d = assigned.join(F.broadcast(cmap), on="cid").withColumn("dist", dist)
     stats = d.groupBy("cid").agg(
         F.avg("dist").alias("__mu__"), F.stddev_pop("dist").alias("__sd__")
@@ -1257,61 +1273,6 @@ def embedding_outliers(
             (F.col("z") >= F.lit(z_threshold)).alias("is_outlier"),
         )
     )
-
-
-def ivf_pq_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    centroids: DataFrame,
-    m: int = 4,
-    k_code: int = 16,
-    dim: int = 64,
-    topk: int = 5,
-    nprobe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    codebook: list | None = None,
-) -> DataFrame:
-    """The full IVF-PQ stack (the FAISS IVFPQ shape): queries route to
-    their ``nprobe`` nearest IVF buckets, and ONLY that bucket's members
-    are scored — by asymmetric distance over their PQ codes, never their
-    raw vectors. This is the composition the corpus-scale path needs:
-    IVF bounds WHO gets scored (bucket membership), PQ bounds WHAT is
-    read per candidate (m small codes).
-
-    Plan shape: corpus codes (`pq_encode`, map-only) join their bucket id
-    (`ivf_assign`, broadcast centroids) once; per query, the ADC lookup
-    table (query × subspace × codeword) joins its probe-bucket ids and
-    BROADCASTS, so the only work on the big side is one equi-join keyed
-    (centroid_id, subspace, code) over bucket members — work ∝ bucket
-    population × m, independent of corpus size. Distances round to 6 per
-    subspace and after the sum (the `pq_adc_topk` discipline); ties →
-    lowest neighbor id; self-matches excluded.
-
-    ``codebook`` defaults to the data-sampled one; pass
-    :func:`pq_trained_codebook`'s Lloyd-refined book for the production
-    recall path (VERDICT r5 #3 — measured recall sweep in SCALE.md).
-
-    Returns (query_id, neighbor_id, adc_d2)."""
-    book = codebook or pq_sampled_codebook(embeddings, m, k_code, dim, id_col, vec_col)
-    codes = pq_encode(embeddings, m, k_code, dim, id_col, vec_col, codebook=book)
-    asg = ivf_assign(embeddings, centroids, id_col, vec_col).select(
-        id_col, "centroid_id"
-    )
-    bucket_codes = codes.join(asg, on=id_col)
-    qa = ivf_assign(queries, centroids, id_col, vec_col, n=nprobe).select(
-        F.col(id_col).alias("query_id"), "centroid_id"
-    )
-    # per-query LUT (shared round-6 ADC discipline) × its probe buckets
-    # (nprobe small) — still metadata-sized for a broadcastable query set
-    lut_b = _adc_lut(queries, book, m, dim, id_col, vec_col).join(qa, on="query_id")
-    scored = (
-        bucket_codes.join(F.broadcast(lut_b), on=["centroid_id", "subspace", "code"])
-        .groupBy("query_id", F.col(id_col).alias("neighbor_id"))
-        .agg(F.round(F.sum("d2"), 6).alias("adc_d2"))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-    )
-    return _adc_topk(scored, topk)
 
 
 def _residuals(
@@ -1341,7 +1302,7 @@ def _residuals(
     )
 
 
-def ivf_pq_residual_topk(
+def ivf_pq_topk(
     embeddings: DataFrame,
     queries: DataFrame,
     centroids: DataFrame,
@@ -1353,46 +1314,55 @@ def ivf_pq_residual_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     codebook: list | None = None,
+    residual: bool = False,
 ) -> DataFrame:
-    """IVF-PQ with RESIDUAL encoding — FAISS IVFPQ's actual design (and
-    the r7 fix for the clustered-data recall ceiling): PQ codes quantize
-    x − centroid(x), not x. On clustered embeddings (the shape real
-    embedding models produce) raw-vector PQ spends its entire resolution
-    re-encoding the cluster CENTER — every member of a tight cluster gets
-    near-identical codes and within-cluster ranking collapses (measured:
-    recall@10 flat at 0.41 across nprobe 1/3/5 on a 32-Gaussian fixture,
-    i.e. routing perfect, quantizer saturated — tools/recall_study.py).
-    Encoding residuals spends the same m codes on the within-cluster
-    offsets, which is where the ranking information lives.
+    """The full IVF-PQ stack (the FAISS IVFPQ shape): queries route to
+    their ``nprobe`` nearest IVF buckets, and ONLY that bucket's members
+    are scored — by asymmetric distance over their PQ codes, never their
+    raw vectors. This is the composition the corpus-scale path needs:
+    IVF bounds WHO gets scored (bucket membership), PQ bounds WHAT is
+    read per candidate (m small codes).
 
-    Plan shape matches :func:`ivf_pq_topk` with ONE twist: the query's
-    residual differs per probed bucket (q − c_b), so the broadcast ADC
-    LUT is keyed (query_id, centroid_id) and the big-side join on
-    (centroid_id, subspace, code) stays bucket-aligned. Still one
-    equi-join + one partial+final aggregate; the corpus raw vectors are
+    Plan shape: corpus codes (`pq_encode`, map-only) join their bucket id
+    (`ivf_assign`, broadcast centroids) once; the ADC lookup table is
+    keyed (query, probed bucket) and BROADCASTS, so the only work on the
+    big side is one equi-join keyed (centroid_id, subspace, code) over
+    bucket members — work ∝ bucket population × m, independent of corpus
+    size. Distances round to 6 per subspace and after the sum (the
+    `pq_adc_topk` discipline); ties → lowest neighbor id; self-matches
+    excluded.
+
+    ``residual=True`` is FAISS IVFPQ's actual design (and the r7 fix for
+    the clustered-data recall ceiling): PQ codes quantize x − centroid(x)
+    (:func:`_residuals`), not x. On clustered embeddings raw-vector PQ
+    spends its entire resolution re-encoding the cluster CENTER — every
+    member of a tight cluster gets near-identical codes and within-cluster
+    ranking collapses (measured: recall@10 flat at 0.41 across nprobe
+    1/3/5 on a 32-Gaussian fixture — tools/recall_study.py). Encoding
+    residuals spends the same m codes on the within-cluster offsets. The
+    query's residual differs per probed bucket (q − c_b), which the
+    (query, bucket)-keyed LUT already carries; the corpus raw vectors are
     read once at encode time, never at query time.
 
-    ``codebook`` defaults to the residual-sampled book (deterministic,
-    SQL-derivable); pass a :func:`pq_trained_codebook` fit on residuals
-    for the production recall path. Returns (query_id, neighbor_id,
-    adc_d2)."""
-    res = _residuals(embeddings, centroids, id_col, vec_col)
-    book = codebook or pq_sampled_codebook(res, m, k_code, dim, id_col, "residual")
-    codes = pq_encode(res, m, k_code, dim, id_col, "residual", codebook=book)
-    bucket_codes = codes.join(res.select(id_col, "centroid_id"), on=id_col)
-    qres = _residuals(queries, centroids, id_col, vec_col, n=nprobe).select(
-        F.col(id_col).alias("query_id"), "centroid_id", "residual"
-    )
-    lut = _adc_lut(
-        qres, book, m, dim, "query_id", "residual", extra_cols=("centroid_id",)
-    )
-    scored = (
-        bucket_codes.join(F.broadcast(lut), on=["centroid_id", "subspace", "code"])
-        .groupBy("query_id", F.col(id_col).alias("neighbor_id"))
-        .agg(F.round(F.sum("d2"), 6).alias("adc_d2"))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-    )
-    return _adc_topk(scored, topk)
+    ``codebook`` defaults to the data-sampled one (over the residuals when
+    ``residual``); pass :func:`pq_trained_codebook`'s Lloyd-refined book
+    (fit on the residuals when ``residual``) for the production recall
+    path (VERDICT r5 #3 — measured recall sweep in SCALE.md).
+
+    Returns (query_id, neighbor_id, adc_d2)."""
+    if residual:
+        corpus = _residuals(embeddings, centroids, id_col, vec_col)
+        probes = _residuals(queries, centroids, id_col, vec_col, n=nprobe)
+        src, src_vec, probe_vec = corpus, "residual", "residual"
+    else:
+        corpus = ivf_assign(embeddings, centroids, id_col, vec_col)
+        probes = ivf_assign(queries, centroids, id_col, vec_col, n=nprobe)
+        src, src_vec, probe_vec = embeddings, vec_col, "vec_d"
+    book = codebook or pq_sampled_codebook(src, m, k_code, dim, id_col, src_vec)
+    codes = pq_encode(src, m, k_code, dim, id_col, src_vec, codebook=book)
+    bucket_codes = codes.join(corpus.select(id_col, "centroid_id"), on=id_col)
+    lut = _adc_lut(probes, book, m, dim, id_col, probe_vec, extra_cols=("centroid_id",))
+    return _adc_topk(bucket_codes, lut, ["centroid_id", "subspace", "code"], id_col, topk)
 
 
 def ivf_pq_refine_topk(
@@ -1426,10 +1396,9 @@ def ivf_pq_refine_topk(
     no pairwise blowup. This is the standard accuracy/IO dial: PQ bounds
     candidate-generation IO, refine pays raw-vector IO for shortlist rows
     only. Returns (query_id, neighbor_id, cosine)."""
-    fn = ivf_pq_residual_topk if residual else ivf_pq_topk
-    short = fn(
+    short = ivf_pq_topk(
         embeddings, queries, centroids, m, k_code, dim,
-        topk * shortlist, nprobe, id_col, vec_col, codebook,
+        topk * shortlist, nprobe, id_col, vec_col, codebook, residual,
     ).select("query_id", "neighbor_id")
     nb = with_norm(embeddings, vec_col).select(
         F.col(id_col).alias("neighbor_id"),
@@ -1444,18 +1413,14 @@ def ivf_pq_refine_topk(
     exact = (
         nb.join(F.broadcast(short), on="neighbor_id")
         .join(F.broadcast(qv), on="query_id")
-        .withColumn(
-            "cosine",
-            F.round(dot_expr("qv", "nv") / (F.col("qn") * F.col("nn")), 6),
-        )
+        .withColumn("cosine", _cosine("qv", "qn", "nv", "nn", 6))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        exact.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= topk)
-        .select("query_id", "neighbor_id", "cosine")
+    return _top_k(
+        exact,
+        ["query_id"],
+        [F.col("cosine").desc(), F.col("neighbor_id")],
+        topk,
+        ["query_id", "neighbor_id", "cosine"],
     )
 
 
@@ -1510,13 +1475,12 @@ def rrf_fuse(
         F.col("n_lists").cast("long").alias("n_lists"),
     )
     if top_n is not None:
-        w2 = Window.partitionBy(*[F.col(c) for c in by]).orderBy(
-            F.col("rrf_score").desc(), F.col(id_col)
-        )
-        out = (
-            out.withColumn("__rn__", F.row_number().over(w2))
-            .filter(F.col("__rn__") <= top_n)
-            .drop("__rn__")
+        out = _top_k(
+            out,
+            [F.col(c) for c in by],
+            [F.col("rrf_score").desc(), F.col(id_col)],
+            top_n,
+            [*by, id_col, "rrf_score", "n_lists"],
         )
     return out
 
@@ -1702,12 +1666,7 @@ def pca_project_int(
         f"transform({vec_col}, x -> CAST(FLOOR(CAST(x AS DOUBLE) * {scale}) AS BIGINT))"
     )
     vlit = F.array(*[F.lit(int(c)).cast("long") for c in component])
-    score = F.aggregate(
-        F.zip_with(qexpr, vlit, lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    return embeddings.select(F.col(id_col), score.alias("score_micro"))
+    return embeddings.select(F.col(id_col), _code_dot(qexpr, vlit).alias("score_micro"))
 
 
 def pca_top_component_project(
@@ -1994,15 +1953,12 @@ def grouped_pca_project(
     qexpr = F.expr(
         f"transform({vec_col}, x -> CAST(FLOOR(CAST(x AS DOUBLE) * {scale}) AS BIGINT))"
     )
-    score = F.aggregate(
-        F.zip_with(qexpr, F.col("__comp__"), lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
     return (
         embeddings.withColumn(group_col, F.col(group_col).cast("long"))
         .join(F.broadcast(comp_df), group_col)
-        .select(F.col(id_col), F.col(group_col), score.alias("score_micro"))
+        .select(
+            F.col(id_col), F.col(group_col), _code_dot(qexpr, "__comp__").alias("score_micro")
+        )
     )
 
 
@@ -2024,20 +1980,6 @@ def _sq8_codes(df: DataFrame, id_alias: str, id_col: str, vec_col: str):
         ),
     )
     return df.select(F.col(id_col).alias(id_alias), codes.alias(f"{id_alias}_c"))
-
-
-def _code_dot(a, b):
-    """Exact BIGINT dot of two int8 code arrays (Column exprs or names) —
-    the ONE scoring expression sq8_topk's relevance, mmr_topk's relevance,
-    and mmr_topk's redundancy penalty all share (a fix applied here cannot
-    silently diverge them)."""
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
 
 
 def sq8_topk(
@@ -2075,13 +2017,12 @@ def sq8_topk(
             _code_dot("query_id_c", "neighbor_id_c").alias("score_i8"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score_i8").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "score_i8")
+    return _top_k(
+        scored,
+        ["query_id"],
+        [F.col("score_i8").desc(), F.col("neighbor_id")],
+        k,
+        ["query_id", "neighbor_id", "score_i8"],
     )
 
 

@@ -1050,6 +1050,87 @@ def test_ivf_pq_probe2_superset_and_score_stability(spark, sf_dir):
         assert abs(s1[k] - s2[k]) < 1e-9
 
 
+def test_ivf_pq_residual_scores_match_numpy(spark, sf_dir):
+    """Residual IVF-PQ ADC scores replayed in numpy: each vector's residual
+    against its cosine-nearest centroid (round 6 half-up, ties to the
+    lowest centroid id), argmin codes over the given codebook, a round-6
+    LUT per (query, probed centroid) and a round-6 sum over subspaces;
+    self-matches excluded, ties to the lowest neighbor id."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    from sparsity_spark.data import load_table
+    from sparsity_spark.operators.similarity import (
+        _residuals,
+        ivf_pq_topk,
+        pq_sampled_codebook,
+    )
+
+    m, k_code, dim, topk, nprobe = 4, 16, 64, 5, 2
+    sub = dim // m
+    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 200)
+    cents = emb.filter(F.col("vec_id") < 6).select(
+        F.col("vec_id").alias("centroid_id"), "embedding"
+    )
+    queries = emb.filter(F.col("vec_id") < 4)
+    book = pq_sampled_codebook(
+        _residuals(emb, cents), m, k_code, dim, vec_col="residual"
+    )
+    got = ivf_pq_topk(
+        emb, queries, cents, m, k_code, dim, topk, nprobe, codebook=book, residual=True
+    ).toPandas()
+
+    def r6(v):  # Spark's round(v, 6): HALF_UP on the shortest repr
+        return float(Decimal(repr(float(v))).quantize(Decimal("0.000001"), ROUND_HALF_UP))
+
+    def fold(xs):  # the sequential zip_with/aggregate order
+        acc = 0.0
+        for x in xs:
+            acc += float(x)
+        return acc
+
+    pdf = emb.toPandas().sort_values("vec_id")
+    ids = [int(i) for i in pdf["vec_id"]]
+    X = {i: np.asarray(v, dtype=np.float64) for i, v in zip(ids, pdf["embedding"])}
+    cids = sorted(i for i in ids if i < 6)
+    cnorm = {c: np.sqrt(fold(X[c] * X[c])) for c in cids}
+
+    def nearest(i, n):
+        nv = np.sqrt(fold(X[i] * X[i]))
+        cs = [(-r6(fold(X[i] * X[c]) / (nv * cnorm[c])), c) for c in cids]
+        return [c for _, c in sorted(cs)[:n]]
+
+    def residual(i, c):
+        return np.array([r6(x) for x in X[i] - X[c]])
+
+    C = np.asarray(book, dtype=np.float64)
+    bucket, codes = {}, {}
+    for i in ids:
+        (c,) = nearest(i, 1)
+        res = residual(i, c)
+        bucket[i] = c
+        codes[i] = [
+            int(((res[s * sub : (s + 1) * sub][None, :] - C[s]) ** 2).sum(axis=1).round(6).argmin())
+            for s in range(m)
+        ]
+    for q in range(4):
+        scored = []
+        for c in nearest(q, nprobe):
+            rq = residual(q, c)
+            lut = [
+                [r6(fold((rq[s * sub : (s + 1) * sub] - C[s][j]) ** 2)) for j in range(len(C[s]))]
+                for s in range(m)
+            ]
+            scored += [
+                (r6(fold(lut[s][codes[i][s]] for s in range(m))), i)
+                for i in ids
+                if bucket[i] == c and i != q
+            ]
+        want = sorted(scored)[:topk]
+        sub_got = got[got.query_id == q].sort_values(["adc_d2", "neighbor_id"])
+        assert [int(x) for x in sub_got.neighbor_id] == [i for _, i in want], q
+        np.testing.assert_allclose(sub_got.adc_d2.to_numpy(), [d for d, _ in want], atol=1e-9)
+
+
 def test_remove_dup_spans_surgery(spark):
     """The shared passage vanishes from BOTH docs carrying it, unique text
     survives byte-identical, and span-free docs pass through untouched."""
@@ -2188,8 +2269,9 @@ def test_audio_spectral_bands_integer_dft(spark):
     """r8 spectral bands: exact parity with a numpy replay of the shared
     integer table; a pure k-th-bin tone concentrates its energy in bin k
     (the filterbank actually separates frequencies); trailing samples
-    beyond the last full frame are dropped; corrupt payloads contribute
-    no rows; frame sizes other than 8 raise."""
+    beyond the last full frame are dropped; a stereo payload is mixed
+    down to its first channel; corrupt payloads contribute no rows; frame
+    sizes other than 8 raise."""
     import numpy as np
     import pytest as _pytest
 
@@ -2203,9 +2285,14 @@ def test_audio_spectral_bands_integer_dft(spark):
     noise = (((rng * rng) * 7 + rng * 13) % 4096 - 2048).astype(np.int16)
     # a pure bin-2 tone: period 4 at the 8-sample frame (cos(2π·2n/8))
     tone = (1000 * np.cos(2 * np.pi * 2 * rng[:80] / 8)).round().astype(np.int16)
+    # a 2-channel payload: interleave (noise, -noise), then patch the fmt
+    # chunk's channel count
+    stereo = bytearray(wav_encode(np.stack([noise, -noise], axis=1).reshape(-1)))
+    stereo[22:24] = (2).to_bytes(2, "little")
     rows = [
         (1, bytearray(wav_encode(noise))),
         (2, bytearray(wav_encode(tone))),
+        (3, stereo),
         (9, bytearray(b"RIFF\x00\x00\x00\x00JUNK")),
     ]
     assets = spark.createDataFrame(rows, "doc_id long, content binary")
@@ -2225,6 +2312,8 @@ def test_audio_spectral_bands_integer_dft(spark):
     assert list(t["energy"]) == [int(e) for e in replay(tone)]
     assert t["energy"].idxmax() == 2
     assert t.loc[2, "energy"] > 100 * t.drop(index=2)["energy"].max()
+    st = got[got.doc_id == 3].set_index("bin").sort_index()
+    assert list(st["energy"]) == [int(e) for e in replay(noise)]
     assert (got.doc_id == 9).sum() == 0
     with _pytest.raises(ValueError):
         audio_spectral_bands(assets, frame=16)

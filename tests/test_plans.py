@@ -480,7 +480,9 @@ def test_twin_screen_index_scan_bucket_pruned(spark, sf_dir):
     """The r7 code-identity twin screen must read the index bucket-pruned
     to the batch's own probed centroid buckets (SelectedBucketsCount below
     the table's bucket count) — the screen's index IO is batch-probe-sized,
-    never corpus-sized — and must never degenerate to a cartesian plan."""
+    never corpus-sized — in ONE scan of the index table (the signatures
+    group by (id, centroid_id) from that scan; the tombstone table's scan
+    is separate), and must never degenerate to a cartesian plan."""
     import re
 
     from sparsity_spark.data import load_table
@@ -502,6 +504,8 @@ def test_twin_screen_index_scan_bucket_pruned(spark, sf_dir):
     m = re.search(r"SelectedBucketsCount: (\d+) out of (\d+)", plan)
     assert m, "twin screen index scan must be bucket-pruned:\n" + plan
     assert int(m.group(1)) < int(m.group(2))
+    scans = re.findall(r"FileScan parquet \S*\btwin_plancheck\[", plan)
+    assert len(scans) == 1, plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 

@@ -46,7 +46,6 @@ def recall_at_k(spark, emb, label, k=10, n_queries=20, ivf_k=16):
     from sparsity_spark.operators.similarity import (
         _residuals,
         cosine_topk,
-        ivf_pq_residual_topk,
         ivf_pq_topk,
         kmeans_fit,
         pq_trained_codebook,
@@ -81,15 +80,14 @@ def recall_at_k(spark, emb, label, k=10, n_queries=20, ivf_k=16):
             book = pq_trained_codebook(train_src, m=m, k=k_code, dim=64, iters=2)
         else:
             book = None
-        fn = ivf_pq_residual_topk if residual else ivf_pq_topk
         row = [
             f"m={m} k={k_code} {'trained' if trained else 'sampled'}"
             + (" residual" if residual else "")
         ]
         for nprobe in (1, 3, 5):
-            got = fn(
+            got = ivf_pq_topk(
                 emb, queries, cents, m=m, k_code=k_code, topk=k, nprobe=nprobe,
-                codebook=book,
+                codebook=book, residual=residual,
             ).collect()
             hits = sum(1 for r in got if r["neighbor_id"] in truth.get(r["query_id"], set()))
             denom = sum(len(v) for v in truth.values())
