@@ -1229,14 +1229,14 @@ def q21_sole_returned_supplier(spark, sf_dir):
         .select("l_orderkey")
     )
     others = returned.select(
-        F.col("l_orderkey"), F.col("l_suppkey").alias("__other__")
+        F.col("l_orderkey").alias("__oo__"), F.col("l_suppkey").alias("__other__")
     )
     return (
         returned.join(multi, on="l_orderkey", how="leftsemi")
         .join(
             others,
-            (returned.l_orderkey == others.l_orderkey)
-            & (returned.l_suppkey != others.__other__),
+            (F.col("l_orderkey") == F.col("__oo__"))
+            & (F.col("l_suppkey") != F.col("__other__")),
             "leftanti",
         )
         .groupBy(F.col("l_suppkey").alias("s_suppkey"))

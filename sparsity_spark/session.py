@@ -61,6 +61,13 @@ def get_spark(app_name: str = "sparsity_spark", cpus: int | None = None) -> Spar
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.default.parallelism", str(cpus))
+        # a shuffle with <= 200 reduce partitions takes the bypass writer,
+        # which writes each byte twice (one file per reduce partition, then
+        # copied into the map output file). A >200-partition cluster already
+        # runs the serialized writer, so this makes the local harness run the
+        # cluster's shuffle path (measured: a 1.10 MB repartition(4) wrote
+        # 2.21 MB through the bypass writer, 1.10 MB through this one).
+        .config("spark.shuffle.sort.bypassMergeThreshold", "0")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
