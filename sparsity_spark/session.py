@@ -9,8 +9,17 @@ cluster AQE's coalescing makes the static number mostly a ceiling).
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
+import re
+import shlex
+import shutil
+import subprocess
+import tempfile
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 # Spark's codegen class cache (spark.sql.codegen.cache.maxEntries), sized to
@@ -19,6 +28,11 @@ CODEGEN_CACHE_ENTRIES = 4096
 
 # the directory that holds the sparsity_spark package
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# the `file:` FileSystem that sets permissions through java.nio: its source,
+# compiled on first use, and the class the session names
+_NIO_FS_SOURCE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "NioLocalFileSystem.java")
+_NIO_FS_CLASS = "sparsity.NioLocalFileSystem"
 
 
 def _scratch_root() -> str:
@@ -50,6 +64,98 @@ def _scratch_root() -> str:
         except OSError:
             pass
     return "/tmp"
+
+
+def _javac() -> str | None:
+    java_home = os.environ.get("JAVA_HOME")
+    if java_home and os.access(os.path.join(java_home, "bin", "javac"), os.X_OK):
+        return os.path.join(java_home, "bin", "javac")
+    return shutil.which("javac")
+
+
+def _nio_fs_classes() -> str | None:
+    """The class directory of ``NioLocalFileSystem``, built once per source
+    text and Hadoop client jar into the per-user cache, or None when there is
+    no javac or the compile fails. Not under TMPDIR or the scratch root: a
+    caller that points those at a per-run directory would rebuild it (about
+    1.5 s) on every run. The classes are compiled aside and the directory is
+    renamed into place, so two sessions starting at once never load a torn
+    one."""
+    hadoop = sorted(glob.glob(os.path.join(_find_spark_home(), "jars", "hadoop-client-api-*.jar")))
+    if not hadoop:
+        return None
+    with open(_NIO_FS_SOURCE, "rb") as f:
+        key = f.read() + os.path.basename(hadoop[-1]).encode()
+    cache = os.path.join(
+        os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"), "sparsity_spark"
+    )
+    classes = os.path.join(cache, f"nio-local-fs-{hashlib.sha256(key).hexdigest()[:16]}")
+    if os.path.isdir(classes):
+        return classes
+    javac = _javac()
+    if javac is None:
+        return None
+    try:
+        os.makedirs(cache, exist_ok=True)
+        build = tempfile.mkdtemp(dir=cache)
+        try:
+            subprocess.run(
+                [javac, "--release", "17", "-cp", hadoop[-1], "-d", build, _NIO_FS_SOURCE],
+                check=True,
+                capture_output=True,
+                timeout=300,
+            )
+            os.replace(build, classes)
+        finally:
+            # left behind when the compile failed or another session's
+            # directory won the rename
+            shutil.rmtree(build, ignore_errors=True)
+    except (OSError, subprocess.SubprocessError):
+        pass
+    return classes if os.path.isdir(classes) else None
+
+
+def _defaults_class_path() -> str | None:
+    """``spark.driver.extraClassPath`` from spark-defaults.conf, which a
+    ``--conf`` of the same key replaces rather than extends."""
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(_find_spark_home(), "conf")
+    try:
+        with open(os.path.join(conf_dir, "spark-defaults.conf")) as f:
+            lines = f.read().splitlines()
+    except OSError:
+        return None
+    found = None  # a later line of the same key wins, as in java.util.Properties
+    for line in lines:
+        m = re.match(r"spark\.driver\.extraClassPath\s*[=:\s]\s*(.*)", line.strip())
+        if m:
+            found = m.group(1).strip()
+    return found
+
+
+def _local_fs_conf() -> dict[str, str]:
+    """The settings that put ``NioLocalFileSystem`` behind ``file:``, or none
+    (stock Hadoop) when its classes cannot reach the driver JVM. get_spark
+    builds local[N] sessions only, so the driver's class path reaches every
+    task."""
+    if "PYSPARK_GATEWAY_PORT" in os.environ:
+        SparkContext._ensure_initialized()  # a JVM launched by spark-submit
+    jvm = SparkContext._jvm
+    if jvm is not None:
+        # the JVM is up (a stopped session leaves it running for the next
+        # one) and its class path is fixed: name the class only if it loads
+        found = jvm.org.apache.hadoop.conf.Configuration(False).getClassByNameOrNull(_NIO_FS_CLASS)
+        return {} if found is None else {"spark.hadoop.fs.file.impl": _NIO_FS_CLASS}
+    submit = shlex.split(os.environ.get("PYSPARK_SUBMIT_ARGS", ""))
+    if any(
+        a.partition("=")[0] == "--driver-class-path" or a.startswith("spark.driver.extraClassPath=")
+        for a in submit
+    ):
+        return {}  # they replace the class path get_spark passes as --conf
+    classes = _nio_fs_classes()
+    if classes is None:
+        return {}
+    class_path = os.pathsep.join(filter(None, [_defaults_class_path(), classes]))
+    return {"spark.driver.extraClassPath": class_path, "spark.hadoop.fs.file.impl": _NIO_FS_CLASS}
 
 
 def get_spark(app_name: str = "sparsity_spark", cpus: int | None = None) -> SparkSession:
@@ -144,6 +250,11 @@ def get_spark(app_name: str = "sparsity_spark", cpus: int | None = None) -> Spar
         # the driver runs outside the repo
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
+    # without libhadoop every setPermission forks chmod: about 4 per data
+    # file, 4.5 kB of spawn payload each; a 10-row parquet write went from
+    # 41 kB to 0.6 kB of JVM writes
+    for key, value in _local_fs_conf().items():
+        builder = builder.config(key, value)
     # measurement hook (r12): SPARK_GRAFT_EVENTLOG=<dir> turns on the
     # standard Spark event log so probes can count jobs/stages/tasks and
     # attribute wall time (guide §1/§7) — off unless explicitly requested,
